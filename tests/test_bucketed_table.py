@@ -426,43 +426,6 @@ def test_delta_append_is_o_batch(spark, delta_table):
     assert set(delta_table.manifest().values()) == {v0}
 
 
-def test_delta_auto_compacts_at_max_deltas(spark, tmp_path):
-    delta_table = BucketedParquetTable(
-        spark, str(tmp_path / "dt_inline"), keys=["id"], n_buckets=8,
-        merge_mode="delta", max_deltas=4, compact_policy="inline",
-    )
-    delta_table.overwrite(
-        spark.createDataFrame(
-            [(i, f"a{i}") for i in range(40)], "id long, v string"
-        )
-    )
-    for n in range(3):
-        delta_table.merge(_batch(spark, [(n, f"u{n}", "u", 2 + n, 0)]))
-    assert len(delta_table._manifest_doc()["deltas"]) == 3
-    delta_table.merge(_batch(spark, [(30, "u30", "u", 9, 0)]))  # 4th → fold
-    doc = delta_table._manifest_doc()
-    assert doc["deltas"] == []
-    got = {r.id: r.v for r in delta_table.read().collect()}
-    assert got[0] == "u0" and got[2] == "u2" and got[30] == "u30"
-    assert len(got) == 40
-    # folded delta dirs age out of the retention window
-    for _ in range(delta_table.retention + 1):
-        delta_table.merge(
-            _batch(spark, [(31, "x", "u", 10, 0)])
-        )
-        delta_table.compact()
-    live = [n for n in os.listdir(delta_table.root) if n.startswith("_d")]
-    # no delta dir outside the retention manifests' union
-    cur = delta_table.version()
-    allowed = set()
-    for v in range(max(0, cur - delta_table.retention + 1), cur + 1):
-        try:
-            allowed.update(delta_table._manifest_doc(v)["deltas"])
-        except FileNotFoundError:
-            pass
-    assert {int(n[2:]) for n in live} <= allowed
-
-
 def test_delta_replay_is_idempotent(spark, delta_table):
     """A replayed micro-batch (same batch_id) must not append a second
     delta — the foreachBatch crash-replay contract."""
@@ -488,7 +451,8 @@ def test_delta_read_prunes_buckets(spark, delta_table):
     )
     delta_table.merge(_batch(spark, [(3, "up", "u", 2, 0)]))
     # find key 3's bucket and read just it: the delta row must resolve
-    bkt = delta_table._delta_buckets(delta_table._manifest_doc()["deltas"][0])
+    doc = delta_table._manifest_doc()
+    bkt = doc["delta_buckets"][doc["deltas"][0]]
     assert len(bkt) == 1
     sub = delta_table.read(buckets=bkt)
     got = {r.id: r.v for r in sub.collect()}
@@ -746,7 +710,7 @@ def test_incremental_compaction_no_full_table_fold(spark, tmp_path):
     doc = dt._manifest_doc()
     counts: dict[int, int] = {}
     for d in doc["deltas"]:
-        for bk in dt._delta_buckets(d):
+        for bk in doc["delta_buckets"][d]:
             if d > doc["folded"].get(bk, -1):
                 counts[bk] = counts.get(bk, 0) + 1
     assert all(c < 2 * md for c in counts.values()), counts
@@ -780,7 +744,7 @@ def test_compact_buckets_partial_fold_and_delta_gc(spark, tmp_path):
     ))
     doc = dt._manifest_doc()
     (d,) = doc["deltas"]
-    touched = dt._delta_buckets(d)
+    touched = doc["delta_buckets"][d]
     assert len(touched) > 1
     half = touched[: len(touched) // 2]
     dt.compact_buckets(half)
@@ -809,11 +773,12 @@ def test_compact_policy_off_never_folds(spark, tmp_path):
         dt.merge(_batch(spark, [(1, f"u{i}", "u", 2 + i, 0)]), batch_id=i)
     assert len(dt._manifest_doc()["deltas"]) == 5  # tail grows, reads fine
     assert {r.v for r in dt.read().collect()} == {"u4"}
-    with pytest.raises(ValueError, match="compact_policy"):
-        BucketedParquetTable(
-            spark, str(tmp_path / "bad"), keys=["id"],
-            compact_policy="sometimes",
-        )
+    for bad in ("sometimes", "inline"):
+        with pytest.raises(ValueError, match="compact_policy"):
+            BucketedParquetTable(
+                spark, str(tmp_path / "bad"), keys=["id"],
+                compact_policy=bad,
+            )
 
 
 def test_concurrent_append_and_fold_converge(spark, tmp_path):
@@ -879,7 +844,7 @@ def test_async_sink_folds_in_background(spark, tmp_path):
         merge_mode="delta", max_deltas=2,
     )
     sink = BucketedCdcApplySink(dt)
-    assert sink.async_compact
+    assert sink._background_fold
     seed = spark.createDataFrame(
         [(i, "s") for i in range(60)], "id long, v string"
     )
@@ -1360,8 +1325,8 @@ def test_stale_compact_after_rebucket_folds_everything(spark, tmp_path):
                              merge_mode="delta", compact_policy="off")
     c.merge(_batch(spark, [(i, f"up{i}", "u", 2, i) for i in range(20)]),
             batch_id=1)
-    touched = {b2 for d in c._manifest_doc()["deltas"]
-               for b2 in c._delta_buckets(d)}
+    cdoc = c._manifest_doc()
+    touched = {b2 for d in cdoc["deltas"] for b2 in cdoc["delta_buckets"][d]}
     assert any(x >= 2 for x in touched)
     # the STALE instance folds: must refresh, fold the full tail, and
     # keep the manifest's 8-bucket count
@@ -1482,53 +1447,26 @@ def test_fold_vs_fold_overlap_detected_and_refolded(spark, tmp_path):
     assert doc["deltas"] == []
 
 
-def test_legacy_bucket_dir_deltas_still_read_and_fold(spark, tmp_path):
-    """Back-compat: deltas written by the pre-r9 layout (bkt= partition
-    dirs, no delta_buckets manifest record) still read and fold
-    correctly next to new-layout single-file deltas."""
+def test_old_layout_manifest_fails_to_open(spark, tmp_path):
+    """Only the current manifest layout is read: a manifest without the
+    delta bookkeeping keys (or a flat {bucket: version} map) raises on
+    open instead of being read as some other layout."""
     import json as _json
-    import shutil as _shutil
 
-    dt = BucketedParquetTable(
-        spark, str(tmp_path / "legacy"), keys=["id"], n_buckets=4,
-        merge_mode="delta", compact_policy="off",
-    )
-    dt.overwrite(
-        spark.createDataFrame(
-            [(i, f"a{i}") for i in range(20)], "id long, v string"
-        )
-    )
-    dt.merge(_batch(spark, [(i, f"u1_{i}", "u", 2, i) for i in range(10)]))
-    dv = dt._manifest_doc()["deltas"][0]
-    # rewrite that delta into the LEGACY layout: bkt= partition dirs
-    ddir = dt._delta_dir(dv)
-    legacy = str(tmp_path / "legacy_delta")
-    (
-        spark.read.parquet(ddir)
-        .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(legacy)
-    )
-    _shutil.rmtree(ddir)
-    _shutil.move(legacy, ddir)
-    # strip the new-layout manifest record, as a pre-r9 writer would
-    # have left it
-    mp = dt._manifest_path(dt.version())
+    root = str(tmp_path / "old")
+    t = BucketedParquetTable(spark, root, keys=["id"], n_buckets=4)
+    t.overwrite(spark.createDataFrame([(1, "a")], "id long, v string"))
+    mp = t._manifest_path(t.version())
     doc = _json.load(open(mp))
-    doc.pop("delta_buckets", None)
-    with open(mp, "w") as f:
-        _json.dump(doc, f)
-    dt2 = BucketedParquetTable(
-        spark, str(tmp_path / "legacy"), keys=["id"], n_buckets=4,
-        merge_mode="delta", compact_policy="off",
-    )
-    got = {r.id: r.v for r in dt2.read().collect()}
-    assert got[3] == "u1_3" and got[15] == "a15" and len(got) == 20
-    # a NEW-layout append lands on top and both fold together
-    dt2.merge(_batch(spark, [(3, "u2_3", "u", 5, 0)]))
-    dt2.compact()
-    doc = dt2._manifest_doc()
-    assert doc["deltas"] == []
-    got = {r.id: r.v for r in dt2.read().collect()}
-    assert got[3] == "u2_3" and got[7] == "u1_7" and len(got) == 20
+    for old in (
+        {k: v for k, v in doc.items() if k != "delta_buckets"},
+        {k: v for k, v in doc.items() if k != "n_buckets"},
+        doc["buckets"],
+    ):
+        with open(mp, "w") as f:
+            _json.dump(old, f)
+        with pytest.raises(KeyError):
+            BucketedParquetTable(spark, root, keys=["id"], n_buckets=4)
 
 
 def test_drift_widened_columns_survive_delta_fold_and_read(spark, tmp_path):

@@ -162,7 +162,10 @@ def test_truncate_replay_property_final_state_matches_fold(spark, tmp_path):
     routing composes idempotently with the MERGE sink."""
     import random
 
-    from transferia_spark.streaming.cdc_apply import CdcApplySink, ParquetTable
+    from transferia_spark.streaming.bucketed_table import (
+        BucketedCdcApplySink,
+        BucketedParquetTable,
+    )
 
     rng = random.Random(0xC0FFEE)
     for case in range(4):
@@ -186,8 +189,8 @@ def test_truncate_replay_property_final_state_matches_fold(spark, tmp_path):
                 state[k] = v
 
         root = str(tmp_path / f"t{case}")
-        table = ParquetTable(spark, root)
-        sink = CdcApplySink(table, keys=["id"])
+        table = BucketedParquetTable(spark, root, keys=["id"], n_buckets=4)
+        sink = BucketedCdcApplySink(table)
 
         def wipe():
             table.overwrite(

@@ -887,13 +887,12 @@ def test_band_index_store_two_ingest_lifecycle(spark, tmp_path):
     assert pruned_files and pruned_files.issubset(all_files)
 
 
-def test_band_index_store_schema_meta_and_legacy_fallback(spark, tmp_path):
+def test_band_index_store_schema_meta(spark, tmp_path):
     """r14 optimization: _meta.json persists the index data schema so
     every pruned read / compact reopens with an explicit schema (no
-    per-open footer inference job). Pins: (a) the schema lands in the
-    meta on first ingest and the explicit-schema read returns exactly
-    the band rows; (b) a legacy store whose meta predates the schema
-    field still reads and compacts via inference."""
+    per-open footer inference job). Pins: the schema lands in the meta
+    on first ingest and the explicit-schema read returns exactly the
+    band rows."""
     import json
     import os
 
@@ -922,14 +921,35 @@ def test_band_index_store_schema_meta_and_legacy_fallback(spark, tmp_path):
     pruned = store.read_for(t.band_index(df.limit(3)))
     assert [(f.name, f.dataType) for f in pruned.schema.fields] == want_schema
 
-    # legacy meta (no schema field): reader falls back to inference,
-    # rows identical, and compact still folds the store
-    with open(meta_path, "w") as f:
-        json.dump({"n_shards": meta["n_shards"]}, f)
-    legacy = BandIndexStore(spark, root)
-    assert {(r[0], r[1]) for r in legacy.read().collect()} == expect
-    legacy.compact()
-    assert {(r[0], r[1]) for r in legacy.read().collect()} == expect
+
+def test_band_index_store_empty_seed_then_ingest(spark, tmp_path):
+    """An empty seed leaves a version dir with no shard files. The next
+    ingest's lazy pairs must not see that batch's own append: the
+    snapshot of an empty version is an empty frame of the stored
+    schema, not a directory read that lists files written later."""
+    from transferia_spark.operators.dedup import BandIndexStore
+
+    rows = [
+        (i, f"the quick brown fox jumps over the lazy dog variant {i % 4}")
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    t = build(
+        "dedup_incremental", text_col="text", id_col="doc_id", n=3, k=32, bands=8
+    )
+    store = BandIndexStore(spark, str(tmp_path / "idx"), n_shards=4)
+    assert store.ingest(t, df.limit(0)).count() == 0
+    assert store.exists()
+    empty = store.read()
+    assert empty.columns == ["doc_id", "_bk"] and empty.count() == 0
+
+    pairs = store.ingest(t, df)  # lazy: evaluated after the append
+    got = {(r.id_a, r.id_b, r.is_cross) for r in pairs.collect()}
+    full = build(
+        "dedup_minhash_lsh", text_col="text", id_col="doc_id", n=3, k=32, bands=8
+    ).apply_df(df)
+    assert got == {(r.id_a, r.id_b, False) for r in full.collect()}
+    assert store.read().count() == t.band_index(df).count()
 
 
 def test_band_index_ingest_sink_streaming(spark, tmp_path):
@@ -1155,52 +1175,6 @@ def test_ingest_sink_watermark_bounded_files(spark, tmp_path):
     for b in (0, 5, 9):
         sink(df.limit(3), b)
     assert store.read().count() == n_index
-
-
-def test_ingest_sink_seeds_watermark_from_legacy_markers(spark, tmp_path):
-    """ADVICE r7: a store written before the single-watermark scheme
-    carries per-batch _ingested_batch_*.marker files — on first open the
-    watermark seeds from their max (so the replayed batch does NOT
-    re-append its band rows) and the stale markers are deleted."""
-    import os as _os
-
-    from transferia_spark.operators.dedup import (
-        BandIndexIngestSink,
-        BandIndexStore,
-    )
-
-    rows = [
-        (i, f"the quick brown fox jumps over the lazy dog variant {i % 3}")
-        for i in range(20)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    t = build(
-        "dedup_incremental", text_col="text", id_col="doc_id", n=3, k=32, bands=8
-    )
-    store = BandIndexStore(spark, str(tmp_path / "idx"), n_shards=4)
-    old_sink = BandIndexIngestSink(store, t, str(tmp_path / "pairs"))
-    for b in range(3):
-        old_sink(df.filter(F.col("doc_id") % 3 == b), b)
-    # simulate the pre-upgrade on-disk state: per-batch markers instead
-    # of the high-watermark file
-    _os.unlink(old_sink._watermark_path)
-    for b in range(3):
-        with open(
-            _os.path.join(store.root, f"_ingested_batch_{b}.marker"), "w"
-        ) as f:
-            f.write("")
-    # a NEW sink (mid-stream upgrade) must treat batches 0-2 as done
-    sink = BandIndexIngestSink(store, t, str(tmp_path / "pairs"))
-    n_index = store.read().count()
-    sink(df.limit(4), 2)  # Spark replays the last uncommitted batch
-    assert store.read().count() == n_index  # no duplicate band rows
-    assert sink._watermark() == 2
-    assert not [
-        n for n in _os.listdir(store.root) if n.startswith("_ingested_batch_")
-    ]
-    # and the stream continues normally past the seeded watermark
-    sink(df.filter(F.col("doc_id") >= 15), 3)
-    assert sink._watermark() == 3
 
 
 def test_band_index_meta_wins_and_derived_shards(spark, tmp_path):

@@ -11,7 +11,8 @@ from pyspark.sql import types as T
 from transferia_spark.cdc.changeitem import COUNTER_COL, LSN_COL, OP_COL
 from transferia_spark.operators import Transformation, build
 from transferia_spark.streaming import (
-    CdcApplySink,
+    BucketedCdcApplySink,
+    BucketedParquetTable,
     ParquetTable,
     ReplicationPipeline,
     file_stream,
@@ -40,8 +41,8 @@ def _write_batch(dirpath: str, name: str, rows: list[dict]) -> None:
 
 
 def _run_pipeline(spark, src, table_root, ckpt, transformation=None):
-    table = ParquetTable(spark, table_root)
-    sink = CdcApplySink(table, keys=["id"])
+    table = BucketedParquetTable(spark, table_root, keys=["id"], n_buckets=4)
+    sink = BucketedCdcApplySink(table)
     pipe = ReplicationPipeline(
         stream=file_stream(spark, src, CDC_SCHEMA, fmt="json"),
         sink=sink,
@@ -117,8 +118,10 @@ def test_cdc_with_transform_chain(spark, tmp_path):
 
 
 def test_apply_is_idempotent(spark, tmp_path):
-    table = ParquetTable(spark, str(tmp_path / "t"))
-    sink = CdcApplySink(table, keys=["id"])
+    table = BucketedParquetTable(
+        spark, str(tmp_path / "t"), keys=["id"], n_buckets=4
+    )
+    sink = BucketedCdcApplySink(table)
     batch = spark.createDataFrame(
         [(1, "a", 1.0, "i", 1, 0), (2, "b", 2.0, "i", 2, 0)], CDC_SCHEMA
     )

@@ -673,23 +673,26 @@ class BandIndexStore:
         if self._load_meta() is None:
             self._save_meta(band_rows.schema)
 
-    def _index_reader(self):
-        """``spark.read`` with the persisted data schema when known —
-        an explicit schema skips the per-open parquet footer inference
-        job (one driver-side job per ingest read and per compact; at
-        the 100 TB ingest cadence that is a job per batch for a schema
-        that never changes). Stores written before the schema was
-        persisted in ``_meta.json`` fall back to inference."""
-        meta = self._load_meta() or {}
-        if "schema" not in meta:
-            return self.spark.read
+    def _index_schema(self):
+        """The stored index rows' schema plus ``_shard``; the schema
+        lands in ``_meta.json`` with the store's first append."""
         from pyspark.sql import types as T
 
+        meta = self._load_meta()
+        if meta is None:
+            raise FileNotFoundError(f"no band index at {self.root}")
         data = T.StructType.fromJson(meta["schema"])
-        full = T.StructType(
+        return T.StructType(
             list(data.fields) + [T.StructField("_shard", T.LongType())]
         )
-        return self.spark.read.schema(full)
+
+    def _index_reader(self):
+        """``spark.read`` with the persisted schema — an explicit
+        schema skips the per-open parquet footer inference job (one
+        driver-side job per ingest read and per compact; at the 100 TB
+        ingest cadence that is a job per batch for a schema that never
+        changes)."""
+        return self.spark.read.schema(self._index_schema())
 
     # -- versioned layout ----------------------------------------------
     def _version(self) -> int:
@@ -747,9 +750,10 @@ class BandIndexStore:
             _glob.glob(os.path.join(self._vdir(), "_shard=*", "*.parquet"))
         )
         if not paths:
-            # empty/missing version dir: same failure mode as before
-            # (the directory read raises on a missing path)
-            return self._index_reader().parquet(self._vdir())
+            # nothing indexed yet (an empty seed wrote no shard files):
+            # a directory read here would list the files a LATER append
+            # writes, so return an empty frame instead
+            return self.spark.createDataFrame([], self._index_schema())
         return (
             self._index_reader()
             .option("basePath", self._vdir())
@@ -884,35 +888,12 @@ class BandIndexIngestSink:
         return os.path.join(self.store.root, "_INGESTED")
 
     def _watermark(self) -> int | None:
-        """Highest batch id whose effects are fully on disk. A store
-        written before the single-watermark scheme carries per-batch
-        ``_ingested_batch_*.marker`` files instead — seed the watermark
-        from their max on first open and delete them, so an upgraded
-        mid-stream store neither re-appends the replayed batch's band
-        rows nor keeps the stale markers forever (ADVICE r7)."""
+        """Highest batch id whose effects are fully on disk."""
         try:
             with open(self._watermark_path) as f:
                 return int(f.read().strip())
         except (FileNotFoundError, ValueError):
-            pass
-        try:
-            names = os.listdir(self.store.root)
-        except FileNotFoundError:
-            return None  # store not materialized yet: nothing ingested
-        legacy = [
-            n
-            for n in names
-            if n.startswith("_ingested_batch_") and n.endswith(".marker")
-        ]
-        if not legacy:
             return None
-        wm = max(
-            int(n[len("_ingested_batch_"):-len(".marker")]) for n in legacy
-        )
-        self._advance_watermark(wm)
-        for n in legacy:
-            os.unlink(os.path.join(self.store.root, n))
-        return wm
 
     def _advance_watermark(self, batch_id: int) -> None:
         tmp = self._watermark_path + ".tmp"

@@ -13,7 +13,7 @@ from transferia_spark.streaming.readers import (  # noqa: F401
     rate_cdc_stream,
     rate_stream,
 )
-from transferia_spark.streaming.cdc_apply import CdcApplySink, ParquetTable  # noqa: F401
+from transferia_spark.streaming.cdc_apply import ParquetTable  # noqa: F401
 from transferia_spark.streaming.bucketed_table import (  # noqa: F401
     BucketedCdcApplySink,
     BucketedParquetTable,

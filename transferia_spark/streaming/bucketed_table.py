@@ -1,9 +1,10 @@
 """Hash-bucketed versioned parquet table: bucket-scoped CDC MERGE.
 
-``ParquetTable`` + ``merge_batch`` rewrite the WHOLE table every
-micro-batch — correct, but O(table) I/O per batch: a 100 TB target
-cannot re-stream 100 TB every 333 ms. This table fixes the asymptotics
-the way Delta/Iceberg/Hudi do, with a manifest instead of a log:
+The repo's one CDC apply target: ``BucketedCdcApplySink`` MERGEs every
+micro-batch into a ``BucketedParquetTable``. A whole-table rewrite per
+micro-batch is O(table) I/O — a 100 TB target cannot re-stream 100 TB
+every 333 ms — so this table bounds each batch's I/O the way
+Delta/Iceberg/Hudi do, with a manifest instead of a log:
 
 - rows hash into ``n_buckets`` by primary key
   (``pmod(xxhash64(keys), n))`` — the same PK-hash sharding the
@@ -36,19 +37,28 @@ ClickHouse's ReplacingMergeTree absorbs the reference's CDC batches
 (cheap append now, collapse later — ``clickhouse/sink_shard.go:183``)
 and Delta/Hudi's deferred-merge modes do:
 
-- ``merge()`` appends the batch as per-bucket delta files under
-  ``_d{v}`` (one narrow shuffle on the bucket column, no base read)
+- ``merge()`` appends the batch under ``_d{v}`` as a few files sorted
+  by (bucket, keys), the bucket riding as a data column; the manifest
+  records each delta's schema signature (``delta_sigs``) and exact
+  touched-bucket set (``delta_buckets``)
 - ``read()`` resolves last-writer-wins at scan time: base buckets
   ∪ pending deltas through the same ``merge_batch`` plan, ordered by
   the events' own ``(_lsn, _counter)`` — correctness is identical to
   eager merging because collapse orders globally per key
-- ``compact()`` folds pending deltas into the touched base buckets
-  (one rewrite amortized over ``max_deltas`` batches) and runs
-  automatically when the pending count reaches ``max_deltas``
+- ``compact_buckets()`` folds pending deltas into the touched base
+  buckets; the ``incremental`` policy runs it per bucket once that
+  bucket's pending count reaches a staggered threshold
 
 Amortized write cost drops from O(touched buckets) per batch to
 O(|batch| + touched/max_deltas); reads between compactions pay one
-extra key-shuffle over the delta tail (bounded by max_deltas batches).
+extra key-shuffle over the delta tail (< 2·max_deltas batches).
+
+On disk: ``_meta.json`` (keys, bucket count, schema), ``_CURRENT``,
+``_manifest_v{n}.json`` (``buckets``, ``deltas``, ``folded``,
+``delta_sigs``, ``delta_buckets``, ``last_batch_id``, ``n_buckets``),
+``_v{n}/bkt={b}/`` base files and ``_d{n}/`` delta files. This is the
+only layout the table reads; a manifest missing any of those keys
+fails to open.
 """
 
 from __future__ import annotations
@@ -202,14 +212,11 @@ class BucketedParquetTable:
           staggered threshold in [max_deltas, 2·max_deltas) — under
           uniform churn every batch folds ~n_buckets/max_deltas
           buckets instead of the whole table every max_deltas-th
-          batch, with LESS amortized fold work than the inline policy
-          (average fold period ~1.5·max_deltas); the worst-case
-          pending tail a read pays is < 2·max_deltas (r7 verdict item
-          4 — the reference's targets fold in background merges,
+          batch (average fold period ~1.5·max_deltas); the worst-case
+          pending tail a read pays is < 2·max_deltas (the reference's
+          targets fold in background merges,
           clickhouse/sink_shard.go:183; the apply SINK additionally
           runs these folds in a background thread);
-        - ``"inline"``: the r7 behavior — one full fold inside merge()
-          every max_deltas-th batch;
         - ``"off"``: never fold on the write path; run ``compact()``
           from a maintenance pass (the read path is correct for
           arbitrarily long tails, it just re-merges them per scan)."""
@@ -217,9 +224,9 @@ class BucketedParquetTable:
             raise ValueError(
                 f"merge_mode must be 'rewrite' or 'delta', got {merge_mode!r}"
             )
-        if compact_policy not in ("incremental", "inline", "off"):
+        if compact_policy not in ("incremental", "off"):
             raise ValueError(
-                "compact_policy must be 'incremental', 'inline' or 'off', "
+                "compact_policy must be 'incremental' or 'off', "
                 f"got {compact_policy!r}"
             )
         self.spark = spark
@@ -280,11 +287,8 @@ class BucketedParquetTable:
         # the CURRENT manifest's recorded count wins over meta: the
         # manifest flip is the atomic commit point of a rebucket, and
         # _meta.json is rewritten BEFORE the new layout's parquet even
-        # lands — a crash in between must not resurrect the half-done
-        # count (legacy manifests carry no count → meta stands)
-        cur_n = self._manifest_doc()["n_buckets"]
-        if cur_n is not None:
-            self.n_buckets = int(cur_n)
+        # lands, so a crash in between must not resurrect that count
+        self.n_buckets = self._manifest_doc()["n_buckets"]
         self._last_alloc = self.version()
 
     #: an ``_ALLOC`` inflight claim older than this is a crashed
@@ -416,9 +420,7 @@ class BucketedParquetTable:
         if meta is not None:
             self.n_buckets = int(meta["n_buckets"])
             self._schema_json = meta.get("schema")
-        cur_n = self._manifest_doc()["n_buckets"]
-        if cur_n is not None:
-            self.n_buckets = int(cur_n)
+        self.n_buckets = self._manifest_doc()["n_buckets"]
 
     def _check_layout(self, doc: dict, cleanup_dir: str, claim: int):
         """Inside a locked commit section: if the manifest records a
@@ -426,11 +428,7 @@ class BucketedParquetTable:
         parquet is bucketed by the wrong function — discard it and
         raise for the caller's refresh-retry."""
         cur_n = doc["n_buckets"]
-        if (
-            cur_n is not None
-            and self.n_buckets is not None
-            and int(cur_n) != self.n_buckets
-        ):
+        if cur_n != self.n_buckets:
             shutil.rmtree(cleanup_dir, ignore_errors=True)
             self._release_claim(claim)
             raise BucketLayoutChanged(
@@ -462,55 +460,37 @@ class BucketedParquetTable:
         highest delta version already folded into that bucket's base —
         the per-bucket compaction watermark; a delta applies to a
         bucket only when its version exceeds the bucket's entry).
-        Legacy flat manifests ({bucket: version}) parse as
-        buckets-only."""
+        Before the first commit the document is empty and carries
+        the instance's own bucket count."""
         v = self.version() if v is None else v
         if v < 0:
             return {
                 "buckets": {}, "deltas": [], "last_batch_id": None,
                 "folded": {}, "delta_sigs": {}, "delta_buckets": {},
-                "n_buckets": None,
+                "n_buckets": self.n_buckets,
             }
         with open(self._manifest_path(v)) as f:
             raw = json.load(f)
-        if "buckets" not in raw:
-            return {
-                "buckets": {int(b): int(ver) for b, ver in raw.items()},
-                "deltas": [],
-                "last_batch_id": None,
-                "folded": {},
-                "delta_sigs": {},
-                "delta_buckets": {},
-                "n_buckets": None,
-            }
         return {
             "buckets": {
                 int(b): int(ver) for b, ver in raw["buckets"].items()
             },
-            "deltas": [int(d) for d in raw.get("deltas", [])],
-            "last_batch_id": raw.get("last_batch_id"),
-            "folded": {
-                int(b): int(d) for b, d in raw.get("folded", {}).items()
-            },
+            "deltas": [int(d) for d in raw["deltas"]],
+            "last_batch_id": raw["last_batch_id"],
+            "folded": {int(b): int(d) for b, d in raw["folded"].items()},
             # delta version → schema signature, recorded at append time
             # so reads can group same-schema versions into ONE parquet
             # scan (a fold over an 8-deep tail was paying 8 separate
-            # read plans; absent for legacy manifests → per-version
-            # reads)
-            "delta_sigs": {
-                int(d): s for d, s in raw.get("delta_sigs", {}).items()
-            },
-            # delta version → exact touched-bucket set (new-layout
-            # single-file deltas, r9; legacy dir-layout versions are
-            # absent here and fall back to a directory listing)
+            # read plans)
+            "delta_sigs": {int(d): s for d, s in raw["delta_sigs"].items()},
+            # delta version → exact touched-bucket set
             "delta_buckets": {
                 int(d): [int(b) for b in bs]
-                for d, bs in raw.get("delta_buckets", {}).items()
+                for d, bs in raw["delta_buckets"].items()
             },
             # the bucket count this manifest's layout was committed
-            # under — the rebucket commit point (None for manifests
-            # written before rebucket existed)
-            "n_buckets": raw.get("n_buckets"),
+            # under — the rebucket commit point
+            "n_buckets": int(raw["n_buckets"]),
         }
 
     def manifest(self, v: int | None = None) -> dict[int, int]:
@@ -525,57 +505,45 @@ class BucketedParquetTable:
     @staticmethod
     def _scan_delta_buckets(path: str) -> list[int]:
         """Exact touched-bucket set of a just-written delta: one
-        driver-side pyarrow scan of the bucket column (a local
-        one-column read of a micro-batch-sized file — no Spark job)."""
-        import pyarrow.dataset as pads
+        driver-side pyarrow read of each file's bucket column (local
+        one-column reads of micro-batch-sized files — no Spark job).
+        Zero-row files are deleted on the way (with their ``.crc``):
+        Spark writes task 0's file even when that task got no rows,
+        and a committed delta holds only files with rows."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
         try:
-            tbl = pads.dataset(path, format="parquet").to_table(
-                columns=[BUCKET_COL]
-            )
+            names = os.listdir(path)
         except FileNotFoundError:
             return []
-        return sorted(set(tbl[BUCKET_COL].to_pylist()))
-
-    def _delta_buckets(self, ver: int, doc: dict | None = None) -> list[int]:
-        """Buckets a delta version touches. New-layout deltas (single
-        sorted files, r9) record the exact set in the manifest at
-        append time; legacy bkt= partition dirs fall back to a
-        directory listing."""
-        if doc is not None:
-            rec = doc.get("delta_buckets", {}).get(ver)
-            if rec is not None:
-                return list(rec)
-        try:
-            names = os.listdir(self._delta_dir(ver))
-        except FileNotFoundError:
-            return []
-        out = []
-        for n in names:
-            if n.startswith(f"{BUCKET_COL}="):
-                try:
-                    out.append(int(n.split("=", 1)[1]))
-                except ValueError:
-                    pass
-        if out:
-            return sorted(out)
-        # new layout but manifest record unavailable (e.g. a caller
-        # without the doc): scan the file's bucket column
-        return self._scan_delta_buckets(self._delta_dir(ver))
+        touched: set[int] = set()
+        for name in names:
+            if not name.endswith(".parquet"):
+                continue
+            with pq.ParquetFile(os.path.join(path, name)) as f:
+                if f.metadata.num_rows:
+                    col = f.read(columns=[BUCKET_COL]).column(0)
+                    touched.update(pc.unique(col).to_pylist())
+                    continue
+            for junk in (name, f".{name}.crc"):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(path, junk))
+        return sorted(touched)
 
     def _pending_pairs(
         self, doc: dict, wanted: list[int] | set[int]
     ) -> list[tuple[int, list[int]]]:
         """``[(delta_version, buckets of `wanted` still pending it)]``
-        honoring the per-bucket ``folded`` watermarks — one directory
-        listing per pending delta, no Spark job."""
+        honoring the per-bucket ``folded`` watermarks — manifest
+        lookups only, no listing and no Spark job."""
         folded = doc["folded"]
         wanted_set = set(wanted)
         out: list[tuple[int, list[int]]] = []
         for d in doc["deltas"]:
             bs = [
                 b
-                for b in self._delta_buckets(d, doc)
+                for b in doc["delta_buckets"][d]
                 if b in wanted_set and d > folded.get(b, -1)
             ]
             if bs:
@@ -644,22 +612,14 @@ class BucketedParquetTable:
         # under the count it was committed with, and a current-version
         # read on a long-lived instance heals a count another process's
         # rebucket changed underneath it
-        doc_n = doc["n_buckets"] if doc["n_buckets"] is not None else (
-            self.n_buckets
-        )
-        if (
-            version is None
-            and doc_n is not None
-            and doc_n != self.n_buckets
-        ):
+        doc_n = doc["n_buckets"]
+        if version is None and doc_n != self.n_buckets:
             self._refresh_layout()
         # buckets with PENDING delta rows (a delta already folded into a
-        # bucket's base no longer applies there) — ONE listing pass over
-        # the tail, reused for the read's own pairs
+        # bucket's base no longer applies there) — ONE pass over the
+        # tail, reused for the read's own pairs
         all_pairs = (
-            self._pending_pairs(doc, range(doc_n))
-            if doc["deltas"] and doc_n is not None
-            else []
+            self._pending_pairs(doc, range(doc_n)) if doc["deltas"] else []
         )
         delta_touched = {b for _, bs in all_pairs for b in bs}
         if not m and not delta_touched and buckets is None:
@@ -733,9 +693,7 @@ class BucketedParquetTable:
         return merge_batch(_widen_to_batch(base, ddf), ddf, self.keys)
 
     def _read_deltas(
-        self,
-        pairs: list[tuple[int, list[int]]],
-        doc: dict | None = None,
+        self, pairs: list[tuple[int, list[int]]], doc: dict
     ) -> DataFrame | None:
         """Union the pending delta tail — ``pairs`` is
         ``[(delta_version, pending buckets)]`` from
@@ -743,13 +701,11 @@ class BucketedParquetTable:
         delta may carry different meta columns (``_toasted`` vs none)
         or a column subset.
 
-        New-layout deltas (r9: single sorted files, bucket as a data
-        column) read with an EXPLICIT schema rebuilt from the append
+        Deltas read with an EXPLICIT schema rebuilt from the append
         signature — no schema-inference footer job — and a per-version
         ``bkt IN (pending)`` filter: a bucket already folded for this
         delta must NOT re-apply (the fold dropped its meta columns, so
-        re-reading would regress the base). Legacy bkt= partition dirs
-        read per-directory as before.
+        re-reading would regress the base).
 
         Mixed payload column sets are aligned with an explicit
         ``_present`` marker per frame, NOT bare ``allowMissingColumns``
@@ -758,62 +714,35 @@ class BucketedParquetTable:
         keeps the target value), but a NULL-filled union would let the
         filled NULLs overwrite base values at read/compact time — a
         silent divergence from the rewrite-mode oracle (ADVICE r7)."""
-        from pyspark.sql import types as T
-
-        sigs = (doc or {}).get("delta_sigs", {})
-        recorded = (doc or {}).get("delta_buckets", {})
         # group versions that share BOTH the schema signature and the
         # pending-bucket set into one multi-path scan: per-key ordering
         # comes from the rows' own (_lsn, _counter), never from file
         # order, so mixing versions in one read is sound — and a fold
-        # over an 8-deep tail pays 1 read plan instead of 8. Versions
-        # without a signature (legacy manifests) read alone.
-        groups: dict[object, list[tuple[int, list[int]]]] = {}
+        # over an 8-deep tail pays 1 read plan instead of 8. The bucket
+        # filter is part of the plan, so only same-filter versions may
+        # share a scan.
+        groups: dict[tuple, list[int]] = {}
         for d, bs in pairs:
-            sig = sigs.get(d)
-            if sig is None:
-                key: object = ("solo", d)
-            elif d in recorded:
-                # new layout: the bucket filter is part of the plan, so
-                # only same-filter versions may share a scan
-                key = ("file", sig, tuple(sorted(bs)))
-            else:
-                key = ("dir", sig)
-            groups.setdefault(key, []).append((d, bs))
+            key = (doc["delta_sigs"][d], tuple(sorted(bs)))
+            groups.setdefault(key, []).append(d)
         frames = []
-        for key, members in groups.items():
-            if isinstance(key, tuple) and key[0] == "file":
-                dirs = [self._delta_dir(d) for d, _bs in members]
-                bs = list(members[0][1])
-                schema = T.StructType(
-                    [
-                        T.StructField(n, T._parse_datatype_string(ts), True)
-                        for n, ts in json.loads(key[1])
-                    ]
-                    + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
-                )
-                full = {
-                    b
-                    for d, _ in members
-                    for b in recorded.get(d, [])
-                }
-                f = self.spark.read.schema(schema).parquet(*dirs)
-                if set(bs) != full:
-                    # prune to still-pending buckets (sorted files →
-                    # row-group stats make this a cheap skip-scan)
-                    f = f.filter(F.col(BUCKET_COL).isin(bs))
-                frames.append(f.drop(BUCKET_COL))
-                continue
-            dpaths = []
-            for d, bs in members:
-                present = set(self._delta_buckets(d, doc))
-                dpaths += [
-                    os.path.join(self._delta_dir(d), f"{BUCKET_COL}={b}")
-                    for b in bs
-                    if b in present
+        for (sig, bs), members in groups.items():
+            schema = T.StructType(
+                [
+                    T.StructField(n, T._parse_datatype_string(ts), True)
+                    for n, ts in json.loads(sig)
                 ]
-            if dpaths:
-                frames.append(self.spark.read.parquet(*dpaths))
+                + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
+            )
+            full = {b for d in members for b in doc["delta_buckets"][d]}
+            f = self.spark.read.schema(schema).parquet(
+                *[self._delta_dir(d) for d in members]
+            )
+            if set(bs) != full:
+                # prune to still-pending buckets (sorted files →
+                # row-group stats make this a cheap skip-scan)
+                f = f.filter(F.col(BUCKET_COL).isin(list(bs)))
+            frames.append(f.drop(BUCKET_COL))
         if not frames:
             return None
         from transferia_spark.cdc.changeitem import (
@@ -868,10 +797,11 @@ class BucketedParquetTable:
         """Apply one ChangeItem batch.
 
         ``merge_mode="rewrite"``: eager — rewrite only touched buckets.
-        ``merge_mode="delta"``: O(|batch|) append; auto-compacts when
-        ``max_deltas`` deltas are pending. ``batch_id`` (when the caller
-        is a streaming sink) is a replay watermark: a batch at or below
-        the last appended id is already durable and skips."""
+        ``merge_mode="delta"``: O(|batch|) append; under the
+        ``incremental`` policy the buckets that came due fold after it
+        unless ``fold=False``. ``batch_id`` (when the caller is a
+        streaming sink) is a replay watermark: a batch at or below the
+        last appended id is already durable and skips."""
         if self.merge_mode == "delta":
             # delta mode resolves partial rows at READ time from the
             # batch's own markers (_toasted/_present ride the delta
@@ -900,14 +830,9 @@ class BucketedParquetTable:
                 # are rare maintenance events, not races)
                 self._refresh_layout()
                 v = self.append_delta(batch, batch_id=batch_id)
-            if not fold:
-                # the caller runs compaction itself (the async apply
-                # sink folds in a background thread between batches)
-                return v
-            if self.compact_policy == "inline":
-                if len(self._manifest_doc()["deltas"]) >= self.max_deltas:
-                    v = self.compact()
-            elif self.compact_policy == "incremental":
+            # fold=False: the caller runs compaction itself (the apply
+            # sink folds in a background thread between batches)
+            if fold and self.compact_policy == "incremental":
                 due = self._buckets_due()
                 if due:
                     v = self.compact_buckets(due)
@@ -1120,18 +1045,14 @@ class BucketedParquetTable:
             sorted((f.name, f.dataType.simpleString()) for f in batch.schema)
         )
         out = batch.withColumn(BUCKET_COL, self._bucket_of())
-        # delta layout (r9): the bucket rides as a DATA COLUMN in ONE
-        # sorted file per append (a handful for wide backlogs), not as
-        # a bkt= partition directory — a dynamic partitionBy write was
-        # paying one file create + commit PER TOUCHED BUCKET per batch,
-        # which (a) dominated steady-state micro-batch latency and
-        # (b) made an over-provisioned n_buckets (b64 vs b16 in the
-        # sweep) pay ~4× the append cost for the same rows. Sorting by
-        # (bucket, keys) keeps parquet row-group min/max stats able to
-        # prune per-bucket fold reads, and the manifest records each
-        # delta's EXACT touched-bucket set (read driver-side from the
-        # written file's bucket column — a one-column scan of a local
-        # file, no Spark job).
+        # the bucket rides as a DATA COLUMN in a few sorted files per
+        # append: a partitionBy write would pay one file create +
+        # commit per touched bucket per batch, which dominates
+        # micro-batch latency. Sorting by (bucket, keys) keeps parquet
+        # row-group min/max stats able to prune per-bucket fold reads,
+        # and the manifest records each delta's EXACT touched-bucket
+        # set (_scan_delta_buckets — local footer and one-column reads,
+        # no Spark job).
         parts = out.rdd.getNumPartitions()
         cached = None
         if parts > 4:
@@ -1237,7 +1158,7 @@ class BucketedParquetTable:
         # range(old_n) would miss deltas in buckets above it — and the
         # bookkeeping commit would both drop them and stamp the stale
         # count into the manifest (code-review r8 session-2 finding 1)
-        if doc["n_buckets"] is not None and doc["n_buckets"] != self.n_buckets:
+        if doc["n_buckets"] != self.n_buckets:
             self._refresh_layout()
         if not doc["deltas"]:
             return self.version()
@@ -1247,10 +1168,7 @@ class BucketedParquetTable:
             # preserving anything appended since the check
             with self._commit_mutex, self._fs_lock():
                 doc = self._manifest_doc()
-                if (
-                    doc["n_buckets"] is not None
-                    and doc["n_buckets"] != self.n_buckets
-                ):
+                if doc["n_buckets"] != self.n_buckets:
                     # a rebucket slipped in before the lock: re-resolve
                     # and rescan under the real layout
                     self._refresh_layout()
@@ -1363,18 +1281,16 @@ class BucketedParquetTable:
         policy removes. Staggering desynchronizes the folds into a
         steady ~n_buckets/max_deltas per batch, and the average fold
         period (~1.5·max_deltas) makes the AMORTIZED fold work
-        table/(1.5·max_deltas) per batch — LESS than the inline
-        policy's table/max_deltas, not just smoother (measured: the
-        first staggering attempt used [max_deltas/2, max_deltas] and
-        folded so often it cost more total work than inline). The
-        worst-case pending tail a read pays is < 2·max_deltas."""
+        table/(1.5·max_deltas) per batch — less than a whole-table fold
+        every max_deltas-th batch, not just smoother. The worst-case
+        pending tail a read pays is < 2·max_deltas."""
         doc = self._manifest_doc()
         if not doc["deltas"]:
             return []
         folded = doc["folded"]
         counts: dict[int, int] = {}
         for d in doc["deltas"]:
-            for b in self._delta_buckets(d, doc):
+            for b in doc["delta_buckets"][d]:
                 if d > folded.get(b, -1):
                     counts[b] = counts.get(b, 0) + 1
         md = self.max_deltas
@@ -1668,7 +1584,7 @@ class BucketedParquetTable:
                     for d in doc["deltas"]
                     if any(
                         d > new_folded.get(b, -1)
-                        for b in self._delta_buckets(d, doc)
+                        for b in doc["delta_buckets"][d]
                     )
                 ]
                 if new_deltas:
@@ -1828,34 +1744,32 @@ class BucketedParquetTable:
 
 
 class BucketedCdcApplySink:
-    """foreachBatch sink over a ``BucketedParquetTable`` — the
-    O(touched-buckets) counterpart of ``CdcApplySink``.
+    """foreachBatch sink over a ``BucketedParquetTable`` — the repo's
+    CDC apply path. At-least-once delivery from the checkpointed source
+    plus this idempotent MERGE gives the reference's delivery contract
+    (``docs/concepts/replication-techniques.md``): re-applying a batch
+    yields the same table state.
 
     For a delta-mode table with the incremental policy, compaction runs
-    in a BACKGROUND thread between batches (``async_compact``, default
-    on): the apply path stays a pure O(|batch|) append while due
-    buckets fold concurrently — the reference's targets do exactly this
-    (ClickHouse background merges, ``clickhouse/sink_shard.go:183``).
-    The table's versioned commits make the overlap safe: directory
-    versions are allocated under the commit mutex, manifests re-read
-    under it, and a delta appended mid-fold stays pending (it sits
-    above every fold watermark). A compaction failure surfaces on the
-    NEXT batch — maintenance must not die silently."""
+    in a BACKGROUND thread between batches: the apply path stays a pure
+    O(|batch|) append while due buckets fold concurrently — the
+    reference's targets do exactly this (ClickHouse background merges,
+    ``clickhouse/sink_shard.go:183``). The table's versioned commits
+    make the overlap safe: directory versions are allocated under the
+    commit mutex, manifests re-read under it, and a delta appended
+    mid-fold stays pending (it sits above every fold watermark). A
+    compaction failure surfaces on the NEXT batch — maintenance must
+    not die silently. A failed apply is re-attempted ``MAX_RETRIES``
+    times before the error reaches the streaming engine
+    (≈ ``middlewares/retrier.go:17``)."""
 
-    def __init__(
-        self,
-        table: BucketedParquetTable,
-        toast_aware: bool | None = None,
-        max_retries: int = 2,
-        async_compact: bool = True,
-    ):
+    MAX_RETRIES = 2
+
+    def __init__(self, table: BucketedParquetTable):
         self.table = table
-        self.toast_aware = toast_aware
-        self.max_retries = max_retries
         self.batches_applied = 0
-        self.async_compact = (
-            async_compact
-            and table.merge_mode == "delta"
+        self._background_fold = (
+            table.merge_mode == "delta"
             and table.compact_policy == "incremental"
         )
         self._compactor: threading.Thread | None = None
@@ -1899,19 +1813,15 @@ class BucketedCdcApplySink:
         # sees zero touched buckets and discards its write; the eager
         # merge sees zero touched buckets and returns.
         last_err: Exception | None = None
-        for _ in range(self.max_retries + 1):
+        for _ in range(self.MAX_RETRIES + 1):
             try:
                 # batch_id rides along as the delta-mode replay
                 # watermark; the rewrite mode is idempotent by
-                # construction and ignores it
-                self.table.merge(
-                    batch_df,
-                    toast_aware=self.toast_aware,
-                    batch_id=batch_id,
-                    fold=not self.async_compact,
-                )
+                # construction and ignores it. Folds never run inline:
+                # the incremental policy folds in the background below
+                self.table.merge(batch_df, batch_id=batch_id, fold=False)
                 self.batches_applied += 1
-                if self.async_compact:
+                if self._background_fold:
                     self._maybe_compact()
                 return
             except FileNotFoundError:

@@ -1,25 +1,12 @@
-"""CDC apply path: foreachBatch → collapse → MERGE into a target table.
+"""Versioned parquet table with an atomic pointer swap.
 
-≈ the reference's replication sink pipeline (``sink_factory.go:97-197``
-middleware order, PG sink upsert-by-PK, ClickHouse collapse): each
-micro-batch is collapsed per key (``change_item_collapse.go``
-semantics) and merged into the target with insert/update/delete +
-TOAST partial-update handling.
-
-Delivery contract (mirrors ``docs/concepts/replication-techniques.md``):
-at-least-once delivery from the checkpointed source + idempotent MERGE
-apply — re-processing a batch yields the same table state. Exactly-once
-table swaps come from writing each new version to a fresh directory and
-atomically repointing (the poor man's Delta commit; swap-level atomicity
-is filesystem rename).
-
-Scale notes: the merge joins target ⟗ batch on the key — batch side is
-small per trigger and broadcasts under AQE; the target side shuffle is
-avoided entirely when the target is bucketed by key on disk. Ordering:
-within a micro-batch, collapse orders by (_lsn, _counter) per key;
-across batches, checkpointed source order per partition — the same
-per-key ordering guarantee the reference gets from parsequeue ordered
-ack.
+``ParquetTable`` is the whole-table write target of ``tasks/compact.py``
+and ``trcli compact --dst``: every ``overwrite`` writes a fresh
+``_v{n}`` directory and then atomically repoints ``_CURRENT`` (the poor
+man's Delta commit; swap-level atomicity is filesystem rename). CDC
+micro-batches are applied by ``BucketedCdcApplySink`` into a
+``BucketedParquetTable`` (``streaming/bucketed_table.py``), which
+rewrites only the buckets a batch touches.
 """
 
 from __future__ import annotations
@@ -28,8 +15,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-
-from transferia_spark.cdc.merge import merge_batch
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -42,8 +27,7 @@ class ParquetTable:
     Layout: ``root/_v{n}/`` holds version n; ``root/_CURRENT`` names the
     live version. Readers read the named version; the writer prepares
     version n+1 in a fresh directory then atomically rewrites the
-    pointer. Single-writer (one streaming query) by design — the same
-    constraint the reference's per-transfer sink has.
+    pointer. Single-writer by design.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -98,9 +82,8 @@ class ParquetTable:
         except FileExistsError:
             raise ConcurrentWriteError(
                 f"another writer holds {lock}; ParquetTable is "
-                "single-writer — serialize compact_table with the "
-                "streaming sink (remove the stale lock only after a "
-                "crashed writer)"
+                "single-writer — serialize its writers (remove the "
+                "stale lock only after a crashed writer)"
             ) from None
         try:
             os.write(fd, str(os.getpid()).encode())
@@ -135,64 +118,3 @@ class ParquetTable:
             if name.startswith("_v") and int(name[2:]) <= v - keep:
                 shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
-
-class CdcApplySink:
-    """foreachBatch sink: MERGE each micro-batch into a ParquetTable.
-
-    Use with ``writeStream.foreachBatch(sink)``; idempotent per batch.
-    ``max_retries`` re-attempts transient failures before surfacing the
-    error to the streaming engine (≈ ``middlewares/retrier.go:17`` —
-    fatal errors propagate immediately, Spark restarts the query from
-    the checkpoint).
-    """
-
-    def __init__(
-        self,
-        table: ParquetTable,
-        keys: list[str],
-        toast_aware: bool | None = None,
-        max_retries: int = 2,
-    ):
-        self.table = table
-        self.keys = keys
-        self.toast_aware = toast_aware
-        self.max_retries = max_retries
-        self.batches_applied = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        last_err: Exception | None = None
-        for _ in range(self.max_retries + 1):
-            try:
-                self._apply(batch_df)
-                self.batches_applied += 1
-                return
-            except FileNotFoundError:
-                raise  # fatal: misconfigured target
-            except Exception as e:  # transient (fs hiccup, OOM retry)
-                last_err = e
-        raise last_err
-
-    def _apply(self, batch_df: DataFrame) -> None:
-        if self.table.exists():
-            target = self.table.read()
-        else:
-            target = batch_df.sparkSession.createDataFrame(
-                [], self._target_schema(batch_df)
-            )
-        merged = merge_batch(
-            target, batch_df, self.keys, toast_aware=self.toast_aware
-        )
-        # safe read-while-write: merged lazily reads _v{n} and the
-        # overwrite streams into the fresh _v{n+1} directory; the
-        # pointer swap happens only after the write commits
-        self.table.overwrite(merged)
-
-    def _target_schema(self, batch_df: DataFrame):
-        from transferia_spark.cdc.changeitem import META_COLS
-
-        keep = [f for f in batch_df.schema.fields if f.name not in META_COLS]
-        from pyspark.sql import types as T
-
-        return T.StructType(keep)

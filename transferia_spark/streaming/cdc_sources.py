@@ -27,7 +27,7 @@ ChangeItem frames.
 
 Emitted rows speak the full ChangeItem contract (payload columns, then
 ``_op``/``_lsn``/``_counter``/``_table``/``_before``/``_present``) and
-plug straight into collapse → merge_batch / CdcApplySink.
+plug straight into collapse → merge_batch / BucketedCdcApplySink.
 """
 
 from __future__ import annotations

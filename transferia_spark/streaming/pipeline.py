@@ -39,8 +39,9 @@ class ReplicationPipeline:
     foreachBatch sink.
 
     ``sink`` is any callable ``(DataFrame, batch_id) -> None`` —
-    typically a ``CdcApplySink``; ``transformation`` applies before the
-    sink exactly like the reference's transformation middleware.
+    typically a ``BucketedCdcApplySink``; ``transformation`` applies
+    before the sink exactly like the reference's transformation
+    middleware.
     """
 
     stream: DataFrame

@@ -19,8 +19,8 @@ so a socket/psycopg transport only replaces ``_scan_files``.
 
 Emitted rows speak the full ChangeItem column contract
 (``transferia_spark.cdc.changeitem``), so the stream plugs straight
-into collapse → merge_batch / CdcApplySink: payload columns per the
-declared schema, then ``_op`` (i/u/d), ``_lsn``, ``_counter`` (event
+into collapse → merge_batch / BucketedCdcApplySink: payload columns
+per the declared schema, then ``_op`` (i/u/d), ``_lsn``, ``_counter`` (event
 index within the transaction/LSN — the per-key tiebreak collapse
 orders by), ``_table``, ``_before`` (typed pre-image struct of the
 identity columns — the reference's OldKeys, what keys_changed /

@@ -631,18 +631,11 @@ class MultiTableCdcSink:
         self.sinks: dict[str, BucketedCdcApplySink] = {}
         self.targets: dict[str, BucketedParquetTable] = {}
         for name, cfg in tables.items():
-            keys = list(cfg.get("keys") or [])
-            if not keys or not cfg.get("root"):
+            if not cfg.get("keys") or not cfg.get("root"):
                 raise FatalError(
                     f"replication.target.tables[{name!r}] needs root + keys"
                 )
-            t = BucketedParquetTable(
-                spark, cfg["root"], keys=keys,
-                n_buckets=_n_buckets_cfg(cfg),
-                merge_mode=cfg.get("merge_mode", "rewrite"),
-                max_deltas=int(cfg.get("max_deltas", 8)),
-                compact_policy=cfg.get("compact_policy", "incremental"),
-            )
+            t = _bucketed_target(spark, cfg)
             self.targets[name] = t
             self.sinks[name] = BucketedCdcApplySink(t)
             self.tables[name] = cfg
@@ -701,20 +694,33 @@ class MultiTableCdcSink:
             raise first
 
 
-def _n_buckets_cfg(cfg: dict) -> int | None:
-    """``n_buckets: auto`` → None (derive from the snapshot seed's
-    plan-size stats at first write); absent → 16; else the int."""
+def _bucketed_target(spark: SparkSession, cfg: dict):
+    """A target config dict → its ``BucketedParquetTable``.
+
+    ``n_buckets: auto`` → None (derive from the snapshot seed's
+    plan-size stats at first write); absent → 16. ``merge_mode: delta``
+    = O(|batch|) appends + read-time last-writer-wins + staggered
+    per-bucket compaction between micro-batches, the steady-state CDC
+    throughput mode; ``compact_policy: off`` leaves folding to
+    ``trcli compact``."""
+    from transferia_spark.streaming.bucketed_table import BucketedParquetTable
+
     nb = cfg.get("n_buckets", 16)
-    if isinstance(nb, str) and nb.lower() == "auto":
-        return None
-    return int(nb)
+    auto = isinstance(nb, str) and nb.lower() == "auto"
+    return BucketedParquetTable(
+        spark, cfg["root"], keys=list(cfg["keys"]),
+        n_buckets=None if auto else int(nb),
+        merge_mode=cfg.get("merge_mode", "rewrite"),
+        max_deltas=int(cfg.get("max_deltas", 8)),
+        compact_policy=cfg.get("compact_policy", "incremental"),
+    )
 
 
 def build_replication_sink(spark: SparkSession, target: dict):
     """``replication.target`` section → (sink callable, table object).
 
-    kinds: ``bucketed`` (BucketedParquetTable — O(touched buckets)
-    MERGE) and ``parquet`` (versioned full-table MERGE).
+    A single target (``kind: bucketed``, the default and only kind) or
+    a ``tables:`` map, each applied through ``BucketedCdcApplySink``.
     """
     if target.get("tables"):
         sink = MultiTableCdcSink(
@@ -722,36 +728,16 @@ def build_replication_sink(spark: SparkSession, target: dict):
         )
         return sink, sink  # the sink doubles as the multi-table seeder
     kind = target.get("kind", "bucketed")
-    keys = list(target.get("keys") or [])
-    if not keys:
+    if kind != "bucketed":
+        raise FatalError(f"unknown replication.target kind {kind!r}")
+    if not target.get("keys"):
         raise FatalError("replication.target needs keys: [..]")
-    root = target.get("root")
-    if not root:
+    if not target.get("root"):
         raise FatalError("replication.target needs root: <dir>")
-    if kind == "bucketed":
-        from transferia_spark.streaming.bucketed_table import (
-            BucketedCdcApplySink,
-            BucketedParquetTable,
-        )
+    from transferia_spark.streaming.bucketed_table import BucketedCdcApplySink
 
-        table = BucketedParquetTable(
-            spark, root, keys=keys,
-            n_buckets=_n_buckets_cfg(target),
-            # merge_mode: delta = O(|batch|) appends + read-time
-            # last-writer-wins + staggered per-bucket compaction
-            # between micro-batches — the steady-state CDC throughput
-            # mode (compact_policy: incremental | inline | off)
-            merge_mode=target.get("merge_mode", "rewrite"),
-            max_deltas=int(target.get("max_deltas", 8)),
-            compact_policy=target.get("compact_policy", "incremental"),
-        )
-        return BucketedCdcApplySink(table), table
-    if kind == "parquet":
-        from transferia_spark.streaming.cdc_apply import CdcApplySink, ParquetTable
-
-        table = ParquetTable(spark, root)
-        return CdcApplySink(table, keys=keys), table
-    raise FatalError(f"unknown replication.target kind {kind!r}")
+    table = _bucketed_target(spark, target)
+    return BucketedCdcApplySink(table), table
 
 
 # ------------------------------------------------------------- supervisor
