@@ -199,6 +199,51 @@ def test_sink_applies_batches(spark, table):
     }
 
 
+def test_sink_retries_transient_errors_and_fails_fast_on_fatal(
+    spark, table, caplog
+):
+    """A transient apply error is retried, logged at WARNING and
+    counted; a deterministic one (is_fatal) raises on the first attempt;
+    a transient one that persists raises after MAX_RETRIES retries."""
+    import logging
+
+    sink = BucketedCdcApplySink(table)
+    real_merge = table.merge
+    calls = []
+
+    def failing(first_n, err):
+        def merge(*args, **kwargs):
+            calls.append(1)
+            if len(calls) <= first_n:
+                raise err
+            return real_merge(*args, **kwargs)
+
+        return merge
+
+    batch = _batch(spark, [(1, "a", "i", 1, 0)])
+    table.merge = failing(1, RuntimeError("transient hiccup"))
+    with caplog.at_level(logging.WARNING):
+        sink(batch, 0)
+    assert len(calls) == 2 and sink.retries == 1
+    assert sink.batches_applied == 1
+    assert "transient hiccup" in caplog.text
+    assert {(r.id, r.v) for r in table.read().collect()} == {(1, "a")}
+
+    calls.clear()
+    table.merge = failing(9, ValueError("deterministic"))
+    with pytest.raises(ValueError, match="deterministic"):
+        sink(batch, 1)
+    assert len(calls) == 1 and sink.retries == 1
+
+    calls.clear()
+    table.merge = failing(9, RuntimeError("still down"))
+    with pytest.raises(RuntimeError, match="still down"):
+        sink(batch, 2)
+    assert len(calls) == sink.MAX_RETRIES + 1
+    assert sink.retries == 1 + sink.MAX_RETRIES
+    assert sink.batches_applied == 1
+
+
 def test_overwrite_then_merge(spark, table):
     snap = spark.createDataFrame(
         [(i, f"s{i}") for i in range(20)], "id long, v string"
@@ -424,6 +469,68 @@ def test_delta_append_is_o_batch(spark, delta_table):
     } == {n for n in base_dirs if n.startswith("_v")}
     # the base manifest entries are untouched
     assert set(delta_table.manifest().values()) == {v0}
+
+
+def test_delta_append_of_wide_batch_is_one_spark_job(spark, tmp_path):
+    """A batch with many input partitions and no shuffle appends with
+    exactly ONE Spark job (no range exchange, no sampling pass), writes
+    no commit markers, and still records the exact touched-bucket set."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = BucketedParquetTable(
+        spark, str(tmp_path / "dt"), keys=["id"], n_buckets=8,
+        merge_mode="delta",
+    )
+    t.overwrite(
+        spark.createDataFrame(
+            [(i, f"a{i}") for i in range(40)], "id long, v string"
+        )
+    )
+    batch = spark.range(0, 220, numPartitions=8).selectExpr(
+        "id",
+        "IF(id < 5, NULL, concat('b', id)) AS v",
+        f"CASE WHEN id < 5 THEN 'd' WHEN id < 40 THEN 'u' ELSE 'i' END"
+        f" AS {OP_COL}",
+        f"2L AS {LSN_COL}",
+        f"id AS {COUNTER_COL}",
+    )
+    assert batch.rdd.getNumPartitions() >= 6
+    sc = spark.sparkContext
+    group = "append-delta-one-job"
+    sc.setJobGroup(group, "append_delta job-count guard")
+    try:
+        v = t.append_delta(batch, batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    doc = t._manifest_doc()
+    assert doc["deltas"] == [v]
+    # delta_buckets is exact: the buckets of the batch's keys, and the
+    # buckets found in the files written
+    want = {
+        r.b for r in batch.select(
+            F.pmod(F.xxhash64("id"), F.lit(8)).cast("int").alias("b")
+        ).distinct().collect()
+    }
+    assert set(doc["delta_buckets"][v]) == want
+    d = t._delta_dir(v)
+    names = os.listdir(d)
+    assert names and all(n.endswith(".parquet") for n in names), names
+    on_disk = set()
+    for n in names:
+        col = pq.read_table(os.path.join(d, n), columns=[BUCKET_COL])
+        assert col.num_rows > 0
+        on_disk |= set(pc.unique(col.column(0)).to_pylist())
+    assert on_disk == want
+    got = {r.id: r.v for r in t.read().collect()}
+    assert got == {i: f"b{i}" for i in range(5, 220)}
+    # the marker-free write options were per-write: a plain session
+    # write still commits with _SUCCESS
+    plain = str(tmp_path / "plain")
+    spark.range(3).write.parquet(plain)
+    assert "_SUCCESS" in os.listdir(plain)
 
 
 def test_delta_replay_is_idempotent(spark, delta_table):

@@ -1127,20 +1127,24 @@ def test_wal_planner_decodes_each_file_once(spark, tmp_path):
     assert reader.latestOffset() == {"lsn": 120}
 
 
-def test_split_decode_slices_are_equivalent(spark, tmp_path):
+def test_split_decode_slices_are_equivalent(spark, tmp_path, monkeypatch):
     """attach_split_slices (r11): a big planned range splits into
     parallel sub-slices at seek-checkpoint LSN boundaries — the union
     of the sub-slices' rows is EXACTLY the single-slice read
     (payloads, ops, lsns AND counters), including multi-event
     transactions and one >512-line transaction spanning checkpoint
-    boundaries."""
+    boundaries. The slice floor is lowered to 2 checkpoints so a
+    4k-event file still splits."""
     import json as _json
     from collections import Counter
 
+    from transferia_spark.streaming import wal_source
     from transferia_spark.streaming.wal_source import (
         WalJsonStreamReader,
         wal_output_schema,
     )
+
+    monkeypatch.setattr(wal_source, "SLICE_MIN_CHECKPOINTS", 2)
 
     wal = tmp_path / "wal"
     wal.mkdir()
@@ -1189,14 +1193,18 @@ def test_split_decode_slices_are_equivalent(spark, tmp_path):
 
 
 def test_split_decode_binlog_and_change_stream_equivalence(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """The binlog and change-stream readers split the same way — and a
     fortiori safely: row_idx / resume-token order ride IN the events,
-    nothing is scan-assigned."""
+    nothing is scan-assigned. The slice floor is lowered to 2
+    checkpoints so a 3k-event file still splits."""
     import json as _json
     from collections import Counter
 
+    from transferia_spark.streaming import wal_source
+
+    monkeypatch.setattr(wal_source, "SLICE_MIN_CHECKPOINTS", 2)
     from transferia_spark.streaming.cdc_sources import (
         BinlogJsonStreamReader,
         ChangeStreamJsonStreamReader,
@@ -1259,6 +1267,84 @@ def test_split_decode_binlog_and_change_stream_equivalence(
     )
     assert len(p1) == 1 and len(p8) > 1
     assert Counter(map(repr, r8)) == Counter(map(repr, r1))
+
+
+def test_split_slices_pay_for_their_task():
+    """A range splits only into slices of at least SLICE_MIN_CHECKPOINTS
+    seek checkpoints: below two slices' worth it stays one task per
+    file; above, it splits and the slices tile (lo, hi] exactly."""
+    from transferia_spark.streaming.wal_source import (
+        SLICE_MIN_CHECKPOINTS as floor,
+        attach_split_slices,
+    )
+
+    def plan(n_ck, max_splits=8):
+        idx = {"f": ([(i * 10, i * 100) for i in range(1, n_ck + 1)],
+                     True)}
+        return attach_split_slices(
+            ["f"], 0, n_ck * 10 + 5, idx,
+            lambda f, lo, hi, sb, o: (lo, hi, sb), max_splits,
+        )
+
+    for n_ck in (1, floor, 2 * floor - 2):
+        assert len(plan(n_ck)) == 1, n_ck
+    for n_ck, want in ((2 * floor, 2), (4 * floor, 4), (40 * floor, 8)):
+        slices = plan(n_ck)
+        assert len(slices) == want, (n_ck, len(slices))
+        assert slices[0][0] == 0 and slices[-1][1] == n_ck * 10 + 5
+        for a, b in zip(slices, slices[1:]):
+            assert a[1] == b[0]
+        # each slice owns at least `floor` checkpoints
+        assert all((hi - lo) // 10 >= floor for lo, hi, _ in slices[:-1])
+
+
+def test_files_with_nothing_in_range_get_no_slice(spark, tmp_path):
+    """A bounded batch plans no task for a file the scan cache proves
+    holds no position in (lo, hi] — e.g. backlog files above the
+    batch's end. Unknown and re-grown files are still planned."""
+    import json as _json
+
+    from transferia_spark.streaming.wal_source import (
+        WalJsonStreamReader,
+        wal_output_schema,
+    )
+
+    wal = tmp_path / "wal"
+    wal.mkdir()
+
+    def write(name, lsns, mode="w"):
+        with open(wal / name, mode) as f:
+            for n in lsns:
+                f.write(_json.dumps({
+                    "action": "I", "lsn": n,
+                    "columns": [{"name": "id", "value": n}],
+                }) + "\n")
+
+    write("000.jsonl", range(1, 101))
+    write("001.jsonl", range(101, 201))
+    write("002.jsonl", range(201, 301))
+    r = WalJsonStreamReader(
+        wal_output_schema("id long"),
+        {"path": str(wal), "max_events_per_batch": "100"},
+    )
+    assert r.latestOffset() == {"lsn": 100}
+
+    def planned(lo, hi):
+        return sorted(
+            os.path.basename(p.path)
+            for p in r.partitions({"lsn": lo}, {"lsn": hi})
+        )
+
+    assert planned(0, 100) == ["000.jsonl"]
+    assert planned(100, 200) == ["001.jsonl"]
+    assert planned(150, 250) == ["001.jsonl", "002.jsonl"]
+    assert planned(300, 400) == [""]  # nothing in range: one empty slice
+    # a file the cache has not seen is never skipped
+    write("003.jsonl", range(301, 311))
+    assert planned(100, 200) == ["001.jsonl", "003.jsonl"]
+    # nor is a file whose size changed since it was cached
+    write("002.jsonl", [311], mode="a")
+    assert planned(100, 200) == ["001.jsonl", "002.jsonl", "003.jsonl"]
 
 
 def test_reserved_payload_names_rejected_loudly(spark, tmp_path):

@@ -96,3 +96,44 @@ def test_streaming_listener_harvests_progress(spark, tmp_path):
         assert "sinker.time.push" in snap["timers"]
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_pipeline_restart_counts_each_event_once(spark, tmp_path):
+    """A restarted pipeline reuses its listener: every query start and
+    every input row is counted once, not once per start."""
+    from transferia_spark.streaming.pipeline import ReplicationPipeline
+
+    src = tmp_path / "in"
+    src.mkdir()
+
+    def land(name, ids):
+        (src / name).write_text(
+            "".join(json.dumps({"id": i}) + "\n" for i in ids)
+        )
+
+    reg = MetricsRegistry()
+    pipe = ReplicationPipeline(
+        stream=spark.readStream.schema("id long").json(str(src)),
+        sink=lambda df, _: df.count(),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        registry=reg,
+    )
+    try:
+        land("b0.json", range(25))
+        pipe.run_available()
+        land("b1.json", range(25, 35))
+        pipe.run_available()
+        # listener events are async — wait for both terminations, then
+        # give a duplicate delivery time to land
+        deadline = time.time() + 30
+        while time.time() < deadline and reg.snapshot()["counters"].get(
+            "worker.queries.terminated", 0
+        ) < 2:
+            time.sleep(0.2)
+        time.sleep(1.0)
+        c = reg.snapshot()["counters"]
+        assert c["worker.queries.started"] == 2
+        assert c["worker.queries.terminated"] == 2
+        assert c["source.count"] == 35
+    finally:
+        spark.streams.removeListener(pipe._listener)

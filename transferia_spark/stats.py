@@ -41,7 +41,9 @@ class MetricsRegistry:
         self._lock = threading.Lock()
         self._counters: dict[str, float] = defaultdict(float)
         self._gauges: dict[str, float] = {}
-        self._timers: dict[str, list[float]] = defaultdict(list)
+        # name -> [count, total_s, max_s]: running values, so a timer's
+        # memory stays constant for the life of a replication
+        self._timers: dict[str, list] = {}
 
     def counter_add(self, name: str, delta: float = 1.0) -> None:
         with self._lock:
@@ -53,7 +55,13 @@ class MetricsRegistry:
 
     def timer_record(self, name: str, seconds: float) -> None:
         with self._lock:
-            self._timers[name].append(seconds)
+            t = self._timers.get(name)
+            if t is None:
+                self._timers[name] = [1, seconds, seconds]
+            else:
+                t[0] += 1
+                t[1] += seconds
+                t[2] = max(t[2], seconds)
 
     def table_rows(self, table: str, metric: str, rows: float) -> None:
         """≈ ``SinkerStats.Table`` — per-table counter with the series
@@ -71,9 +79,8 @@ class MetricsRegistry:
                 "counters": dict(self._counters),
                 "gauges": dict(self._gauges),
                 "timers": {
-                    k: {"count": len(v), "total_s": sum(v), "max_s": max(v)}
-                    for k, v in self._timers.items()
-                    if v
+                    k: {"count": n, "total_s": total, "max_s": mx}
+                    for k, (n, total, mx) in self._timers.items()
                 },
             }
 

@@ -65,6 +65,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import logging
 import os
 import shutil
 import threading
@@ -83,6 +84,14 @@ from transferia_spark.cdc.merge import merge_batch
 
 BUCKET_COL = "bkt"  # no leading underscore: `_…=3` dirs are invisible
 # to Spark's file discovery (treated as metadata)
+
+#: per-write Hadoop options of the delta write: no ``_SUCCESS``, and no
+#: ``.crc`` (a raw, uncached local filesystem for this write only)
+_DELTA_WRITE_OPTIONS = {
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs": "false",
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
 
 
 class BucketLayoutChanged(RuntimeError):
@@ -507,9 +516,9 @@ class BucketedParquetTable:
         """Exact touched-bucket set of a just-written delta: one
         driver-side pyarrow read of each file's bucket column (local
         one-column reads of micro-batch-sized files — no Spark job).
-        Zero-row files are deleted on the way (with their ``.crc``):
-        Spark writes task 0's file even when that task got no rows,
-        and a committed delta holds only files with rows."""
+        Zero-row files are deleted on the way: Spark writes task 0's
+        file even when that task got no rows, and a committed delta
+        holds only files with rows."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -526,9 +535,7 @@ class BucketedParquetTable:
                     col = f.read(columns=[BUCKET_COL]).column(0)
                     touched.update(pc.unique(col).to_pylist())
                     continue
-            for junk in (name, f".{name}.crc"):
-                with contextlib.suppress(FileNotFoundError):
-                    os.remove(os.path.join(path, junk))
+            os.remove(os.path.join(path, name))
         return sorted(touched)
 
     def _pending_pairs(
@@ -1012,15 +1019,15 @@ class BucketedParquetTable:
     def append_delta(
         self, batch: DataFrame, batch_id: int | None = None
     ) -> int:
-        """Commit one ChangeItem batch as per-bucket delta files —
-        O(|batch|) write, no base read, one narrow shuffle on the bucket
-        column (one file per touched bucket). PK-changing updates are
-        normalized to delete(old)+insert(new) HERE so every delta row
-        lands in exactly one bucket and per-bucket reads stay
-        self-contained."""
+        """Commit one ChangeItem batch as a delta — O(|batch|), no base
+        read, and exactly ONE Spark job: the batch's own partitions are
+        sorted by (bucket, keys) and written as they are, one file per
+        input partition, with no exchange and no commit markers.
+        PK-changing updates are normalized to delete(old)+insert(new)
+        HERE so every delta row lands in exactly one bucket and
+        per-bucket reads stay self-contained."""
         from transferia_spark.cdc.changeitem import META_COLS
         from transferia_spark.cdc.collapse import normalize_pk_changes
-        from pyspark.sql import types as T
 
         doc = self._manifest_doc()
         if (
@@ -1044,43 +1051,24 @@ class BucketedParquetTable:
         sig = json.dumps(
             sorted((f.name, f.dataType.simpleString()) for f in batch.schema)
         )
+        # the bucket rides as a DATA COLUMN (a partitionBy write pays a
+        # file create + commit per touched bucket); sorting by (bucket,
+        # keys) lets row-group stats prune per-bucket reads, and the
+        # manifest records the EXACT touched set (_scan_delta_buckets,
+        # local footer reads). No repartition: a range exchange
+        # samples its input — a second job re-running the Python-source
+        # decode — and an extra job per micro-batch costs more than
+        # better-clustered files save on reads. No markers: the
+        # manifest flip below is the commit point; nothing reads them.
         out = batch.withColumn(BUCKET_COL, self._bucket_of())
-        # the bucket rides as a DATA COLUMN in a few sorted files per
-        # append: a partitionBy write would pay one file create +
-        # commit per touched bucket per batch, which dominates
-        # micro-batch latency. Sorting by (bucket, keys) keeps parquet
-        # row-group min/max stats able to prune per-bucket fold reads,
-        # and the manifest records each delta's EXACT touched-bucket
-        # set (_scan_delta_buckets — local footer and one-column reads,
-        # no Spark job).
-        parts = out.rdd.getNumPartitions()
-        cached = None
-        if parts > 4:
-            # wide backlog: contiguous bucket ranges per file so file
-            # and row-group stats both prune. The range exchange SAMPLES
-            # its child to place boundaries — on a Python-datasource
-            # micro-batch that re-ran the whole source decode every
-            # append (two decode passes per batch, profiled r14);
-            # persisting the pre-exchange frame makes the sampler's pass
-            # double as the materialization and the exchange read cached
-            # blocks (disk-backed level, so a bulk catch-up batch spills
-            # instead of pressuring executor memory)
-            from pyspark import StorageLevel
-
-            cached = out = out.persist(StorageLevel.MEMORY_AND_DISK)
-            out = out.repartitionByRange(
-                min(self.n_buckets, parts), F.col(BUCKET_COL)
-            )
-        # else: keep the batch's natural 1-4 partitions — 1-4 files per
-        # append (vs one per touched bucket before), and a bulk
-        # catch-up batch keeps its natural write parallelism (a
-        # coalesce(1) here serialized the whole backlog sort+encode
-        # through one task)
         out = out.sortWithinPartitions(
             F.col(BUCKET_COL), *[F.col(k) for k in self.keys]
         )
         try:
-            out.write.mode("overwrite").parquet(self._delta_dir(new_v))
+            out.write.save(
+                self._delta_dir(new_v), "parquet", "overwrite",
+                **_DELTA_WRITE_OPTIONS,
+            )
             touched = self._scan_delta_buckets(self._delta_dir(new_v))
         except BaseException:
             # release the reserved version; a partial dir is never
@@ -1088,15 +1076,10 @@ class BucketedParquetTable:
             shutil.rmtree(self._delta_dir(new_v), ignore_errors=True)
             self._release_claim(new_v)
             raise
-        finally:
-            if cached is not None:
-                cached.unpersist()
         if not touched:
             # empty micro-batch: nothing to record (replaying an empty
             # batch appends nothing either way, so the watermark need
-            # not advance) — this replaces the sink's former per-batch
-            # head(1) pre-check, which cost a full Spark job on EVERY
-            # batch to protect against the rare empty one
+            # not advance)
             if derived_now:
                 # n_buckets='auto' must resolve from the first REAL
                 # batch's size stats, not an empty startup trigger's
@@ -1759,15 +1742,18 @@ class BucketedCdcApplySink:
     commit mutex, manifests re-read under it, and a delta appended
     mid-fold stays pending (it sits above every fold watermark). A
     compaction failure surfaces on the NEXT batch — maintenance must
-    not die silently. A failed apply is re-attempted ``MAX_RETRIES``
-    times before the error reaches the streaming engine
-    (≈ ``middlewares/retrier.go:17``)."""
+    not die silently. A transient apply failure is re-attempted up to
+    ``MAX_RETRIES`` times, each retry logged and counted in
+    ``retries``, before the error reaches the streaming engine
+    (≈ ``middlewares/retrier.go:17``); an error ``is_fatal`` classifies
+    as deterministic raises on the first attempt."""
 
     MAX_RETRIES = 2
 
     def __init__(self, table: BucketedParquetTable):
         self.table = table
         self.batches_applied = 0
+        self.retries = 0
         self._background_fold = (
             table.merge_mode == "delta"
             and table.compact_policy == "incremental"
@@ -1806,14 +1792,12 @@ class BucketedCdcApplySink:
         if self._compact_err is not None:
             err, self._compact_err = self._compact_err, None
             raise err
-        # no head(1) pre-check: it cost a FULL Spark job (including the
-        # Python-source batch decode) on EVERY micro-batch to guard the
-        # rare empty one — ~15-20% of steady-state per-batch latency.
-        # Empty batches are handled downstream for free: append_delta
-        # sees zero touched buckets and discards its write; the eager
-        # merge sees zero touched buckets and returns.
-        last_err: Exception | None = None
-        for _ in range(self.MAX_RETRIES + 1):
+        # no head(1) pre-check (a full Spark job, decode included, on
+        # every batch): an empty batch costs nothing downstream —
+        # append_delta and the eager merge both see zero touched buckets
+        from transferia_spark.tasks.replicate import is_fatal
+
+        for attempt in range(self.MAX_RETRIES + 1):
             try:
                 # batch_id rides along as the delta-mode replay
                 # watermark; the rewrite mode is idempotent by
@@ -1824,8 +1808,11 @@ class BucketedCdcApplySink:
                 if self._background_fold:
                     self._maybe_compact()
                 return
-            except FileNotFoundError:
-                raise
-            except Exception as e:  # transient
-                last_err = e
-        raise last_err
+            except Exception as e:
+                if attempt == self.MAX_RETRIES or is_fatal(e):
+                    raise
+                self.retries += 1
+                logging.getLogger(__name__).warning(
+                    "apply of batch %s failed, retry %d of %d: %r",
+                    batch_id, attempt + 1, self.MAX_RETRIES, e,
+                )

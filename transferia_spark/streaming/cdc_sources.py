@@ -290,7 +290,9 @@ class BinlogJsonStreamReader(DataSourceStreamReader):
             return [_FileSlice("", start, end)]
         files = [
             f for f in _scan_files(self.path)
-            if not self._scan_cache.skippable(f, int(start["lsn"]))
+            if not self._scan_cache.skippable(
+                f, int(start["lsn"]), int(end["lsn"])
+            )
         ]
         if not files:
             return [_FileSlice("", start, end)]
@@ -687,7 +689,7 @@ class ChangeStreamJsonStreamReader(DataSourceStreamReader):
             return [_FileSlice("", start, end)]
         files = [
             f for f in _scan_files(self.path)
-            if not self._scan_cache.skippable(f, lo)
+            if not self._scan_cache.skippable(f, lo, hi)
         ]
         if not files:
             return [_FileSlice("", start, end)]

@@ -53,8 +53,10 @@ class ReplicationPipeline:
     observe_counters: bool = True
     # optional pkg/stats-parity registry: when set, a
     # StreamingQueryListener folds progress (input rows, observed
-    # counters, batch durations) into it for the lifetime of the query
+    # counters, batch durations) into it — registered on the first
+    # start and reused by every restart, so nothing is counted twice
     registry: object | None = None
+    _listener: object | None = field(default=None, init=False, repr=False)
 
     def transformed(self) -> DataFrame:
         df = self.stream
@@ -107,12 +109,11 @@ class ReplicationPipeline:
         return df
 
     def start(self, query_name: str = "replication") -> StreamingQuery:
-        if self.registry is not None:
+        if self.registry is not None and self._listener is None:
             from transferia_spark.stats import make_streaming_listener
 
-            self.stream.sparkSession.streams.addListener(
-                make_streaming_listener(self.registry)
-            )
+            self._listener = make_streaming_listener(self.registry)
+            self.stream.sparkSession.streams.addListener(self._listener)
         writer = (
             self.transformed()
             .writeStream.queryName(query_name)

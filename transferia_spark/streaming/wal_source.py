@@ -31,6 +31,7 @@ this marker is how collapse distinguishes absent from NULL).
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 from collections.abc import Iterator, Sequence
@@ -270,8 +271,6 @@ class OffsetScanCache:
         """Positions strictly above ``floor`` across ``files``;
         ``positions_of_file(f)`` yields a file's (poison-filtered)
         positions. Updates the high-watermark cache as a side effect."""
-        import bisect
-
         files = list(files)
         if len(self._hw) > 2 * len(files) + 64:
             # bound the cache to files that still exist: entries for
@@ -308,10 +307,10 @@ class OffsetScanCache:
             self._hw[f] = (size, mx, positions)
             yield from positions[bisect.bisect_right(positions, floor):]
 
-    def skippable(self, f: str, floor) -> bool:
-        """True when the cache PROVES the file holds nothing above
-        ``floor`` — used to prune read partitions and committed files.
-        Unknown or changed files are never skippable."""
+    def skippable(self, f: str, lo, hi=None) -> bool:
+        """True when the cache PROVES the file holds no position in
+        ``(lo, hi]`` (``hi=None``: above ``lo``). Unknown or changed
+        files are never skippable."""
         c = self._hw.get(f)
         if c is None or c[1] is None:
             return False
@@ -324,13 +323,24 @@ class OffsetScanCache:
             # is dead — treating it as skippable would silently drop it
             # from read partitions and make it prune-eligible
             return False
-        return c[0] == size and not (c[1] > floor)
+        if c[0] != size:
+            return False
+        # nothing above lo, or — backlog a bounded batch has not reached
+        # yet — nothing up to hi (c[1] is the sorted positions' max)
+        return not (c[1] > lo) or (
+            hi is not None and bool(c[2])
+            and c[2][bisect.bisect_right(c[2], lo)] > hi
+        )
 
 
 #: sparse seek-checkpoint cadence: one (position, byte) pair per this
 #: many events — enough to land an executor seek within ~512 lines of
 #: the batch start without growing the planner's memory
 SEEK_CHECKPOINT_EVERY = 512
+
+#: fewest seek checkpoints (~8k events) per decode slice — see
+#: attach_split_slices for the per-task cost this floor rests on
+SLICE_MIN_CHECKPOINTS = 16
 
 
 def positions_with_seek_index(
@@ -438,8 +448,7 @@ def attach_split_slices(
     checkpoint boundaries into up to ``max_splits`` sub-slices, each
     an independent executor task — without this, one capture file is
     ONE task no matter how big the batch, so a catch-up batch decodes
-    single-threaded while the cluster idles (the 100 TB failure mode;
-    locally it single-threads the bulk path).
+    single-threaded while the cluster idles.
 
     Correctness: ``make_slice(f, sub_lo, sub_hi, start_byte, ordered)``
     sub-ranges tile (lo, hi] exactly at checkpoint POSITIONS, and each
@@ -449,9 +458,12 @@ def attach_split_slices(
     Counters stay exact because they are per-position (reset on every
     position change) and each sub-slice sees every line of the
     positions it OWNS. Only position-ordered files split; unordered
-    ones fall back to the single whole-range slice."""
-    import bisect
+    ones fall back to the single whole-range slice.
 
+    A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (~8k events):
+    a Python task wave costs ~250-300 ms before ``read()`` starts, and
+    ``read()`` decodes ~30k events/s per core (20-85 ms per 1.5k-5k-event
+    slice), so a smaller slice costs more than its task saves."""
     _evict_seek_index(seek_index, files)
     out = []
     for f in files:
@@ -466,9 +478,9 @@ def attach_split_slices(
                 c for c in ckpts[max(i, 0):bisect.bisect_right(keys, hi)]
                 if lo < c[0] < hi
             ]
-            # ≥2 checkpoints (~2×SEEK_CHECKPOINT_EVERY rows) per slice
-            # so splits never shred a small batch into tiny tasks
-            n_slices = min(max_splits, (len(inner) + 1) // 2)
+            n_slices = min(
+                max_splits, (len(inner) + 1) // SLICE_MIN_CHECKPOINTS
+            )
             if n_slices > 1:
                 # exactly ≤ max_splits slices: n_slices-1 boundaries
                 # (the naive stride over-emitted up to ~40% more
@@ -609,12 +621,12 @@ class WalJsonStreamReader(DataSourceStreamReader):
         lo, hi = int(start["lsn"]), int(end["lsn"])
         if hi <= lo:
             return [_FileSlice("", lo, hi)]  # empty batch still needs ≥1 partition
-        # prune read tasks for files the planner cache PROVES are wholly
-        # at-or-below the batch start — each batch reads O(new files),
-        # not O(directory)
+        # prune read tasks for files the planner cache PROVES hold
+        # nothing in (lo, hi] — each batch reads O(its files), not
+        # O(directory)
         files = [
             f for f in _scan_files(self.path)
-            if not self._scan_cache.skippable(f, lo)
+            if not self._scan_cache.skippable(f, lo, hi)
         ]
         if not files:
             return [_FileSlice("", lo, hi)]
