@@ -1021,9 +1021,10 @@ def q_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same merge as cdc_merge, executed through the bucket-scoped
-    table (snapshot overwrite → one changelog MERGE touching only the
-    buckets whose keys changed → read-back) — proves the O(touched
-    buckets) path is result-identical to the full-table MERGE oracle."""
+    table (snapshot overwrite → the changelog appended as one delta →
+    a fold rewriting only the buckets whose keys changed → read-back)
+    — proves the O(touched buckets) fold is result-identical to the
+    full-table MERGE oracle."""
     import tempfile
 
     from transferia_spark.streaming.bucketed_table import BucketedParquetTable
@@ -1035,6 +1036,7 @@ def q_cdc_merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = BucketedParquetTable(spark, root, keys=["c_custkey"], n_buckets=16)
     t.overwrite(cust)
     t.merge(log)
+    t.compact()
     return t.read()
 
 
@@ -1086,8 +1088,9 @@ def q_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     ev = _t(spark, sf_dir, "events")
     log = events_changelog(ev, key="c_custkey", value="c_acctbal")
-    # split by an LSN cut (NOT parity): rewrite-mode merges are
-    # sequential-apply, so per-key order must hold across the batches
+    # split by an LSN cut (NOT parity): the rebucket folds the first
+    # half into the base before the second half lands, so per-key
+    # order must hold across the batches
     cut = log.agg(F.max("_lsn")).collect()[0][0] // 2
     root = tempfile.mkdtemp(prefix="rebucket_q_")
     t = BucketedParquetTable(spark, root, keys=["c_custkey"], n_buckets=4)

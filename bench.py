@@ -171,7 +171,6 @@ def bench_snapshot_pipeline(spark, sf_dir: str) -> tuple[float, int]:
 def bench_cdc_pipeline(
     spark,
     sf_dir: str,
-    merge_mode: str = "rewrite",
     n_buckets: int = 16,
     n_batches: int = 8,
     max_deltas: int = 8,
@@ -185,10 +184,10 @@ def bench_cdc_pipeline(
     number excludes Spark query startup and times exactly the per-batch
     replication path the reference's bufferer cadence (333 ms) covers.
 
-    Parameterized over (merge_mode × n_buckets × batch count) so the
-    merge-on-read work has a measured curve, not a single point (r6
-    verdict item 9): ``rewrite`` pays O(touched buckets) per batch;
-    ``delta`` pays O(|batch|) + one fold every ``max_deltas`` batches."""
+    Parameterized over (n_buckets × batch count × target size ×
+    payload width) so the merge-on-read work has a measured curve, not
+    a single point (r6 verdict item 9): each batch pays O(|batch|) plus
+    a background fold of the buckets that came due."""
     from transferia_spark.streaming.bucketed_table import (
         BucketedCdcApplySink,
         BucketedParquetTable,
@@ -217,8 +216,8 @@ def bench_cdc_pipeline(
         )
     if seed_mult > 1:
         # scale the TARGET ONLY (r7 verdict item 3): the churn stream
-        # stays identical, so rewrite's O(table) per-batch cost shows
-        # while delta's O(batch) cost should not move. Replicated keys
+        # stays identical, so an O(batch) per-batch cost should not
+        # move with table size. Replicated keys
         # shift into a disjoint range; the original keys (rep 0) keep
         # matching the stream's user_ids.
         cust = cust.withColumn(
@@ -233,7 +232,7 @@ def bench_cdc_pipeline(
         ).drop("rep")
     target = BucketedParquetTable(
         spark, os.path.join(tmp, "target"), keys=["c_custkey"],
-        n_buckets=n_buckets, merge_mode=merge_mode, max_deltas=max_deltas,
+        n_buckets=n_buckets, max_deltas=max_deltas,
     )
     target.overwrite(cust)
 
@@ -325,10 +324,9 @@ def bench_cdc_pipeline(
 def bench_cdc_merge_sweep(spark, sf_dir: str) -> dict[str, float]:
     """Merge-layer sweep (r6 verdict item 9): uniform-key churn applied
     directly through ``BucketedParquetTable.merge`` — no stream decode
-    in the measurement — at (merge mode × churn fraction × bucket
-    count) points, over an orders-seeded target (10× the customer
-    table). Rewrite cost grows with table size; delta cost tracks batch
-    size — the curve, not a single point."""
+    in the measurement — at (churn fraction × bucket count) points,
+    over an orders-seeded target (10× the customer table). Delta cost
+    tracks batch size — the curve, not a single point."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -350,17 +348,16 @@ def bench_cdc_merge_sweep(spark, sf_dir: str) -> dict[str, float]:
 
     big, small = churn(0.08), churn(0.02)
     points = {
-        "rewrite_8pct_b16": ("rewrite", big, 16),
-        "delta_8pct_b16": ("delta", big, 16),
-        "delta_2pct_b16": ("delta", small, 16),
-        "delta_8pct_b64": ("delta", big, 64),
+        "delta_8pct_b16": (big, 16),
+        "delta_2pct_b16": (small, 16),
+        "delta_8pct_b64": (big, 64),
     }
     out: dict[str, float] = {}
-    for label, (mode, batch, n_buckets) in points.items():
+    for label, (batch, n_buckets) in points.items():
         root = tempfile.mkdtemp(prefix=f"sweep_{label}_")
         t = BucketedParquetTable(
             spark, root, keys=["o_orderkey"], n_buckets=n_buckets,
-            merge_mode=mode, max_deltas=4,
+            max_deltas=4,
         )
         t.overwrite(orders)
         t0 = time.time()
@@ -411,15 +408,17 @@ def bench_mysql_decode(n_rows: int = 400_000) -> float:
 
 def bench_cdc_size_sweep(spark, sf_dir: str) -> dict:
     """Table-size sweep (r7 verdict item 3): a FIXED ~2k-row churn
-    batch merged into 1×/10×/40×-seeded orders targets, with a rewrite
-    control at every size — the curve the delta-mode design argument
-    rests on: rewrite's per-batch cost grows ~linearly with table size,
-    delta's stays flat. Also records the delta per-batch latency series
+    batch merged into 1×/10×/40×-seeded orders targets — the curve the
+    merge-on-read design argument rests on: the per-batch cost stays
+    flat as the table grows. Also records the per-batch latency series
     at the largest size: with staggered per-bucket compaction there
     must be no every-Nth-batch full-fold spike (r7 verdict item 4)."""
     from pyspark.sql import functions as F
 
-    from transferia_spark.streaming.bucketed_table import BucketedParquetTable
+    from transferia_spark.streaming.bucketed_table import (
+        BucketedCdcApplySink,
+        BucketedParquetTable,
+    )
 
     orders = load_tables(spark, sf_dir, ["orders"])["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -447,33 +446,25 @@ def bench_cdc_size_sweep(spark, sf_dir: str) -> dict:
             )
             .drop("rep")
         )
-        for mode, n_batches in (("rewrite", 3), ("delta", 8)):
-            root = tempfile.mkdtemp(prefix=f"size_{mode}_x{mult}_")
-            t = BucketedParquetTable(
-                spark, root, keys=["o_orderkey"], n_buckets=16,
-                merge_mode=mode, max_deltas=8,
-            )
-            t.overwrite(seed)
-            # measure the SHIPPING apply path: the foreachBatch sink —
-            # in delta mode compaction runs in its background thread,
-            # so the per-batch series is what a stream actually pays
-            from transferia_spark.streaming.bucketed_table import (
-                BucketedCdcApplySink,
-            )
-
-            sink = BucketedCdcApplySink(t)
-            series = []
-            for i in range(n_batches):
-                t0 = time.time()
-                sink(batch.withColumn("_lsn", F.lit(10 + i)), i)
-                series.append(round(time.time() - t0, 3))
-            sink.wait_for_compaction()
-            out[f"{mode}_x{mult}_per_batch"] = round(
-                sum(series) / len(series), 3
-            )
-            if mode == "delta" and mult == 40:
-                out["delta_x40_batch_series"] = series
-            shutil.rmtree(root, ignore_errors=True)
+        root = tempfile.mkdtemp(prefix=f"size_delta_x{mult}_")
+        t = BucketedParquetTable(
+            spark, root, keys=["o_orderkey"], n_buckets=16, max_deltas=8,
+        )
+        t.overwrite(seed)
+        # measure the SHIPPING apply path: the foreachBatch sink, whose
+        # compaction runs in its background thread, so the per-batch
+        # series is what a stream actually pays
+        sink = BucketedCdcApplySink(t)
+        series = []
+        for i in range(8):
+            t0 = time.time()
+            sink(batch.withColumn("_lsn", F.lit(10 + i)), i)
+            series.append(round(time.time() - t0, 3))
+        sink.wait_for_compaction()
+        out[f"delta_x{mult}_per_batch"] = round(sum(series) / len(series), 3)
+        if mult == 40:
+            out["delta_x40_batch_series"] = series
+        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -502,45 +493,33 @@ def main() -> None:
 
     snap_dt, snap_rows = bench_snapshot_pipeline(spark, SF_DIR)
     timings["snapshot_pipeline"] = round(snap_dt, 3)
-    cdc_dt, cdc_rows = bench_cdc_pipeline(spark, SF_DIR)
-    timings["cdc_pipeline"] = round(cdc_dt, 3)
-    # merge-on-read: same backlog, O(|batch|) delta appends + periodic
-    # fold — the steady-state CDC mode (r6 verdict item 1)
-    dl_dt, dl_rows = bench_cdc_pipeline(spark, SF_DIR, merge_mode="delta")
+    # merge-on-read: O(|batch|) delta appends + background per-bucket
+    # folds — the steady-state CDC path (r6 verdict item 1)
+    dl_dt, dl_rows = bench_cdc_pipeline(spark, SF_DIR)
     timings["cdc_pipeline_delta"] = round(dl_dt, 3)
-    # stream-level probe against a 20×-seeded target: the point where
-    # rewrite's O(table) per-batch cost separates from delta's O(batch)
-    # (r7 verdict item 3 "done" bar — delta materially above rewrite at
-    # the largest size)
-    rw_big_dt, rw_big_rows = bench_cdc_pipeline(spark, SF_DIR, seed_mult=20)
-    timings["cdc_pipeline_big"] = round(rw_big_dt, 3)
-    dl_big_dt, dl_big_rows = bench_cdc_pipeline(
-        spark, SF_DIR, merge_mode="delta", seed_mult=20
-    )
+    # stream-level probe against a 20×-seeded target: the per-batch
+    # cost must not grow with the table (r7 verdict item 3)
+    dl_big_dt, dl_big_rows = bench_cdc_pipeline(spark, SF_DIR, seed_mult=20)
     timings["cdc_pipeline_delta_big"] = round(dl_big_dt, 3)
     # bulk catch-up: the SAME backlog in ONE availableNow batch —
     # separates the engine's throughput from the per-micro-batch fixed
     # cost (job scheduling, commit, offset ack) that dominates the
     # 8-batch numbers at sf0.1's tiny batch sizes; at production batch
     # sizes the steady-state rate approaches this bound
-    blk_dt, blk_rows = bench_cdc_pipeline(
-        spark, SF_DIR, merge_mode="delta", n_batches=1
-    )
+    blk_dt, blk_rows = bench_cdc_pipeline(spark, SF_DIR, n_batches=1)
     timings["cdc_pipeline_bulk"] = round(blk_dt, 3)
     # wide-payload steady state: the same backlog with 30 extra double
     # columns per event — makes the decode plane's per-cell cost (the
     # r13 arrow RecordBatch fast path) visible in BENCH history; the
     # 3-column rows above are fixed-cost-dominated (r13 verdict next #5)
-    wd_dt, wd_rows = bench_cdc_pipeline(
-        spark, SF_DIR, merge_mode="delta", wide_cols=30
-    )
+    wd_dt, wd_rows = bench_cdc_pipeline(spark, SF_DIR, wide_cols=30)
     timings["cdc_pipeline_wide"] = round(wd_dt, 3)
-    # (merge mode × churn × bucket count) sweep so the delta-mode gain
-    # has a curve, not a single point (r6 verdict item 9) — measured at
-    # the merge layer, free of stream-decode noise
+    # (churn × bucket count) sweep so the merge-on-read cost has a
+    # curve, not a single point (r6 verdict item 9) — measured at the
+    # merge layer, free of stream-decode noise
     sweep = bench_cdc_merge_sweep(spark, SF_DIR)
-    # (merge mode × TABLE SIZE) sweep with per-batch latency series
-    # (r7 verdict items 3+4)
+    # TABLE SIZE sweep with per-batch latency series (r7 verdict
+    # items 3+4)
     size_sweep = bench_cdc_size_sweep(spark, SF_DIR)
 
     total = round(sum(timings.values()), 3)
@@ -560,11 +539,7 @@ def main() -> None:
         "unit": "sec",
         "sf": SF_DIR,
         "snapshot_rows_per_sec": round(snap_rows / snap_dt) if snap_dt > 0 else None,
-        "cdc_rows_per_sec": round(cdc_rows / cdc_dt) if cdc_dt > 0 else None,
         "cdc_delta_rows_per_sec": round(dl_rows / dl_dt) if dl_dt > 0 else None,
-        "cdc_big_rows_per_sec": round(rw_big_rows / rw_big_dt)
-        if rw_big_dt > 0
-        else None,
         "cdc_delta_big_rows_per_sec": round(dl_big_rows / dl_big_dt)
         if dl_big_dt > 0
         else None,

@@ -24,6 +24,15 @@ def _batch(spark, rows):
     return spark.createDataFrame(rows, CH_SCHEMA)
 
 
+def _full_merge(seed, batches):
+    """The whole-table ``merge_batch`` reference: every batch merged
+    eagerly into the previous state, one after another."""
+    state = seed
+    for b in batches:
+        state = merge_batch(state, b, ["id"])
+    return state
+
+
 @pytest.fixture()
 def table(spark, tmp_path):
     return BucketedParquetTable(
@@ -54,50 +63,29 @@ def test_merge_sequence_matches_full_table_merge(spark, table):
     assert all(i != 7 for i, _ in got)
 
 
-def test_full_churn_shortcut_engages_and_disengages(spark, table):
-    """r10: two consecutive full-coverage probes engage the no-probe
-    shortcut (touched = all buckets, one Spark job per batch); results
-    stay byte-equal to the probed path, and a later LOW-coverage probe
-    at the re-calibration point disengages it (the only-touched-buckets
-    contract returns)."""
-    wide = [(i, f"a{i}", "i", 1, i) for i in range(64)]
-    table.merge(_batch(spark, wide))                      # probe: full
-    assert table._full_churn_budget == 0                  # streak = 1
-    table.merge(_batch(spark, [(i, f"b{i}", "u", 2, i) for i in range(64)]))
-    assert table._full_churn_budget == table.rewrite_probe_every - 1
-    # shortcut batches: correct content, budget draining
-    table.merge(_batch(spark, [(3, "short", "u", 3, 0)]))
-    assert table._full_churn_budget == table.rewrite_probe_every - 2
-    got = {r.id: r.v for r in table.read().collect()}
-    assert got[3] == "short" and got[5] == "b5" and len(got) == 64
-    # drain the budget; the re-probe sees 1/8 coverage → disengage
-    for i in range(table._full_churn_budget):
-        table.merge(_batch(spark, [(4, f"x{i}", "u", 10 + i, 0)]))
-    assert table._full_churn_budget == 0
-    table.merge(_batch(spark, [(5, "probe", "u", 99, 0)]))  # the probe
-    assert table._full_churn_budget == 0 and table._full_churn_streak == 0
-    table.merge(_batch(spark, [(6, "pruned", "u", 100, 0)]))
-    newest = max(table.manifest().values())
-    dirs = os.listdir(os.path.join(table.root, f"_v{newest}"))
-    bucket_dirs = [d for d in dirs if d.startswith(f"{BUCKET_COL}=")]
-    assert len(bucket_dirs) == 1  # pruning is back
-    got = {r.id: r.v for r in table.read().collect()}
-    assert got[4].startswith("x") and got[5] == "probe" and got[6] == "pruned"
-
-
 def test_merge_rewrites_only_touched_buckets(spark, table):
-    table.merge(_batch(spark, [(i, f"a{i}", "i", 1, i) for i in range(50)]))
+    """A one-key delta writes no base bucket; folding it rewrites
+    exactly one bucket directory and leaves the rest on the seed's."""
+    table.overwrite(
+        spark.createDataFrame(
+            [(i, f"a{i}") for i in range(50)], "id long, v string"
+        )
+    )
     v1 = table.version()
-    table.merge(_batch(spark, [(3, "up", "u", 2, 0)]))
-    v2 = table.version()
-    assert v2 == v1 + 1
+    table.merge(_batch(spark, [(3, "up", "u", 2, 0)]), fold=False)
+    assert set(table.manifest().values()) == {v1}
+    table.compact()
+    m = table.manifest()
+    folded = {b: v for b, v in m.items() if v != v1}
+    assert len(folded) == 1  # only key 3's bucket rewrote
+    ((b, v2),) = folded.items()
     new_dirs = os.listdir(os.path.join(table.root, f"_v{v2}"))
     bucket_dirs = [d for d in new_dirs if d.startswith(f"{BUCKET_COL}=")]
-    assert len(bucket_dirs) == 1  # only key 3's bucket rewrote
+    assert bucket_dirs == [f"{BUCKET_COL}={b}"]
     # manifest still references v1 dirs for untouched buckets
-    m = table.manifest()
     assert sorted(set(m.values())) == [v1, v2]
-    assert table.read().count() == 50
+    got = {r.id: r.v for r in table.read().collect()}
+    assert got[3] == "up" and len(got) == 50
 
 
 def test_delete_can_empty_a_bucket(spark, table):
@@ -397,41 +385,42 @@ def delta_table(spark, tmp_path):
     )
 
 
-def _apply_script(spark, table):
-    """The same I/U/D + PK-change script both modes must agree on."""
-    table.overwrite(
-        spark.createDataFrame(
-            [(i, f"a{i}") for i in range(40)], "id long, v string"
-        )
+def _script(spark):
+    """An I/U/D + PK-change script: ``(seed, batches)``."""
+    seed = spark.createDataFrame(
+        [(i, f"a{i}") for i in range(40)], "id long, v string"
     )
-    table.merge(_batch(spark, [(3, "up3", "u", 2, 0), (7, None, "d", 2, 1)]))
-    table.merge(_batch(spark, [(100, "new", "i", 3, 0), (3, "up3b", "u", 3, 1)]))
     # PK-changing update: 5 → 205 (delete lands in the OLD key's bucket)
     moved = spark.createDataFrame(
         [(205, "moved", "u", 4, 0, {"id": 5})],
         f"id long, v string, {OP_COL} string, {LSN_COL} long, "
         f"{COUNTER_COL} long, _before struct<id:long>",
     )
-    table.merge(moved)
-    table.merge(_batch(spark, [(100, None, "d", 5, 0), (9, "up9", "u", 5, 1)]))
+    return seed, [
+        _batch(spark, [(3, "up3", "u", 2, 0), (7, None, "d", 2, 1)]),
+        _batch(spark, [(100, "new", "i", 3, 0), (3, "up3b", "u", 3, 1)]),
+        moved,
+        _batch(spark, [(100, None, "d", 5, 0), (9, "up9", "u", 5, 1)]),
+    ]
 
 
 @pytest.mark.slow
-def test_delta_mode_matches_rewrite_mode(spark, tmp_path):
+def test_delta_tail_matches_full_table_merge(spark, tmp_path):
     """base + pending deltas ≡ eagerly merged state — the read-time
-    last-writer-wins resolution is exactly equivalent to eager merging
-    because collapse orders globally per key by (_lsn, _counter)."""
-    rw = BucketedParquetTable(
-        spark, str(tmp_path / "rw"), keys=["id"], n_buckets=8
-    )
+    last-writer-wins resolution is exactly equivalent to merging each
+    batch into the whole table because collapse orders globally per
+    key by (_lsn, _counter)."""
     dt = BucketedParquetTable(
         spark, str(tmp_path / "dt"), keys=["id"], n_buckets=8,
         merge_mode="delta", max_deltas=100,  # never auto-compact here
     )
-    _apply_script(spark, rw)
-    _apply_script(spark, dt)
+    seed, batches = _script(spark)
+    dt.overwrite(seed)
+    for b in batches:
+        dt.merge(b)
     assert dt._manifest_doc()["deltas"]  # genuinely unfolded
-    want = sorted((r.id, r.v) for r in rw.read().collect())
+    want = sorted((r.id, r.v) for r in _full_merge(seed, batches).collect())
+    assert (205, "moved") in want and all(i not in (5, 7, 100) for i, _ in want)
     got = sorted((r.id, r.v) for r in dt.read().collect())
     assert got == want
     # and after an explicit fold the state is unchanged
@@ -585,24 +574,6 @@ def test_delta_into_new_bucket_without_base(spark, tmp_path):
     assert {r.id: r.v for r in t.read().collect()} == {1: "a2", 2: "b"}
 
 
-def test_rewrite_merge_folds_pending_deltas_first(spark, tmp_path):
-    """Mixing modes: an eager merge on a table with pending deltas must
-    fold them (clearing the list) before merging — otherwise the next
-    read re-applies the tail on top of the folded state."""
-    t = BucketedParquetTable(
-        spark, str(tmp_path / "mix"), keys=["id"], n_buckets=8,
-        merge_mode="delta", max_deltas=100,
-    )
-    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
-    t.merge(_batch(spark, [(1, "d1", "u", 2, 0)]))
-    assert t._manifest_doc()["deltas"]
-    eager = BucketedParquetTable(spark, t.root, keys=["id"])
-    eager.merge(_batch(spark, [(2, "d2", "u", 3, 0)]))
-    assert eager._manifest_doc()["deltas"] == []
-    got = {r.id: r.v for r in eager.read().collect()}
-    assert got == {1: "d1", 2: "d2"}
-
-
 def test_derived_bucket_count_and_meta_wins(spark, tmp_path):
     """n_buckets=None derives from plan-size stats at the first write
     (floor 16); a reopened table always keeps the stored count."""
@@ -657,15 +628,11 @@ def test_delta_mode_toast_partial_rows(spark, tmp_path):
     assert (row.v, row.w) == ("v2", "w1")
 
 
-def _two_mode_tables(spark, tmp_path):
-    rw = BucketedParquetTable(
-        spark, str(tmp_path / "rw2"), keys=["id"], n_buckets=4
-    )
-    dt = BucketedParquetTable(
+def _delta_table(spark, tmp_path):
+    return BucketedParquetTable(
         spark, str(tmp_path / "dt2"), keys=["id"], n_buckets=4,
         merge_mode="delta", max_deltas=100,
     )
-    return rw, dt
 
 
 @pytest.mark.slow
@@ -689,13 +656,14 @@ def test_delta_mixed_schema_tail_matches_eager(spark, tmp_path):
         f"id long, v string, {OP_COL} string, {LSN_COL} long, "
         f"{COUNTER_COL} long",
     )
-    rw, dt = _two_mode_tables(spark, tmp_path)
-    for t in (rw, dt):
-        t.overwrite(seed)
-        t.merge(full_null)
-        t.merge(subset)
+    dt = _delta_table(spark, tmp_path)
+    dt.overwrite(seed)
+    dt.merge(full_null)
+    dt.merge(subset)
     assert dt._manifest_doc()["deltas"]  # genuinely a mixed pending tail
-    want = sorted((r.id, r.v, r.w) for r in rw.read().collect())
+    want = sorted(
+        (r.id, r.v, r.w) for r in _full_merge(seed, [full_null, subset]).collect()
+    )
     assert want == [(1, "v1b", "w1"), (2, "v2b", None), (3, "v3", "w3")]
     got = sorted((r.id, r.v, r.w) for r in dt.read().collect())
     assert got == want
@@ -708,7 +676,7 @@ def test_delta_mixed_schema_tail_matches_eager(spark, tmp_path):
 def test_delta_mixed_tail_with_toasted_frame(spark, tmp_path):
     """A _toasted frame and a narrower unmarked frame in one tail: the
     presence rewrite keeps both conventions exact."""
-    rw, dt = _two_mode_tables(spark, tmp_path)
+    dt = _delta_table(spark, tmp_path)
     seed = spark.createDataFrame(
         [(1, "v1", "w1"), (2, "v2", "w2")], "id long, v string, w string"
     )
@@ -722,11 +690,12 @@ def test_delta_mixed_tail_with_toasted_frame(spark, tmp_path):
         f"id long, v string, {OP_COL} string, {LSN_COL} long, "
         f"{COUNTER_COL} long",
     )
-    for t in (rw, dt):
-        t.overwrite(seed)
-        t.merge(toasted)
-        t.merge(subset)
-    want = sorted((r.id, r.v, r.w) for r in rw.read().collect())
+    dt.overwrite(seed)
+    dt.merge(toasted)
+    dt.merge(subset)
+    want = sorted(
+        (r.id, r.v, r.w) for r in _full_merge(seed, [toasted, subset]).collect()
+    )
     assert want == [(1, "v1c", "w1"), (2, "v2c", "w2")]
     assert sorted((r.id, r.v, r.w) for r in dt.read().collect()) == want
 
@@ -754,26 +723,21 @@ def test_overwrite_resets_replay_watermark(spark, tmp_path):
 
 
 def test_delta_mode_toast_aware_contract(spark, tmp_path):
-    """r7 verdict item 10: delta mode derives partial-row handling from
-    the batch's own markers; a contradicting explicit toast_aware is
-    rejected loudly, an agreeing one is accepted."""
+    """r7 verdict item 10: merge() derives partial-row handling from
+    the batch's own markers — an unmarked batch is a full row, a
+    marked one resolves through its _toasted flags."""
     t = BucketedParquetTable(
         spark, str(tmp_path / "contract"), keys=["id"], n_buckets=4,
         merge_mode="delta", max_deltas=100,
     )
     t.overwrite(spark.createDataFrame([(1, "a")], "id long, v string"))
-    plain = _batch(spark, [(1, "u", "u", 2, 0)])
-    with pytest.raises(ValueError, match="toast_aware"):
-        t.merge(plain, toast_aware=True)  # no markers: unrepresentable
-    t.merge(plain, toast_aware=False)  # agrees with auto-detection
+    t.merge(_batch(spark, [(1, "u", "u", 2, 0)]))
     marked = spark.createDataFrame(
         [(1, "u2", "u", 3, 0, False)],
         f"id long, v string, {OP_COL} string, {LSN_COL} long, "
         f"{COUNTER_COL} long, _toasted boolean",
     )
-    with pytest.raises(ValueError, match="toast_aware"):
-        t.merge(marked, toast_aware=False)  # markers say otherwise
-    t.merge(marked, toast_aware=True)
+    t.merge(marked)
     assert {r.v for r in t.read().collect()} == {"u2"}
 
 
@@ -784,9 +748,6 @@ def test_incremental_compaction_no_full_table_fold(spark, tmp_path):
     table on one batch — while reads stay exactly the eager-merge
     state and the pending tail per bucket stays ≤ max_deltas."""
     n_buckets, md = 8, 4
-    rw = BucketedParquetTable(
-        spark, str(tmp_path / "rw"), keys=["id"], n_buckets=n_buckets
-    )
     dt = BucketedParquetTable(
         spark, str(tmp_path / "dt"), keys=["id"], n_buckets=n_buckets,
         merge_mode="delta", max_deltas=md,  # compact_policy defaults
@@ -795,16 +756,16 @@ def test_incremental_compaction_no_full_table_fold(spark, tmp_path):
     seed = spark.createDataFrame(
         [(i, f"a{i}") for i in range(200)], "id long, v string"
     )
-    rw.overwrite(seed)
     dt.overwrite(seed)
     lsn = 2
     folds_per_batch = []
+    batches = []
     for batch_no in range(12):
         # uniform churn: every batch touches every bucket
         rows = [(i, f"b{batch_no}_{i}", "u", lsn, i) for i in range(0, 200, 5)]
         lsn += 1
         b = _batch(spark, rows)
-        rw.merge(b)
+        batches.append(b)
         before = dict(dt._manifest_doc()["folded"])
         dt.merge(b, batch_id=batch_no)
         after = dt._manifest_doc()["folded"]
@@ -822,7 +783,7 @@ def test_incremental_compaction_no_full_table_fold(spark, tmp_path):
                 counts[bk] = counts.get(bk, 0) + 1
     assert all(c < 2 * md for c in counts.values()), counts
     # state identical to eager merging
-    want = sorted((r.id, r.v) for r in rw.read().collect())
+    want = sorted((r.id, r.v) for r in _full_merge(seed, batches).collect())
     got = sorted((r.id, r.v) for r in dt.read().collect())
     assert got == want
     # a full maintenance fold converges and changes nothing
@@ -886,6 +847,11 @@ def test_compact_policy_off_never_folds(spark, tmp_path):
                 spark, str(tmp_path / "bad"), keys=["id"],
                 compact_policy=bad,
             )
+    # merge-on-read is the only write path: the eager mode is gone
+    with pytest.raises(ValueError, match="merge_mode"):
+        BucketedParquetTable(
+            spark, str(tmp_path / "bad"), keys=["id"], merge_mode="rewrite",
+        )
 
 
 def test_concurrent_append_and_fold_converge(spark, tmp_path):
@@ -895,9 +861,6 @@ def test_concurrent_append_and_fold_converge(spark, tmp_path):
     eager merging and nothing is lost."""
     import threading
 
-    rw = BucketedParquetTable(
-        spark, str(tmp_path / "rw"), keys=["id"], n_buckets=4
-    )
     dt = BucketedParquetTable(
         spark, str(tmp_path / "dt"), keys=["id"], n_buckets=4,
         merge_mode="delta", max_deltas=2, compact_policy="off",
@@ -905,7 +868,6 @@ def test_concurrent_append_and_fold_converge(spark, tmp_path):
     seed = spark.createDataFrame(
         [(i, "s") for i in range(80)], "id long, v string"
     )
-    rw.overwrite(seed)
     dt.overwrite(seed)
     batches = [
         _batch(spark, [(i, f"b{n}_{i}", "u", 2 + n, i)
@@ -913,7 +875,6 @@ def test_concurrent_append_and_fold_converge(spark, tmp_path):
         for n in range(6)
     ]
     for b in batches[:2]:
-        rw.merge(b)
         dt.merge(b)
     errs = []
 
@@ -926,11 +887,10 @@ def test_concurrent_append_and_fold_converge(spark, tmp_path):
     t = threading.Thread(target=fold)
     t.start()
     for bi, b in enumerate(batches[2:]):
-        rw.merge(b)
         dt.merge(b, batch_id=bi)
     t.join(60)
     assert not t.is_alive() and not errs, errs
-    want = sorted((r.id, r.v) for r in rw.read().collect())
+    want = sorted((r.id, r.v) for r in _full_merge(seed, batches).collect())
     got = sorted((r.id, r.v) for r in dt.read().collect())
     assert got == want
     # converge fully and re-check
@@ -942,10 +902,7 @@ def test_concurrent_append_and_fold_converge(spark, tmp_path):
 def test_async_sink_folds_in_background(spark, tmp_path):
     """BucketedCdcApplySink with async compaction: the apply path only
     appends (fold=False), a background thread folds due buckets, and
-    the end state matches the eager rewrite table."""
-    rw = BucketedParquetTable(
-        spark, str(tmp_path / "rw"), keys=["id"], n_buckets=4
-    )
+    the end state matches the whole-table merge reference."""
     dt = BucketedParquetTable(
         spark, str(tmp_path / "dt"), keys=["id"], n_buckets=4,
         merge_mode="delta", max_deltas=2,
@@ -955,19 +912,19 @@ def test_async_sink_folds_in_background(spark, tmp_path):
     seed = spark.createDataFrame(
         [(i, "s") for i in range(60)], "id long, v string"
     )
-    rw.overwrite(seed)
     dt.overwrite(seed)
+    batches = []
     for n in range(10):  # uniform churn: every batch touches all buckets
         b = _batch(
             spark, [(i, f"b{n}_{i}", "u", 2 + n, i) for i in range(0, 60, 3)]
         )
-        rw.merge(b)
+        batches.append(b)
         sink(b, n)
         sink.wait_for_compaction()  # deterministic: join between batches
     assert sink.batches_applied == 10
     doc = dt._manifest_doc()
     assert doc["folded"], "background compaction never ran"
-    want = sorted((r.id, r.v) for r in rw.read().collect())
+    want = sorted((r.id, r.v) for r in _full_merge(seed, batches).collect())
     got = sorted((r.id, r.v) for r in dt.read().collect())
     assert got == want
     # replay of the last batch stays a no-op through the sink
@@ -1044,7 +1001,7 @@ def test_delta_mixed_conventions_same_payload(spark, tmp_path):
     with IDENTICAL payload columns in one tail — the union must still
     rewrite to explicit _present markers, or NULL-filling the flag
     breaks the toasted frame's NULL-means-absent contract."""
-    rw, dt = _two_mode_tables(spark, tmp_path)
+    dt = _delta_table(spark, tmp_path)
     seed = spark.createDataFrame(
         [(1, "v1", "w1"), (2, "v2", "w2")], "id long, v string, w string"
     )
@@ -1058,11 +1015,12 @@ def test_delta_mixed_conventions_same_payload(spark, tmp_path):
         f"id long, v string, w string, {OP_COL} string, {LSN_COL} long, "
         f"{COUNTER_COL} long",
     )
-    for t in (rw, dt):
-        t.overwrite(seed)
-        t.merge(toasted)
-        t.merge(plain)
-    want = sorted((r.id, r.v, r.w) for r in rw.read().collect())
+    dt.overwrite(seed)
+    dt.merge(toasted)
+    dt.merge(plain)
+    want = sorted(
+        (r.id, r.v, r.w) for r in _full_merge(seed, [toasted, plain]).collect()
+    )
     assert want == [(1, "v1b", "w1"), (2, "v2b", None)]
     got = sorted((r.id, r.v, r.w) for r in dt.read().collect())
     assert got == want
@@ -1272,6 +1230,9 @@ def test_rebucket_preserves_rows_and_new_layout(spark, tmp_path):
     t.merge(_batch(spark, [(i, f"a{i}", "i", 1, i) for i in range(60)]))
     t.merge(_batch(spark, [(3, "up", "u", 2, 0), (7, None, "d", 2, 1)]))
     want = {(r.id, r.v) for r in t.read().collect()}
+    # fold the tail now, so the rebucket below is the ONE commit past
+    # the pinned manifest (rebucket folds pending deltas first)
+    t.compact()
     v_old = t.version()
     v = t.rebucket(16)
     assert t.n_buckets == 16
@@ -1333,7 +1294,11 @@ def test_rebucket_auto_sizing(spark, tmp_path):
     t = BucketedParquetTable(
         spark, str(tmp_path / "bt"), keys=["id"], n_buckets=4
     )
-    t.merge(_batch(spark, [(i, "x" * 50, "i", 1, i) for i in range(100)]))
+    t.overwrite(
+        spark.createDataFrame(
+            [(i, "x" * 50) for i in range(100)], "id long, v string"
+        )
+    )
     # the base fits comfortably in 4 × 1 GB: no-op
     assert t.recommended_n_buckets() == 4
     v = t.version()
@@ -1353,8 +1318,8 @@ def test_rebucket_auto_sizing(spark, tmp_path):
 def test_stale_writer_retries_after_cross_process_rebucket(spark, tmp_path):
     """Instance B (process stand-in) rebuckets while instance A still
     assumes the old count: A's next commit discards its mis-bucketed
-    write and retries under the refreshed layout — both for the
-    rewrite path and the delta path."""
+    write and retries under the refreshed layout — with the default
+    incremental policy and with compact_policy='off'."""
     root = str(tmp_path / "bt")
     a = BucketedParquetTable(spark, root, keys=["id"], n_buckets=4)
     a.merge(_batch(spark, [(i, f"a{i}", "i", 1, i) for i in range(20)]))
@@ -1365,7 +1330,7 @@ def test_stale_writer_retries_after_cross_process_rebucket(spark, tmp_path):
     assert a.n_buckets == 8  # healed by the retry
     got = {(r.id, r.v) for r in b.read().collect()}
     assert (3, "up") in got and len(got) == 20
-    # delta path: make A stale again via B
+    # a compact_policy='off' writer: make it stale via B
     a2 = BucketedParquetTable(
         spark, root, keys=["id"], merge_mode="delta", compact_policy="off"
     )
@@ -1456,6 +1421,7 @@ def test_bucket_files_are_key_sorted(spark, tmp_path):
     t = BucketedParquetTable(spark, str(tmp_path / "bt"),
                              keys=["id"], n_buckets=2)
     t.merge(_batch(spark, [(i, "v", "i", 1, i) for i in range(300)]))
+    t.compact()  # base bucket files are written by the fold
     m = t.manifest()
     checked = 0
     for b, v in m.items():

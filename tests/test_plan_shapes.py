@@ -133,7 +133,7 @@ def test_cdc_merge_is_single_full_outer_join(spark):
 
 
 def test_clustered_merge_is_one_exchange(spark):
-    """r10: the bucketed writer's eager merge is a ONE-exchange plan —
+    """r10: the bucketed table's delta fold is a ONE-exchange plan —
     union target∪net, one repartition on the bucket column, then a
     groupBy(bkt, keys) that Catalyst proves needs no further shuffle
     (the join formulation shuffled the touched table twice: key join +

@@ -1090,3 +1090,21 @@ replication:
             spark, spec, state_dir=state, once=True,
             retry_interval=0.0, max_attempts=1,
         )
+
+
+def test_bucketed_target_is_merge_on_read(spark, tmp_path):
+    """A target config without ``merge_mode`` builds a background-
+    folding delta sink; a stale ``merge_mode: rewrite`` fails at start
+    (a fatal error) instead of being silently ignored."""
+    from transferia_spark.tasks.replicate import build_replication_sink
+
+    target = {"kind": "bucketed", "root": str(tmp_path / "t"),
+              "keys": ["id"], "n_buckets": 4}
+    sink, _ = build_replication_sink(spark, target)
+    assert sink._background_fold
+    with pytest.raises(ValueError, match="merge_mode") as err:
+        build_replication_sink(
+            spark, {**target, "root": str(tmp_path / "t2"),
+                    "merge_mode": "rewrite"},
+        )
+    assert is_fatal(err.value)

@@ -1,4 +1,4 @@
-"""Hash-bucketed versioned parquet table: bucket-scoped CDC MERGE.
+"""Hash-bucketed versioned parquet table: merge-on-read CDC apply.
 
 The repo's one CDC apply target: ``BucketedCdcApplySink`` MERGEs every
 micro-batch into a ``BucketedParquetTable``. A whole-table rewrite per
@@ -9,17 +9,33 @@ Delta/Iceberg/Hudi do, with a manifest instead of a log:
 - rows hash into ``n_buckets`` by primary key
   (``pmod(xxhash64(keys), n))`` — the same PK-hash sharding the
   reference uses for parallel snapshots (``sharding_storage.go:195``)
-- a MERGE touches only the buckets whose keys appear in the batch:
-  read those buckets' current files, merge, write ONLY those buckets
-  into the new version directory
 - ``_manifest_v{n}.json`` maps every bucket to the version directory
   that last rewrote it; ``_CURRENT`` names the live manifest and flips
   atomically (``os.replace``), so readers always see a consistent
   bucket set and a crashed writer leaves the table untouched
 
-Per-batch cost: O(|batch| + size of touched buckets), independent of
-table size when key locality is decent. Worst case (a batch touching
-every bucket) degrades to the full rewrite — no worse than before.
+There is one write path, the way ClickHouse's ReplacingMergeTree
+absorbs the reference's CDC batches (cheap append now, collapse later
+— ``clickhouse/sink_shard.go:183``) and Delta/Hudi's deferred-merge
+modes do:
+
+- ``merge()`` appends the batch under ``_d{v}`` as a few files sorted
+  by (bucket, keys), the bucket riding as a data column; the manifest
+  records each delta's schema signature (``delta_sigs``) and exact
+  touched-bucket set (``delta_buckets``) — O(|batch|), no base read
+- ``read()`` resolves last-writer-wins at scan time: base buckets
+  ∪ pending deltas through the same ``merge_batch`` plan, ordered by
+  the events' own ``(_lsn, _counter)`` — correctness is identical to
+  merging each batch eagerly because collapse orders globally per key
+- ``compact_buckets()`` folds pending deltas into ONLY the buckets
+  they touch, rewriting just those bucket directories; the
+  ``incremental`` policy runs it per bucket once that bucket's pending
+  count reaches a staggered threshold
+
+Amortized write cost is O(|batch| + touched/max_deltas) per batch;
+reads between compactions pay one extra key-shuffle over the delta
+tail (< 2·max_deltas batches). ``last_batch_id`` in the manifest is
+the replay watermark that makes a re-delivered micro-batch a no-op.
 One logical writer per root, but writer PROCESSES coordinate: commits
 hold an ``fcntl`` lock on ``_LOCK`` and version claims persist in
 ``_ALLOC``, so an out-of-band ``trcli compact`` safely overlaps the
@@ -28,30 +44,6 @@ streaming appender. Size ``n_buckets`` so a bucket
 budget (~1 GB buckets → n_buckets = table_size_gb), or pass
 ``n_buckets=None`` to derive the count from the first write's
 Catalyst size statistics (the repo's size-derived-shards pattern).
-
-Merge-on-read (``merge_mode="delta"``): under uniform-key churn the
-rewrite mode degrades to a full-table rewrite per micro-batch — the
-r6-measured scale killer (steady-state CDC ~4.6k rows/s vs 327k
-snapshot). Delta mode makes the per-batch write O(|batch|), the way
-ClickHouse's ReplacingMergeTree absorbs the reference's CDC batches
-(cheap append now, collapse later — ``clickhouse/sink_shard.go:183``)
-and Delta/Hudi's deferred-merge modes do:
-
-- ``merge()`` appends the batch under ``_d{v}`` as a few files sorted
-  by (bucket, keys), the bucket riding as a data column; the manifest
-  records each delta's schema signature (``delta_sigs``) and exact
-  touched-bucket set (``delta_buckets``)
-- ``read()`` resolves last-writer-wins at scan time: base buckets
-  ∪ pending deltas through the same ``merge_batch`` plan, ordered by
-  the events' own ``(_lsn, _counter)`` — correctness is identical to
-  eager merging because collapse orders globally per key
-- ``compact_buckets()`` folds pending deltas into the touched base
-  buckets; the ``incremental`` policy runs it per bucket once that
-  bucket's pending count reaches a staggered threshold
-
-Amortized write cost drops from O(touched buckets) per batch to
-O(|batch| + touched/max_deltas); reads between compactions pay one
-extra key-shuffle over the delta tail (< 2·max_deltas batches).
 
 On disk: ``_meta.json`` (keys, bucket count, schema), ``_CURRENT``,
 ``_manifest_v{n}.json`` (``buckets``, ``deltas``, ``folded``,
@@ -158,9 +150,9 @@ def _widen_to_batch(target: DataFrame, batch: DataFrame) -> DataFrame:
     carrying NEW payload columns — schema_file evolved mid-stream,
     recorded DDL or registry-driven — widens the target with nullable
     holes instead of the merge silently narrowing to the stored
-    schema (merge output columns are the TARGET's). Used by the eager
-    merge, the delta fold and the merge-on-read resolution
-    (code-review r12: the last two dropped drift-added columns);
+    schema (merge output columns are the TARGET's). Used by the delta
+    fold and the merge-on-read resolution (code-review r12: both
+    dropped drift-added columns);
     _commit's _save_meta then records the widened schema, so untouched
     buckets' older files read back with null for the new columns
     (Spark fills missing parquet columns by name)."""
@@ -190,7 +182,7 @@ class BucketedParquetTable:
         keys: list[str],
         n_buckets: int | None = 64,
         retention: int = 2,
-        merge_mode: str = "rewrite",
+        merge_mode: str = "delta",
         max_deltas: int = 8,
         target_bucket_bytes: int = 1 << 30,
         compact_policy: str = "incremental",
@@ -209,12 +201,10 @@ class BucketedParquetTable:
         stored count (the meta-wins contract: the bucket function is
         part of the on-disk layout).
 
-        ``merge_mode`` picks the write path ``merge()`` uses:
-        ``"rewrite"`` (eager bucket-scoped MERGE) or ``"delta"``
-        (O(|batch|) append + read-time resolution). Reads resolve
-        pending deltas regardless of the writer's mode.
+        ``merge_mode`` accepts only ``"delta"`` (O(|batch|) append +
+        read-time resolution), the one way ``merge()`` writes.
 
-        ``compact_policy`` controls when delta mode folds its tail:
+        ``compact_policy`` controls when the delta tail folds:
 
         - ``"incremental"`` (default): after each append, fold ONLY
           the buckets whose pending-delta count reached a per-bucket
@@ -229,10 +219,8 @@ class BucketedParquetTable:
         - ``"off"``: never fold on the write path; run ``compact()``
           from a maintenance pass (the read path is correct for
           arbitrarily long tails, it just re-merges them per scan)."""
-        if merge_mode not in ("rewrite", "delta"):
-            raise ValueError(
-                f"merge_mode must be 'rewrite' or 'delta', got {merge_mode!r}"
-            )
+        if merge_mode != "delta":
+            raise ValueError(f"merge_mode must be 'delta', got {merge_mode!r}")
         if compact_policy not in ("incremental", "off"):
             raise ValueError(
                 "compact_policy must be 'incremental' or 'off', "
@@ -243,7 +231,6 @@ class BucketedParquetTable:
         self.keys = keys
         self.n_buckets = n_buckets
         self.retention = max(1, retention)
-        self.merge_mode = merge_mode
         self.max_deltas = max(1, max_deltas)
         self.target_bucket_bytes = target_bucket_bytes
         self.compact_policy = compact_policy
@@ -269,17 +256,6 @@ class BucketedParquetTable:
         self._inflight: set[int] = set()
         self._fs_lock_fd: int | None = None
         self._fs_lock_depth = 0
-        # adaptive full-churn shortcut (r10): when the last PROBED
-        # batch touched ≥ threshold of the buckets, the next batches
-        # skip the touched-probe job (touched = all buckets — always
-        # correct, merely rewrites a few extra buckets) and re-probe
-        # every rewrite_probe_every batches to re-calibrate. A small
-        # batch over a big table probes once, sees low coverage, and
-        # the shortcut never engages — scale-safe by construction.
-        self.rewrite_full_threshold = 0.8
-        self.rewrite_probe_every = 8
-        self._full_churn_budget = 0
-        self._full_churn_streak = 0
         os.makedirs(root, exist_ok=True)
         # the bucket function is part of the ON-DISK layout: reopening
         # with a different n_buckets would silently mis-bucket merges
@@ -695,8 +671,6 @@ class BucketedParquetTable:
         ddf = self._read_deltas(pairs, doc)
         if ddf is None:
             return base
-        from transferia_spark.cdc.merge import merge_batch
-
         return merge_batch(_widen_to_batch(base, ddf), ddf, self.keys)
 
     def _read_deltas(
@@ -720,7 +694,7 @@ class BucketedParquetTable:
         untouched" under the eager per-batch merge (``c not in has``
         keeps the target value), but a NULL-filled union would let the
         filled NULLs overwrite base values at read/compact time — a
-        silent divergence from the rewrite-mode oracle (ADVICE r7)."""
+        silent divergence from per-batch merge semantics (ADVICE r7)."""
         # group versions that share BOTH the schema signature and the
         # pending-bucket set into one multi-path scan: per-key ordering
         # comes from the rows' own (_lsn, _counter), never from file
@@ -786,209 +760,37 @@ class BucketedParquetTable:
             out = out.unionByName(f, allowMissingColumns=True)
         return out
 
-    def _read_or_empty(self, buckets: list[int], schema) -> DataFrame:
-        try:
-            return self.read(buckets)
-        except FileNotFoundError:
-            return self.spark.createDataFrame([], schema)
-
     # ----------------------------------------------------------- write
 
     def merge(
         self,
         batch: DataFrame,
-        toast_aware: bool | None = None,
         batch_id: int | None = None,
         fold: bool = True,
     ) -> int:
-        """Apply one ChangeItem batch.
-
-        ``merge_mode="rewrite"``: eager — rewrite only touched buckets.
-        ``merge_mode="delta"``: O(|batch|) append; under the
-        ``incremental`` policy the buckets that came due fold after it
-        unless ``fold=False``. ``batch_id`` (when the caller is a
-        streaming sink) is a replay watermark: a batch at or below the
-        last appended id is already durable and skips."""
-        if self.merge_mode == "delta":
-            # delta mode resolves partial rows at READ time from the
-            # batch's own markers (_toasted/_present ride the delta
-            # files); an explicit toast_aware that contradicts the
-            # markers is unrepresentable there — rejecting it loudly
-            # beats silently dropping it (r7 verdict item 10)
-            from transferia_spark.cdc.changeitem import has_partial_rows
-
-            if toast_aware is not None and toast_aware != has_partial_rows(
-                batch
-            ):
-                raise ValueError(
-                    "merge_mode='delta' derives partial-row handling "
-                    "from the batch's own _toasted/_present markers at "
-                    f"read time; toast_aware={toast_aware} contradicts "
-                    "the batch (markers "
-                    f"{'present' if has_partial_rows(batch) else 'absent'}"
-                    ") and cannot be honored — attach or drop the "
-                    "markers instead of passing toast_aware"
-                )
-            try:
-                v = self.append_delta(batch, batch_id=batch_id)
-            except BucketLayoutChanged:
-                # a cross-process rebucket landed mid-write: re-resolve
-                # the layout and re-bucket the batch (once — rebuckets
-                # are rare maintenance events, not races)
-                self._refresh_layout()
-                v = self.append_delta(batch, batch_id=batch_id)
-            # fold=False: the caller runs compaction itself (the apply
-            # sink folds in a background thread between batches)
-            if fold and self.compact_policy == "incremental":
-                due = self._buckets_due()
-                if due:
-                    v = self.compact_buckets(due)
-            return v
-        # eager path: fold any pending deltas FIRST (clearing them) —
-        # merging on top of a delta-resolved read without clearing
-        # would re-apply the tail on the next read (double-apply)
-        if self._manifest_doc()["deltas"]:
-            self.compact()
+        """Apply one ChangeItem batch: an O(|batch|) delta append
+        (:meth:`append_delta`); under the ``incremental`` policy the
+        buckets that came due fold after it unless ``fold=False``.
+        Partial rows resolve from the batch's own ``_toasted``/
+        ``_present`` markers, which ride the delta files. ``batch_id``
+        (when the caller is a streaming sink) is a replay watermark: a
+        batch at or below the last appended id is already durable and
+        skips."""
         try:
-            return self._merge_rewrite(batch, toast_aware=toast_aware)
+            v = self.append_delta(batch, batch_id=batch_id)
         except BucketLayoutChanged:
+            # a cross-process rebucket landed mid-write: re-resolve
+            # the layout and re-bucket the batch (once — rebuckets
+            # are rare maintenance events, not races)
             self._refresh_layout()
-            return self._merge_rewrite(batch, toast_aware=toast_aware)
-
-    def _merge_rewrite(
-        self, batch: DataFrame, toast_aware: bool | None = None
-    ) -> int:
-        """Eager bucket-scoped MERGE; rewrites only touched buckets."""
-        from transferia_spark.cdc.changeitem import META_COLS
-        from pyspark.sql import types as T
-
-        derived_now = self.n_buckets is None
-        self._ensure_buckets(batch)
-        stored = self._stored_schema()
-        if stored is not None:
-            # normalize key dtypes to the table's: xxhash64 is
-            # TYPE-SENSITIVE, so an int batch key vs a bigint stored
-            # key would compute `touched` buckets that disagree with
-            # the buckets _commit assigns to the merged (widened) rows
-            # — committed rows the manifest never points at
-            types = {f.name: f.dataType for f in stored.fields}
-            for k in self.keys:
-                if k in types and batch.schema[k].dataType != types[k]:
-                    batch = batch.withColumn(k, F.col(k).cast(types[k]))
-        if self._full_churn_budget > 0:
-            # adaptive full-churn shortcut: the last probe saw ≥
-            # threshold coverage, so skip the touched-probe job
-            # entirely (one Spark job per batch instead of two; the
-            # batch flows ONCE, straight into the merge plan).
-            # touched = every bucket is always CORRECT — unchanged
-            # buckets rewrite byte-identical content — and under real
-            # full churn it is also exact. An empty batch here rewrites
-            # identical content once — deliberately NOT guarded by
-            # isEmpty: measured, the first-row probe on a Python-
-            # datasource-backed frame costs a full job wave and ate the
-            # shortcut's entire win. The waste is bounded: a stream
-            # with no new offsets plans no batches at all, so empties
-            # only arise from filtered/replayed bursts, and the
-            # re-probe (≤ rewrite_probe_every-1 batches away) sees low
-            # coverage and disengages.
-            self._full_churn_budget -= 1
-            return self._merge_touched(
-                batch, list(range(self.n_buckets)), stored, toast_aware,
-            )
-        # the batch feeds two jobs (touched-bucket collect + the merge
-        # write); persist so an upstream transformation chain isn't
-        # recomputed per job
-        batch = batch.persist()
-        try:
-            # touched buckets come from the AFTER-image keys AND from
-            # the pre-image keys of PK-changing updates: collapse
-            # rewrites those to delete(old)+insert(new), and the delete
-            # lands in the OLD key's bucket — omitting it left the
-            # stale row alive (caught by the binlog→pipeline
-            # integration test)
-            bucket_sources = batch.select(self._bucket_of().alias(BUCKET_COL))
-            from transferia_spark.cdc.changeitem import BEFORE_COL
-
-            if BEFORE_COL in batch.columns:
-                types = (
-                    {f.name: f.dataType for f in stored.fields}
-                    if stored is not None
-                    else {f.name: f.dataType for f in batch.schema.fields}
-                )
-                before_bucket = F.pmod(
-                    F.xxhash64(
-                        *[
-                            F.col(f"{BEFORE_COL}.{k}").cast(types[k])
-                            if k in types
-                            else F.col(f"{BEFORE_COL}.{k}")
-                            for k in self.keys
-                        ]
-                    ),
-                    F.lit(self.n_buckets),
-                ).cast("int")
-                bucket_sources = bucket_sources.union(
-                    batch.filter(F.col(BEFORE_COL).isNotNull()).select(
-                        before_bucket.alias(BUCKET_COL)
-                    )
-                )
-            touched = sorted(
-                r[0]
-                for r in bucket_sources.distinct().collect()
-                # ≤ n_buckets small ints — bounded by design
-            )
-            if not touched:
-                if derived_now:
-                    # see append_delta: an empty batch must not pin
-                    # the auto-derived bucket count
-                    self.n_buckets = None
-                return self.version()
-            if len(touched) >= self.rewrite_full_threshold * self.n_buckets:
-                # calibrated: churn is table-wide. TWO consecutive
-                # high-coverage probes engage the shortcut (a single
-                # full batch followed by tiny ones must keep pruning
-                # — the only-touched-buckets contract), then the next
-                # batches skip the probe until the re-calibration.
-                self._full_churn_streak += 1
-                if self._full_churn_streak >= 2:
-                    self._full_churn_budget = max(
-                        0, self.rewrite_probe_every - 1
-                    )
-            else:
-                self._full_churn_streak = 0
-                self._full_churn_budget = 0
-            return self._merge_touched(batch, touched, stored, toast_aware)
-        finally:
-            batch.unpersist()
-
-    def _merge_touched(
-        self, batch: DataFrame, touched: list[int], stored, toast_aware
-    ) -> int:
-        """The merge-and-commit tail shared by the probe and
-        full-churn paths: one-exchange merge (r10) — union target∪net,
-        ONE repartition on the bucket column, groupBy(bkt, keys)
-        pairing. The join formulation shuffled the touched buckets
-        twice (key join + bucket write); this plan shuffles them once
-        and the write adds no exchange."""
-        from transferia_spark.cdc.changeitem import META_COLS
-        from transferia_spark.cdc.merge import merge_batch_clustered
-
-        # schema for empty/never-written buckets: the STORED table
-        # schema (a column-subset TOAST batch must not narrow a
-        # bucket's files relative to the rest of the table)
-        data_schema = stored or T.StructType(
-            [f for f in batch.schema.fields if f.name not in META_COLS]
-        )
-        target = self._read_or_empty(touched, data_schema)
-        target = _widen_to_batch(target, batch)
-        ks = list(self.keys)
-        cluster = self._bucket_of()  # cached (exprcache)
-        merged = merge_batch_clustered(
-            target, batch, ks, BUCKET_COL,
-            lambda df: cluster,
-            len(touched),
-            toast_aware=toast_aware,
-        )
-        return self._commit(merged, touched, pre_bucketed=True)
+            v = self.append_delta(batch, batch_id=batch_id)
+        # fold=False: the caller runs compaction itself (the apply
+        # sink folds in a background thread between batches)
+        if fold and self.compact_policy == "incremental":
+            due = self._buckets_due()
+            if due:
+                v = self.compact_buckets(due)
+        return v
 
     def overwrite(self, df: DataFrame) -> int:
         """Full rewrite (initial snapshot load): every bucket. Pending
@@ -1040,8 +842,10 @@ class BucketedParquetTable:
         self._ensure_buckets(batch)
         stored = self._stored_schema()
         if stored is not None:
-            # normalize key dtypes to the table's (xxhash64 is
-            # type-sensitive — see merge)
+            # normalize key dtypes to the table's: xxhash64 is
+            # TYPE-SENSITIVE, so an int batch key vs a bigint stored
+            # key would land the row in a different bucket than the
+            # stored row it updates
             types = {f.name: f.dataType for f in stored.fields}
             for k in self.keys:
                 if k in types and batch.schema[k].dataType != types[k]:
@@ -1186,18 +990,15 @@ class BucketedParquetTable:
             except BucketLayoutChanged:
                 # a cross-process rebucket folded and cleared the tail
                 # as part of its rewrite; anything appended after it
-                # uses the new id space. Retry over EVERY bucket of the
-                # new layout: compact()'s fold-everything guarantee
-                # feeds merge()'s eager path, which commits a
-                # delta-resolved base on the assumption the tail is
-                # clear — folding only the staggered due-set here would
-                # let the leftover tail double-apply on the next read
+                # uses the new id space, where the old bucket ids mean
+                # nothing. Retry over EVERY bucket of the new layout,
+                # so compact() keeps its fold-everything guarantee
                 # (code-review r8 session-2 finding 3)
                 self._refresh_layout()
                 buckets = list(range(self.n_buckets))
                 # same contract as StaleBaseFold below: falling off
-                # the loop would return None and let the eager merge
-                # treat the tail as folded (code-review r9)
+                # the loop would return None instead of a version
+                # (code-review r9)
                 if i == attempts - 1:
                     raise
             except StaleBaseFold:
@@ -1233,10 +1034,11 @@ class BucketedParquetTable:
         target = self._read_base_or_empty(
             touched, data_schema, bucket_map=doc["buckets"]
         )
-        # the fold uses the same ONE-exchange merge the eager path does
-        # (r10): the join formulation shuffled the folded buckets twice
-        # (key join + bucket write) — folds run per-batch under the
-        # incremental policy, so they're on the steady-state cost path
+        # ONE-exchange merge (r10): union target∪net, one repartition
+        # on the bucket column, groupBy(bkt, keys) pairing — the join
+        # formulation shuffled the folded buckets twice (key join +
+        # bucket write), and folds run per-batch under the incremental
+        # policy, so they're on the steady-state cost path
         ks = list(self.keys)
         target = _widen_to_batch(target, ddf)
         cluster = self._bucket_of()  # cached (exprcache)
@@ -1733,8 +1535,10 @@ class BucketedCdcApplySink:
     (``docs/concepts/replication-techniques.md``): re-applying a batch
     yields the same table state.
 
-    For a delta-mode table with the incremental policy, compaction runs
-    in a BACKGROUND thread between batches: the apply path stays a pure
+    Each batch is a delta append (``merge(..., fold=False)``); a
+    replayed batch id is a no-op through the table's ``last_batch_id``
+    watermark. Under the incremental policy compaction runs in a
+    BACKGROUND thread between batches: the apply path stays a pure
     O(|batch|) append while due buckets fold concurrently — the
     reference's targets do exactly this (ClickHouse background merges,
     ``clickhouse/sink_shard.go:183``). The table's versioned commits
@@ -1754,10 +1558,7 @@ class BucketedCdcApplySink:
         self.table = table
         self.batches_applied = 0
         self.retries = 0
-        self._background_fold = (
-            table.merge_mode == "delta"
-            and table.compact_policy == "incremental"
-        )
+        self._background_fold = table.compact_policy == "incremental"
         self._compactor: threading.Thread | None = None
         self._compact_err: Exception | None = None
 
@@ -1794,15 +1595,15 @@ class BucketedCdcApplySink:
             raise err
         # no head(1) pre-check (a full Spark job, decode included, on
         # every batch): an empty batch costs nothing downstream —
-        # append_delta and the eager merge both see zero touched buckets
+        # append_delta sees zero touched buckets and commits nothing
         from transferia_spark.tasks.replicate import is_fatal
 
         for attempt in range(self.MAX_RETRIES + 1):
             try:
-                # batch_id rides along as the delta-mode replay
-                # watermark; the rewrite mode is idempotent by
-                # construction and ignores it. Folds never run inline:
-                # the incremental policy folds in the background below
+                # batch_id rides along as the replay watermark, so a
+                # re-delivered batch appends nothing. Folds never run
+                # inline: the incremental policy folds in the
+                # background below
                 self.table.merge(batch_df, batch_id=batch_id, fold=False)
                 self.batches_applied += 1
                 if self._background_fold:

@@ -6,7 +6,8 @@ and ``trcli compact --dst``: every ``overwrite`` writes a fresh
 man's Delta commit; swap-level atomicity is filesystem rename). CDC
 micro-batches are applied by ``BucketedCdcApplySink`` into a
 ``BucketedParquetTable`` (``streaming/bucketed_table.py``), which
-rewrites only the buckets a batch touches.
+appends each batch as a delta and later folds it into only the buckets
+it touches.
 """
 
 from __future__ import annotations

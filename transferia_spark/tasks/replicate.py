@@ -698,11 +698,12 @@ def _bucketed_target(spark: SparkSession, cfg: dict):
     """A target config dict → its ``BucketedParquetTable``.
 
     ``n_buckets: auto`` → None (derive from the snapshot seed's
-    plan-size stats at first write); absent → 16. ``merge_mode: delta``
-    = O(|batch|) appends + read-time last-writer-wins + staggered
-    per-bucket compaction between micro-batches, the steady-state CDC
-    throughput mode; ``compact_policy: off`` leaves folding to
-    ``trcli compact``."""
+    plan-size stats at first write); absent → 16. Every target is
+    merge-on-read: O(|batch|) delta appends + read-time
+    last-writer-wins + staggered per-bucket compaction between
+    micro-batches. ``merge_mode`` is forwarded as given, so a config
+    naming any mode other than ``delta`` fails at start;
+    ``compact_policy: off`` leaves folding to ``trcli compact``."""
     from transferia_spark.streaming.bucketed_table import BucketedParquetTable
 
     nb = cfg.get("n_buckets", 16)
@@ -710,7 +711,7 @@ def _bucketed_target(spark: SparkSession, cfg: dict):
     return BucketedParquetTable(
         spark, cfg["root"], keys=list(cfg["keys"]),
         n_buckets=None if auto else int(nb),
-        merge_mode=cfg.get("merge_mode", "rewrite"),
+        merge_mode=cfg.get("merge_mode", "delta"),
         max_deltas=int(cfg.get("max_deltas", 8)),
         compact_policy=cfg.get("compact_policy", "incremental"),
     )
