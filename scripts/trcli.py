@@ -64,8 +64,10 @@ def main() -> int:
         help="bound the --regular loop (default: run forever)",
     )
     ap.add_argument(
-        "--process-count", type=int, default=1,
-        help="activate: concurrent table loads (ProcessCount parity)",
+        "--process-count", type=int, default=None,
+        help="activate: output tables written concurrently (ProcessCount "
+        "parity); default min(#output tables, Spark default parallelism) "
+        "when source and sink are parallel-safe, else 1",
     )
     ap.add_argument(
         "--state-dir", default=".trcli_state",

@@ -6,6 +6,8 @@ import pytest
 
 from transferia_spark.plans.config import transfer_from_yaml
 from transferia_spark.plans.transfer import TransferType, activate, upload
+from transferia_spark.schema.colschema import TableID
+from transferia_spark.sources.base import Source
 
 
 def _yaml(sf_dir, out_dir, extra=""):
@@ -216,8 +218,8 @@ dst:
 def test_parallel_activate_cleans_shared_output_table_once(spark, sf_dir):
     """ADVICE r3: two source tables routed onto ONE output table under
     process_count>1 must not interleave a DROP with another thread's
-    write — cleanup runs exactly once per output table, before any
-    write to it."""
+    write — cleanup runs exactly once per output table, before the one
+    write that holds both sources' rows."""
     import threading
 
     from transferia_spark.operators import Transformation, build
@@ -236,6 +238,7 @@ def test_parallel_activate_cleans_shared_output_table_once(spark, sf_dir):
             return spark.createDataFrame([(table.name,)], "src string")
 
     events: list[str] = []
+    written_rows: list[list[str]] = []
     ev_lock = threading.Lock()
 
     class RecordingSink(Sink):
@@ -246,9 +249,10 @@ def test_parallel_activate_cleans_shared_output_table_once(spark, sf_dir):
                 events.append(f"cleanup:{table.fqtn()}")
 
         def write(self, df, table):
-            df.count()  # force the job so writes take real time
+            rows = sorted(r.src for r in df.collect())
             with ev_lock:
                 events.append(f"write:{table.fqtn()}")
+                written_rows.append(rows)
 
     # rename both sources onto the same output table
     tf = Transformation(
@@ -268,4 +272,70 @@ def test_parallel_activate_cleans_shared_output_table_once(spark, sf_dir):
     assert events.index("cleanup:shared") < min(
         i for i, e in enumerate(events) if e == "write:shared"
     )
-    assert events.count("write:shared") == 2
+    assert events.count("write:shared") == 1
+    assert written_rows == [["a", "b"]]
+
+
+class _ListSource(Source):
+    """In-memory tables {name: [ints]}; parallel-safe like FileSource."""
+
+    TYPE = "_list"
+    parallel_safe = True
+
+    def __init__(self, tables):
+        self.tables = tables
+
+    def table_list(self, spark):
+        return [TableID("", t) for t in self.tables]
+
+    def load_table(self, spark, table, where=None):
+        return spark.createDataFrame([(v,) for v in self.tables[table.name]], "v long")
+
+
+@pytest.mark.parametrize("pc", [1, None])
+def test_many_to_one_routing_keeps_every_row(spark, tmp_path, pc):
+    """Two source tables renamed onto one FileSink table: the output
+    holds all five rows — one write of the union, not a second
+    overwrite replacing the first (or two overwrite jobs racing on one
+    path)."""
+    from transferia_spark.operators import Transformation, build
+    from transferia_spark.plans.transfer import TransferSpec
+    from transferia_spark.sinks.files import FileSink
+
+    out = str(tmp_path / "out")
+    spec = TransferSpec(
+        src=_ListSource({"a": [1, 2, 3], "b": [10, 20]}),
+        dst=FileSink(path=out, format="parquet"),
+        transformation=Transformation(
+            [build("rename_tables", mapping={"a": "shared", "b": "shared"})]
+        ),
+    )
+    assert activate(spark, spec, process_count=pc) == {"shared": -1}
+    got = sorted(r.v for r in spark.read.parquet(os.path.join(out, "shared")).collect())
+    assert got == [1, 2, 3, 10, 20]
+
+
+def test_activate_jobs_keep_callers_job_group(spark, sf_dir, tmp_path):
+    """Pool threads inherit the caller's Spark local properties: every
+    write job of a 3-table activation lands in the caller's job group,
+    with an explicit process_count and with the derived default."""
+    from transferia_spark.plans.transfer import TransferSpec
+    from transferia_spark.sinks.files import FileSink
+    from transferia_spark.sources.files import FileSource
+
+    sc = spark.sparkContext
+    tables = ["region", "nation", "supplier"]
+    try:
+        for pc in (3, None):
+            group = f"activate-group-{pc}"
+            sc.setJobGroup(group, "activate() job-group inheritance")
+            spec = TransferSpec(
+                src=FileSource(path=sf_dir, format="parquet", tables=tables),
+                dst=FileSink(path=str(tmp_path / f"out{pc}"), format="parquet"),
+            )
+            assert set(activate(spark, spec, process_count=pc)) == set(tables)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)

@@ -12,6 +12,7 @@ from transferia_spark.plans.transfer import TransferSpec, activate
 from transferia_spark.schema.colschema import TableID
 from transferia_spark.sinks.base import CleanupPolicy
 from transferia_spark.sinks.files import FileSink
+from transferia_spark.sources.base import Source
 from transferia_spark.sources.files import FileSource
 from transferia_spark.tasks.progress import SnapshotProgress
 
@@ -80,3 +81,98 @@ def test_activate_resumes_from_completed_tables(spark, sf_dir, tmp_path):
     assert written["nation"] == -2             # reported as resumed-skip
     assert spark.read.parquet(os.path.join(out, "region")).count() == 5
     assert spark.read.parquet(os.path.join(out, "nation")).count() == 25
+
+
+class _SixTables(Source):
+    TYPE = "_six"
+    parallel_safe = True
+
+    def table_list(self, spark):
+        return [TableID("", f"t{i}") for i in range(1, 7)]
+
+    def load_table(self, spark, table, where=None):
+        return spark.createDataFrame([(table.name,)], "name string")
+
+
+def test_activate_fails_fast_on_first_write_error(spark, tmp_path):
+    """The first failed write stops the activation: output tables not
+    yet started are neither written nor marked done, the one already
+    running finishes and commits its progress, and the first error is
+    raised."""
+    progress = SnapshotProgress(str(tmp_path / "progress.json"), operation_id="xfer-ff")
+    sink = _FlakySink(str(tmp_path / "out"), fail_table="t1")
+    with pytest.raises(RuntimeError, match="injected failure on t1"):
+        activate(spark, TransferSpec(src=_SixTables(), dst=sink, progress=progress),
+                 process_count=2)
+    assert sink.writes == ["t2"]
+    assert [t for t in ("t1", "t2", "t3", "t4", "t5", "t6")
+            if progress.table_done(t)] == ["t2"]
+    for t in ("t3", "t4", "t5", "t6"):
+        assert not os.path.exists(tmp_path / "out" / t)
+
+
+def test_progress_commits_once_after_all_outputs_under_contention(spark):
+    """Every source table feeds two outputs (its clean rows and its
+    ``_unparsed`` dead letters). With more pool workers than cores and
+    a short switch interval, each source is marked done exactly once,
+    and only after both its outputs were written."""
+    import sys
+    import threading
+
+    from transferia_spark.sinks.base import Sink
+
+    sources = [f"s{i}" for i in range(12)]
+
+    class DualSource(Source):
+        TYPE = "_dual"
+        parallel_safe = True
+
+        def table_list(self, spark):
+            return [TableID("", s) for s in sources]
+
+        def load_table(self, spark, table, where=None):
+            return spark.createDataFrame([(1, None), (2, "bad")], "v long, _unparsed_raw string")
+
+    lock = threading.Lock()
+    written: set[str] = set()
+    marks: list[tuple[str, bool]] = []
+
+    class RecordingSink(Sink):
+        TYPE = "_rec"
+        parallel_safe = True
+
+        def cleanup(self, table, policy):
+            pass
+
+        def write(self, df, table):
+            with lock:
+                written.add(table.fqtn())
+
+    class Progress:
+        def table_done(self, name):
+            return False
+
+        def mark_table(self, name):
+            with lock:
+                marks.append((name, {name, f"{name}_unparsed"} <= written))
+
+    errors: list[BaseException] = []
+
+    def run():
+        try:
+            activate(spark, TransferSpec(src=DualSource(), dst=RecordingSink(),
+                                         progress=Progress()), process_count=16)
+        except BaseException as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        t = threading.Thread(target=run)
+        t.start()
+        t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not t.is_alive() and errors == []
+    assert len(written) == 2 * len(sources)
+    assert sorted(marks) == sorted((s, True) for s in sources)

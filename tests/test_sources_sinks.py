@@ -58,6 +58,36 @@ def test_file_source_line_and_regex(spark, tmp_path):
     assert bad[0]["_unparsed_raw"] == "garbage line"
 
 
+def test_file_source_and_load_tables_share_one_schema_cache(spark, tmp_path):
+    """FileSource.load_table and session.load_tables resolve a local
+    parquet file's schema through one cache entry; a rewritten file
+    (new mtime/size) and other reader options infer afresh."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from transferia_spark import session
+    from transferia_spark.sources.files import FileSource
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+
+    def entries():
+        return [k for k in session._SCHEMA_CACHE if k[0] == os.path.abspath(path)]
+
+    src = FileSource(path=str(tmp_path), format="parquet", tables=["t"])
+    assert src.load_table(spark, TableID("", "t")).columns == ["a"]
+    assert len(entries()) == 1
+    assert session.load_tables(spark, str(tmp_path), tables=["t"])["t"].count() == 2
+    assert len(entries()) == 1  # same key: nanosAsLong on in both
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    os.utime(path, ns=(1, 1))
+    assert src.load_table(spark, TableID("", "t")).columns == ["a", "b"]
+    with_opts = FileSource(path=str(tmp_path), format="parquet", tables=["t"],
+                           options={"mergeSchema": "false"})
+    assert with_opts.load_table(spark, TableID("", "t")).count() == 3
+    assert len(entries()) == 3
+
+
 def test_sample_source_deterministic(spark):
     src = build_source("sample", rows=100, seed=7)
     a = src.load_table(spark, TableID("sample", "iot")).collect()

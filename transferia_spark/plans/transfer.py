@@ -117,134 +117,144 @@ def route_unparsed(routed: dict[TableID, "object"]) -> dict[TableID, "object"]:
 
 
 def activate(
-    spark: SparkSession, spec: TransferSpec, process_count: int = 1
+    spark: SparkSession, spec: TransferSpec, process_count: int | None = None
 ) -> dict[str, int]:
-    """Snapshot load: list tables, apply cleanup, scan→transform→write.
+    """Snapshot load: plan every table, then clean and write each output.
 
-    ``process_count`` > 1 loads tables CONCURRENTLY from a thread pool
-    (≈ the reference's ProcessCount-bounded semaphore over table parts,
-    ``load_snapshot.go:902``): Spark's scheduler interleaves the
-    submitted jobs, so small tables fill the cluster while a big scan
-    streams — per-table progress/state commits serialize under a lock.
+    Plan-then-write (≈ the reference's ProcessCount-bounded semaphore
+    over table parts, ``load_snapshot.go:902``): the driver plans every
+    pending source table (load, incremental cursor, transformer chain,
+    ``route_unparsed``, typesystem fallbacks — all lazy) and
+    ``unionByName``s the frames routed onto one output table. A thread
+    pool then runs one worker per output table: its cleanup, then its
+    single write, so Spark interleaves the tables' jobs. A source
+    table's progress mark and cursor commit once every output table it
+    fed is written. After the first failed write no further output
+    table starts; running ones finish and commit, then the first error
+    is raised. Workers inherit the caller's Spark local properties.
 
-    Returns per-output-table row counts (the reference's progress
-    tracker equivalent — here a cheap observe on the written data is
-    possible; counts are collected from the write itself only when the
-    sink supports it, else a post-read)."""
-    tables = [t for t in spec.src.table_list(spark) if _selected(spec, t)]
+    ``process_count=None`` sizes the pool to ``min(#output tables,
+    defaultParallelism)`` when both ``spec.src`` and ``spec.dst``
+    declare ``parallel_safe``, else 1 (one worker = serial, in table
+    order); an explicit ``process_count`` is the pool size.
+
+    Returns per-output-table row counts: -1 written (count not
+    materialized), -2 source table skipped as already done by
+    ``spec.progress``."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    from transferia_spark.sources.incremental import cursor_type_of
+
     written: dict[str, int] = {}
-    cleaned: set[str] = set()
+    pending = []
+    for t in spec.src.table_list(spark):
+        if not _selected(spec, t):
+            continue
+        if spec.progress is not None and spec.progress.table_done(t.fqtn()):
+            # resumed operation: this table's write committed in a
+            # previous run (tracker contract — don't redo it)
+            written[t.fqtn()] = -2
+        else:
+            pending.append(t)
     # activation-scoped one-instant snapshot (r10 ≈ mysql/storage.go:
-    # 71-140 single BeginSnapshot): when the source offers it and the
-    # transfer is a multi-table consistent snapshot, ALL tables'
-    # frames materialize under ONE fence round before the per-table
-    # transform/write loop — tables loaded one by one would each open
-    # their own instant (per-table consistency only).
+    # 71-140 single BeginSnapshot): when the source offers it, ALL
+    # pending tables' frames materialize under ONE fence round — tables
+    # loaded one by one would each open their own instant. A resumed
+    # activation fences only the tables still pending.
     preloaded: dict[str, "DataFrame"] = {}
     loader = getattr(spec.src, "load_tables_consistent", None)
     if (
         loader is not None
-        and len(tables) > 1
+        and len(pending) > 1
         and getattr(spec.src, "live", {}).get("consistent")
     ):
-        # a RESUMED activation must not re-freeze production writes to
-        # re-materialize tables whose writes already committed — the
-        # fence gang spans only the tables still pending (code-review
-        # r10 pass 3)
-        pending = [
-            t for t in tables
-            if spec.progress is None
-            or not spec.progress.table_done(t.fqtn())
-        ]
-        if len(pending) > 1:
-            preloaded = loader(spark, tables=pending, wheres=spec.filters)
-    if process_count > 1:
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
+        preloaded = loader(spark, tables=pending, wheres=spec.filters)
 
-        lock = threading.Lock()
+    outputs: dict[TableID, "DataFrame"] = {}
+    feeds: dict[str, set[str]] = {}  # source table → outputs not yet written
+    cursors: dict[str, tuple] = {}
+    for table in pending:
+        name = table.fqtn()
+        df = preloaded.get(name)
+        if df is None:
+            df = spec.src.load_table(spark, table, where=spec.filters.get(name))
+        cursor = spec.cursor_cols.get(name)
+        if spec.type != TransferType.SNAPSHOT_ONLY and spec.state is not None and cursor:
+            df, new_cursor = incremental_read(df, cursor, spec.state, name)
+            if new_cursor is not None:
+                cursors[name] = (new_cursor, cursor_type_of(df, cursor))
+        routed = route_unparsed(spec.transformation.apply_batch({table: df}))
+        if spec.type_system_version is not None:
+            from transferia_spark.schema.typesystem import apply_fallbacks
 
-        def one(table):
-            _activate_one(
-                spark, spec, table, written, lock, cleaned, preloaded
+            routed = {
+                t: apply_fallbacks(d, spec.type_system_version)
+                for t, d in routed.items()
+            }
+        for out_table, out_df in routed.items():
+            # many-to-one routing: one write holds every source's rows
+            prev = outputs.get(out_table)
+            outputs[out_table] = (
+                out_df if prev is None
+                else prev.unionByName(out_df, allowMissingColumns=True)
             )
+        feeds[name] = {t.fqtn() for t in routed}
 
-        with ThreadPoolExecutor(max_workers=process_count) as ex:
-            list(ex.map(one, tables))  # re-raises the first failure
-        return written
-    lock = None
-    for table in tables:
-        _activate_one(spark, spec, table, written, lock, cleaned, preloaded)
-    return written
+    lock = threading.Lock()
+    errors: list[Exception] = []
 
-
-class _NullLock:
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *a):
-        return False
-
-
-def _activate_one(
-    spark, spec, table, written: dict, lock, cleaned: set | None = None,
-    preloaded: dict | None = None,
-) -> None:
-    lock = lock or _NullLock()
-    cleaned = cleaned if cleaned is not None else set()
-    with lock:
-        if spec.progress is not None and spec.progress.table_done(table.fqtn()):
-            # resumed operation: this table's write committed in a
-            # previous run (tracker contract — don't redo it)
-            written[table.fqtn()] = -2
-            return
-    df = (preloaded or {}).get(table.fqtn())
-    if df is None:
-        df = spec.src.load_table(
-            spark, table, where=spec.filters.get(table.fqtn())
-        )
-    new_cursor = None
-    if spec.type != TransferType.SNAPSHOT_ONLY and spec.state is not None:
-        cursor = spec.cursor_cols.get(table.fqtn())
-        if cursor:
-            df, new_cursor = incremental_read(df, cursor, spec.state, table.fqtn())
-    routed = route_unparsed(spec.transformation.apply_batch({table: df}))
-    if spec.type_system_version is not None:
-        from transferia_spark.schema.typesystem import apply_fallbacks
-
-        routed = {
-            t: apply_fallbacks(d, spec.type_system_version)
-            for t, d in routed.items()
-        }
-    for out_table, out_df in routed.items():
-        # cleanup exactly ONCE per output table, registered under the
-        # lock (ADVICE r3: with process_count>1, two source tables
-        # routing to one output table could interleave a DROP/TRUNCATE
-        # with another thread's in-flight write and silently lose rows
-        # — the reference's ordering is cleanup-then-load)
-        with lock:
-            do_clean = out_table.fqtn() not in cleaned
-            if do_clean:
-                cleaned.add(out_table.fqtn())
-                spec.dst.cleanup(out_table, spec.cleanup)
-        spec.dst.write(out_df, out_table)
-        with lock:
-            written[out_table.fqtn()] = -1  # count not materialized by default
-    with lock:
+    def commit(name: str) -> None:
+        # AFTER every output write of this source table succeeded
+        # (tracker flush ordering; updateIncrementalState,
+        # load_snapshot.go:228) — the cursor keeps its column type
         if spec.progress is not None:
-            # commit progress AFTER every output write of this source
-            # table succeeded (tracker flush ordering)
-            spec.progress.mark_table(table.fqtn())
-        if spec.type != TransferType.SNAPSHOT_ONLY and spec.state is not None:
-            cursor = spec.cursor_cols.get(table.fqtn())
-            if cursor and new_cursor is not None:
-                # commit AFTER successful write (same ordering as
-                # updateIncrementalState, load_snapshot.go:228);
-                # persisted with the column's type so the next run
-                # compares natively, not via string casts
-                from transferia_spark.sources.incremental import cursor_type_of
+            spec.progress.mark_table(name)
+        if name in cursors:
+            spec.state.set(name, *cursors[name])
 
-                spec.state.set(table.fqtn(), new_cursor, cursor_type_of(df, cursor))
+    for name in [n for n, outs in feeds.items() if not outs]:
+        commit(name)
+    if process_count is None:
+        safe = spec.src.parallel_safe and spec.dst.parallel_safe
+        process_count = (
+            min(len(outputs), spark.sparkContext.defaultParallelism) if safe else 1
+        )
+    workers = max(1, process_count)
+    slots = threading.BoundedSemaphore(workers)
+
+    @inheritable_thread_target(spark)
+    def write_one(out_table: TableID, df) -> None:
+        # cleanup-then-load, once per output table
+        spec.dst.cleanup(out_table, spec.cleanup)
+        spec.dst.write(df, out_table)
+        with lock:
+            written[out_table.fqtn()] = -1
+            for name, outs in feeds.items():
+                if out_table.fqtn() in outs:
+                    outs.discard(out_table.fqtn())
+                    if not outs:
+                        commit(name)
+
+    def run(out_table: TableID, df) -> None:
+        try:
+            write_one(out_table, df)
+        except Exception as e:  # noqa: BLE001 — re-raised by activate
+            errors.append(e)
+        finally:
+            slots.release()
+
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        for out_table, df in outputs.items():
+            slots.acquire()
+            if errors:
+                break  # fail fast: later output tables never start
+            pool.submit(run, out_table, df)
+    if errors:
+        raise errors[0]
+    return written
 
 
 def run_regular_snapshots(

@@ -28,6 +28,9 @@ class CleanupPolicy(str, enum.Enum):
 
 class Sink:
     TYPE: str = ""
+    #: cleanup()/write() of different tables may run concurrently, so
+    #: activate() may use a thread pool by default (audited per sink)
+    parallel_safe: bool = False
 
     def cleanup(self, table: TableID, policy: CleanupPolicy) -> None:
         raise NotImplementedError

@@ -25,6 +25,7 @@ from transferia_spark.sinks.base import CleanupPolicy, Sink, register_sink
 @register_sink
 class FileSink(Sink):
     TYPE = "file"
+    parallel_safe = True  # one directory per table, no shared state
 
     def __init__(
         self,

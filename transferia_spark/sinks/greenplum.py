@@ -27,6 +27,7 @@ Spark-first split of responsibilities:
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -212,6 +213,9 @@ class GreenplumGpfdistSink(Sink):
                 )
             )
         self.generated_cols = set(generated_cols or ())
+        # one control-plane session: a table's load sequence (BEGIN …
+        # COMMIT) and cleanup must not interleave with another table's
+        self._sql_lock = threading.Lock()
 
     def close(self) -> None:
         if self._server is not None:
@@ -268,16 +272,18 @@ class GreenplumGpfdistSink(Sink):
             if f.name in cols
         ]
         self.stage(df, table)
-        for stmt in self.load_statements(table, cols, col_types):
-            self.sql(stmt)
+        with self._sql_lock:
+            for stmt in self.load_statements(table, cols, col_types):
+                self.sql(stmt)
 
     def cleanup(self, table: TableID, policy: CleanupPolicy) -> None:
         if policy == CleanupPolicy.DISABLED:
             return
-        if policy == CleanupPolicy.DROP:
-            self.sql(f"DROP TABLE IF EXISTS {pg_name(table)}")
-        else:
-            self.sql(f"TRUNCATE TABLE {pg_name(table)}")
+        with self._sql_lock:
+            if policy == CleanupPolicy.DROP:
+                self.sql(f"DROP TABLE IF EXISTS {pg_name(table)}")
+            else:
+                self.sql(f"TRUNCATE TABLE {pg_name(table)}")
 
 
 def _pg_type(simple: str) -> str:

@@ -21,6 +21,9 @@ class Source:
     """A snapshot-scan source; subclasses set ``TYPE``."""
 
     TYPE: str = ""
+    #: activate() may load and write this source's tables from
+    #: concurrent threads by default (audited per source; see activate)
+    parallel_safe: bool = False
 
     def table_list(self, spark: SparkSession) -> list[TableID]:
         raise NotImplementedError

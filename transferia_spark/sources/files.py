@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transferia_spark.schema.colschema import TableID
+from transferia_spark.session import read_files
 from transferia_spark.sources.base import Source, register_source
 
 # Combined-format access log → columns, entirely with JVM regex.
@@ -40,6 +41,7 @@ NGINX_FIELDS = [
 @register_source
 class FileSource(Source):
     TYPE = "file"
+    parallel_safe = True  # stateless reads
 
     def __init__(
         self,
@@ -84,7 +86,9 @@ class FileSource(Source):
     def load_table(self, spark: SparkSession, table: TableID, where: str | None = None) -> DataFrame:
         fmt = self.format
         path = self._table_path(table)
-        if fmt in ("parquet", "orc", "json", "csv", "text"):
+        if fmt in ("parquet", "orc") and not self.schema:
+            df = read_files(spark, path, fmt, self.options)
+        elif fmt in ("parquet", "orc", "json", "csv", "text"):
             reader = spark.read.format(fmt)
             if self.schema:
                 reader = reader.schema(self.schema)
