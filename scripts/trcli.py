@@ -185,7 +185,7 @@ def main() -> int:
                 with open(_os.path.join(dl_dir, name)) as fh:
                     doc = _json.load(fh)
                 print(
-                    f"  {doc.get('file')}:{doc.get('byte_pos', doc.get('line_no'))} "
+                    f"  {doc.get('file')}:{doc.get('byte_pos')} "
                     f"{doc.get('reason')}"
                 )
         return 0

@@ -842,7 +842,8 @@ def test_wal_and_mongo_readers_dead_letter_poison_lines(spark, tmp_path):
         f.write(json.dumps({"action": "I", "lsn": 1,
                             "columns": [{"name": "id", "value": 1}]}) + "\n")
         f.write("{broken\n")
-        f.write(json.dumps({"action": "I", "columns": []}) + "\n")  # no lsn
+        f.write(json.dumps({"action": "I", "schema": "public",
+                            "table": "items", "columns": []}) + "\n")  # no lsn
         f.write(json.dumps({"action": "I", "lsn": 2,
                             "columns": [{"name": "id", "value": 2}]}) + "\n")
     dl = str(tmp_path / "dl")
@@ -863,6 +864,13 @@ def test_wal_and_mongo_readers_dead_letter_poison_lines(spark, tmp_path):
     assert len(recorded) == 2
     assert all(n.startswith("000.jsonl.") and n.endswith(".json")
                for n in recorded)
+    # each record names the table its row would have carried in _table
+    # (none for the line that is not even JSON)
+    tables = []
+    for n in recorded:
+        with open(os.path.join(dl, n)) as fh:
+            tables.append(json.load(fh)["table"])
+    assert sorted(tables, key=str) == [None, "public.items"]
     # re-read (crash replay): same files, no duplicates
     rows = [
         r
@@ -1183,9 +1191,9 @@ def test_split_decode_slices_are_equivalent(spark, tmp_path, monkeypatch):
         p8, rows8 = collect(8, lo, hi)
         assert len(p8) >= 3, f"expected splits at lo={lo}"
         # sub-ranges tile (lo, hi] exactly
-        assert p8[0].start_lsn == lo and p8[-1].end_lsn == hi
+        assert p8[0].lo == lo and p8[-1].hi == hi
         for a, b in zip(p8, p8[1:]):
-            assert a.end_lsn == b.start_lsn
+            assert a.hi == b.lo
         assert Counter(map(repr, rows8)) == Counter(map(repr, rows1))
     # small ranges don't shred into tiny tasks
     psm, _ = collect(8, 0, 3)
@@ -1282,8 +1290,7 @@ def test_split_slices_pay_for_their_task():
         idx = {"f": ([(i * 10, i * 100) for i in range(1, n_ck + 1)],
                      True)}
         return attach_split_slices(
-            ["f"], 0, n_ck * 10 + 5, idx,
-            lambda f, lo, hi, sb, o: (lo, hi, sb), max_splits,
+            ["f"], 0, n_ck * 10 + 5, idx, max_splits,
         )
 
     for n_ck in (1, floor, 2 * floor - 2):
@@ -1291,11 +1298,13 @@ def test_split_slices_pay_for_their_task():
     for n_ck, want in ((2 * floor, 2), (4 * floor, 4), (40 * floor, 8)):
         slices = plan(n_ck)
         assert len(slices) == want, (n_ck, len(slices))
-        assert slices[0][0] == 0 and slices[-1][1] == n_ck * 10 + 5
+        assert slices[0].lo == 0 and slices[-1].hi == n_ck * 10 + 5
         for a, b in zip(slices, slices[1:]):
-            assert a[1] == b[0]
+            assert a.hi == b.lo
+            # a boundary's seek byte is its checkpoint's byte
+            assert b.start_byte == b.lo * 10
         # each slice owns at least `floor` checkpoints
-        assert all((hi - lo) // 10 >= floor for lo, hi, _ in slices[:-1])
+        assert all((s.hi - s.lo) // 10 >= floor for s in slices[:-1])
 
 
 def test_files_with_nothing_in_range_get_no_slice(spark, tmp_path):
@@ -1449,7 +1458,7 @@ def test_dotted_partial_update_routes_loudly(spark, tmp_path):
 
 
 def test_fast_key_position_scan_equals_json_parse(tmp_path):
-    """The r14 regex fast path in positions_with_seek_index must yield
+    """The waljson planner fast scan (``_lsn_fast_scan``, r14) must yield
     the SAME positions and seek index as the full-parse path on every
     line shape it can legally fast-path — and fall back (not diverge)
     on the ambiguous ones: a column literally NAMED after the key, the
@@ -1458,6 +1467,7 @@ def test_fast_key_position_scan_equals_json_parse(tmp_path):
     import json as _json
 
     from transferia_spark.streaming.wal_source import (
+        _lsn_fast_scan,
         positions_with_seek_index,
     )
 
@@ -1478,17 +1488,17 @@ def test_fast_key_position_scan_equals_json_parse(tmp_path):
     with open(f, "w") as fh:
         fh.write("\n".join(raw) + "\n")
 
-    def run(fast_key):
+    def run(fast_scan):
         idx: dict = {}
         pos = list(
             positions_with_seek_index(
-                f, lambda ev: int(ev["lsn"]), idx, False, fast_key=fast_key
+                f, lambda ev: int(ev["lsn"]), idx, False, fast_scan=fast_scan
             )
         )
         return pos, idx[f]
 
     slow_pos, slow_idx = run(None)
-    fast_pos, fast_idx = run("lsn")
+    fast_pos, fast_idx = run(_lsn_fast_scan)
     assert fast_pos == slow_pos == [1, 2, 6, 3, 4, 5, 4, -3]
     assert fast_idx == slow_idx
 
@@ -1500,7 +1510,7 @@ def test_fast_key_position_scan_equals_json_parse(tmp_path):
     idx: dict = {}
     pos_dl = list(
         positions_with_seek_index(
-            f, lambda ev: int(ev["lsn"]), idx, True, fast_key="lsn"
+            f, lambda ev: int(ev["lsn"]), idx, True, fast_scan=_lsn_fast_scan
         )
     )
     assert pos_dl == [1, 2, 6, 3, 4, 5, 4, -3]

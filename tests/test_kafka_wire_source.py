@@ -1849,14 +1849,13 @@ def test_split_slices_respect_max_splits():
         idx = {"f": ([(i * 10, i * 100) for i in range(1, n_ck + 1)],
                      True)}
         slices = attach_split_slices(
-            ["f"], 0, n_ck * 10 + 5, idx,
-            lambda f, lo, hi, sb, o: (lo, hi, sb), mx,
+            ["f"], 0, n_ck * 10 + 5, idx, mx,
         )
         assert len(slices) <= mx, (n_ck, mx, len(slices))
         # tiling is exact regardless
-        assert slices[0][0] == 0 and slices[-1][1] == n_ck * 10 + 5
+        assert slices[0].lo == 0 and slices[-1].hi == n_ck * 10 + 5
         for a, b in zip(slices, slices[1:]):
-            assert a[1] == b[0]
+            assert a.hi == b.lo
 
 
 def test_lso_probe_failure_is_logged_and_tears_down_client(

@@ -553,7 +553,7 @@ def test_trcli_status_verb_reads_state_and_health(tmp_path):
     dl = tmp_path / "unparsed_transfer"
     dl.mkdir()
     (dl / "000.jsonl.3.json").write_text(_json.dumps({
-        "file": "000.jsonl", "line_no": 3, "unparsed_row": "{bad",
+        "file": "000.jsonl", "byte_pos": 3, "unparsed_row": "{bad",
         "reason": "JSONDecodeError: oops",
     }))
     out = subprocess.run(

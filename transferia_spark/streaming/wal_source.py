@@ -1,21 +1,29 @@
-"""Slot-direct CDC via a custom PySpark DataSource stream reader.
+"""Recorded-CDC stream readers: one base, plus the PG slot (wal2json) format.
 
 ≈ ``pkg/providers/postgres/publisher_replication.go:75`` (``Run``: read
 logical-replication slot → wal2json events → ChangeItems, ack LSN after
 downstream push) in transferia/transferia. The reference speaks the
 replication protocol in-process; the Spark-native equivalent is a
-PySpark 4 ``DataSourceStreamReader`` whose offsets ARE the LSN — Spark's
-checkpointing then gives exactly the reference's ack contract
-(``commit(offset)`` fires only after the micro-batch is durably
-processed, ≈ ``publisher_replication.go:140``).
+PySpark 4 ``DataSourceStreamReader`` whose offsets ARE the source
+position — Spark's checkpointing then gives exactly the reference's ack
+contract (``commit(offset)`` fires only after the micro-batch is
+durably processed, ≈ ``publisher_replication.go:140``).
 
-The wire format is wal2json v2 (public PostgreSQL plugin): one JSON
-object per line, ``{"action": "I|U|D", "schema": s, "table": t,
-"columns": [{name, value}...], "identity": [{name, value}...],
-"lsn": n}``. This module consumes a directory of such JSON-line files
-(the slot tail piped to files — the transport the container can test);
-the read loop, offset algebra, and row mapping are transport-agnostic,
-so a socket/psycopg transport only replaces ``_scan_files``.
+:class:`RecordedCdcStreamReader` is that source contract for a
+directory of recorded JSON-line capture files (a tailer's output piped
+to files — the transport the container can test), once for every
+format: the common options, the ack-seeded durable floor,
+``latestOffset`` over the planner scan cache, seek-hinted and
+within-file split ``partitions``, the byte-offset read loop with
+poison routing to the dead-letter directory, the arrow fast path and
+the ``commit`` ack. A format supplies only its hooks (see the class
+docstring); ``cdc_sources.py`` holds the MySQL-binlog and Mongo
+change-stream formats.
+
+This module's own format is wal2json v2 (public PostgreSQL plugin):
+one JSON object per line, ``{"action": "I|U|D", "schema": s, "table":
+t, "columns": [{name, value}...], "identity": [{name, value}...],
+"lsn": n}``, read by :class:`WalJsonStreamReader`.
 
 Emitted rows speak the full ChangeItem column contract
 (``transferia_spark.cdc.changeitem``), so the stream plugs straight
@@ -34,7 +42,8 @@ from __future__ import annotations
 import bisect
 import json
 import os
-from collections.abc import Iterator, Sequence
+import re
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -44,15 +53,6 @@ from pyspark.sql.datasource import (
 )
 
 _ACTIONS = {"I": "i", "U": "u", "D": "d"}
-
-# exactly the meta tail the WAL reader APPENDS to its tuples — a name
-# must only be excluded from payload_fields when the reader really
-# emits it, or a payload column with a reserved-looking name silently
-# breaks the tuple arity (code-review r14: `_removed` belongs to the
-# change-stream reader's tail, not this one)
-_META_FIELDS = (
-    "_op", "_lsn", "_counter", "_table", "_before", "_present",
-)
 
 # payload types pa.array converts from plain JSON-decoded values with
 # the same strictness as the worker's per-cell converters — anything
@@ -155,8 +155,8 @@ def _reject_reserved_payload(payload_fields) -> None:
 def wrap_arrow_read(reader, rows):
     """Reader-agnostic fast path: yield RecordBatches when the
     reader's schema plans (see ``_arrow_read_plan``), else the rows
-    unchanged. Readers call this from ``read()`` around their tuple
-    generator."""
+    unchanged. ``RecordedCdcStreamReader.read()`` calls this around its
+    tuple generator."""
     plan = (
         _arrow_read_plan(reader.schema, reader.payload_fields)
         if reader.arrow_batches
@@ -186,14 +186,17 @@ def wal_output_schema(payload_ddl: str) -> T.StructType:
 
 
 class _FileSlice(InputPartition):
-    def __init__(self, path: str, start_lsn: int, end_lsn: int,
+    """One read task: the lines of ``path`` whose position lies in
+    ``(lo, hi]``; an empty ``path`` is the empty batch's partition."""
+
+    def __init__(self, path: str, lo, hi,
                  start_byte: int = 0, ordered: bool = False):
         self.path = path
-        self.start_lsn = start_lsn
-        self.end_lsn = end_lsn
+        self.lo = lo
+        self.hi = hi
         # planner seek hints (r9): byte offset of the last sparse
-        # checkpoint at-or-below start_lsn, and whether the file is
-        # lsn-ordered (enables early stop past end_lsn) — read() is
+        # checkpoint at-or-below lo, and whether the file is
+        # position-ordered (enables early stop past hi) — read() is
         # then O(batch bytes) instead of re-decoding the file head
         # every micro-batch
         self.start_byte = start_byte
@@ -344,72 +347,37 @@ SLICE_MIN_CHECKPOINTS = 16
 
 
 def positions_with_seek_index(
-    f, extract_pos, seek_index, dead_letter, fast_key: str | None = None,
-    fast_scan=None,
+    f, extract_pos, seek_index, dead_letter, fast_scan=None,
 ):
     """Decode a capture file's positions ONCE (the scan cache
     materializes the result for the file's lifetime), recording as a
     side effect a sparse position→byte seek index + whether the file
     is position-ordered — :func:`attach_split_slices` turns those into
-    executor seek hints so read() is O(batch), not O(file). Shared by
-    the waljson, binlog and change-stream readers (one implementation,
-    code-review r9).
+    executor seek hints so read() is O(batch), not O(file).
 
-    ``fast_key`` names a TOP-LEVEL integer position key (waljson's
-    ``lsn``) and enables a regex fast path ~5× cheaper than a full
-    ``json.loads`` per line (the planner decode of a fresh backlog file
-    sat inside the steady-state latency window — measured r14). Sound
-    because in valid JSON an UNESCAPED ``"key"`` byte sequence can only
-    be a complete string token (a quote inside a string is ``\\"``,
-    which breaks the byte pattern), ``"key" :`` followed by a bare
-    number can only be an object key, and the fast path only fires when
-    the key token occurs EXACTLY once in the line — two occurrences
-    (e.g. nested under a payload object as well) fall back to the full
-    parse. The one reachable divergence is a line whose ONLY ``key`` is
-    nested (top-level absent): a POISON line under the json path, which
-    the fast path plans at the nested number instead of skipping — the
-    executor read() still dead-letters (or fails loudly on) the line
-    itself, offsets stay monotone watermarks, and a phantom position
-    only makes file pruning/skipping more conservative.
-
-    ``fast_scan`` is the composite-key generalization: a callable
-    ``line_bytes -> position | None`` a reader supplies when its
-    position spans several fields (the binlog reader's
-    ``log_file``+``log_pos``); ``None`` falls back to the full parse.
-    The supplier owns the soundness argument — it must return a
-    position only when the json path would compute the same one, or
-    when the line is poison under the json path (where a phantom is
-    benign exactly as above). The change-stream reader deliberately has
-    NO fast scan: its position falls back to the ``_id._data`` resume
-    token when the explicit fields are absent, so a resume-token event
-    whose user ``fullDocument`` happens to carry fields named
-    ``clusterTime``/``order`` would fast-plan a phantom for a NON-poison
-    line — unsound, unlike the two shipped fast paths."""
+    ``fast_scan`` is a format's planner fast path: a callable
+    ``line_bytes -> position | None``, several times cheaper than a
+    full ``json.loads`` per line (the planner decode of a fresh backlog
+    file sat inside the steady-state latency window — measured r14);
+    ``None`` from it, or no callable, falls back to the full parse. The
+    supplier owns the soundness argument — it must return a position
+    only when the json path would compute the same one, or when the
+    line is poison under the json path: a phantom position there is
+    benign, because the executor read() still dead-letters (or fails
+    loudly on) the line itself, offsets stay monotone watermarks, and a
+    phantom only makes file pruning/skipping more conservative."""
     ckpts: list[tuple] = []
     ordered = True
     prev = None
     i = 0
     off = 0
-    token = rx = None
-    if fast_key is not None:
-        import re
-
-        token = b'"%s"' % fast_key.encode()
-        # trailing guard: a float/exponent value (4.5, 4e3) must NOT
-        # fast-path (int() of the parsed float truncates differently
-        # than a digit-prefix match) — fall back to the full parse
-        rx = re.compile(token + rb"\s*:\s*(-?\d+)(?![.eE\d])")
     with open(f, "rb") as fh:
         for line in fh:
             start = off
             off += len(line)
             if not line.strip():
                 continue
-            if token is not None and line.count(token) == 1 and (
-                m := rx.search(line)
-            ):
-                pos = int(m.group(1))
-            elif fast_scan is not None and (
+            if fast_scan is not None and (
                 fp := fast_scan(line)
             ) is not None:
                 pos = fp
@@ -440,25 +408,25 @@ def _evict_seek_index(seek_index, files) -> None:
             del seek_index[k]
 
 
-def attach_split_slices(
-    files, lo, hi, seek_index, make_slice, max_splits: int,
-):
+def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
     """Seek-hinted partition planning + WITHIN-FILE parallel decode: an
     ordered file's planned ``(lo, hi]`` range splits at sparse seek-
-    checkpoint boundaries into up to ``max_splits`` sub-slices, each
-    an independent executor task — without this, one capture file is
-    ONE task no matter how big the batch, so a catch-up batch decodes
-    single-threaded while the cluster idles.
+    checkpoint boundaries into up to ``max_splits`` :class:`_FileSlice`
+    sub-slices, each an independent executor task — without this, one
+    capture file is ONE task no matter how big the batch, so a catch-up
+    batch decodes single-threaded while the cluster idles.
 
-    Correctness: ``make_slice(f, sub_lo, sub_hi, start_byte, ordered)``
-    sub-ranges tile (lo, hi] exactly at checkpoint POSITIONS, and each
-    boundary's seek byte is at-or-before the first line of every
-    position above it (ordered-file proof, same as the start hint), so
-    no line is skipped and boundary-position lines re-read filtered.
-    Counters stay exact because they are per-position (reset on every
-    position change) and each sub-slice sees every line of the
-    positions it OWNS. Only position-ordered files split; unordered
-    ones fall back to the single whole-range slice.
+    Correctness: the sub-slices' ``(lo, hi]`` ranges tile (lo, hi]
+    exactly at checkpoint POSITIONS, and each boundary's seek byte is
+    at-or-before the first line of every position above it
+    (ordered-file proof, same as the start hint), so no line is skipped
+    and boundary-position lines re-read filtered. Scan-assigned
+    counters (waljson's ``_counter``) stay exact because they are
+    per-position (reset on every position change) and each sub-slice
+    sees every line of the positions it OWNS; formats whose events
+    carry their sub-position are safe a fortiori. Only position-ordered
+    files split; unordered ones fall back to the single whole-range
+    slice.
 
     A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (~8k events):
     a Python task wave costs ~250-300 ms before ``read()`` starts, and
@@ -492,11 +460,11 @@ def attach_split_slices(
                 for bp, bbyte in bounds:
                     if bp == cur_lo:
                         continue  # >512-line tx: duplicate boundary
-                    out.append(make_slice(f, cur_lo, bp, cur_sb, True))
+                    out.append(_FileSlice(f, cur_lo, bp, cur_sb, True))
                     cur_lo, cur_sb = bp, bbyte
-                out.append(make_slice(f, cur_lo, hi, cur_sb, True))
+                out.append(_FileSlice(f, cur_lo, hi, cur_sb, True))
                 continue
-        out.append(make_slice(f, lo, hi, sb, ordered))
+        out.append(_FileSlice(f, lo, hi, sb, ordered))
     return out
 
 
@@ -518,12 +486,49 @@ def prune_committed_files(cache: OffsetScanCache, files, end) -> int:
     return n
 
 
-class WalJsonStreamReader(DataSourceStreamReader):
+def _flag(options: dict, name: str) -> bool:
+    return str(options.get(name, "false")).lower() in ("true", "1")
+
+
+#: row-mapper verdict: the slice's ordered file holds nothing past here
+_STOP = object()
+
+
+class RecordedCdcStreamReader(DataSourceStreamReader):
+    """The recorded-CDC source contract (Structured Streaming's
+    replayable offsets, ``read`` of ``(start, end]``, ``commit``), once
+    for every capture format. Rows with position in ``(start, end]``
+    belong to the batch — the same half-open contract as Kafka offsets.
+
+    A format subclass supplies only its hooks:
+
+    - ``_META_FIELDS``: the meta tail its rows append — a name is
+      excluded from ``payload_fields`` only when the format really
+      emits it, or a payload column with a reserved-looking name
+      silently breaks the tuple arity (code-review r14);
+    - ``_position(ev)``: an event's position (totally ordered);
+    - ``_fast_scan``: the planner fast path
+      (:func:`positions_with_seek_index`), or None;
+    - ``_to_pos(offset)`` / ``_to_offset(pos)``: Spark-checkpoint
+      offset dict ⇄ position (also the ack-file format);
+    - ``_initial_pos(options)``: where a fresh checkpoint starts;
+    - ``_table(ev)``: the ``_table`` string the event's row carries;
+    - ``_row_mapper(lo, hi, ordered)``: a per-slice ``ev -> row tuple
+      | None (skip) | _STOP`` function.
+
+    The defaults are integer LSN positions with ``{"lsn": n}`` offsets
+    and a ``start_lsn`` option, the waljson and binlog algebra."""
+
+    _META_FIELDS = (
+        "_op", "_lsn", "_counter", "_table", "_before", "_present",
+    )
+    _fast_scan: Callable[[bytes], object] | None = None
+
     def __init__(self, schema: T.StructType, options: dict):
         self.path = options["path"]
         self.schema = schema
         self.payload_fields = [
-            f.name for f in schema.fields if f.name not in _META_FIELDS
+            f.name for f in schema.fields if f.name not in self._META_FIELDS
         ]
         _reject_reserved_payload(self.payload_fields)
         # executor tasks yield pyarrow RecordBatches instead of row
@@ -532,93 +537,105 @@ class WalJsonStreamReader(DataSourceStreamReader):
         # decode plane, r13); arrow_batches=false restores row tuples
         self.arrow_batches, self.arrow_chunk = arrow_option_fields(options)
         self.ack_file = options.get("ack_file")
-        # snapshot→replication handoff (≈ the slot LSN recorded at
-        # activate time, lsn_slot.go): a fresh checkpoint starts AFTER
-        # this position, so pre-snapshot WAL in the directory is not
-        # replayed over newer snapshot state
-        self.start_lsn = int(options.get("start_lsn", 0))
+        # snapshot→replication handoff (≈ the slot LSN / saved binlog
+        # position / resume token recorded at activate time): a fresh
+        # checkpoint starts AFTER this position, so pre-snapshot capture
+        # in the directory is not replayed over newer snapshot state
+        self.start_pos = self._initial_pos(options)
         # bounded catch-up batches (≈ middlewares/bufferer.go caps):
-        # advance at most this many LSNs per planned batch
+        # advance at most this many positions per planned batch, so a
+        # replica resuming after downtime processes the backlog in
+        # memory-bounded micro-batches instead of one giant batch
         mx = options.get("max_events_per_batch")
         self.max_events = int(mx) if mx is not None else None
         # within-file parallel decode (attach_split_slices): a planned
         # range splits into up to this many executor tasks at seek-
-        # checkpoint boundaries; 1 = one task per file (old behavior)
+        # checkpoint boundaries; 1 = one task per file
         self.decode_splits = max(1, int(options.get("decode_splits", 8)))
         # _base floors latestOffset() so bounded catch-up never plans an
         # end below an already-planned one. In-memory alone it is LOST
-        # on a query restart — a fresh reader would re-base on start_lsn
+        # on a query restart — a fresh reader would re-base on start_pos
         # and return an offset BELOW the committed checkpoint, and Spark
         # would record the regressed offset and replay processed ranges.
         # Seed it from the durable ack written by commit() (the
-        # committed-LSN state the reference keeps in its coordinator).
-        self._base: int | None = None
+        # committed-position state the reference keeps in its
+        # coordinator).
+        self._base = None
         if self.ack_file:
             try:
                 with open(self.ack_file) as fh:
-                    self._base = int(json.load(fh)["lsn"])
+                    self._base = self._to_pos(json.load(fh))
             except (FileNotFoundError, ValueError, KeyError):
                 pass
-        # emit wal2json TRUNCATE statements ('T' actions) as control
-        # ChangeItems for ControlRouter pipelines (kind.go parity);
-        # default drops them like the other non-row actions
-        self.emit_controls = str(
-            options.get("emit_controls", "false")
-        ).lower() in ("true", "1")
+        # emit TRUNCATE/DDL statements as control ChangeItems (kind.go
+        # parity) for ControlRouter pipelines (streaming/controls.py);
+        # default drops them — plain collapse/merge consumers expect
+        # row kinds only
+        self.emit_controls = _flag(options, "emit_controls")
         # dead-letter route for poison events (≈ <table>_unparsed,
         # generic_parser.go): when set, a malformed line is recorded
         # there and the stream continues; when unset, it fails loudly
         # (and the supervisor classifies the parse error fatal)
         self.dead_letter = options.get("dead_letter_dir")
         # slot-trim analog: delete recorded files once wholly below the
-        # COMMITTED offset (the server-side WAL trim the flushed ack
+        # COMMITTED offset (the server-side log trim the flushed ack
         # authorizes) — keeps the tailed directory bounded on
         # long-running streams; off by default (keep history)
-        self.prune_committed = str(
-            options.get("prune_committed", "false")
-        ).lower() in ("true", "1")
+        self.prune_committed = _flag(options, "prune_committed")
         self._scan_cache = OffsetScanCache()
-        # file -> (sparse [(lsn, byte)] checkpoints, lsn-ordered flag),
+        # file -> (sparse [(position, byte)] checkpoints, ordered flag),
         # recorded by _file_positions' one-time decode; partitions()
         # turns these into executor seek hints
         self._seek_index: dict[str, tuple[list, bool]] = {}
 
+    # -- format hooks: integer LSN defaults --------------------------
+    @staticmethod
+    def _to_pos(offset: dict):
+        return int(offset["lsn"])
+
+    @staticmethod
+    def _to_offset(pos) -> dict:
+        return {"lsn": pos}
+
+    @staticmethod
+    def _initial_pos(options: dict):
+        return int(options.get("start_lsn", 0))
+
+    @staticmethod
+    def _table(ev: dict) -> str:
+        return ".".join(x for x in (ev.get("schema"), ev.get("table")) if x)
+
+    # -- shared machinery ---------------------------------------------
     def _file_positions(self, f: str):
         """One decode per immutable file, seek index recorded as a side
-        effect (the shared helper — partitions() turns it into executor
-        seek hints so read() is O(batch), not O(file))."""
+        effect; the poison filter mirrors read()'s dead-letter route,
+        so planning and read() agree on what is poison."""
         yield from positions_with_seek_index(
-            f,
-            lambda ev: int(ev["lsn"]),
-            self._seek_index,
-            bool(self.dead_letter),
-            fast_key="lsn",
+            f, self._position, self._seek_index, bool(self.dead_letter),
+            self._fast_scan,
         )
 
-    # -- offset algebra: an offset is {"lsn": n}, rows with lsn in
-    # (start, end] belong to the batch (same half-open contract as
-    # Kafka offsets) --------------------------------------------------
     def initialOffset(self) -> dict:
-        return {"lsn": self.start_lsn}
+        return self._to_offset(self.start_pos)
 
     def latestOffset(self) -> dict:
-        base = self._base if self._base is not None else self.start_lsn
+        base = self.start_pos if self._base is None else self._base
         pending = set(
             self._scan_cache.pending(
                 _scan_files(self.path), base, self._file_positions
             )
         )
         if self.max_events is None:
-            return {"lsn": max(max(pending, default=0), base)}
+            return self._to_offset(max(pending, default=base))
         if not pending:
-            return {"lsn": base}
-        return {"lsn": sorted(pending)[: self.max_events][-1]}
+            return self._to_offset(base)
+        return self._to_offset(sorted(pending)[: self.max_events][-1])
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        lo, hi = self._to_pos(start), self._to_pos(end)
         # `start` is Spark's committed checkpoint — a second durable
         # floor for _base (belt-and-braces with the ack_file seed)
-        self._base = max(self._base or 0, int(end["lsn"]), int(start["lsn"]))
-        lo, hi = int(start["lsn"]), int(end["lsn"])
+        self._base = max(p for p in (self._base, lo, hi) if p is not None)
         if hi <= lo:
             return [_FileSlice("", lo, hi)]  # empty batch still needs ≥1 partition
         # prune read tasks for files the planner cache PROVES hold
@@ -631,9 +648,7 @@ class WalJsonStreamReader(DataSourceStreamReader):
         if not files:
             return [_FileSlice("", lo, hi)]
         return attach_split_slices(
-            files, lo, hi, self._seek_index,
-            lambda f, slo, shi, sb, o: _FileSlice(f, slo, shi, sb, o),
-            max_splits=self.decode_splits,
+            files, lo, hi, self._seek_index, self.decode_splits
         )
 
     def read(self, partition: _FileSlice):
@@ -647,18 +662,13 @@ class WalJsonStreamReader(DataSourceStreamReader):
     def _read_tuples(self, partition: _FileSlice) -> Iterator[tuple]:
         if not partition.path:
             return
-        lo, hi = partition.start_lsn, partition.end_lsn
-        # _counter: event index within one LSN (= one transaction in
-        # wal2json v2), assigned in file order. The slot tailer flushes
-        # whole transactions to one file, so per-file counting is total
-        # per (lsn) — matching the reference's counter-within-tx.
-        last_lsn, counter = None, 0
+        row_of = self._row_mapper(partition.lo, partition.hi, partition.ordered)
         with open(partition.path, "rb") as fh:
             if partition.start_byte:
                 # seek hint: everything before this byte is <= lo by
-                # the planner's order proof; counters stay exact
-                # because a checkpoint lands on a line start and all
-                # lines of any lsn > lo sit at-or-after it
+                # the planner's order proof; scan-assigned counters
+                # stay exact because a checkpoint lands on a line start
+                # and all lines of any position > lo sit at-or-after it
                 fh.seek(partition.start_byte)
             # dead-letter idempotence keys use the line's BYTE OFFSET,
             # not its index: with seeking, an index is relative to the
@@ -675,85 +685,36 @@ class WalJsonStreamReader(DataSourceStreamReader):
                 # one bad row must not force a re-snapshot
                 # (generic_parser.go's NewUnparsed contract); without a
                 # dead-letter route the parse error stays loud/fatal
+                ev = None
                 try:
                     ev = json.loads(line)
-                    lsn = int(ev["lsn"])
-                    if partition.ordered and lsn > hi:
-                        # lsn-ordered file (planner-proved): nothing
-                        # past this line belongs to (lo, hi]
-                        return
-                    action = ev.get("action")
-                    if action not in _ACTIONS:
-                        # wal2json 'T' (TRUNCATE) becomes a control
-                        # ChangeItem when the pipeline opted in, as does
-                        # an 'M' logical message whose prefix is "ddl" —
-                        # the public pg_logical_emit_message /
-                        # event-trigger pattern for DDL capture.
-                        # 'B'/'C' (tx markers) and other messages are
-                        # never row changes.
-                        is_ctl = action == "T" or (
-                            action == "M" and ev.get("prefix") == "ddl"
-                        )
-                        if not (
-                            self.emit_controls and is_ctl and lo < lsn <= hi
-                        ):
-                            continue
-                        counter = counter + 1 if lsn == last_lsn else 0
-                        last_lsn = lsn
-                        yield tuple(None for _ in self.payload_fields) + (
-                            "truncate" if action == "T" else "ddl",
-                            lsn,
-                            counter,
-                            ".".join(
-                                x
-                                for x in (ev.get("schema"), ev.get("table"))
-                                if x
-                            )
-                            or None,
-                            None,
-                            None,
-                        )
-                        continue
-                    counter = counter + 1 if lsn == last_lsn else 0
-                    last_lsn = lsn
-                    if not (lo < lsn <= hi):
-                        continue
-                    cols = {
-                        c["name"]: c.get("value")
-                        for c in ev.get("columns") or []
-                    }
-                    present = sorted(cols) if action == "U" else None
-                    identity = ev.get("identity") or []
-                    before = None
-                    if identity:
-                        bmap = {c["name"]: c.get("value") for c in identity}
-                        before = tuple(
-                            bmap.get(n) for n in self.payload_fields
-                        )
-                    if action == "D" and not cols:
-                        cols = {c["name"]: c.get("value") for c in identity}
-                    yield tuple(cols.get(n) for n in self.payload_fields) + (
-                        _ACTIONS[action],
-                        lsn,
-                        counter,
-                        ".".join(
-                            x for x in (ev.get("schema"), ev.get("table")) if x
-                        ),
-                        before,
-                        present,
-                    )
+                    row = row_of(ev)
                 except Exception as e:  # noqa: BLE001 — routed, not dropped
-                    if self.dead_letter:
-                        dead_letter_record(
-                            self.dead_letter, partition.path, line_pos,
-                            line.strip().decode(errors="replace"), e,
-                        )
-                        continue
-                    raise
+                    if not self.dead_letter:
+                        raise
+                    dead_letter_record(
+                        self.dead_letter, partition.path, line_pos,
+                        line.strip().decode(errors="replace"), e,
+                        table=self._dead_letter_table(ev),
+                    )
+                    continue
+                if row is _STOP:
+                    return
+                if row is not None:
+                    yield row
+
+    def _dead_letter_table(self, ev) -> str | None:
+        """The ``_table`` the poison line's row would have carried,
+        when the line parsed far enough to name one."""
+        try:
+            return self._table(ev) or None
+        except (AttributeError, TypeError):  # not an object / odd names
+            return None
 
     def commit(self, end: dict) -> None:
-        # ≈ slot ack (publisher_replication.go:140): persist the
-        # confirmed LSN so the slot/tailer can trim the log
+        # ≈ slot ack (publisher_replication.go:140) / saved binlog
+        # position / per-collection resume token: persist the confirmed
+        # offset so the tailer can trim the log
         if self.ack_file:
             tmp = self.ack_file + ".tmp"
             with open(tmp, "w") as fh:
@@ -761,8 +722,96 @@ class WalJsonStreamReader(DataSourceStreamReader):
             os.replace(tmp, self.ack_file)
         if self.prune_committed:
             prune_committed_files(
-                self._scan_cache, _scan_files(self.path), int(end["lsn"])
+                self._scan_cache, _scan_files(self.path), self._to_pos(end)
             )
+
+
+# waljson planner fast scan: ``"lsn"`` is a TOP-LEVEL integer key. Sound
+# because in valid JSON an UNESCAPED ``"lsn"`` byte sequence can only be
+# a complete string token (a quote inside a string is ``\"``, which
+# breaks the byte pattern), ``"lsn" :`` followed by a bare number can
+# only be an object key, and the scan only fires when the token occurs
+# EXACTLY once in the line — two occurrences (e.g. nested under a
+# payload object as well) fall back to the full parse. The one
+# reachable divergence is a line whose ONLY ``lsn`` is nested: poison
+# under the json path, so the phantom position is benign. The trailing
+# guard keeps a float/exponent value (4.5, 4e3) off the fast path
+# (int() of the parsed float truncates differently than a digit prefix).
+_LSN_TOKEN = b'"lsn"'
+_LSN_RX = re.compile(rb'"lsn"\s*:\s*(-?\d+)(?![.eE\d])')
+
+
+def _lsn_fast_scan(line: bytes):
+    """``line -> lsn | None`` for the planner's position decode."""
+    if line.count(_LSN_TOKEN) != 1:
+        return None
+    m = _LSN_RX.search(line)
+    return int(m.group(1)) if m else None
+
+
+class WalJsonStreamReader(RecordedCdcStreamReader):
+    """wal2json v2 lines; offsets are ``{"lsn": n}``."""
+
+    _fast_scan = staticmethod(_lsn_fast_scan)
+
+    @staticmethod
+    def _position(ev: dict) -> int:
+        return int(ev["lsn"])
+
+    def _row_mapper(self, lo: int, hi: int, ordered: bool):
+        fields = self.payload_fields
+        # _counter: event index within one LSN (= one transaction in
+        # wal2json v2), assigned in file order. The slot tailer flushes
+        # whole transactions to one file, so per-file counting is total
+        # per (lsn) — matching the reference's counter-within-tx.
+        last_lsn, counter = None, 0
+
+        def row(ev: dict):
+            nonlocal last_lsn, counter
+            lsn = self._position(ev)
+            if ordered and lsn > hi:
+                # lsn-ordered file (planner-proved): nothing past this
+                # line belongs to (lo, hi]
+                return _STOP
+            action = ev.get("action")
+            op = _ACTIONS.get(action)
+            if op is None:
+                # wal2json 'T' (TRUNCATE) becomes a control ChangeItem
+                # when the pipeline opted in, as does an 'M' logical
+                # message whose prefix is "ddl" — the public
+                # pg_logical_emit_message / event-trigger pattern for
+                # DDL capture. 'B'/'C' (tx markers) and other messages
+                # are never row changes, and a control line not emitted
+                # does not bump the counter.
+                is_ctl = action == "T" or (
+                    action == "M" and ev.get("prefix") == "ddl"
+                )
+                if not (self.emit_controls and is_ctl and lo < lsn <= hi):
+                    return None
+                counter = counter + 1 if lsn == last_lsn else 0
+                last_lsn = lsn
+                return (None,) * len(fields) + (
+                    "truncate" if action == "T" else "ddl",
+                    lsn, counter, self._table(ev) or None, None, None,
+                )
+            counter = counter + 1 if lsn == last_lsn else 0
+            last_lsn = lsn
+            if not (lo < lsn <= hi):
+                return None
+            cols = {c["name"]: c.get("value") for c in ev.get("columns") or []}
+            present = sorted(cols) if action == "U" else None
+            identity = ev.get("identity") or []
+            before = None
+            if identity:
+                bmap = {c["name"]: c.get("value") for c in identity}
+                before = tuple(bmap.get(n) for n in fields)
+            if action == "D" and not cols:
+                cols = {c["name"]: c.get("value") for c in identity}
+            return tuple(cols.get(n) for n in fields) + (
+                op, lsn, counter, self._table(ev), before, present,
+            )
+
+        return row
 
 
 def probe_wal_schema(path: str, base_ddl: str) -> T.StructType:

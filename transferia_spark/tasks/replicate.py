@@ -768,16 +768,13 @@ def read_unparsed(spark: SparkSession, dl_dir: str) -> DataFrame:
     """The dead-letter table (≈ ``<table>_unparsed``,
     ``generic_parser.go:575``): columns (table, file, byte_pos,
     unparsed_row, reason). ``byte_pos`` is the poison line's byte
-    offset in its capture file (records written before r9 carried a
-    line ordinal under ``line_no``; reads coalesce both spellings)."""
-    from pyspark.sql import functions as F
+    offset in its capture file."""
     from pyspark.sql import types as T
 
     schema = T.StructType([
         T.StructField("table", T.StringType()),
         T.StructField("file", T.StringType()),
         T.StructField("byte_pos", T.LongType()),
-        T.StructField("line_no", T.LongType()),
         T.StructField("unparsed_row", T.StringType()),
         T.StructField("reason", T.StringType()),
     ])
@@ -789,14 +786,9 @@ def read_unparsed(spark: SparkSession, dl_dir: str) -> DataFrame:
         ]
     except FileNotFoundError:
         files = []
-    out_cols = ["table", "file", "byte_pos", "unparsed_row", "reason"]
     if not files:
-        return spark.createDataFrame([], schema).select(*out_cols)
-    return (
-        spark.read.schema(schema).json(files)
-        .withColumn("byte_pos", F.coalesce("byte_pos", "line_no"))
-        .select(*out_cols)
-    )
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).json(files)
 
 
 def _seed_snapshot(spark: SparkSession, spec: TransferSpec, table_obj) -> int:
