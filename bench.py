@@ -275,8 +275,13 @@ def bench_cdc_pipeline(
         .schema(wal_output_schema(ddl))
         .option("path", wal)
         .option("ack_file", ack)
-        # bounded catch-up batches over the backlog
-        .option("max_events_per_batch", str(max(1, len(backlog) // n_batches)))
+        # bounded catch-up batches over the backlog, sized from the
+        # larger of the two sets: at a scale whose backlog is empty the
+        # 1000-event warm-up would otherwise run one event per batch
+        .option(
+            "max_events_per_batch",
+            str(max(1, max(len(warm), len(backlog)) // n_batches)),
+        )
         .load()
     )
     ckpt = os.path.join(tmp, "ckpt")

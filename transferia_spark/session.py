@@ -14,6 +14,9 @@ import threading
 
 from pyspark.sql import SparkSession
 
+#: the directory holding the ``transferia_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "transferia_spark",
@@ -25,6 +28,15 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` defaults to the local core count —
     the right number for local mode; on a real cluster this is overridden
     at submit time (or left to AQE coalescing, which is enabled).
+
+    Python workers fork from :mod:`transferia_spark.worker_daemon`
+    (``spark.python.daemon.module``), which stops each task from
+    re-reading ``pyspark.zip`` and the spark-core jar on CPython < 3.12
+    (~160-200 ms per task). The workers import it by name, so the
+    directory holding this package is prepended to
+    ``spark.executorEnv.PYTHONPATH``, ahead of any value in
+    ``extra_conf``; without it no Python task could start when the
+    driver's cwd is outside the repository.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -55,8 +67,13 @@ def get_spark(
         # testdata's events.ts is parquet TIMESTAMP(NANOS); Spark has no
         # ns timestamps — read as long, converted in load_tables
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "transferia_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -342,7 +342,8 @@ class OffsetScanCache:
 SEEK_CHECKPOINT_EVERY = 512
 
 #: fewest seek checkpoints (~8k events) per decode slice — see
-#: attach_split_slices for the per-task cost this floor rests on
+#: attach_split_slices for the per-task cost this floor rests on (the
+#: floor predates worker_daemon, which cut that cost by ~160-190 ms)
 SLICE_MIN_CHECKPOINTS = 16
 
 
@@ -428,10 +429,15 @@ def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
     files split; unordered ones fall back to the single whole-range
     slice.
 
-    A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (~8k events):
-    a Python task wave costs ~250-300 ms before ``read()`` starts, and
-    ``read()`` decodes ~30k events/s per core (20-85 ms per 1.5k-5k-event
-    slice), so a smaller slice costs more than its task saves."""
+    A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (~8k events).
+    A one-partition Python RDD job costs ~95-130 ms (median of 20,
+    ``local[3]``, 4-vCPU host) under ``session.get_spark``'s
+    ``worker_daemon``. It cost ~250-300 ms before, when every task
+    re-read the zip directories of ``pyspark.zip`` and the spark-core
+    jar. ``read()`` decodes ~30k events/s per core (20-85 ms per
+    1.5k-5k-event slice), so a slice of fewer than ~3k events costs
+    more than its task saves. The floor was set at the old task cost
+    and stays until a measured change moves it."""
     _evict_seek_index(seek_index, files)
     out = []
     for f in files:
