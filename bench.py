@@ -168,6 +168,13 @@ def bench_snapshot_pipeline(spark, sf_dir: str) -> tuple[float, int]:
     return dt, n
 
 
+def _rate(rows: int, dt: float) -> int | None:
+    """Rows per second of a probe, or None when it timed no rows — at a
+    scale whose backlog is empty (sf0.001 holds only the 1000 warm-up
+    events) a rate of 0 would read as a stalled pipeline."""
+    return round(rows / dt) if rows and dt > 0 else None
+
+
 def bench_cdc_pipeline(
     spark,
     sf_dir: str,
@@ -543,17 +550,11 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": SF_DIR,
-        "snapshot_rows_per_sec": round(snap_rows / snap_dt) if snap_dt > 0 else None,
-        "cdc_delta_rows_per_sec": round(dl_rows / dl_dt) if dl_dt > 0 else None,
-        "cdc_delta_big_rows_per_sec": round(dl_big_rows / dl_big_dt)
-        if dl_big_dt > 0
-        else None,
-        "cdc_bulk_rows_per_sec": round(blk_rows / blk_dt)
-        if blk_dt > 0
-        else None,
-        "cdc_wide_rows_per_sec": round(wd_rows / wd_dt)
-        if wd_dt > 0
-        else None,
+        "snapshot_rows_per_sec": _rate(snap_rows, snap_dt),
+        "cdc_delta_rows_per_sec": _rate(dl_rows, dl_dt),
+        "cdc_delta_big_rows_per_sec": _rate(dl_big_rows, dl_big_dt),
+        "cdc_bulk_rows_per_sec": _rate(blk_rows, blk_dt),
+        "cdc_wide_rows_per_sec": _rate(wd_rows, wd_dt),
         "cdc_sweep": sweep,
         "cdc_size_sweep": size_sweep,
         "mysql_decode_rows_per_sec": round(bench_mysql_decode()),

@@ -37,7 +37,6 @@ from transferia_spark.streaming.pg_replication import (
     encode_simple_query,
     encode_startup_message,
     encode_xlog_data,
-    live_drain,
     md5_password,
     message_stream,
     parse_lsn,
@@ -377,6 +376,23 @@ def _live_script(xlogpos: bytes, frames: list[bytes]) -> bytes:
     )
 
 
+def _one_shot_drain(fd: FakeDuplex, out: str, **live) -> int:
+    """A one-shot live drain over ``fd``: one LiveReplicationConnection
+    drain, then close() — what activation and stream build run."""
+    conn = LiveReplicationConnection(
+        {"host": "h", "user": "repl", "database": "shop",
+         "password": "pw", "slot": "s1", **live},
+        out,
+        transport_factory=lambda host, port, timeout: (
+            fd.read, fd.write, fd.close, fd.poll
+        ),
+    )
+    try:
+        return conn.drain()
+    finally:
+        conn.close()
+
+
 def test_live_drain_stops_at_caught_up_keepalive(tmp_path):
     """THE r7 crash-loop regression: a live server never closes the
     CopyBoth stream — after the catch-up frames it keeps sending
@@ -392,11 +408,7 @@ def test_live_drain_stops_at_caught_up_keepalive(tmp_path):
     fd = FakeDuplex(_live_script(b"0/20", frames), when_empty="block")
     fd.poll = lambda t: True  # a live socket always has keepalives soon
 
-    n = live_drain(
-        fd.read, fd.write, out,
-        user="repl", database="shop", password="pw", slot="s1",
-        poll=fd.poll,
-    )
+    n = _one_shot_drain(fd, out)
     assert n == 2
     lines = []
     for name in sorted(os.listdir(out)):
@@ -421,10 +433,10 @@ def test_live_drain_socket_timeout_is_clean_end(tmp_path):
     frames = [encode_xlog_data(0x10, 0x11, _w2j("I", id=1, v="a"))]
     # xlogpos far ahead of the frames: the LSN bound never fires
     fd = FakeDuplex(_live_script(b"0/FFFF", frames), when_empty="timeout")
-    n = live_drain(
-        fd.read, fd.write, out,
-        user="repl", database="shop", password="pw", slot="s1",
-    )
+    # the poll always reports data, so only the boundary timeout can
+    # end the drain
+    fd.poll = lambda t: True
+    n = _one_shot_drain(fd, out)
     assert n == 1  # returned cleanly, frame flushed
     acks = [m for m in _sent_copydata(fd) if m[:1] == b"r"]
     rcv, flushed, *_ = struct.unpack_from(">qqq", acks[-1], 1)
@@ -437,11 +449,7 @@ def test_live_drain_poll_idle_is_clean_end(tmp_path):
     out = str(tmp_path / "wal")
     frames = [encode_xlog_data(0x10, 0x11, _w2j("I", id=1, v="a"))]
     fd = FakeDuplex(_live_script(b"0/FFFF", frames), when_empty="block")
-    n = live_drain(
-        fd.read, fd.write, out,
-        user="repl", database="shop", password="pw", slot="s1",
-        poll=fd.poll, idle_timeout=0.01,
-    )
+    n = _one_shot_drain(fd, out, idle_timeout=0.01)
     assert n == 1
 
 

@@ -1017,17 +1017,22 @@ def test_wire_formats_without_frames_path_fail_loud(spark, tmp_path):
     """ADVICE r6: a pgwire/mysqlwire source missing frames_path raised a
     bare KeyError in build_replication_stream while source_position
     treated it as optional — the contract is now a classified
-    FatalError naming the missing key."""
+    FatalError naming the missing key. mongowire needs live:, and the
+    activation-time drain (inside source_position) fails the same way,
+    before any snapshot seed."""
     from transferia_spark.tasks.replicate import build_replication_stream
 
-    for fmt in ("pgwire", "mysqlwire"):
-        with pytest.raises(FatalError, match="frames_path"):
-            build_replication_stream(
-                spark,
-                {"format": fmt, "path": str(tmp_path / "out"),
-                 "schema": "id long"},
-                position=None,
-            )
+    for fmt, key in (
+        ("pgwire", "frames_path"),
+        ("mysqlwire", "frames_path"),
+        ("mongowire", "live"),
+    ):
+        source = {"format": fmt, "path": str(tmp_path / "out"),
+                  "schema": "id long"}
+        with pytest.raises(FatalError, match=key):
+            build_replication_stream(spark, source, position=None)
+        with pytest.raises(FatalError, match=key):
+            source_position(fmt, "id long", source["path"], source=source)
 
 
 @pytest.mark.slow

@@ -225,12 +225,11 @@ def probe_stream_schema(fmt: str, path: str, base_ddl: str) -> T.StructType:
     binlog JSON as ``before``/``after`` dicts, wal2json as
     ``columns``/``identity`` arrays, change streams as documents — so
     the DDL-driven schema re-probe must parse the format the stream
-    actually speaks, or a drift restart silently evolves nothing.
-    ``pgwire`` drains into wal2json form before tailing, so it probes
-    as waljson."""
-    if fmt in ("binlogjson", "mysqlwire"):
+    actually speaks, or a drift restart silently evolves nothing. A
+    wire source probes the recorded format it drains into."""
+    if fmt == "binlogjson":
         return probe_binlog_schema(path, base_ddl)
-    if fmt in ("waljson", "pgwire"):
+    if fmt == "waljson":
         from transferia_spark.streaming.wal_source import probe_wal_schema
 
         return probe_wal_schema(path, base_ddl)

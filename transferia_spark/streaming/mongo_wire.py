@@ -31,8 +31,18 @@ find/getMore cursor batches.
 from __future__ import annotations
 
 import datetime as _dt
+import json
+import os
 import struct
 import threading as _threading
+
+from transferia_spark.streaming.wal_source import (
+    event_file,
+    last_published_event,
+    next_file_no,
+    read_state,
+    write_state,
+)
 
 # ----------------------------------------------------------------- BSON
 
@@ -805,7 +815,6 @@ def _dns_query(name: str, qtype: int, resolver: str,
     peer other than the resolver are ignored (off-path spoof
     hardening); a truncated reply (TC bit) re-asks over TCP — a large
     replica-set seedlist can overflow one UDP datagram."""
-    import os
     import socket
     import struct as _struct
 
@@ -1224,26 +1233,9 @@ def bson_to_jsonable(v):
     return v
 
 
-def live_drain_change_stream(live: dict, out_dir: str) -> int:
-    """``replication.source.live`` config → one catch-up drain of a
-    collection's change stream into the recorded JSONL directory the
-    ``mongostream`` DataSource tails — the same live-front pattern as
-    PG's ``live_drain_tcp`` / MySQL's ``mysql_live_drain_tcp``
-    (≈ ``pkg/providers/mongo/change_stream_watcher.go:38``: watch →
-    batcher → pusher, with the resume token as the durable position).
-
-    ``live``: ``{uri | host/port/user/password/auth_source, database,
-    collection, start_after?, batch_size?, max_await_ms?}``. The drain
-    pulls until the server returns an empty batch (caught up), appends
-    events verbatim (resume token `_id` included — the reader derives
-    its (clusterTime, order) offsets from it), and persists the last
-    token in ``out_dir/_resume.json`` so the next drain asks the
-    server for only-new events; replayed events are idempotent anyway
-    (the reader's offsets filter at-or-below positions).
-    """
-    import json as _json
-    import os
-
+def _live_client(live: dict) -> MongoWireClient:
+    """``replication.source.live`` → a dialed client: a ``uri`` or
+    host/port/user/password/auth_source/auth_mechanism/tls fields."""
     if live.get("uri"):
         cfg = parse_mongo_uri(live["uri"])
     else:
@@ -1260,41 +1252,50 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
             "tls_ca": live.get("tls_ca"),
             "tls_insecure": bool(live.get("tls_insecure")),
         }
+    return MongoWireClient(timeout=float(live.get("timeout", 30.0)), **cfg)
+
+
+def live_drain_change_stream(live: dict, out_dir: str) -> int:
+    """``replication.source.live`` config → one catch-up drain of a
+    collection's change stream into the recorded JSONL directory the
+    ``mongostream`` DataSource tails — the ``mongowire`` drain of the
+    wire-format table in ``tasks/replicate.py``, beside the pgwire and
+    mysqlwire live connections
+    (≈ ``pkg/providers/mongo/change_stream_watcher.go:38``: watch →
+    batcher → pusher, with the resume token as the durable position).
+
+    ``live``: ``{uri | host/port/user/password/auth_source, database,
+    collection, start_after?, batch_size?, max_await_ms?}``. The drain
+    pulls until the server returns an empty batch (caught up), appends
+    events verbatim (resume token `_id` included — the reader derives
+    its (clusterTime, order) offsets from it) as one durably published
+    ``live_<n>.jsonl`` file, and only then persists the last token in
+    ``out_dir/_resume.json`` so the next drain asks the server for
+    only-new events; replayed events are idempotent anyway (the
+    reader's offsets filter at-or-below positions).
+    """
     db, coll = live["database"], live["collection"]
     os.makedirs(out_dir, exist_ok=True)
-    resume_path = os.path.join(out_dir, "_resume.json")
     token = live.get("start_after")
     if token is None:
         try:
-            with open(resume_path) as f:
-                token = _json.load(f)["_data"]
-        except (FileNotFoundError, ValueError, KeyError):
+            token = json.loads(read_state(out_dir, "_resume.json"))["_data"]
+        except (TypeError, ValueError, KeyError):
             token = None
-    # crash-window dedupe (advisor r12): the newest PUBLISHED file's
-    # last resume token supersedes the persisted one — events publish
-    # before the token persists, so after a crash between the two the
-    # file is the further-along position
-    published = sorted(
-        f for f in os.listdir(out_dir)
-        if f.startswith("live_") and f.endswith(".jsonl")
-    )
-    if published and live.get("start_after") is None:
+        # crash-window dedupe (advisor r12): the newest PUBLISHED file's
+        # last resume token supersedes the persisted one — events
+        # publish before the token persists, so after a crash between
+        # the two the file is the further-along position
+        tail = last_published_event(out_dir, "live_")
         try:
-            with open(os.path.join(out_dir, published[-1])) as f:
-                tail = None
-                for line in f:
-                    if line.strip():
-                        tail = line
-            if tail is not None:
-                token = _json.loads(tail)["_id"]["_data"] or token
-        except (OSError, ValueError, KeyError, TypeError):
-            pass  # unreadable tail: fall back to the persisted token
+            token = tail["_id"]["_data"] or token
+        except (KeyError, TypeError):
+            pass  # no file or an unreadable tail: the persisted token
 
     cs: dict = {"fullDocument": "updateLookup"}
     if token:
         cs["resumeAfter"] = {"_data": token}
-    client = MongoWireClient(timeout=float(live.get("timeout", 30.0)),
-                             **cfg)
+    client = _live_client(live)
     n = 0
     try:
         bs = int(live.get("batch_size", 500))
@@ -1303,15 +1304,9 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
             "pipeline": [{"$changeStream": cs}],
             "cursor": {"batchSize": bs},
         })
-        # max existing index, not the file count — pruning-safe
-        seq = 1 + max(
-            (int(f[len("live_"):-len(".jsonl")]) for f in published),
-            default=-1,
-        )
-        out_path = os.path.join(out_dir, f"live_{seq:06d}.jsonl")
-        tmp = out_path + ".tmp"
+        seq = next_file_no(out_dir, "live_")
         last_token = token
-        with open(tmp, "w") as out:
+        with event_file(out_dir, f"live_{seq:06d}.jsonl") as out:
             for ev in client.drain_cursor(
                 db, coll, doc, bs,
                 max_time_ms=int(live.get("max_await_ms", 200)),
@@ -1326,16 +1321,13 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
                         "change stream event without a resume "
                         f"token: {ev.get('operationType')}"
                     )
-                out.write(_json.dumps(ev) + "\n")
+                out.write(json.dumps(ev) + "\n")
                 last_token = data
                 n += 1
         if n:
-            os.replace(tmp, out_path)
-            with open(resume_path + ".tmp", "w") as f:
-                _json.dump({"_data": last_token}, f)
-            os.replace(resume_path + ".tmp", resume_path)
-        else:
-            os.remove(tmp)
+            write_state(
+                out_dir, "_resume.json", json.dumps({"_data": last_token})
+            )
         return n
     finally:
         client.close()
@@ -1558,9 +1550,7 @@ class OplogTransactionBuffer:
         lsid, txn = entry.get("lsid"), entry.get("txnNumber")
         if lsid is None or txn is None:
             return None
-        import json as _json
-
-        return _json.dumps(
+        return json.dumps(
             {"lsid": bson_to_jsonable(lsid), "txn": int(txn)},
             sort_keys=True, separators=(",", ":"),
         )
@@ -1668,64 +1658,30 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
     offsets run on), persisted in ``_resume_oplog.json``. Reading the
     oplog requires privileges on ``local`` but NOT the changeStream
     aggregation stage — the reference's fallback deployment shape."""
-    import json as _json
-    import os
-
-    if live.get("uri"):
-        cfg = parse_mongo_uri(live["uri"])
-    else:
-        cfg = {
-            "host": live["host"],
-            "port": int(live.get("port", 27017)),
-            "user": live.get("user"),
-            "password": live.get("password", ""),
-            "auth_source": live.get("auth_source", "admin"),
-            "auth_mechanism": live.get(
-                "auth_mechanism", "SCRAM-SHA-256"
-            ),
-            "tls": bool(live.get("tls") or live.get("tls_ca")),
-            "tls_ca": live.get("tls_ca"),
-            "tls_insecure": bool(live.get("tls_insecure")),
-        }
     db, coll = live["database"], live["collection"]
     os.makedirs(out_dir, exist_ok=True)
-    resume_path = os.path.join(out_dir, "_resume_oplog.json")
     start = live.get("start_after_ts")
     if start is None:
         try:
-            with open(resume_path) as f:
-                doc = _json.load(f)
+            doc = json.loads(read_state(out_dir, "_resume_oplog.json"))
             start = (int(doc["t"]), int(doc["i"]))
-        except (FileNotFoundError, ValueError, KeyError):
+        except (TypeError, ValueError, KeyError):
             start = (0, 0)
+        # crash-window dedupe (advisor r12): events publish before the
+        # resume position persists, so a crash between the two would
+        # re-emit the newest file's events on the next drain. The
+        # newest PUBLISHED file's last event position therefore
+        # supersedes the persisted resume ts when it is ahead. An
+        # EXPLICIT start_after_ts is an intentional rewind — never
+        # clamped (code-review r13)
+        tail = last_published_event(out_dir, "oplog_")
+        try:
+            start = max(start, (int(tail["clusterTime"]),
+                                int(tail["order"])))
+        except (KeyError, TypeError, ValueError):
+            pass  # no file or an unreadable tail: the persisted ts
     else:
         start = (int(start[0]), int(start[1]))
-
-    # crash-window dedupe (advisor r12): events publish before the
-    # resume position persists, so a crash between the two would
-    # re-emit the newest file's events on the next drain. The newest
-    # PUBLISHED file's last event position therefore supersedes the
-    # persisted resume ts when it is ahead.
-    published = sorted(
-        f for f in os.listdir(out_dir)
-        if f.startswith("oplog_") and f.endswith(".jsonl")
-    )
-    # an EXPLICIT start_after_ts is an intentional rewind — never
-    # clamp it (same guard as the change-stream twin; code-review r13)
-    if published and live.get("start_after_ts") is None:
-        try:
-            with open(os.path.join(out_dir, published[-1])) as f:
-                tail = None
-                for line in f:
-                    if line.strip():
-                        tail = line
-            if tail is not None:
-                last_ev = _json.loads(tail)
-                pub_pos = (int(last_ev["clusterTime"]),
-                           int(last_ev["order"]))
-                start = max(start, pub_pos)
-        except (OSError, ValueError, KeyError):
-            pass  # unreadable tail: fall back to the persisted ts
 
     # pending-transaction sidecar (r14): a prepare:true / partialTxn
     # chain read in THIS drain may commit in a LATER one — buffered
@@ -1741,19 +1697,15 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
     # re-reads, because the resume position only persists after phase
     # 2. Re-reading buffered entries is idempotent (each pending txn
     # records the oplog positions it absorbed).
-    txn_path = os.path.join(out_dir, "_txn_pending.json")
     max_txn_ops = int(live.get("max_txn_buffer_ops", 100_000))
     try:
-        with open(txn_path) as f:
-            txn_state = _json.load(f)
-    except (FileNotFoundError, ValueError):
+        txn_state = json.loads(read_state(out_dir, "_txn_pending.json"))
+    except (TypeError, ValueError):
         txn_state = {}
     flushed_keys = txn_state.get("flushed") or []
     txn_seq = txn_state.get("seq")
-    if (
-        flushed_keys
-        and txn_seq is not None
-        and f"oplog_{int(txn_seq):06d}.jsonl" in published
+    if flushed_keys and txn_seq is not None and os.path.exists(
+        os.path.join(out_dir, f"oplog_{int(txn_seq):06d}.jsonl")
     ):
         # phase-1 sidecar survived a crash AFTER the publish: the
         # flushed txns' rows are in the published file — drop them
@@ -1764,19 +1716,11 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
     except (ValueError, KeyError, TypeError, AttributeError):
         txn = OplogTransactionBuffer(max_txn_ops)
 
-    client = MongoWireClient(timeout=float(live.get("timeout", 30.0)),
-                             **cfg)
+    client = _live_client(live)
     n = 0
     try:
         bs = int(live.get("batch_size", 500))
-        # the sequence derives from the max existing index, not the
-        # file count — pruned early files must not cause collisions
-        seq = 1 + max(
-            (int(f[len("oplog_"):-len(".jsonl")]) for f in published),
-            default=-1,
-        )
-        out_path = os.path.join(out_dir, f"oplog_{seq:06d}.jsonl")
-        tmp = out_path + ".tmp"
+        seq = next_file_no(out_dir, "oplog_")
         last = start
         ns_want = f"{db}.{coll}"
         # server filter: ts plus (our ns OR a command entry) — a bare
@@ -1784,7 +1728,7 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
         # admin.$cmd), while ts-only would stream every tenant's oplog
         # over the wire (code-review r13); decoded events re-filter by
         # ns because transactions interleave collections
-        with open(tmp, "w") as out:
+        with event_file(out_dir, f"oplog_{seq:06d}.jsonl") as out:
             for entry in client.find(
                 "local", "oplog.rs",
                 filter={
@@ -1803,42 +1747,35 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
                 for ev in txn.feed(entry):
                     if f"{ev['ns']['db']}.{ev['ns']['coll']}" != ns_want:
                         continue  # other collections ride the oplog
-                    out.write(_json.dumps(bson_to_jsonable(ev)) + "\n")
+                    out.write(json.dumps(bson_to_jsonable(ev)) + "\n")
                     n += 1
-        # phase 1 — pre-publish "union" sidecar: pending ∪ flushed,
-        # annotated with the flushed keys and this drain's events seq,
-        # so a crash on either side of the publish loses nothing.
-        # Aborted txns are simply OMITTED (nothing of theirs can emit;
-        # if this drain crashes before the resume persists, the abort
-        # re-reads and re-discards) — but their occurrence still
-        # forces the rewrite, or a stale pre-abort sidecar would
-        # strand them as pending across a later crash window
-        if txn.pending or txn.flushed or txn.aborted:
-            with open(txn_path + ".tmp", "w") as f:
-                _json.dump({
+            # phase 1 — pre-publish "union" sidecar: pending ∪ flushed,
+            # annotated with the flushed keys and this drain's events
+            # seq, so a crash on either side of the publish loses
+            # nothing. Aborted txns are simply OMITTED (nothing of
+            # theirs can emit; if this drain crashes before the resume
+            # persists, the abort re-reads and re-discards) — but their
+            # occurrence still forces the rewrite, or a stale pre-abort
+            # sidecar would strand them as pending across a later crash
+            # window
+            if txn.pending or txn.flushed or txn.aborted:
+                write_state(out_dir, "_txn_pending.json", json.dumps({
                     "pending": {**txn.flushed, **txn.pending},
                     "flushed": sorted(txn.flushed),
                     "seq": seq,
-                }, f)
-            os.replace(txn_path + ".tmp", txn_path)
-        if n:
-            os.replace(tmp, out_path)
-        else:
-            os.remove(tmp)
+                }))
         # phase 2 — post-publish: the flushed txns are out (or were
         # entirely filtered to other collections); only true pending
         # remain in the sidecar
         if txn.pending:
-            with open(txn_path + ".tmp", "w") as f:
-                _json.dump({**txn.to_state(), "flushed": [],
-                            "seq": seq}, f)
-            os.replace(txn_path + ".tmp", txn_path)
-        elif os.path.exists(txn_path):
-            os.remove(txn_path)
+            write_state(out_dir, "_txn_pending.json", json.dumps(
+                {**txn.to_state(), "flushed": [], "seq": seq}
+            ))
+        elif os.path.exists(os.path.join(out_dir, "_txn_pending.json")):
+            os.remove(os.path.join(out_dir, "_txn_pending.json"))
         if last != start:
-            with open(resume_path + ".tmp", "w") as f:
-                _json.dump({"t": last[0], "i": last[1]}, f)
-            os.replace(resume_path + ".tmp", resume_path)
+            write_state(out_dir, "_resume_oplog.json",
+                        json.dumps({"t": last[0], "i": last[1]}))
         return n
     finally:
         client.close()

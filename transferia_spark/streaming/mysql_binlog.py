@@ -40,6 +40,14 @@ import zlib
 from dataclasses import dataclass, field
 from typing import Callable
 
+from transferia_spark.streaming.wal_source import (
+    drain_new_captures,
+    event_file,
+    next_file_no,
+    read_state,
+    write_state,
+)
+
 # -- event type codes (public binlog_event.h values) --------------------
 QUERY_EVENT = 0x02
 ROTATE_EVENT = 0x04
@@ -613,7 +621,8 @@ class BinlogTailer:
     gtid_executed: dict = field(default_factory=dict)
     _tables: dict = field(default_factory=dict)
     _buf: list[str] = field(default_factory=list)
-    _file_no: int = 0
+    #: numbering continues past the directory's event files
+    _file_no: int = field(init=False, default=0)
     #: transaction announced by the last GTID_EVENT, not yet committed
     #: (XID / QUERY COMMIT / next GTID). Deliberately NOT folded into
     #: gtid_executed at close(): an un-terminated transaction may have
@@ -629,6 +638,7 @@ class BinlogTailer:
 
     def __post_init__(self):
         os.makedirs(self.out_dir, exist_ok=True)
+        self._file_no = next_file_no(self.out_dir)
 
     def _strip(self, ev: bytes) -> bytes:
         """Verify + strip the CRC32 trailer once FORMAT_DESCRIPTION
@@ -652,18 +662,8 @@ class BinlogTailer:
     def _flush(self) -> None:
         if not self._buf:
             return
-        name = f"{self._file_no:09d}.jsonl"
-        tmp = os.path.join(self.out_dir, "." + name + ".tmp")
-        with open(tmp, "w") as f:
-            f.write("\n".join(self._buf) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.out_dir, name))
-        dfd = os.open(self.out_dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        with event_file(self.out_dir, f"{self._file_no:09d}.jsonl") as out:
+            out.write("\n".join(self._buf) + "\n")
         self._file_no += 1
         self._buf.clear()
 
@@ -819,7 +819,13 @@ class BinlogTailer:
         return n
 
     def close(self) -> None:
+        """Publish the buffered lines, then persist the executed GTID
+        set — lines before state, so a crash in between replays a
+        transaction rather than skipping it."""
         self._flush()
+        write_state(
+            self.out_dir, "_gtid.state", format_gtid_set(self.gtid_executed)
+        )
 
 
 # ------------------------------------- session establishment (startup)
@@ -1308,10 +1314,12 @@ class MySqlWireSession:
 
 
 class MySqlLiveConnection:
-    """ONE long-lived binlog session reused across heartbeat ticks —
-    the MySQL twin of ``pg_replication.LiveReplicationConnection``
+    """ONE long-lived binlog session reused across heartbeat ticks
     (≈ the reference's canal holding a single slave connection,
-    ``mysql/canal.go``).
+    ``mysql/canal.go``): the ``mysqlwire`` live session of the
+    wire-format table in ``tasks/replicate.py``, with the same
+    ``drain()``/``close()`` contract as
+    ``pg_replication.LiveReplicationConnection``.
 
     Each ``drain()`` pulls the buffered events (poll-bounded), flushes
     the binlog-JSON lines and persists the executed GTID set; on
@@ -1375,15 +1383,12 @@ class MySqlLiveConnection:
         except BaseException:
             close()
             raise
-        os.makedirs(self.out_dir, exist_ok=True)
-        from transferia_spark.streaming.pg_replication import _next_file_no
-
         self._tailer = BinlogTailer(
-            iter(()), self.out_dir, column_names=self._column_names
+            iter(()), self.out_dir, column_names=self._column_names,
+            # resume from the PERSISTED executed set — the reconnect
+            # algebra
+            gtid_executed=load_gtid_state(self.out_dir),
         )
-        self._tailer._file_no = _next_file_no(self.out_dir)
-        # resume from the PERSISTED executed set — the reconnect algebra
-        self._tailer.gtid_executed = load_gtid_state(self.out_dir)
         self._sess = sess
         self._read = tracked_read
         self._poll = poll
@@ -1418,10 +1423,6 @@ class MySqlLiveConnection:
         except BaseException:
             self.close()
             raise
-        gtmp = os.path.join(self.out_dir, "_gtid.state.tmp")
-        with open(gtmp, "w") as f:
-            f.write(format_gtid_set(self._tailer.gtid_executed))
-        os.replace(gtmp, os.path.join(self.out_dir, "_gtid.state"))
         if self._eof:
             self.close()
         return n
@@ -1456,11 +1457,7 @@ def mysql_live_drain_tcp(
 def load_gtid_state(out_dir: str) -> dict[str, list[list[int]]]:
     """The executed GTID set accumulated across drains (what a live
     client would hand to COM_BINLOG_DUMP_GTID on reconnect)."""
-    try:
-        with open(os.path.join(out_dir, "_gtid.state")) as f:
-            return parse_gtid_set(f.read().strip())
-    except FileNotFoundError:
-        return {}
+    return parse_gtid_set((read_state(out_dir, "_gtid.state") or "").strip())
 
 
 def drain_recorded_binlog(
@@ -1471,56 +1468,19 @@ def drain_recorded_binlog(
     """Replay a RECORDED binlog session (JSON-lines files of
     ``{"frame": "<hex>"}`` — the same capture format the pgwire drain
     uses) through the tailer into the binlog-JSON directory the
-    existing ``binlogjson`` DataSource tails. Already-drained capture
-    files are remembered in ``out_dir/_drained.state`` so repeated
-    catch-up passes decode only NEW captures. Returns the number of
-    JSON lines written this pass."""
-    try:
-        names = sorted(os.listdir(frames_path))
-    except FileNotFoundError:
-        return 0
-    os.makedirs(out_dir, exist_ok=True)
-    state_file = os.path.join(out_dir, "_drained.state")
-    try:
-        with open(state_file) as f:
-            done = set(json.load(f))
-    except FileNotFoundError:
-        done = set()
-    fresh = [
-        n for n in names if n.endswith((".json", ".jsonl")) and n not in done
-    ]
-    if not fresh:
-        return 0
-
-    def frames():
-        for name in fresh:
-            with open(os.path.join(frames_path, name)) as f:
-                for line in f:
-                    if line.strip():
-                        yield bytes.fromhex(json.loads(line)["frame"])
-
-    tailer = BinlogTailer(frames(), out_dir, column_names=column_names)
-    # continue numbering past the HIGHEST existing index, not the file
-    # count: prune_committed deletes low-numbered fully-committed files,
-    # and a count-based number would reuse (and os.replace-clobber) a
-    # surviving file holding uncommitted events — the same rule the PG
-    # drains share
-    from transferia_spark.streaming.pg_replication import _next_file_no
-
-    tailer._file_no = _next_file_no(out_dir)
-    # the executed GTID set accumulates across drains (a reconnecting
-    # live client presents it to COM_BINLOG_DUMP_GTID)
-    tailer.gtid_executed = load_gtid_state(out_dir)
-    n = tailer.run()
-    gtmp = os.path.join(out_dir, "_gtid.state.tmp")
-    with open(gtmp, "w") as f:
-        f.write(format_gtid_set(tailer.gtid_executed))
-    os.replace(gtmp, os.path.join(out_dir, "_gtid.state"))
-    tmp = state_file + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(sorted(done | set(fresh)), f)
-    os.replace(tmp, state_file)
-    return n
+    existing ``binlogjson`` DataSource tails; capture files an earlier
+    pass drained are skipped (``wal_source.drain_new_captures``).
+    Returns the number of JSON lines written this pass."""
+    return drain_new_captures(
+        frames_path, out_dir,
+        lambda frames: BinlogTailer(
+            frames, out_dir, column_names=column_names,
+            # the executed GTID set accumulates across drains (a
+            # reconnecting live client presents it to
+            # COM_BINLOG_DUMP_GTID)
+            gtid_executed=load_gtid_state(out_dir),
+        ).run(),
+    )
 
 
 __all__ = [

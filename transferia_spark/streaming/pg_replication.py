@@ -34,6 +34,12 @@ import struct
 from dataclasses import dataclass
 from typing import Callable, Iterable
 
+from transferia_spark.streaming.wal_source import (
+    drain_new_captures,
+    event_file,
+    next_file_no,
+)
+
 #: seconds between the Unix and PostgreSQL epochs (2000-01-01 UTC)
 PG_EPOCH_OFFSET_US = 946_684_800 * 1_000_000
 
@@ -619,34 +625,19 @@ class ReplicationTailer:
         self.received = 0
         self.flushed = 0
         self._buf: list[str] = []
-        self._file_no = 0
         os.makedirs(out_dir, exist_ok=True)
+        self._file_no = next_file_no(out_dir)
 
     def _flush_file(self) -> None:
-        if not self._buf:
-            # nothing pending — everything received is already durable,
-            # so the flush watermark may advance to the received one
-            self.flushed = self.received
-            return
-        name = f"{self._file_no:09d}.jsonl"
-        tmp = os.path.join(self.out_dir, "." + name + ".tmp")
         # the flushed LSN in the standby-status ack lets the server TRIM
-        # the slot — it must mean "survives power loss", not "left the
-        # page cache": fsync the data before the rename and the
-        # directory after it (the rename itself isn't durable until the
-        # directory entry is), and only then advance the watermark
-        with open(tmp, "w") as f:
-            f.write("\n".join(self._buf) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.out_dir, name))
-        dfd = os.open(self.out_dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-        self._file_no += 1
-        self._buf.clear()
+        # the slot — it must mean "survives power loss", so it advances
+        # only once event_file has published the lines durably
+        if self._buf:
+            name = f"{self._file_no:09d}.jsonl"
+            with event_file(self.out_dir, name) as out:
+                out.write("\n".join(self._buf) + "\n")
+            self._file_no += 1
+            self._buf.clear()
         self.flushed = self.received  # durable up to everything received
 
     def _ack(self) -> None:
@@ -824,71 +815,6 @@ def socket_transport(cell: list):
     return read, write, close, poll
 
 
-def _next_file_no(out_dir: str) -> int:
-    """Continue output numbering past the highest existing index (the
-    prune-safe rule both drain paths share)."""
-    existing = [
-        int(n.split(".")[0])
-        for n in os.listdir(out_dir)
-        if n.endswith(".jsonl") and n.split(".")[0].isdigit()
-    ]
-    return max(existing) + 1 if existing else 0
-
-
-def live_drain(
-    read: Callable[[int], bytes],
-    write: Callable[[bytes], None],
-    out_dir: str,
-    *,
-    user: str,
-    database: str,
-    password: str = "",
-    slot: str,
-    start_lsn: int = 0,
-    create_slot: bool = False,
-    plugin: str = "wal2json",
-    options: dict[str, str] | None = None,
-    scram_nonce: str | None = None,
-    poll: Callable[[float], bool] | None = None,
-    idle_timeout: float = 0.5,
-) -> int:
-    """The full live session over an injectable transport: connect →
-    authenticate → IDENTIFY_SYSTEM → (optional) CREATE_REPLICATION_SLOT
-    → START_REPLICATION → drain the CopyBoth stream into the wal2json
-    directory the waljson DataSource tails, acking flushed LSNs as
-    standby-status updates. ≈ postgres/publisher.go:33-68 end-to-end.
-    Returns the number of XLogData frames written.
-
-    The drain is BOUNDED (r7 verdict item 1): IDENTIFY_SYSTEM's
-    ``xlogpos`` — the server's current WAL end, captured before
-    START_REPLICATION — is the catch-up target, so the drain returns at
-    the first frame/keepalive at or past it instead of blocking forever
-    on a live stream; ``poll`` (from :func:`dial`) additionally ends
-    the drain when the socket stays idle for ``idle_timeout`` seconds,
-    and a boundary ``TimeoutError`` is a clean end too."""
-    os.makedirs(out_dir, exist_ok=True)
-    sess = PgWireSession(read, write, scram_nonce=scram_nonce)
-    sess.connect(user=user, database=database, password=password)
-    rows = sess.simple_query(identify_system_command())
-    server_lsn = (
-        parse_lsn(rows[0]["xlogpos"]) if rows and rows[0].get("xlogpos")
-        else None
-    )
-    if create_slot:
-        try:
-            sess.simple_query(create_slot_command(slot, plugin=plugin))
-        except PgServerError as e:
-            if e.fields.get("C") != "42710":  # duplicate_object: exists
-                raise
-    stream = sess.start_replication(
-        start_replication_command(slot, start_lsn, options),
-        poll=poll, idle_timeout=idle_timeout,
-    )
-    tailer = ReplicationTailer(stream, sess.send_copydata, out_dir)
-    tailer._file_no = _next_file_no(out_dir)
-    return tailer.run(stop_at_lsn=server_lsn)
-
-
 def _ssl_kwargs(live: dict) -> dict:
     """TLS options from a ``live:`` config, passed to the transport
     factory only when configured — injected fake duplexes keep their
@@ -902,31 +828,14 @@ def _ssl_kwargs(live: dict) -> dict:
 
 
 def live_drain_tcp(live: dict, out_dir: str) -> int:
-    """``replication.source.live`` config → one catch-up drain over a
-    real TCP connection (``dial`` is the injectable seam)."""
-    read, write, close, poll = dial(
-        live["host"], int(live.get("port", 5432)),
-        timeout=float(live.get("timeout", 30.0)),
-        **_ssl_kwargs(live),
-    )
+    """``replication.source.live`` config → one bounded catch-up drain
+    over a real TCP connection: one :meth:`LiveReplicationConnection.drain`,
+    then ``close()``."""
+    conn = LiveReplicationConnection(live, out_dir)
     try:
-        return live_drain(
-            read, write, out_dir,
-            user=live["user"],
-            database=live["database"],
-            password=live.get("password", ""),
-            slot=live.get("slot", "transferia_spark"),
-            start_lsn=parse_lsn(live["start_lsn"])
-            if isinstance(live.get("start_lsn"), str)
-            else int(live.get("start_lsn", 0)),
-            create_slot=bool(live.get("create_slot", False)),
-            plugin=live.get("plugin", "wal2json"),
-            options=live.get("options"),
-            poll=poll,
-            idle_timeout=float(live.get("idle_timeout", 0.5)),
-        )
+        return conn.drain()
     finally:
-        close()
+        conn.close()
 
 
 class LiveReplicationConnection:
@@ -938,11 +847,18 @@ class LiveReplicationConnection:
 
     ``drain()`` pulls everything the server has buffered (poll-bounded:
     returns once the socket stays idle ``idle_timeout`` seconds, or at
-    the catch-up LSN on the first drain) and returns promptly; the
-    CopyBoth session stays open between calls. A server-side close
-    (EOF) or transport error tears the connection down — the next
-    ``drain()`` reconnects and resumes from the durable ack point
-    (the server re-sends from the slot's confirmed LSN).
+    the catch-up LSN — IDENTIFY_SYSTEM's ``xlogpos`` — on the first
+    drain) and returns promptly; the CopyBoth session stays open
+    between calls. A server-side close (EOF) or transport error tears
+    the connection down — the next ``drain()`` reconnects and resumes
+    from the durable ack point (the server re-sends from the slot's
+    confirmed LSN).
+
+    This is the ``pgwire`` live session of the wire-format table in
+    ``tasks/replicate.py`` (``mysql_binlog.MySqlLiveConnection`` is the
+    ``mysqlwire`` one): a one-shot drain at activation or stream build
+    is one ``drain()`` then ``close()``; the heartbeat loop holds one
+    connection across ticks and supervisor retries.
 
     ``transport_factory`` defaults to :func:`dial`; tests inject a fake
     duplex."""
@@ -1018,11 +934,9 @@ class LiveReplicationConnection:
         except BaseException:
             close()
             raise
-        os.makedirs(self.out_dir, exist_ok=True)
         self._tailer = ReplicationTailer(
             iter(()), sess.send_copydata, self.out_dir
         )
-        self._tailer._file_no = _next_file_no(self.out_dir)
         self._read = tracked_read
         self._poll = poll
         self._close = close
@@ -1073,53 +987,16 @@ def drain_recorded_frames(
 ) -> int:
     """Replay a RECORDED CopyBoth session (JSON-lines files of
     ``{"frame": "<hex>"}`` — the same capture format the kafka wire
-    sink's test transport uses) through the tailer into ``out_dir``.
-
-    Already-drained capture files are remembered in
-    ``out_dir/_drained.state`` (NOT ``.json`` — the waljson reader
-    scans the directory for ``.json``/``.jsonl`` event files) so
-    repeated catch-up passes only decode NEW captures — mirroring how a
-    live drain only sees new socket data. Returns the number of
-    XLogData frames written this pass."""
-    try:
-        names = sorted(os.listdir(frames_path))
-    except FileNotFoundError:
-        return 0
-    os.makedirs(out_dir, exist_ok=True)
-    state_file = os.path.join(out_dir, "_drained.state")
-    try:
-        with open(state_file) as f:
-            done = set(json.load(f))
-    except FileNotFoundError:
-        done = set()
-    fresh = [
-        n for n in names
-        if n.endswith((".json", ".jsonl")) and n not in done
-    ]
-    if not fresh:
-        return 0
-
-    def frames():
-        for name in fresh:
-            with open(os.path.join(frames_path, name)) as f:
-                for line in f:
-                    if line.strip():
-                        yield bytes.fromhex(json.loads(line)["frame"])
-
-    tailer = ReplicationTailer(frames(), send or (lambda b: None), out_dir)
-    # continue the output numbering past prior passes — restarting at 0
-    # would overwrite already-tailed (and possibly already-checkpointed)
-    # event files; past the HIGHEST index, not the file count:
-    # prune_committed deletes low-numbered fully-committed files, and a
-    # count-based number would reuse (and os.replace-clobber) a
-    # surviving file holding uncommitted events
-    tailer._file_no = _next_file_no(out_dir)
-    n = tailer.run()
-    tmp = state_file + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(sorted(done | set(fresh)), f)
-    os.replace(tmp, state_file)
-    return n
+    sink's test transport uses) through the tailer into ``out_dir``;
+    capture files an earlier pass drained are skipped
+    (``wal_source.drain_new_captures``). Returns the number of XLogData
+    frames written this pass."""
+    return drain_new_captures(
+        frames_path, out_dir,
+        lambda frames: ReplicationTailer(
+            frames, send or (lambda b: None), out_dir
+        ).run(),
+    )
 
 
 __all__ = [
@@ -1131,7 +1008,6 @@ __all__ = [
     "encode_startup_message",
     "md5_password",
     "dial",
-    "live_drain",
     "live_drain_tcp",
     "LiveReplicationConnection",
     "PgServerError",

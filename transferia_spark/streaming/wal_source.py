@@ -40,6 +40,7 @@ this marker is how collapse distinguishes absent from NULL).
 from __future__ import annotations
 
 import bisect
+import contextlib
 import json
 import os
 import re
@@ -203,12 +204,150 @@ class _FileSlice(InputPartition):
         self.ordered = ordered
 
 
+# -- the recorded-directory contract ----------------------------------
+#
+# A recorded directory holds the numbered event files the readers below
+# tail ({n:09d}.jsonl from the pg and mysql tailers, live_/oplog_
+# {n:06d}.jsonl from the mongo drains) beside the writers' own state.
+# A name starting with "_" or "." is never an event file (the Hadoop
+# hidden-file rule): writers keep positions in "_" state files and
+# stage each event file as a hidden ".<name>.tmp" until it publishes.
+
+
 def _scan_files(path: str) -> list[str]:
     try:
         names = sorted(os.listdir(path))
     except FileNotFoundError:
         return []
-    return [os.path.join(path, n) for n in names if n.endswith((".json", ".jsonl"))]
+    return [
+        os.path.join(path, n) for n in names
+        if n.endswith((".json", ".jsonl")) and not n.startswith(("_", "."))
+    ]
+
+
+def _event_files(out_dir: str, prefix: str) -> dict[int, str]:
+    """Published ``{prefix}<n>.jsonl`` event files by number."""
+    return {
+        int(n[len(prefix):-len(".jsonl")]): n
+        for n in os.listdir(out_dir)
+        if n.startswith(prefix) and n.endswith(".jsonl")
+        and n[len(prefix):-len(".jsonl")].isdigit()
+    }
+
+
+def next_file_no(out_dir: str, prefix: str = "") -> int:
+    """The number of the next ``{prefix}<n>.jsonl`` event file: one past
+    the HIGHEST existing index, not the file count — prune_committed
+    deletes low-numbered committed files, and a count would reuse (and
+    clobber) a surviving file that holds uncommitted events."""
+    return max(_event_files(out_dir, prefix), default=-1) + 1
+
+
+def last_published_event(out_dir: str, prefix: str) -> dict | None:
+    """The last event of the newest published ``{prefix}<n>.jsonl``
+    file, or None (no file, or an unreadable tail). A writer that
+    persists its resume position AFTER publishing reads this on start:
+    after a crash between the two, the file is the further-along
+    position."""
+    files = _event_files(out_dir, prefix)
+    tail = None
+    try:  # max() of no files and json.loads(None) raise too
+        with open(os.path.join(out_dir, files[max(files)])) as f:
+            for line in f:
+                tail = line if line.strip() else tail
+        return json.loads(tail)
+    except (OSError, ValueError, TypeError):
+        return None
+
+
+def _durable_replace(tmp: str, path: str) -> None:
+    """Rename a fsync'd temp file into place, then fsync the directory:
+    the rename itself is not durable until the directory entry is."""
+    os.replace(tmp, path)
+    dfd = os.open(os.path.dirname(path), os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
+@contextlib.contextmanager
+def event_file(out_dir: str, name: str):
+    """Write one event file of a recorded directory: yields a text
+    handle on the hidden ``.<name>.tmp``; on a clean exit a non-empty
+    file publishes durably (fsync the data, rename, fsync the
+    directory) and an empty one is removed. Writers persist a position
+    (slot ack, GTID set, resume token) only after this returns, so the
+    position can never be durable before the events it covers."""
+    tmp = os.path.join(out_dir, "." + name + ".tmp")
+    try:
+        with open(tmp, "w") as out:
+            yield out
+            out.flush()
+            os.fsync(out.fileno())
+            empty = out.tell() == 0
+    except BaseException:
+        os.remove(tmp)
+        raise
+    if empty:
+        os.remove(tmp)
+    else:
+        _durable_replace(tmp, os.path.join(out_dir, name))
+
+
+def read_state(out_dir: str, name: str) -> str | None:
+    """A writer's ``_``-prefixed state file, or None when absent."""
+    try:
+        with open(os.path.join(out_dir, name)) as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
+
+
+def write_state(out_dir: str, name: str, text: str) -> None:
+    """Durably replace a writer's ``_``-prefixed state file."""
+    path = os.path.join(out_dir, name)
+    with open(path + ".tmp", "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    _durable_replace(path + ".tmp", path)
+
+
+def drain_new_captures(
+    frames_path: str,
+    out_dir: str,
+    drain: Callable[[Iterator[bytes]], int],
+) -> int:
+    """Feed the capture files under ``frames_path`` (JSON lines of
+    ``{"frame": "<hex>"}``) that no earlier pass drained to ``drain``,
+    then remember them in ``out_dir/_drained.state`` — so repeated
+    catch-up passes decode only NEW captures, as a live drain only sees
+    new socket data. Returns what ``drain`` returns (0 when nothing is
+    new)."""
+    try:
+        names = sorted(os.listdir(frames_path))
+    except FileNotFoundError:
+        return 0
+    os.makedirs(out_dir, exist_ok=True)
+    done = set(json.loads(read_state(out_dir, "_drained.state") or "[]"))
+    fresh = [n for n in names if n.endswith((".json", ".jsonl"))
+             and n not in done]
+    if not fresh:
+        return 0
+
+    def frames():
+        for name in fresh:
+            with open(os.path.join(frames_path, name)) as f:
+                for line in f:
+                    if line.strip():
+                        yield bytes.fromhex(json.loads(line)["frame"])
+
+    n = drain(frames())
+    write_state(
+        out_dir, "_drained.state", json.dumps(sorted(done | set(fresh)))
+    )
+    return n
 
 
 def dead_letter_record(

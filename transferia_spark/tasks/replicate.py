@@ -26,6 +26,7 @@ hiccups retry.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -282,13 +283,107 @@ def _stream_formats():
     }
 
 
+class _FreshDrains:
+    """A drain session that holds nothing open between drains: each
+    ``drain()`` reads the capture files not drained yet, or dials
+    afresh."""
+
+    def __init__(self, drain: Callable[[], int]):
+        self.drain = drain
+
+    def close(self) -> None:
+        pass
+
+
+@dataclass(frozen=True)
+class _WireFormat:
+    """A wire client that drains its source into the recorded directory
+    at ``path``, which the ``recorded`` DataSource then tails."""
+
+    recorded: str
+    #: the config a drain needs, for the error text
+    needs: str
+    #: source config → live session with ``drain()`` and ``close()``
+    live: Callable[[dict], object]
+    #: source config → one drain of ``frames_path`` captures, if any
+    frames: Callable[[dict], int] | None = None
+
+
+def _wire_formats() -> dict[str, _WireFormat]:
+    """The one wire-format table: every ``*wire`` source drains through
+    :func:`_wire_session`, at activation (inside
+    :func:`source_position`), at each stream build and on every
+    continuous-mode heartbeat."""
+    from transferia_spark.streaming import mongo_wire, mysql_binlog
+    from transferia_spark.streaming import pg_replication as pg
+
+    def mongo_drain(s: dict) -> int:
+        drain = (
+            mongo_wire.live_drain_oplog
+            if str(s["live"].get("mode", "change_stream")) == "oplog"
+            else mongo_wire.live_drain_change_stream
+        )
+        return drain(s["live"], s["path"])
+
+    return {
+        # PG streaming replication (CopyBoth XLogData → wal2json lines)
+        "pgwire": _WireFormat(
+            "waljson",
+            "frames_path: <dir of recorded CopyBoth captures> or live: "
+            "{host, port, user, database, slot, ...}",
+            lambda s: pg.LiveReplicationConnection(s["live"], s["path"]),
+            lambda s: pg.drain_recorded_frames(s["frames_path"], s["path"]),
+        ),
+        # MySQL binlog (COM_BINLOG_DUMP_GTID row events → binlog JSON)
+        "mysqlwire": _WireFormat(
+            "binlogjson",
+            "frames_path: <dir of recorded binlog event captures> or "
+            "live: {host, port, user, password, server_id, ...}",
+            lambda s: mysql_binlog.MySqlLiveConnection(
+                s["live"], s["path"], column_names=s.get("column_names")
+            ),
+            lambda s: mysql_binlog.drain_recorded_binlog(
+                s["frames_path"], s["path"],
+                column_names=s.get("column_names"),
+            ),
+        ),
+        # Mongo change stream, or the local.oplog.rs tail when
+        # live.mode is oplog (pre-4.0 servers, no changeStream
+        # privilege): one client per drain
+        "mongowire": _WireFormat(
+            "mongostream",
+            "live: {uri | host/port/user/password, database, collection}",
+            lambda s: _FreshDrains(lambda: mongo_drain(s)),
+        ),
+    }
+
+
+def _wire_session(source: dict):
+    """The drain session of a wire ``source``: its live connection, or
+    the recorded ``frames_path`` captures."""
+    wire = _wire_formats()[source["format"]]
+    if source.get("live"):
+        return wire.live(source)
+    if wire.frames is not None and source.get("frames_path"):
+        return _FreshDrains(lambda: wire.frames(source))
+    raise FatalError(
+        f"replication.source format {source['format']} needs {wire.needs}"
+    )
+
+
+def _drain_once(source: dict) -> int:
+    """One catch-up drain of a wire source: one session, one
+    ``drain()``, then ``close()``."""
+    with contextlib.closing(_wire_session(source)) as session:
+        return session.drain()
+
+
 def source_position(
     fmt: str,
     schema_ddl: str,
     path: str,
-    frames_path: str | None = None,
-    column_names: dict | None = None,
     options: dict | None = None,
+    source: dict | None = None,
 ) -> dict:
     """Scan the recorded stream for its CURRENT end position — what the
     reference snapshots as the slot LSN / binlog position at activate
@@ -296,7 +391,9 @@ def source_position(
     passes reader options through — in particular ``dead_letter_dir``,
     so a poison line already in the directory at ACTIVATION time routes
     exactly like one arriving mid-stream would, instead of failing the
-    activation the dead-letter contract exists to protect."""
+    activation the dead-letter contract exists to protect. For a wire
+    format, ``source`` (the ``replication.source`` config) first drains
+    the new input into ``path``, so the scan sees the stream's end."""
     formats = _stream_formats()
     if fmt == "kafkawire":
         # queue offsets live in the Spark checkpoint; there is no
@@ -305,27 +402,11 @@ def source_position(
         # at-least-once overlap through collapse's (_lsn,_counter)
         # ordering like every other source
         return {}
-    if fmt == "pgwire":
-        from transferia_spark.streaming.pg_replication import (
-            drain_recorded_frames,
-        )
-
-        if frames_path:
-            drain_recorded_frames(frames_path, path)
-        fmt = "waljson"
-    if fmt == "mysqlwire":
-        from transferia_spark.streaming.mysql_binlog import (
-            drain_recorded_binlog,
-        )
-
-        if frames_path:
-            drain_recorded_binlog(frames_path, path, column_names=column_names)
-        fmt = "binlogjson"
-    if fmt == "mongowire":
-        # position = whatever the recorded dir holds after the last
-        # drain; the activation drain itself happens in
-        # build_replication_stream (live config not passed here)
-        fmt = "mongostream"
+    wires = _wire_formats()
+    if fmt in wires:
+        if source is not None:
+            _drain_once(source)
+        fmt = wires[fmt].recorded
     if fmt not in formats:
         raise FatalError(
             f"unknown replication source format {fmt!r}; "
@@ -481,100 +562,20 @@ def build_replication_stream(
             lsn_expr.alias(LSN_COL),
             F.col("_offset").cast("long").alias(COUNTER_COL),
         )
-    if fmt == "pgwire":
-        # PG streaming-replication wire sessions (live socket drain or
-        # recorded CopyBoth captures under `frames_path`): decode
-        # XLogData frames into the wal2json directory at `path`, then
-        # tail it with the slot-direct waljson DataSource — the wire
-        # client (streaming/pg_replication.py) front-ending the same
-        # stream/offset path (publisher_replication.go end-to-end)
-        from transferia_spark.streaming.pg_replication import (
-            drain_recorded_frames,
-        )
-
-        if source.get("live"):
-            # live TCP session: connect→auth→START_REPLICATION→drain
-            # (dial is the injectable transport seam)
-            from transferia_spark.streaming.pg_replication import (
-                live_drain_tcp,
-            )
-
-            live_drain_tcp(source["live"], source["path"])
-        elif source.get("frames_path"):
-            drain_recorded_frames(source["frames_path"], source["path"])
-        else:
-            raise FatalError(
-                "replication.source format pgwire needs frames_path: "
-                "<dir of recorded CopyBoth captures> or live: "
-                "{host, port, user, database, slot, ...}"
-            )
-        source = {**source, "format": "waljson"}
-        fmt = "waljson"
-    if fmt == "mongowire":
-        # Mongo change streams over the pure-Python wire client
-        # (streaming/mongo_wire.py ≈ change_stream_watcher.go): one
-        # catch-up drain of aggregate [$changeStream] into the
-        # recorded JSONL directory at `path` (resume token persisted
-        # alongside), then tail it with the mongostream DataSource —
-        # the same live-front pattern as pgwire/mysqlwire
-        if not source.get("live"):
-            raise FatalError(
-                "replication.source format mongowire needs live: "
-                "{uri | host/port/user/password, database, collection}"
-            )
-        from transferia_spark.streaming.mongo_wire import (
-            live_drain_change_stream,
-            live_drain_oplog,
-        )
-
-        if str(source["live"].get("mode", "change_stream")) == "oplog":
-            # the reference's fallback when change streams are
-            # unavailable (pre-4.0 servers, missing aggregation
-            # privileges): tail local.oplog.rs over the same wire
-            # client, mapped to change-stream-shaped events
-            # (≈ local_oplog_rs_watcher.go + oplog_v2_parser.go)
-            live_drain_oplog(source["live"], source["path"])
-        else:
-            live_drain_change_stream(source["live"], source["path"])
-        source = {**source, "format": "mongostream"}
-        fmt = "mongostream"
-    if fmt == "mysqlwire":
-        # MySQL binlog wire sessions (live socket drain, or recorded
-        # event captures under `frames_path`): decode row/query events
-        # into the binlog-JSON directory at `path`, then tail it with
-        # the binlogjson DataSource — the wire client
-        # (streaming/mysql_binlog.py) front-ending the same
-        # stream/offset path (canal.go analog)
-        if source.get("live"):
-            from transferia_spark.streaming.mysql_binlog import (
-                mysql_live_drain_tcp,
-            )
-
-            mysql_live_drain_tcp(
-                source["live"], source["path"],
-                column_names=source.get("column_names"),
-            )
-        elif source.get("frames_path"):
-            from transferia_spark.streaming.mysql_binlog import (
-                drain_recorded_binlog,
-            )
-
-            drain_recorded_binlog(
-                source["frames_path"], source["path"],
-                column_names=source.get("column_names"),
-            )
-        else:
-            raise FatalError(
-                "replication.source format mysqlwire needs frames_path: "
-                "<dir of recorded binlog event captures> or live: "
-                "{host, port, user, password, server_id, ...}"
-            )
-        source = {**source, "format": "binlogjson"}
-        fmt = "binlogjson"
+    wires = _wire_formats()
+    if fmt in wires:
+        # a wire client (streaming/pg_replication.py, mysql_binlog.py,
+        # mongo_wire.py) drains its new input into the recorded
+        # directory at `path`, then the stream tails that directory
+        # with the recorded format's DataSource — the same
+        # stream/offset path as a recorded log
+        _drain_once(source)
+        fmt = wires[fmt].recorded
+        source = {**source, "format": fmt}
     if fmt not in formats:
         raise FatalError(
             f"unknown replication source format {fmt!r}; supported: "
-            f"{sorted(formats) + ['pgwire', 'mysqlwire', 'kafkawire']}"
+            f"{sorted(formats) + sorted(wires) + ['kafkawire']}"
         )
     cls, schema_fn = formats[fmt]
     spark.dataSource.register(cls)
@@ -855,7 +856,7 @@ def run_replication(
       (bound it with ``max_attempts``; ``max_runtime`` stops the query
       cleanly after N seconds — bounded soak mode). While healthy, a
       heartbeat is reported every ``replication.health_interval``
-      seconds (default 60) and pgwire captures drain continuously.
+      seconds (default 60) and a wire source drains its new input.
     - fatal error → coordinator ``status`` state is cleared (the next
       run re-activates, ``replicate.go:88-93``) and the error raises.
     - ``stream_factory``/``sink`` inject test doubles; by default both
@@ -885,6 +886,7 @@ def run_replication(
             )
     store = TransferStateStore(state_dir)
     report = ReplicationReport()
+    wires = _wire_formats()
 
     src_cfg = rep.get("source")
     if (
@@ -953,37 +955,20 @@ def run_replication(
                 # record the stream position BEFORE the snapshot scan:
                 # events recorded during the scan replay after it, and
                 # the idempotent MERGE absorbs the overlap — the same
-                # at-least-once window the reference accepts
-                if src.get("format") == "pgwire" and src.get("live"):
-                    # live session: one catch-up drain so the position
-                    # scan sees the stream's current end
-                    from transferia_spark.streaming.pg_replication import (
-                        live_drain_tcp,
-                    )
-
-                    live_drain_tcp(src["live"], src["path"])
-                elif src.get("format") == "mysqlwire" and src.get("live"):
-                    from transferia_spark.streaming.mysql_binlog import (
-                        mysql_live_drain_tcp,
-                    )
-
-                    mysql_live_drain_tcp(
-                        src["live"], src["path"],
-                        column_names=src.get("column_names"),
-                    )
+                # at-least-once window the reference accepts.
                 # kafkawire is the only pathless format and it early-
                 # returns inside source_position — every path-based
                 # format keeps the LOUD KeyError on a missing path:
                 # swallowing it would silently record an empty
                 # position, run the whole seed, and only then fail
-                # (code-review r10 pass 3)
+                # (code-review r10 pass 3). A wire source drains once
+                # inside, so the scan sees the stream's current end.
                 position = source_position(
                     src["format"], source_schema_ddl(src),
                     "" if src.get("format") == "kafkawire"
                     else src["path"],
-                    frames_path=src.get("frames_path"),
-                    column_names=src.get("column_names"),
                     options={"dead_letter_dir": dl_dir} if dl_dir else None,
+                    source=src,
                 )
             if table_obj is not None:
                 report.snapshot_rows = _seed_snapshot(spark, spec, table_obj)
@@ -1050,13 +1035,16 @@ def run_replication(
             # new columns and evolve the schema_file registry so the
             # restarted query reads them (widening-only). The probe is
             # ROUTED BY FORMAT — wal2json records columns as arrays,
-            # binlog as before/after dicts (r5 verdict item 1).
+            # binlog as before/after dicts (r5 verdict item 1); a wire
+            # source probes its recorded format.
             if src.get("schema_file") and src.get("path"):
                 # pathless sources (kafkawire) carry no recorded files
                 # to probe — schema evolution arrives via schema_file
                 # edits + restart
+                fmt = src.get("format", "binlogjson")
                 evolved = probe_stream_schema(
-                    src.get("format", "binlogjson"), src["path"], ddl
+                    wires[fmt].recorded if fmt in wires else fmt,
+                    src["path"], ddl,
                 )
                 tmp = src["schema_file"] + ".tmp"
                 with open(tmp, "w") as f:
@@ -1072,209 +1060,158 @@ def run_replication(
 
     retry_count = 0
     last_err_text: str | None = None
-    # ONE long-lived wire session reused across heartbeat ticks (and
-    # across supervisor retries — drain() self-heals by reconnecting):
-    # the reference's publisher holds a single replication connection
-    # with keepalive acks (publisher_replication.go:75); re-running
-    # StartupMessage/auth/START_REPLICATION per tick churns server
-    # slots (r7 verdict "What's missing" 2)
-    live_conn = None
-
-    def _tick_live_drain(src_cfg: dict) -> None:
-        nonlocal live_conn
-        if live_conn is None:
-            if src_cfg.get("format") == "pgwire":
-                from transferia_spark.streaming.pg_replication import (
-                    LiveReplicationConnection,
-                )
-
-                live_conn = LiveReplicationConnection(
-                    src_cfg["live"], src_cfg["path"]
-                )
-            else:
-                from transferia_spark.streaming.mysql_binlog import (
-                    MySqlLiveConnection,
-                )
-
-                live_conn = MySqlLiveConnection(
-                    src_cfg["live"], src_cfg["path"],
-                    column_names=src_cfg.get("column_names"),
-                )
-        live_conn.drain()
-
-    def _close_live() -> None:
-        nonlocal live_conn
-        if live_conn is not None:
-            live_conn.close()
-            live_conn = None
-
-    while True:
-        report.attempts += 1
-        try:
-            sink = _attempt_sink()
-            if stream_factory is not None:
-                stream = stream_factory(spark, position)
-            else:
-                source = dict(rep.get("source") or {})
-                opts = dict(source.get("options") or {})
-                # durable committed-offset ack (≈ the coordinator's
-                # saved position): seeds the reader's latestOffset
-                # floor across restarts so bounded catch-up can never
-                # regress below the checkpoint
-                opts.setdefault(
-                    "ack_file",
-                    os.path.join(state_dir, f"ack_{transfer_id}.json"),
-                )
-                if dl_dir:
-                    opts.setdefault("dead_letter_dir", dl_dir)
-                if controls_on:
-                    opts["emit_controls"] = "true"
-                source["options"] = opts
-                if (rep.get("target") or {}).get("tables"):
-                    # multi-table mode routes on _table — keep it
-                    source.setdefault("drop", [])
-                stream = build_replication_stream(spark, source, position)
-            # each row passes the transformation chain exactly once:
-            # snapshot rows at seed time, stream rows here — the
-            # reference's transformation middleware sits on the same
-            # shared sink path (sink_factory.go:97-197)
-            transformation = (
-                spec.transformation
-                if spec.transformation and spec.transformation.transformers
-                else None
-            )
-            pipe = ReplicationPipeline(
-                stream=stream,
-                sink=sink,
-                transformation=transformation,
-                checkpoint_dir=checkpoint_dir,
-                trigger=dict(rep.get("trigger") or {}),
-            )
-            if once or (pipe.trigger or {}).get("availableNow"):
-                pipe.run_available(query_name=f"replicate_{transfer_id}")
-                # shutdown contract: a background fold that failed
-                # after the LAST batch would otherwise vanish with the
-                # stream (its error only surfaces on the next batch) —
-                # join it before reporting healthy; a poisoned fold
-                # raises into the supervisor like any apply error
-                if hasattr(sink, "wait_for_compaction"):
-                    sink.wait_for_compaction()
-                store.report_health(transfer_id, retry_count, None)
-                if dl_dir:
-                    report.unparsed_rows = dead_letter_count(dl_dir)
-                _close_live()
-                return report
-            q = pipe.start(query_name=f"replicate_{transfer_id}")
-            # continuous mode: periodic health heartbeat while healthy
-            # (≈ healthReportTicker, replication.go:142 — one report per
-            # period, not only on errors) and, for pgwire sources,
-            # periodic drain of newly-recorded wire captures into the
-            # tailed directory. ``max_runtime`` bounds soak runs.
-            hb = float(rep.get("health_interval", 60.0))
-            started = time.time()
-            src = rep.get("source") or {}
-            stopped = False
-            while not q.awaitTermination(timeout=hb):
-                store.report_health(transfer_id, retry_count, None)
-                # .get guard matches source_position's optional
-                # frames_path contract (build_replication_stream already
-                # raised FatalError on a missing one at activation)
-                if src.get("format") in ("pgwire", "mysqlwire") and src.get(
-                    "live"
-                ):
-                    _tick_live_drain(src)
-                elif src.get("format") == "pgwire" and src.get("frames_path"):
-                    from transferia_spark.streaming.pg_replication import (
-                        drain_recorded_frames,
+    # ONE heartbeat drain session across ticks AND supervisor retries
+    # (a live drain() self-heals by reconnecting), like the reference's
+    # single replication connection (publisher_replication.go:75)
+    heartbeat = q = None
+    try:
+        while True:
+            report.attempts += 1
+            try:
+                sink = _attempt_sink()
+                if stream_factory is not None:
+                    stream = stream_factory(spark, position)
+                else:
+                    source = dict(rep.get("source") or {})
+                    opts = dict(source.get("options") or {})
+                    # durable committed-offset ack (≈ the coordinator's
+                    # saved position): seeds the reader's latestOffset
+                    # floor across restarts so bounded catch-up can never
+                    # regress below the checkpoint
+                    opts.setdefault(
+                        "ack_file",
+                        os.path.join(state_dir, f"ack_{transfer_id}.json"),
                     )
+                    if dl_dir:
+                        opts.setdefault("dead_letter_dir", dl_dir)
+                    if controls_on:
+                        opts["emit_controls"] = "true"
+                    source["options"] = opts
+                    if (rep.get("target") or {}).get("tables"):
+                        # multi-table mode routes on _table — keep it
+                        source.setdefault("drop", [])
+                    stream = build_replication_stream(spark, source, position)
+                # each row passes the transformation chain exactly once:
+                # snapshot rows at seed time, stream rows here — the
+                # reference's transformation middleware sits on the same
+                # shared sink path (sink_factory.go:97-197)
+                transformation = (
+                    spec.transformation
+                    if spec.transformation and spec.transformation.transformers
+                    else None
+                )
+                pipe = ReplicationPipeline(
+                    stream=stream,
+                    sink=sink,
+                    transformation=transformation,
+                    checkpoint_dir=checkpoint_dir,
+                    trigger=dict(rep.get("trigger") or {}),
+                )
+                if once or (pipe.trigger or {}).get("availableNow"):
+                    pipe.run_available(query_name=f"replicate_{transfer_id}")
+                    # shutdown contract: a background fold that failed
+                    # after the LAST batch would otherwise vanish with the
+                    # stream (its error only surfaces on the next batch) —
+                    # join it before reporting healthy; a poisoned fold
+                    # raises into the supervisor like any apply error
+                    if hasattr(sink, "wait_for_compaction"):
+                        sink.wait_for_compaction()
+                    store.report_health(transfer_id, retry_count, None)
+                    if dl_dir:
+                        report.unparsed_rows = dead_letter_count(dl_dir)
+                    return report
+                q = pipe.start(query_name=f"replicate_{transfer_id}")
+                # continuous mode: periodic health heartbeat while healthy
+                # (≈ healthReportTicker, replication.go:142 — one report per
+                # period, not only on errors) and, for wire sources, a drain
+                # of the new input into the tailed directory on every tick.
+                # ``max_runtime`` bounds soak runs.
+                hb = float(rep.get("health_interval", 60.0))
+                started = time.time()
+                src = rep.get("source") or {}
+                stopped = False
+                while not q.awaitTermination(timeout=hb):
+                    store.report_health(transfer_id, retry_count, None)
+                    if src.get("format") in wires:
+                        if heartbeat is None:
+                            heartbeat = _wire_session(src)
+                        heartbeat.drain()
+                    if max_runtime is not None and time.time() - started >= max_runtime:
+                        q.stop()
+                        q.awaitTermination()
+                        stopped = True
+                        break
+                if stopped:
+                    # same shutdown contract as the once-mode exit above
+                    if hasattr(sink, "wait_for_compaction"):
+                        sink.wait_for_compaction()
+                    store.report_health(transfer_id, retry_count, None)
+                    if dl_dir:
+                        report.unparsed_rows = dead_letter_count(dl_dir)
+                    return report
+                # the worker never returns cleanly in replicate mode
+                raise RuntimeError(
+                    "replication terminated without an error. This is an "
+                    "anomaly, see logs for error details"
+                )
+            except Exception as e:  # noqa: BLE001 — the supervisor classifies
+                if q is not None:
+                    q.stop()  # a failed heartbeat leaves the query running
+                retry_count += 1
+                cause = _cause_signature(e)
+                if cause != last_err_text:
+                    # ≈ OpenStatusMessage on NEW error causes only
+                    report.errors.append(cause)
+                last_err_text = cause
+                store.report_health(transfer_id, retry_count, cause)
+                if is_fatal(e):
+                    # ≈ replicate.go:88-93 — clear status so the next run
+                    # re-activates from a clean slate, then surface
+                    store.remove(transfer_id, ["status"])
+                    raise
+                drift = _registry_drift_signal(e)
+                if drift is not None:
+                    # registry-driven schema drift: evolve schema_file
+                    # from the writer schema that raised, so this retry
+                    # restarts the stream into the widened schema
+                    src_cfg = dict(rep.get("source") or {})
+                    if src_cfg.get("schema_file"):
+                        import logging
 
-                    drain_recorded_frames(src["frames_path"], src["path"])
-                elif src.get("format") == "mysqlwire" and src.get(
-                    "frames_path"
-                ):
-                    from transferia_spark.streaming.mysql_binlog import (
-                        drain_recorded_binlog,
-                    )
-
-                    drain_recorded_binlog(
-                        src["frames_path"], src["path"],
-                        column_names=src.get("column_names"),
-                    )
-                if max_runtime is not None and time.time() - started >= max_runtime:
-                    q.stop()
-                    q.awaitTermination()
-                    stopped = True
-                    break
-            if stopped:
-                # same shutdown contract as the once-mode exit above
-                if hasattr(sink, "wait_for_compaction"):
-                    sink.wait_for_compaction()
-                store.report_health(transfer_id, retry_count, None)
-                if dl_dir:
-                    report.unparsed_rows = dead_letter_count(dl_dir)
-                _close_live()
-                return report
-            # the worker never returns cleanly in replicate mode
-            raise RuntimeError(
-                "replication terminated without an error. This is an "
-                "anomaly, see logs for error details"
-            )
-        except Exception as e:  # noqa: BLE001 — the supervisor classifies
-            retry_count += 1
-            cause = _cause_signature(e)
-            if cause != last_err_text:
-                # ≈ OpenStatusMessage on NEW error causes only
-                report.errors.append(cause)
-            last_err_text = cause
-            store.report_health(transfer_id, retry_count, cause)
-            if is_fatal(e):
-                # ≈ replicate.go:88-93 — clear status so the next run
-                # re-activates from a clean slate, then surface
-                store.remove(transfer_id, ["status"])
-                _close_live()
-                raise
-            drift = _registry_drift_signal(e)
-            if drift is not None:
-                # registry-driven schema drift: evolve schema_file
-                # from the writer schema that raised, so this retry
-                # restarts the stream into the widened schema
-                src_cfg = dict(rep.get("source") or {})
-                if src_cfg.get("schema_file"):
-                    import logging
-
-                    try:
-                        added = evolve_schema_file_from_registry(
-                            src_cfg, drift[0], drift[1]
-                        )
-                    except Exception as ee:  # noqa: BLE001
-                        # a registry hiccup during evolution is the
-                        # transient class this loop exists to retry —
-                        # it must not abort the worker and skip
-                        # _close_live (code-review r12); the next
-                        # attempt re-raises the drift and lands here
-                        # again. A FATAL-class failure (hard-deleted
-                        # schema id → 404 ValueError, unwritable
-                        # schema_file) must surface though, or a
-                        # max_attempts=None worker drift-loops forever
-                        # (code-review r12 pass 3)
-                        if is_fatal(ee):
-                            store.remove(transfer_id, ["status"])
-                            _close_live()
-                            raise
-                        logging.getLogger(__name__).warning(
-                            "registry drift evolution for schema id "
-                            "%s failed (%s); retrying", drift[0], ee,
-                        )
-                    else:
-                        logging.getLogger(__name__).info(
-                            "registry drift: schema id %s added "
-                            "columns %s; restarting into the evolved "
-                            "schema", drift[0], added,
-                        )
-            if max_attempts is not None and report.attempts >= max_attempts:
-                _close_live()
-                raise
-            sleep_fn(retry_interval)
+                        try:
+                            added = evolve_schema_file_from_registry(
+                                src_cfg, drift[0], drift[1]
+                            )
+                        except Exception as ee:  # noqa: BLE001
+                            # a registry hiccup during evolution is the
+                            # transient class this loop exists to retry —
+                            # it must not abort the worker (code-review
+                            # r12); the next
+                            # attempt re-raises the drift and lands here
+                            # again. A FATAL-class failure (hard-deleted
+                            # schema id → 404 ValueError, unwritable
+                            # schema_file) must surface though, or a
+                            # max_attempts=None worker drift-loops forever
+                            # (code-review r12 pass 3)
+                            if is_fatal(ee):
+                                store.remove(transfer_id, ["status"])
+                                raise
+                            logging.getLogger(__name__).warning(
+                                "registry drift evolution for schema id "
+                                "%s failed (%s); retrying", drift[0], ee,
+                            )
+                        else:
+                            logging.getLogger(__name__).info(
+                                "registry drift: schema id %s added "
+                                "columns %s; restarting into the evolved "
+                                "schema", drift[0], added,
+                            )
+                if max_attempts is not None and report.attempts >= max_attempts:
+                    raise
+                sleep_fn(retry_interval)
+    finally:
+        if heartbeat is not None:
+            heartbeat.close()
 
 
 __all__ = [
