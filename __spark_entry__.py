@@ -1390,7 +1390,7 @@ def q_kafka_sasl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     token, the full deterministic SCRAM-SHA-256/512 exchange strings
     (fixed nonce; any regression in the RFC 5802 math breaks the
     hash), a byte-deterministic gzip RecordBatch v2 (mtime=0) decoded
-    back out, and the zstd path (sinks/zstd_pure.py): a hand-built
+    back out, and the zstd path (``decompress_records``): a hand-built
     multi-block frame (raw+RLE blocks, hex is spec-fixed) plus a
     zstd-compressed batch round-trip — decoded ROWS only, since
     libzstd frame bytes may vary by version. Hash-compared against
@@ -1400,6 +1400,7 @@ def q_kafka_sasl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from transferia_spark.sinks.kafka_wire import (
         decode_record_set,
+        decompress_records,
         encode_record_batch,
         encode_sasl_authenticate_request,
         encode_sasl_handshake_request,
@@ -1450,13 +1451,13 @@ def q_kafka_sasl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zstd (r11): hand-built raw+RLE multi-block frame with a declared
     # content size — fixed bytes by the RFC 8878 layout, so both the
     # hex and the decode are oracle-hashable
-    from transferia_spark.sinks.zstd_pure import ZSTD_MAGIC, zstd_decompress
-
-    hand = ZSTD_MAGIC.to_bytes(4, "little") + bytes([0x20, 7])
+    hand = (0xFD2FB528).to_bytes(4, "little") + bytes([0x20, 7])
     hand += ((2 << 3) | 0).to_bytes(3, "little") + b"ab"
     hand += ((5 << 3) | (1 << 1) | 1).to_bytes(3, "little") + b"c"
     rows.append(("zstd", "handbuilt_frame", hand.hex()))
-    rows.append(("zstd", "handbuilt_decode", zstd_decompress(hand).decode()))
+    rows.append(
+        ("zstd", "handbuilt_decode", decompress_records(4, hand).decode())
+    )
     zs = encode_record_batch(
         [(b"zk", b"zv" * 30)],
         base_offset=9, base_timestamp=1_700_000_000_000,
@@ -2477,37 +2478,35 @@ def q_tls_trust_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kafka_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r12: lib-free PRODUCE for every Kafka codec (sinks/kafka_wire.py
-    snappy_compress_stored / lz4_frame_compress_stored + the existing
-    gzip/zstd paths ≈ franz-go's codec support) — the stored
-    literal-only encodings are byte-deterministic, so both the frame
-    hex and the round-trip through the repo's own lib-free DECODERS are
-    oracle-hashable; the pure xxHash32 behind the lz4 header checksum
-    pins its spec vectors. Record batches for all four codecs decode
-    back to exact rows (zstd/snappy/lz4 by rows only — C fast paths may
-    pick different compressed bytes)."""
+    """r12: PRODUCE and CONSUME for every Kafka codec
+    (sinks/kafka_wire.py ``compress_records`` / ``decompress_records``:
+    stdlib gzip, pyarrow's libsnappy/liblz4/libzstd ≈ franz-go's codec
+    support). Fixed stored (literal-only) snappy and lz4 frames decode
+    through the same path a consumer runs, and record batches for all
+    four codecs decode back to exact rows (rows only — the C encoders
+    may pick different compressed bytes across versions)."""
     from transferia_spark.sinks.kafka_wire import (
-        _xxh32,
         decode_record_set,
         decompress_records,
         encode_record_batch,
-        lz4_frame_compress_stored,
-        snappy_compress_stored,
     )
 
-    data = b"nation-rows-ride-here:" + bytes(range(32))
-    sn = snappy_compress_stored(data)
-    lz = lz4_frame_compress_stored(data)
+    # literal-only snappy block and stored-block lz4 frame holding
+    # b"nation-rows-ride-here:" + bytes(range(32))
+    sn = bytes.fromhex(
+        "36d46e6174696f6e2d726f77732d726964652d686572653a000102030405"
+        "060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f"
+    )
+    lz = bytes.fromhex(
+        "04224d18607073360000806e6174696f6e2d726f77732d726964652d6865"
+        "72653a000102030405060708090a0b0c0d0e0f101112131415161718191a"
+        "1b1c1d1e1f00000000"
+    )
     rows = [
-        ("snappy", "stored_frame", sn.hex()),
         ("snappy", "roundtrip",
          decompress_records(2, sn).decode("latin1")[:22]),
-        ("lz4", "stored_frame", lz.hex()),
         ("lz4", "roundtrip",
          decompress_records(3, lz).decode("latin1")[:22]),
-        ("xxh32", "empty", hex(_xxh32(b""))),
-        ("xxh32", "spam",
-         hex(_xxh32(b"Nobody inspects the spammish repetition"))),
     ]
     for codec in ("gzip", "snappy", "lz4", "zstd"):
         batch = encode_record_batch(
@@ -6473,14 +6472,8 @@ SELECT * FROM (VALUES
 """,
         "kafka_codec_matrix": """
 SELECT * FROM (VALUES
-  ('snappy', 'stored_frame',
-   '36d46e6174696f6e2d726f77732d726964652d686572653a000102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f'),
   ('snappy', 'roundtrip', 'nation-rows-ride-here:'),
-  ('lz4', 'stored_frame',
-   '04224d18607073360000806e6174696f6e2d726f77732d726964652d686572653a000102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f00000000'),
   ('lz4', 'roundtrip', 'nation-rows-ride-here:'),
-  ('xxh32', 'empty', '0x2cc5d05'),
-  ('xxh32', 'spam', '0xe2293b2f'),
   ('gzip_rec', '3', 'k1=v1'),
   ('gzip_rec', '4', 'k2=vvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvvv'),
   ('snappy_rec', '3', 'k1=v1'),

@@ -1,7 +1,8 @@
-"""Pure-Python zstd decoder (RFC 8878) — round-trip-pinned against a
-REAL zstd encoder (pyarrow's bundled libzstd) across compression
-levels and data shapes, plus hand-built frames for the paths an
-encoder rarely emits and loud-corruption contracts."""
+"""zstd record payloads through ``kafka_wire.decompress_records``
+(pyarrow's bundled libzstd) — round-trip-pinned against a real zstd
+encoder across compression levels and data shapes, plus hand-built
+frames for the paths an encoder rarely emits and loud-corruption
+contracts."""
 
 from __future__ import annotations
 
@@ -12,13 +13,16 @@ import random
 import pyarrow as pa
 import pytest
 
-from transferia_spark.sinks.zstd_pure import (
-    ZSTD_MAGIC,
-    _peek_content_size,
-    zstd_compress,
-    zstd_decompress,
-    zstd_decompress_pure,
+from transferia_spark.sinks.kafka_wire import (
+    compress_records,
+    decompress_records,
 )
+
+ZSTD_MAGIC = 0xFD2FB528
+
+
+def zstd_decompress(data: bytes) -> bytes:
+    return decompress_records(4, data)
 
 
 def _shapes() -> dict[str, bytes]:
@@ -30,7 +34,7 @@ def _shapes() -> dict[str, bytes]:
     here = os.path.join(
         os.path.dirname(__file__), "..", "transferia_spark", "sinks"
     )
-    with open(os.path.join(here, "zstd_pure.py"), "rb") as f:
+    with open(os.path.join(here, "kafka_wire.py"), "rb") as f:
         src = f.read()
     return {
         "empty": b"",
@@ -54,35 +58,10 @@ def _shapes() -> dict[str, bytes]:
 
 @pytest.mark.parametrize("level", [1, 3, 9, 19])
 def test_roundtrip_against_libzstd(level):
-    """BOTH paths: the pure decoder (the real subject under test) and
-    the public entry whose pyarrow fast path must agree with it."""
     codec = pa.Codec("zstd", compression_level=level)
     for name, data in _shapes().items():
         frame = codec.compress(data, asbytes=True)
-        assert zstd_decompress_pure(frame) == data, f"{name} @ {level}"
-        assert zstd_decompress(frame) == data, f"{name} fast @ {level}"
-
-
-def test_fast_path_engages_on_content_sized_frames():
-    """librdkafka-style frames (FCS present) peek their size — the C
-    decoder handles them; streaming-style frames without FCS and
-    skippable-prefixed inputs go pure."""
-    codec = pa.Codec("zstd", compression_level=3)
-    frame = codec.compress(b"x" * 500, asbytes=True)
-    assert _peek_content_size(frame) == 500
-    # no-FCS hand frame → None → pure path
-    raw = ZSTD_MAGIC.to_bytes(4, "little") + bytes([0x00, 0x00])
-    raw += ((5 << 3) | 1).to_bytes(3, "little") + b"hello"
-    assert _peek_content_size(raw) is None
-    assert zstd_decompress(raw) == b"hello"
-    # skippable prefix → None → pure path handles the sequence
-    skip = (0x184D2A53).to_bytes(4, "little") + (0).to_bytes(4, "little")
-    assert _peek_content_size(skip + frame) is None
-    assert zstd_decompress(skip + frame) == b"x" * 500
-    # multi-frame input: the first frame's FCS undershoots the total →
-    # libzstd errors → pure path decodes the concatenation
-    two = frame + codec.compress(b"tail", asbytes=True)
-    assert zstd_decompress(two) == b"x" * 500 + b"tail"
+        assert zstd_decompress(frame) == data, f"{name} @ {level}"
 
 
 def test_hypothesis_roundtrip():
@@ -107,7 +86,6 @@ def test_hypothesis_roundtrip():
         data = b"".join(pieces)
         for codec in (codec1, codec19):
             frame = codec.compress(data, asbytes=True)
-            assert zstd_decompress_pure(frame) == data
             assert zstd_decompress(frame) == data
 
     check()
@@ -119,6 +97,7 @@ def test_concatenated_and_skippable_frames():
     b = codec.compress(b"second frame", asbytes=True)
     skip = (0x184D2A53).to_bytes(4, "little") + (4).to_bytes(4, "little") + b"junk"
     assert zstd_decompress(a + skip + b) == b"first frame second frame"
+    assert zstd_decompress(skip + a) == b"first frame "  # skippable prefix
 
 
 def test_handbuilt_frames_rare_paths():
@@ -137,16 +116,18 @@ def test_handbuilt_frames_rare_paths():
     frame += ((3 << 3) | (1 << 1) | 0).to_bytes(3, "little") + b"c"
     frame += (1).to_bytes(3, "little")  # last, raw, size 0
     assert zstd_decompress(frame) == b"abccc"
-    # own stored-frame encoder fallback round-trips everything
+    # the produce path round-trips everything
     for data in _shapes().values():
-        assert zstd_decompress(zstd_compress(data)) == data
+        bits, comp = compress_records("zstd", data)
+        assert bits == 4
+        assert zstd_decompress(comp) == data
 
 
 def test_corruption_is_loud_never_indexerror():
     codec = pa.Codec("zstd", compression_level=3)
     good = codec.compress(b"payload " * 100, asbytes=True)
-    with pytest.raises(ValueError, match="magic"):
-        zstd_decompress(b"\x00\x01\x02\x03rest")
+    with pytest.raises(ValueError, match="corrupt zstd"):
+        zstd_decompress(b"\x00\x01\x02\x03rest")  # bad magic
     with pytest.raises(ValueError, match="corrupt zstd"):
         zstd_decompress(good[: len(good) - 3])  # truncated tail
     with pytest.raises(ValueError, match="corrupt zstd"):
@@ -154,18 +135,18 @@ def test_corruption_is_loud_never_indexerror():
     # reserved block type 3
     frame = ZSTD_MAGIC.to_bytes(4, "little") + bytes([0x00, 0x00])
     frame += ((1 << 3) | (3 << 1) | 1).to_bytes(3, "little") + b"x"
-    with pytest.raises(ValueError, match="reserved block type"):
+    with pytest.raises(ValueError, match="corrupt zstd"):
         zstd_decompress(frame)
     # dictionary frames are refused by name, not misdecoded
     frame = ZSTD_MAGIC.to_bytes(4, "little") + bytes([0x01, 0x00, 7])
-    with pytest.raises(ValueError, match="dictionary"):
+    with pytest.raises(ValueError, match="Dictionary"):
         zstd_decompress(frame + ((0 << 3) | 1).to_bytes(3, "little"))
     # declared content size must match what regenerates
     bad = bytearray(codec.compress(b"abc", asbytes=True))
     # fhd for a 3-byte input is single-segment with a 1-byte FCS at [5]
     assert bad[4] & 0x20
     bad[5] = 9
-    with pytest.raises(ValueError, match="declared"):
+    with pytest.raises(ValueError, match="corrupt zstd"):
         zstd_decompress(bytes(bad))
     # flipping a byte inside the compressed body must never escape as
     # IndexError — ValueError or (rarely) silent-valid is acceptable
@@ -182,22 +163,9 @@ def test_corruption_is_loud_never_indexerror():
         blob[i] = old
 
 
-def test_backward_bitstream_requires_sentinel_in_last_byte():
-    """A zeroed final byte must not silently re-frame the stream from
-    an earlier byte's high bit (code-review r11 pass 4)."""
-    from transferia_spark.sinks.zstd_pure import _BackBits
-
-    with pytest.raises(ValueError, match="sentinel"):
-        _BackBits(b"\x05\x00")
-    with pytest.raises(ValueError, match="sentinel"):
-        _BackBits(b"\x00")
-    assert _BackBits(b"\x05").bitpos == 2  # sentinel at bit 2
-
-
 def test_kafka_record_batch_zstd_consumes():
     """The wire consumer's decode path: a zstd-compressed RecordBatch
-    (real libzstd via the produce ladder) decodes without the
-    zstandard package installed."""
+    (libzstd on both sides) decodes back to the exact records."""
     from transferia_spark.sinks.kafka_wire import (
         decode_record_set,
         encode_record_batch,

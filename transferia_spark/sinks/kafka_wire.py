@@ -14,7 +14,9 @@ subset a producer needs, with no client library or connector jar:
 
 A decoder for the same layouts ships alongside so tests round-trip
 batches byte-for-byte and the CRC is verified against the published
-CRC-32C test vector. The varint primitives are shared with the
+CRC-32C test vector. Record compression is gzip (stdlib zlib) plus
+snappy/lz4/zstd through pyarrow's bundled C codecs — pyarrow is the
+one codec dependency. The varint primitives are shared with the
 protobuf wire decoder (``parsers/protowire.py``) — same base-128
 encoding, Kafka's are zigzag for record deltas.
 
@@ -26,7 +28,11 @@ byte layout is fully executable and tested.
 
 from __future__ import annotations
 
+import gzip
 import struct
+import zlib
+
+import pyarrow as pa
 
 from transferia_spark.parsers.protowire import encode_varint, read_varint
 
@@ -78,407 +84,96 @@ def read_zigzag(data: bytes, pos: int) -> tuple[int, int]:
 
 
 # -------------------------------------------------- compression codecs
-# (RecordBatch v2 attributes bits 0-2; the compressed region is the
-# records array AFTER the count field. gzip is pure stdlib and decodes
-# unconditionally; snappy/lz4/zstd are feature-detected like the
-# multimodal codecs — absent libs fail with the install remedy, never
-# a baffling parse error. ≈ franz-go's codec support consumed by
-# ``pkg/providers/kafka/source.go``.)
+# RecordBatch v2 attributes bits 0-2; the compressed region is the
+# records array AFTER the count field. gzip runs on the stdlib zlib;
+# snappy, lz4 and zstd run on the C codecs pyarrow bundles (libsnappy,
+# liblz4, libzstd) — pyarrow is the one codec dependency, already
+# required by PySpark's Python data sources and the wire reader's Arrow
+# path. One decode and one encode path per codec. Every decode error
+# surfaces as ``ValueError("corrupt <codec>: …")``: callers treat
+# OSError as a dropped connection, and a corrupt batch must be fatal,
+# never retried. ≈ franz-go's codec support consumed by
+# ``pkg/providers/kafka/source.go``.
 
-CODEC_NAMES = {0: None, 1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
+_CODECS = {1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
+_CODEC_BITS = {name: bits for bits, name in _CODECS.items()}
 _XERIAL_MAGIC = b"\x82SNAPPY\x00"
 
-# decode coverage: gzip (stdlib), snappy + lz4 (pure-Python block/frame
-# decoders below), zstd (pure-Python RFC 8878 decoder in zstd_pure.py,
-# round-trip-pinned against libzstd) — every Kafka codec consumes out
-# of the box; installed C libs win on speed when present.
+
+def _snappy_block(block: bytes) -> bytes:
+    """One raw snappy block: its leading varint is the exact
+    uncompressed length libsnappy needs."""
+    n, _pos = read_varint(block, 0)
+    if n > 64 * len(block) + 64:  # snappy's own expansion bound
+        raise ValueError(f"declared length {n} exceeds the block's bound")
+    return pa.decompress(block, decompressed_size=n, codec="snappy",
+                         asbytes=True)
 
 
-def _snappy_fast(data: bytes) -> bytes:
-    """C-speed raw-snappy decode via pyarrow: the block's own leading
-    varint IS the exact uncompressed length pa.decompress needs.
-    Falls back to the pure decoder on any error (which then raises a
-    NAMED corruption) — at scale a compressed catch-up must not decode
-    at Python speed when libsnappy sits in pyarrow."""
-    try:
-        import pyarrow as pa
-
-        n, _pos = read_varint(data, 0)
-        if n <= 64 * len(data) + 64:  # snappy's own expansion bound
-            return pa.decompress(
-                data, decompressed_size=n, codec="snappy", asbytes=True
-            )
-    except Exception:
-        pass
-    return snappy_decompress(data)
-
-
-def snappy_decompress(data: bytes) -> bytes:
-    """Pure-Python raw-snappy DECODE (the public block format:
-    varint uncompressed length, then literal/copy tagged elements) —
-    consuming snappy topics must not require python-snappy; when the
-    lib is present it wins (C speed), this is the always-available
-    fallback. Encode stays lib-gated (produce gzip instead)."""
-    n, pos = read_varint(data, 0)
+def _snappy_decompress(data: bytes) -> bytes:
+    if data[:len(_XERIAL_MAGIC)] != _XERIAL_MAGIC:
+        return _snappy_block(data)
+    # the Java client's xerial framing: 16-byte header (magic + two
+    # int32 versions), then [int32 len][raw snappy block]... to the end
+    if len(data) <= 16:
+        raise ValueError(f"xerial frame of {len(data)} bytes holds no "
+                         "chunk after its 16-byte header")
     out = bytearray()
-    end = len(data)
-    while pos < end:
-        tag = data[pos]
-        pos += 1
-        t = tag & 3
-        if t == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nb = ln - 59
-                ln = int.from_bytes(data[pos:pos + nb], "little")
-                pos += nb
-            ln += 1
-            out += data[pos:pos + ln]
-            pos += ln
-            continue
-        if t == 1:
-            ln = ((tag >> 2) & 7) + 4
-            off = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif t == 2:
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(data[pos:pos + 2], "little")
-            pos += 2
-        else:
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(data[pos:pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("corrupt snappy: copy offset out of range")
-        if off >= ln:
-            start = len(out) - off
-            out += out[start:start + ln]
-        else:  # overlapping copy = run extension, byte-serial
-            for _ in range(ln):
-                out.append(out[-off])
-    if len(out) != n:
-        raise ValueError(
-            f"corrupt snappy: expected {n} bytes, got {len(out)}"
-        )
-    return bytes(out)
-
-
-_LZ4_MAGIC = 0x184D2204
-
-
-def _lz4_block_into(out: bytearray, data: bytes) -> None:
-    """LZ4 block format into a shared history buffer (linked-block
-    frames let matches reach into previous blocks' output). Truncated
-    sequences surface as the module's 'corrupt lz4' ValueError, never
-    a bare IndexError (code-review r11 pass 2)."""
-    try:
-        _lz4_block_into_unchecked(out, data)
-    except IndexError:
-        raise ValueError("corrupt lz4: truncated block") from None
-
-
-def _lz4_block_into_unchecked(out: bytearray, data: bytes) -> None:
-    pos = 0
-    end = len(data)
-    while pos < end:
-        token = data[pos]
-        pos += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = data[pos]
-                pos += 1
-                lit += b
-                if b != 255:
-                    break
-        if pos + lit > end:
-            # a short slice would silently return partial output
-            # (code-review r11 pass 3) — truncation must be loud
-            raise ValueError("corrupt lz4: truncated literal run")
-        out += data[pos:pos + lit]
-        pos += lit
-        if pos >= end:
-            break  # last sequence carries literals only
-        if pos + 2 > end:
-            raise ValueError("corrupt lz4: truncated match offset")
-        off = int.from_bytes(data[pos:pos + 2], "little")
-        pos += 2
-        if off == 0 or off > len(out):
-            raise ValueError("corrupt lz4: match offset out of range")
-        ml = token & 15
-        if ml == 15:
-            while True:
-                b = data[pos]
-                pos += 1
-                ml += b
-                if b != 255:
-                    break
-        ml += 4
-        if off >= ml:
-            start = len(out) - off
-            out += out[start:start + ml]
-        else:
-            for _ in range(ml):
-                out.append(out[-off])
-
-
-def lz4_frame_decompress(data: bytes) -> bytes:
-    """Pure-Python LZ4 Frame DECODE (magic, FLG/BD descriptor,
-    size-prefixed blocks; checksums skipped, not verified — the
-    record batch's own CRC-32C covers integrity). Linked blocks
-    supported via the shared history buffer."""
-    if int.from_bytes(data[:4], "little") != _LZ4_MAGIC:
-        raise ValueError("corrupt lz4: bad frame magic")
-    flg = data[4]
-    if flg >> 6 != 1:
-        raise ValueError(f"unsupported lz4 frame version {flg >> 6}")
-    pos = 6  # magic + FLG + BD
-    if (flg >> 3) & 1:  # content size present
-        pos += 8
-    if flg & 1:  # dictionary id present
-        pos += 4
-    pos += 1  # header checksum byte
-    block_checksum = (flg >> 4) & 1
-    out = bytearray()
-    while True:
-        if pos + 4 > len(data):
-            # int.from_bytes(b'') == 0 would read as EndMark and
-            # silently return partial output (code-review r11 pass 2)
-            raise ValueError("corrupt lz4: truncated frame (no EndMark)")
-        size = int.from_bytes(data[pos:pos + 4], "little")
-        pos += 4
-        if size == 0:
-            break  # EndMark
-        uncompressed = size >> 31
-        size &= 0x7FFFFFFF
-        block = data[pos:pos + size]
-        if len(block) != size:
-            raise ValueError("corrupt lz4: truncated block payload")
-        pos += size
-        if block_checksum:
-            pos += 4
-        if uncompressed:
-            out += block
-        else:
-            _lz4_block_into(out, block)
-    return bytes(out)
-
-
-# ---- lib-free COMPRESSORS (ENCODE side, VERDICT r11 missing #3) ----
-# Decode has been lib-free since r11 for every codec, but snappy/lz4
-# PRODUCE still demanded an install — asymmetric: a mirror that
-# consumes an lz4 topic couldn't write one back. A literal-only/
-# stored-block encoding is valid in both formats (like zstd_compress's
-# stored frames): every conformant decoder accepts it, it just doesn't
-# shrink. C libs still win when installed (ladder below).
-
-
-def _xxh32(data: bytes, seed: int = 0) -> int:
-    """Pure xxHash32 (public spec) — the lz4 frame header checksum
-    input is 2 bytes, so speed is irrelevant here."""
-    P1, P2, P3, P4, P5 = (2654435761, 2246822519, 3266489917,
-                          668265263, 374761393)
-    M = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & M
-
-    n, i = len(data), 0
-    if n >= 16:
-        v1 = (seed + P1 + P2) & M
-        v2 = (seed + P2) & M
-        v3 = seed & M
-        v4 = (seed - P1) & M
-        while i + 16 <= n:
-            for j, v in enumerate((v1, v2, v3, v4)):
-                lane = int.from_bytes(data[i + 4 * j:i + 4 * j + 4],
-                                      "little")
-                v = (v + lane * P2) & M
-                v = (rotl(v, 13) * P1) & M
-                if j == 0:
-                    v1 = v
-                elif j == 1:
-                    v2 = v
-                elif j == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            i += 16
-        acc = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12)
-               + rotl(v4, 18)) & M
-    else:
-        acc = (seed + P5) & M
-    acc = (acc + n) & M
-    while i + 4 <= n:
-        acc = (acc + int.from_bytes(data[i:i + 4], "little") * P3) & M
-        acc = (rotl(acc, 17) * P4) & M
-        i += 4
-    while i < n:
-        acc = (acc + data[i] * P5) & M
-        acc = (rotl(acc, 11) * P1) & M
-        i += 1
-    acc ^= acc >> 15
-    acc = (acc * P2) & M
-    acc ^= acc >> 13
-    acc = (acc * P3) & M
-    acc ^= acc >> 16
-    return acc
-
-
-def snappy_compress_stored(data: bytes) -> bytes:
-    """Raw snappy block of pure literals: preamble varint =
-    uncompressed length, then literal elements (tag 61 = 2-byte
-    little-endian length) — what python-snappy/pyarrow emit, minus the
-    compression."""
-    out = bytearray()
-    n = len(data)
-    while True:  # varint preamble
-        b = n & 0x7F
-        n >>= 7
-        out.append(b | (0x80 if n else 0))
-        if not n:
-            break
-    pos = 0
+    pos = 16
     while pos < len(data):
-        chunk = data[pos:pos + 65536]
-        ln = len(chunk)
-        if ln <= 60:
-            out.append((ln - 1) << 2)
-        elif ln <= 256:
-            out.append(60 << 2)
-            out.append(ln - 1)
-        else:
-            out.append(61 << 2)
-            out += (ln - 1).to_bytes(2, "little")
-        out += chunk
+        if pos + 4 > len(data):
+            raise ValueError(f"{len(data) - pos} trailing bytes after "
+                             "the last xerial chunk")
+        (ln,) = struct.unpack_from(">i", data, pos)
+        pos += 4
+        if ln < 0 or pos + ln > len(data):
+            raise ValueError(f"xerial chunk length {ln} out of range "
+                             f"({len(data) - pos} bytes left)")
+        out += _snappy_block(data[pos:pos + ln])
         pos += ln
     return bytes(out)
 
 
-def lz4_frame_compress_stored(data: bytes) -> bytes:
-    """LZ4 frame of stored (uncompressed-flag) blocks: v1 FLG with
-    independent blocks and no checksums, BD = 4 MB max block, the
-    REQUIRED xxh32 header-checksum byte, then size-prefixed blocks
-    with the high bit marking them uncompressed, then the EndMark."""
-    flg, bd = 0x60, 0x70  # version 1 | block-independent; 4 MB blocks
-    out = bytearray(_LZ4_MAGIC.to_bytes(4, "little"))
-    out += bytes([flg, bd, (_xxh32(bytes([flg, bd])) >> 8) & 0xFF])
-    pos = 0
-    while pos < len(data):
-        block = data[pos:pos + (4 << 20)]
-        out += (len(block) | 0x80000000).to_bytes(4, "little")
-        out += block
-        pos += len(block)
-    out += b"\x00\x00\x00\x00"  # EndMark
-    return bytes(out)
+def _stream_decompress(codec: str):
+    """lz4 frames and zstd frames, with or without a content size,
+    concatenated or not, through pyarrow's streaming decoder."""
+    return lambda data: pa.CompressedInputStream(
+        pa.BufferReader(data), codec
+    ).read()
+
+
+_DECODERS = {
+    "gzip": lambda data: zlib.decompress(data, 47),  # gzip-or-zlib
+    "snappy": _snappy_decompress,
+    "lz4": _stream_decompress("lz4"),
+    "zstd": _stream_decompress("zstd"),
+}
 
 
 def decompress_records(codec: int, data: bytes) -> bytes:
-    if codec == 1:
-        import zlib
-
-        try:
-            return zlib.decompress(data, 47)  # gzip-or-zlib wrapper
-        except zlib.error as e:
-            raise ValueError(f"corrupt gzip record payload: {e}") from e
-    if codec == 2:
-        try:
-            import snappy  # C fast path when present
-        except ImportError:
-            snappy = None
-        raw = (
-            snappy.decompress if snappy is not None
-            else _snappy_fast  # pyarrow's libsnappy, pure-Python last
-        )
-        if data[: len(_XERIAL_MAGIC)] == _XERIAL_MAGIC:
-            # the Java client's xerial block framing: 16-byte header,
-            # then [int32 len][snappy block]...
-            out = bytearray()
-            pos = 16
-            while pos + 4 <= len(data):
-                (ln,) = struct.unpack_from(">i", data, pos)
-                pos += 4
-                out += raw(data[pos:pos + ln])
-                pos += ln
-            return bytes(out)
-        return raw(data)
-    if codec == 3:
-        try:
-            import lz4.frame  # C fast path when present
-        except ImportError:
-            # pyarrow's liblz4 needs the exact output size, which an
-            # lz4 frame only carries when the producer set the
-            # content-size FLG bit (Kafka clients usually don't)
-            if len(data) > 14 and (data[4] >> 3) & 1:
-                try:
-                    import pyarrow as pa
-
-                    n = int.from_bytes(data[6:14], "little")
-                    return pa.decompress(
-                        data, decompressed_size=n,
-                        codec="lz4_frame", asbytes=True,
-                    )
-                except Exception:
-                    pass  # the pure path names the corruption
-            return lz4_frame_decompress(data)
-        return lz4.frame.decompress(data)
-    if codec == 4:
-        try:
-            import zstandard  # C fast path when present
-        except ImportError:
-            from transferia_spark.sinks.zstd_pure import zstd_decompress
-
-            return zstd_decompress(data)
-        # decompressobj handles frames without a content-size header
-        return zstandard.ZstdDecompressor().decompressobj().decompress(
-            data
-        )
-    raise ValueError(f"unknown compression codec {codec}")
+    name = _CODECS.get(codec)
+    if name is None:
+        raise ValueError(f"unknown compression codec {codec}")
+    try:
+        if not data:
+            raise ValueError("empty payload")
+        return _DECODERS[name](data)
+    except (ValueError, OSError, zlib.error) as e:
+        raise ValueError(f"corrupt {name}: {e}") from e
 
 
 def compress_records(codec_name: str, data: bytes) -> tuple[int, bytes]:
     """name → (attributes codec bits, compressed records bytes)."""
+    bits = _CODEC_BITS.get(codec_name)
+    if bits is None:
+        raise ValueError(
+            f"unknown compression {codec_name!r} "
+            "(gzip/snappy/lz4/zstd)"
+        )
     if codec_name == "gzip":
-        import gzip as _gzip
-
         # mtime=0: byte-deterministic batches (tests round-trip exact)
-        return 1, _gzip.compress(data, mtime=0)
-    if codec_name == "snappy":
-        try:
-            import snappy
-        except ImportError:
-            try:
-                import pyarrow as pa
-
-                return 2, pa.Codec("snappy").compress(data, asbytes=True)
-            except Exception:
-                return 2, snappy_compress_stored(data)
-        return 2, snappy.compress(data)
-    if codec_name == "lz4":
-        try:
-            import lz4.frame
-        except ImportError:
-            try:
-                import pyarrow as pa
-
-                return 3, pa.Codec("lz4").compress(data, asbytes=True)
-            except Exception:
-                return 3, lz4_frame_compress_stored(data)
-        return 3, lz4.frame.compress(data)
-    if codec_name == "zstd":
-        try:
-            import zstandard
-        except ImportError:
-            # real libzstd via pyarrow when available, else a valid
-            # raw-block (stored) frame — producing zstd always works
-            from transferia_spark.sinks.zstd_pure import zstd_compress
-
-            return 4, zstd_compress(data)
-        return 4, zstandard.ZstdCompressor().compress(data)
-    raise ValueError(
-        f"unknown compression {codec_name!r} "
-        "(gzip/snappy/lz4/zstd)"
-    )
+        return bits, gzip.compress(data, mtime=0)
+    return bits, pa.Codec(codec_name).compress(data, asbytes=True)
 
 
 # -------------------------------------------------------- RecordBatch
@@ -523,9 +218,8 @@ def encode_record_batch(
 ) -> bytes:
     """One RecordBatch v2 holding ``records`` = [(key, value), ...] at
     ``base_timestamp`` (ms). Non-transactional — the shape an
-    idempotence-off producer emits; ``compression`` ("gzip" stdlib,
-    snappy/lz4/zstd when their libs are present) compresses the records
-    array per the v2 layout."""
+    idempotence-off producer emits; ``compression`` (gzip, snappy, lz4
+    or zstd) compresses the records array per the v2 layout."""
     n = len(records)
     recs = b"".join(
         encode_record(
@@ -748,8 +442,8 @@ def decode_record_batch(data: bytes) -> dict:
     count = struct.unpack_from(">i", tail, 36)[0]
     if codec:
         # bits 0-2: compression over the records array (count stays
-        # plain); an absent codec lib fails with the install remedy —
-        # never read_zigzag parsing compressed bytes into a baffling
+        # plain); a corrupt payload fails naming its codec — never
+        # read_zigzag parsing compressed bytes into a baffling
         # 'record length mismatch' (code-review r10)
         tail = tail[:40] + decompress_records(codec, tail[40:])
     pos = 40
@@ -1206,8 +900,8 @@ def decode_metadata_response(body: bytes) -> dict:
 
 __all__ = [
     "crc32c",
-    "snappy_decompress",
-    "lz4_frame_decompress",
+    "decompress_records",
+    "compress_records",
     "write_varint",
     "read_zigzag",
     "encode_record",

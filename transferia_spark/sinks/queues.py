@@ -68,9 +68,9 @@ class KafkaSink(Sink):
         self.num_partitions = num_partitions
         self.batch_records = batch_records
         self.transport = transport
-        #: wire-engine record-batch compression (gzip is stdlib; zstd
-        #: works lib-free too — pyarrow's libzstd or a stored frame;
-        #: snappy/lz4 PRODUCE need their libs, all codecs consume).
+        #: wire-engine record-batch compression: gzip (stdlib), snappy,
+        #: lz4 or zstd (pyarrow's bundled C codecs) — each produces and
+        #: consumes with no further install.
         #: The connector engine takes kafka.compression.type via
         #: ``options`` instead.
         self.compression = compression
