@@ -1819,8 +1819,10 @@ def test_lz4_corruption_is_loud_not_indexerror():
 
 def _corrupt_payloads() -> list:
     """(codec bits, payload) cases no decoder may accept: each
-    codec's real output cut short, garbage, and malformed xerial
-    snappy framing."""
+    codec's real output cut short, garbage, a gzip member followed by
+    junk or a cut-short member, and malformed xerial snappy framing."""
+    import gzip
+
     import pyarrow as pa
 
     from transferia_spark.sinks.kafka_wire import compress_records
@@ -1831,6 +1833,13 @@ def _corrupt_payloads() -> list:
         bits, comp = compress_records(codec, data)
         cases.append((bits, f"{codec}-truncated", comp[: len(comp) // 2]))
         cases.append((bits, f"{codec}-garbage", b"garbage " * 8))
+    member = gzip.compress(b"first ")
+    second = gzip.compress(b"second")
+    cases += [
+        (1, "gzip-trailing-junk", member + b"junk"),
+        (1, "gzip-second-member-truncated", member + second[:-3]),
+        (1, "gzip-second-member-header-only", member + second[:10]),
+    ]
     block = pa.compress(data, codec="snappy", asbytes=True)
     chunk = struct.pack(">i", len(block)) + block
     cases += [
@@ -1864,8 +1873,10 @@ def test_codec_errors_are_fatal_value_errors(bits, payload):
 
 def test_frames_without_content_size_decode():
     """A streaming encoder writes zstd and lz4 frames with no content
-    size; consumers also meet several zstd frames back to back. All of
-    them decode through the record-batch path."""
+    size; consumers also meet several zstd frames or gzip members back
+    to back. All of them decode through the record-batch path."""
+    import gzip
+
     import pyarrow as pa
 
     recs = [(f"k{i}".encode(), f"value-{i}-".encode() * 9) for i in range(40)]
@@ -1884,6 +1895,9 @@ def test_frames_without_content_size_decode():
         (3, "lz4"): stream("lz4", records),
         (4, "two zstd frames"): (
             stream("zstd", records[:half]) + stream("zstd", records[half:])
+        ),
+        (1, "two gzip members"): (
+            gzip.compress(records[:half]) + gzip.compress(records[half:])
         ),
     }
     for (bits, what), payload in payloads.items():

@@ -114,6 +114,28 @@ def test_mongo_source_parallel_range_read(spark):
     # parts really were planned (8 × 256MB → multiple ranges)
     assert len(src._plan_parts(factory("x")["app"]["users"])) > 1
 
+    # one Spark task per part, no exchange: N id ranges land in N
+    # distinct partitions (a round-robin repartition(N) put 4 parts in
+    # 3 tasks on local[4])
+    from pyspark.sql import functions as F
+
+    for n_parts in (4, 6, 8):
+        factory, _ = _mk_factory(
+            n_docs=101, size=(n_parts - 1) * src.desired_part_size
+        )
+        src_n = MongoSource(
+            uri="mongodb://fake", database="app",
+            schemas={"users": "_id long, name string, score double"},
+            client_factory=factory,
+        )
+        assert len(src_n._plan_parts(factory("x")["app"]["users"])) == n_parts
+        df = src_n.load_table(spark, TableID("app", "users"))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        groups = df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+        assert len(groups) == n_parts
+        assert sum(g["count"] for g in groups) == 101
+
 
 def test_mongo_source_where_pushdown_and_registry(spark):
     factory, _ = _mk_factory(n_docs=20, size=1)

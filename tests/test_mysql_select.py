@@ -244,6 +244,9 @@ def test_mysql_select_snapshot_loopback_e2e(spark):
         schema=schema,
         predicates=shard_by_pk_hash(["id"], 2, dialect="mysql"),
     )
+    # one task per shard, no exchange in the plan
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == 2
     rows = {r.id: (r.name, r.bal) for r in df.collect()}
     srv.close()
     assert rows == {

@@ -62,11 +62,11 @@ def test_avro_zigzag_and_block_sized_arrays():
     codec = AvroCodec('{"type": "array", "items": "long"}')
     # hand-build: block of -2 items (count -2, size 2 bytes), items 1, 2,
     # then terminator 0
-    from transferia_spark.parsers.schema_registry import _zigzag_encode
+    from transferia_spark.parsers.protowire import write_zigzag
 
     raw = (
-        _zigzag_encode(-2) + _zigzag_encode(2)
-        + _zigzag_encode(1) + _zigzag_encode(2) + _zigzag_encode(0)
+        write_zigzag(-2) + write_zigzag(2)
+        + write_zigzag(1) + write_zigzag(2) + write_zigzag(0)
     )
     assert codec.decode(bytes(raw)) == [1, 2]
 

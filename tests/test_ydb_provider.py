@@ -129,6 +129,9 @@ def test_storage_load_table_fans_out_key_ranges(spark):
     )
     rows = {(r.id, r.v) for r in out.collect()}
     assert rows == {(i, f"a{i}") for i in range(13)}
+    # one task per key range without a sampling job or a shuffle
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.rdd.getNumPartitions() == 3
     assert src.table_list(spark) == [TableID("", "users")]
 
 

@@ -77,6 +77,17 @@ def zigzag_encode(value: int) -> int:
     return (value << 1) ^ (value >> 63)
 
 
+def read_zigzag(data: bytes, pos: int) -> tuple[int, int]:
+    """Zigzag base-128 varint at ``pos`` → (signed value, next_pos) —
+    protobuf sint, Avro int/long and Kafka record-delta encoding."""
+    v, pos = read_varint(data, pos)
+    return zigzag_decode(v), pos
+
+
+def write_zigzag(value: int) -> bytes:
+    return encode_varint(zigzag_encode(value) & 0xFFFFFFFFFFFFFFFF)
+
+
 def _to_signed(value: int, bits: int) -> int:
     if value >= 1 << (bits - 1):
         value -= 1 << bits
@@ -250,4 +261,6 @@ __all__ = [
     "encode_varint",
     "zigzag_decode",
     "zigzag_encode",
+    "read_zigzag",
+    "write_zigzag",
 ]

@@ -28,20 +28,9 @@ from __future__ import annotations
 import json
 import struct
 
-from transferia_spark.parsers.protowire import encode_varint, read_varint
-
-# ----------------------------------------------------------- varints
-# Avro ints/longs are zigzag base-128 varints — same as Kafka record
-# deltas (sinks/kafka_wire.py), reused here with Avro's own names.
-
-
-def _zigzag_decode(data: bytes, pos: int) -> tuple[int, int]:
-    v, pos = read_varint(data, pos)
-    return (v >> 1) ^ -(v & 1), pos
-
-
-def _zigzag_encode(value: int) -> bytes:
-    return encode_varint(((value << 1) ^ (value >> 63)) & (2**64 - 1))
+# Avro ints/longs are zigzag base-128 varints — the protobuf sint and
+# Kafka record-delta encoding
+from transferia_spark.parsers.protowire import read_zigzag, write_zigzag
 
 
 # ------------------------------------------------------- Avro binary
@@ -159,13 +148,13 @@ class AvroCodec:
         if t == "boolean":
             return data[pos] != 0, pos + 1
         if t in ("int", "long"):
-            return _zigzag_decode(data, pos)
+            return read_zigzag(data, pos)
         if t == "float":
             return struct.unpack_from("<f", data, pos)[0], pos + 4
         if t == "double":
             return struct.unpack_from("<d", data, pos)[0], pos + 8
         if t in ("bytes", "string"):
-            ln, pos = _zigzag_decode(data, pos)
+            ln, pos = read_zigzag(data, pos)
             raw = data[pos:pos + ln]
             pos += ln
             return (raw.decode("utf-8") if t == "string" else raw), pos
@@ -173,10 +162,10 @@ class AvroCodec:
             raw = data[pos:pos + s["size"]]
             return raw, pos + s["size"]
         if t == "enum":
-            idx, pos = _zigzag_decode(data, pos)
+            idx, pos = read_zigzag(data, pos)
             return s["symbols"][idx], pos
         if t == "union":
-            idx, pos = _zigzag_decode(data, pos)
+            idx, pos = read_zigzag(data, pos)
             return self._read(s["branches"][idx], data, pos)
         if t == "record":
             out = {}
@@ -186,24 +175,24 @@ class AvroCodec:
         if t == "array":
             out = []
             while True:
-                n, pos = _zigzag_decode(data, pos)
+                n, pos = read_zigzag(data, pos)
                 if n == 0:
                     return out, pos
                 if n < 0:  # block with byte size prefix
                     n = -n
-                    _sz, pos = _zigzag_decode(data, pos)
+                    _sz, pos = read_zigzag(data, pos)
                 for _ in range(n):
                     v, pos = self._read(s["items"], data, pos)
                     out.append(v)
         if t == "map":
             out = {}
             while True:
-                n, pos = _zigzag_decode(data, pos)
+                n, pos = read_zigzag(data, pos)
                 if n == 0:
                     return out, pos
                 if n < 0:
                     n = -n
-                    _sz, pos = _zigzag_decode(data, pos)
+                    _sz, pos = read_zigzag(data, pos)
                 for _ in range(n):
                     k, pos = self._read({"type": "string"}, data, pos)
                     out[k], pos = self._read(s["values"], data, pos)
@@ -222,16 +211,16 @@ class AvroCodec:
         if t == "boolean":
             out.append(1 if value else 0)
         elif t in ("int", "long"):
-            out += _zigzag_encode(int(value))
+            out += write_zigzag(int(value))
         elif t == "float":
             out += struct.pack("<f", float(value))
         elif t == "double":
             out += struct.pack("<d", float(value))
         elif t == "string":
             raw = value.encode("utf-8")
-            out += _zigzag_encode(len(raw)) + raw
+            out += write_zigzag(len(raw)) + raw
         elif t == "bytes":
-            out += _zigzag_encode(len(value)) + bytes(value)
+            out += write_zigzag(len(value)) + bytes(value)
         elif t == "fixed":
             if len(value) != s["size"]:
                 raise ValueError(
@@ -239,27 +228,27 @@ class AvroCodec:
                 )
             out += bytes(value)
         elif t == "enum":
-            out += _zigzag_encode(s["symbols"].index(value))
+            out += write_zigzag(s["symbols"].index(value))
         elif t == "union":
             idx = self._union_branch(s["branches"], value)
-            out += _zigzag_encode(idx)
+            out += write_zigzag(idx)
             out += self._write(s["branches"][idx], value)
         elif t == "record":
             for name, fs in s["fields"]:
                 out += self._write(fs, value.get(name))
         elif t == "array":
             if value:
-                out += _zigzag_encode(len(value))
+                out += write_zigzag(len(value))
                 for v in value:
                     out += self._write(s["items"], v)
-            out += _zigzag_encode(0)
+            out += write_zigzag(0)
         elif t == "map":
             if value:
-                out += _zigzag_encode(len(value))
+                out += write_zigzag(len(value))
                 for k, v in value.items():
                     out += self._write({"type": "string"}, k)
                     out += self._write(s["values"], v)
-            out += _zigzag_encode(0)
+            out += write_zigzag(0)
         else:
             raise ValueError(f"unsupported Avro type {t!r}")
         return out
@@ -317,14 +306,14 @@ def extract_message_indexes(body: bytes) -> tuple[list[int], bytes]:
     a (possibly nested) message declaration; the single byte 0 is the
     shortcut for [0] = first top-level message.  ≈ extractMessageIndexes
     (utils_protobuf.go:119) + the Confluent wire spec."""
-    count, pos = _zigzag_decode(body, 0)
+    count, pos = read_zigzag(body, 0)
     if count == 0:
         return [0], body[pos:]
     if count < 0 or count > 128:
         raise ValueError(f"implausible message-index count {count}")
     indexes = []
     for _ in range(count):
-        v, pos = _zigzag_decode(body, pos)
+        v, pos = read_zigzag(body, pos)
         indexes.append(v)
     return indexes, body[pos:]
 
@@ -332,9 +321,9 @@ def extract_message_indexes(body: bytes) -> tuple[list[int], bytes]:
 def encode_message_indexes(indexes: list[int]) -> bytes:
     if indexes == [0]:
         return b"\x00"
-    out = bytearray(_zigzag_encode(len(indexes)))
+    out = bytearray(write_zigzag(len(indexes)))
     for v in indexes:
-        out += _zigzag_encode(v)
+        out += write_zigzag(v)
     return bytes(out)
 
 

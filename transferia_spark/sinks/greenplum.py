@@ -112,29 +112,10 @@ class GpWireExecutor:
     def _ensure(self):
         if self._sess is None:
             from transferia_spark.streaming.pg_replication import (
-                PgWireSession,
-                dial,
+                open_session,
             )
 
-            d = self._dial or dial
-            read, write, close, _poll = d(
-                self.live["host"],
-                int(self.live.get("port", 5432)),
-                timeout=float(self.live.get("timeout", 30.0)),
-                sslmode=self.live.get("sslmode", "disable"),
-                sslrootcert=self.live.get("sslrootcert"),
-            )
-            try:
-                sess = PgWireSession(read, write)
-                sess.connect(
-                    user=self.live["user"],
-                    database=self.live.get("database", ""),
-                    password=self.live.get("password", ""),
-                )
-            except BaseException:
-                close()
-                raise
-            self._sess, self._close = sess, close
+            self._sess, self._close = open_session(self.live, self._dial)
         return self._sess
 
     def __call__(self, sql: str):

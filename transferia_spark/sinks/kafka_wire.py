@@ -34,7 +34,7 @@ import zlib
 
 import pyarrow as pa
 
-from transferia_spark.parsers.protowire import encode_varint, read_varint
+from transferia_spark.parsers.protowire import read_varint, read_zigzag, write_zigzag
 
 # ------------------------------------------------------------- crc32c
 
@@ -61,26 +61,6 @@ def crc32c(data: bytes) -> int:
     for b in data:
         crc = _TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
     return crc ^ 0xFFFFFFFF
-
-
-# ----------------------------------------------------- varint (zigzag)
-
-
-def _zz(value: int) -> int:
-    return (value << 1) ^ (value >> 63)
-
-
-def _unzz(value: int) -> int:
-    return (value >> 1) ^ -(value & 1)
-
-
-def write_varint(value: int) -> bytes:
-    return encode_varint(_zz(value) & 0xFFFFFFFFFFFFFFFF)
-
-
-def read_zigzag(data: bytes, pos: int) -> tuple[int, int]:
-    v, pos = read_varint(data, pos)
-    return _unzz(v), pos
 
 
 # -------------------------------------------------- compression codecs
@@ -134,6 +114,20 @@ def _snappy_decompress(data: bytes) -> bytes:
     return bytes(out)
 
 
+def _gzip_decompress(data: bytes) -> bytes:
+    """Every member of a gzip payload (producers may concatenate
+    members); a truncated member, or trailing bytes that do not start
+    one, is corrupt."""
+    out = bytearray()
+    while data:
+        d = zlib.decompressobj(47)  # gzip-or-zlib header
+        out += d.decompress(data)
+        if not d.eof:
+            raise ValueError("truncated member")
+        data = d.unused_data
+    return bytes(out)
+
+
 def _stream_decompress(codec: str):
     """lz4 frames and zstd frames, with or without a content size,
     concatenated or not, through pyarrow's streaming decoder."""
@@ -143,7 +137,7 @@ def _stream_decompress(codec: str):
 
 
 _DECODERS = {
-    "gzip": lambda data: zlib.decompress(data, 47),  # gzip-or-zlib
+    "gzip": _gzip_decompress,
     "snappy": _snappy_decompress,
     "lz4": _stream_decompress("lz4"),
     "zstd": _stream_decompress("zstd"),
@@ -188,25 +182,25 @@ def encode_record(
 ) -> bytes:
     body = bytearray()
     body += b"\x00"  # record attributes (unused)
-    body += write_varint(timestamp_delta)
-    body += write_varint(offset_delta)
+    body += write_zigzag(timestamp_delta)
+    body += write_zigzag(offset_delta)
     for blob in (key, value):
         if blob is None:
-            body += write_varint(-1)
+            body += write_zigzag(-1)
         else:
-            body += write_varint(len(blob))
+            body += write_zigzag(len(blob))
             body += blob
-    body += write_varint(len(headers))
+    body += write_zigzag(len(headers))
     for hk, hv in headers:
         hkb = hk.encode("utf-8")
-        body += write_varint(len(hkb))
+        body += write_zigzag(len(hkb))
         body += hkb
         if hv is None:
-            body += write_varint(-1)
+            body += write_zigzag(-1)
         else:
-            body += write_varint(len(hv))
+            body += write_zigzag(len(hv))
             body += hv
-    return bytes(write_varint(len(body))) + bytes(body)
+    return bytes(write_zigzag(len(body))) + bytes(body)
 
 
 def encode_record_batch(
@@ -902,8 +896,6 @@ __all__ = [
     "crc32c",
     "decompress_records",
     "compress_records",
-    "write_varint",
-    "read_zigzag",
     "encode_record",
     "encode_record_batch",
     "decode_record_batch",

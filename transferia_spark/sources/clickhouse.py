@@ -7,8 +7,8 @@
 ``a2_data_provider.go`` / ``sharding/`` — each shard's local table is
 read independently and the union is the logical table.
 
-Spark-first shape: (shard × part) pairs become a small parts frame;
-``mapInPandas`` fans the SELECTs out so every Spark task streams one
+Spark-first shape: ``sources.base.scan_shards`` fans the
+(shard × part) SELECTs out so every Spark task streams one
 shard slice over the ClickHouse HTTP protocol (JSONEachRow) directly
 into Arrow batches — reads are executor→shard, never via the driver,
 and a 16-shard cluster loads with ≥16-way parallelism. Within one
@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 
 from transferia_spark.schema.colschema import TableID
 from transferia_spark.sinks.clickhouse import ChHttpClient, DELETE_TIME_COL, quote_ch
-from transferia_spark.sources.base import Source, register_source
+from transferia_spark.sources.base import Source, register_source, scan_shards
 
 
 def build_select_query(
@@ -304,53 +304,41 @@ class ClickHouseSource(Source):
         self, spark: SparkSession, table: TableID, where: str | None = None
     ) -> DataFrame:
         st = T._parse_datatype_string(self.schemas[table.name])
-        tasks = self.plan_read_tasks(table, where)
-
-        # one RDD slice per (shard × part) task: exact task mapping,
-        # same contract as the wire snapshots (a hash repartition can
-        # collide tasks)
-        rdd = spark.sparkContext.parallelize(tasks, max(1, len(tasks)))
-        parts_df = spark.createDataFrame(rdd, "url string, query string")
         factory = self.client_factory
         fmt = self.read_format
-        schema_json = st.json()
 
-        def read_parts(batches):
-            from pyspark.sql import types as T2
+        def read_part(out_schema, url, query):
+            client = factory(url)
+            stream = getattr(client, "execute_stream", None)
+            if stream is None:
+                # injected test clients may only buffer
+                body = client.execute(f"{query} FORMAT {fmt}")
+                if fmt == "ArrowStream":
+                    yield from decode_arrow_stream(body, out_schema)
+                else:
+                    frame = decode_json_each_row(body, out_schema)
+                    if len(frame):
+                        yield frame
+                return
+            # stream the response: record batches (or bounded line
+            # chunks) decode straight off the socket, so per-task
+            # memory is O(batch), never O(slice)
+            resp = stream(f"{query} FORMAT {fmt}")
+            try:
+                if fmt == "ArrowStream":
+                    yield from decode_arrow_stream(resp, out_schema)
+                else:
+                    for chunk in _iter_line_chunks(resp):
+                        frame = decode_json_each_row(chunk, out_schema)
+                        if len(frame):
+                            yield frame
+            finally:
+                resp.close()
 
-            out_schema = T2.StructType.fromJson(json.loads(schema_json))
-            for pdf in batches:
-                for url, query in zip(pdf["url"], pdf["query"]):
-                    client = factory(url)
-                    stream = getattr(client, "execute_stream", None)
-                    if stream is None:
-                        # injected test clients may only buffer
-                        body = client.execute(f"{query} FORMAT {fmt}")
-                        if fmt == "ArrowStream":
-                            yield from decode_arrow_stream(body, out_schema)
-                        else:
-                            frame = decode_json_each_row(body, out_schema)
-                            if len(frame):
-                                yield frame
-                        continue
-                    # stream the response: record batches (or bounded
-                    # line chunks) decode straight off the socket, so
-                    # per-task memory is O(batch), never O(slice)
-                    resp = stream(f"{query} FORMAT {fmt}")
-                    try:
-                        if fmt == "ArrowStream":
-                            yield from decode_arrow_stream(resp, out_schema)
-                        else:
-                            for chunk in _iter_line_chunks(resp):
-                                frame = decode_json_each_row(
-                                    chunk, out_schema
-                                )
-                                if len(frame):
-                                    yield frame
-                    finally:
-                        resp.close()
-
-        return parts_df.mapInPandas(read_parts, st)
+        return scan_shards(
+            spark, self.plan_read_tasks(table, where),
+            "url string, query string", read_part, st,
+        )
 
 
 # ------------------------------------------------- topology discovery

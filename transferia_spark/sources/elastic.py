@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from transferia_spark.schema.colschema import TableID
 from transferia_spark.sinks.search import SearchHttpClient
-from transferia_spark.sources.base import Source, register_source
+from transferia_spark.sources.base import Source, register_source, scan_shards
 
 SCROLL_KEEPALIVE = "60m"  # scrollDuration in the reference
 PAGE_SIZE = 1000          # maxResultsInSingleFetch analog
@@ -135,57 +135,47 @@ class ElasticSource(Source):
         n, url, index = self.n_slices, self.url, table.name
         page_size, factory = self.page_size, self.client_factory
 
-        def fetch(batches):
+        def fetch(_schema, slice_id):
             import pandas as pd
 
-            for pdf in batches:
-                for slice_id in pdf["id"]:
-                    client = factory(url)
-                    page = json.loads(
-                        client.request(
-                            "POST",
-                            scroll_open_path(index),
-                            slice_request_body(
-                                int(slice_id), n, page_size
-                            ).encode(),
-                        )
+            client = factory(url)
+            page = json.loads(
+                client.request(
+                    "POST",
+                    scroll_open_path(index),
+                    slice_request_body(slice_id, n, page_size).encode(),
+                )
+            )
+            while True:
+                hits = page.get("hits", {}).get("hits", [])
+                if not hits:
+                    break
+                # yield PER SCROLL PAGE: a slice of a large index holds
+                # millions of docs — buffering the whole slice before
+                # the first yield OOMs the Python worker; streaming
+                # pages bounds memory at page_size docs
+                yield pd.DataFrame(
+                    {"_doc": [json.dumps(h["_source"]) for h in hits]}
+                )
+                page = json.loads(
+                    client.request(
+                        "POST",
+                        "/_search/scroll",
+                        json.dumps(
+                            {"scroll": SCROLL_KEEPALIVE,
+                             "scroll_id": page["_scroll_id"]}
+                        ).encode(),
                     )
-                    while True:
-                        hits = page.get("hits", {}).get("hits", [])
-                        if not hits:
-                            break
-                        # yield PER SCROLL PAGE: a slice of a large
-                        # index holds millions of docs — buffering the
-                        # whole slice before the first yield OOMs the
-                        # Python worker; streaming pages bounds memory
-                        # at page_size docs
-                        yield pd.DataFrame(
-                            {"_doc": [json.dumps(h["_source"]) for h in hits]}
-                        )
-                        page = json.loads(
-                            client.request(
-                                "POST",
-                                "/_search/scroll",
-                                json.dumps(
-                                    {"scroll": SCROLL_KEEPALIVE,
-                                     "scroll_id": page["_scroll_id"]}
-                                ).encode(),
-                            )
-                        )
-                    if "_scroll_id" in page:
-                        client.request(
-                            "DELETE", f"/_search/scroll/{page['_scroll_id']}"
-                        )
+                )
+            if "_scroll_id" in page:
+                client.request(
+                    "DELETE", f"/_search/scroll/{page['_scroll_id']}"
+                )
 
-        # one RDD slice per scroll slice: exact task-per-slice mapping
-        # (range().repartition(n) round-robins and may collide two
-        # slices into one task while another sits empty — the wire
-        # snapshots' parallelize-slices contract)
-        rdd = spark.sparkContext.parallelize(
-            [(i,) for i in range(n)], max(1, n)
+        raw = scan_shards(
+            spark, [(i,) for i in range(n)], "id int", fetch,
+            T.StructType([T.StructField("_doc", T.StringType())]),
         )
-        slices = spark.createDataFrame(rdd, "id int")
-        raw = slices.mapInPandas(fetch, "_doc string")
         return raw.select(
             F.from_json(F.col("_doc"), schema).alias("_p")
         ).select("_p.*")

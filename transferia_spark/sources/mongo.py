@@ -7,11 +7,11 @@ capped at maxDelimiters) and ``parallelization_unit_database.go``
 (each part is an independent worker unit).
 
 Spark-first shape: part planning happens once on the driver (one
-sample query — the same cost the reference pays), then the parts
-become a tiny DataFrame and ``mapInPandas`` fans the actual range
-reads out to executors — every Spark task opens its own client and
-scans exactly one ``_id`` range, so a 1000-part collection loads with
-1000-way parallelism and no driver traffic. This is the reference's
+sample query — the same cost the reference pays), then
+``sources.base.scan_shards`` fans the range reads out to executors —
+every Spark task opens its own client and scans exactly one ``_id``
+range, so a 1000-part collection loads with 1000-way parallelism and
+no driver traffic. This is the reference's
 part-worker model with Spark as the scheduler (SURVEY §3.1).
 
 No MongoDB server or driver ships in this container: the client
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from transferia_spark.schema.colschema import TableID
-from transferia_spark.sources.base import Source, register_source
+from transferia_spark.sources.base import Source, register_source, scan_shards
 
 # sharding_storage.go caps delimiter count (maxDelimiters)
 MAX_DELIMITERS = 1000
@@ -140,35 +140,29 @@ class MongoSource(Source):
         coll = client[self.database][table.name]
         parts = self._plan_parts(coll)
 
-        parts_df = spark.createDataFrame(
-            [(json.dumps(lo, default=str), json.dumps(hi, default=str)) for lo, hi in parts],
-            "lo string, hi string",
-        ).repartition(len(parts))
-
         factory, uri, db, name = self.client_factory, self.uri, self.database, table.name
         field_names = [f.name for f in st.fields]
 
-        def read_parts(batches):
+        def read_part(_schema, lo_s, hi_s):
             import pandas as pd
 
-            client = factory(uri)
-            coll = client[db][name]
-            for pdf in batches:
-                for lo_s, hi_s in zip(pdf["lo"], pdf["hi"]):
-                    lo, hi = json.loads(lo_s), json.loads(hi_s)
-                    flt = {}
-                    if lo is not None:
-                        flt.setdefault("_id", {})["$gte"] = lo
-                    if hi is not None:
-                        flt.setdefault("_id", {})["$lt"] = hi
-                    docs = list(coll.find(flt))
-                    if not docs:
-                        continue
-                    yield pd.DataFrame(
-                        {c: [d.get(c) for d in docs] for c in field_names}
-                    )
+            lo, hi = json.loads(lo_s), json.loads(hi_s)
+            flt = {}
+            if lo is not None:
+                flt.setdefault("_id", {})["$gte"] = lo
+            if hi is not None:
+                flt.setdefault("_id", {})["$lt"] = hi
+            docs = list(factory(uri)[db][name].find(flt))
+            if docs:
+                yield pd.DataFrame(
+                    {c: [d.get(c) for d in docs] for c in field_names}
+                )
 
-        df = parts_df.mapInPandas(read_parts, st)
+        specs = [
+            (json.dumps(lo, default=str), json.dumps(hi, default=str))
+            for lo, hi in parts
+        ]
+        df = scan_shards(spark, specs, "lo string, hi string", read_part, st)
         if where:
             df = df.filter(where)
         return df

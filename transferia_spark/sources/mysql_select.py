@@ -9,14 +9,18 @@ PK). Built on the repo's own wire client
 so one session layer serves snapshot AND binlog replication.
 
 Same gated split as the PG side: planning is pure statement strings
-(driver-scorable); transport is executor-side — one task per shard
-dials the server itself (``mysql_dial``, TLS ladder included), streams
-its result set row-packets and converts them to Arrow batches in
-bounded chunks through the shared text caster."""
+(driver-scorable); transport is executor-side — each shard task
+streams its result set row-packets and converts them to Arrow batches
+in bounded chunks through the shared text caster."""
 
 from __future__ import annotations
 
-from typing import Callable
+from transferia_spark.sources.base import (
+    WireSnapshotSource,
+    _quote_fqtn,
+    register_source,
+    scan_shards,
+)
 
 
 def select_sql(
@@ -30,7 +34,6 @@ def select_sql(
     or a mixed-case column must work, r8 verdict item 7); ``where``
     arrives as already-built SQL from the shard planners."""
     from transferia_spark.sinks.jdbc import quote_ident
-    from transferia_spark.sources.pg_copy import _quote_fqtn
 
     cols = (
         ", ".join(quote_ident("mysql", c) for c in columns)
@@ -50,15 +53,11 @@ def select_shard_statements(
     columns: list[str] | None = None,
 ) -> list[str]:
     """One SELECT per CRC32-PK shard (the reference's MySQL dialect of
-    the server-side shard formula — mutually exclusive, exhaustive).
-    PK identifiers are quoted before entering the formula."""
-    from transferia_spark.sinks.jdbc import quote_ident
-    from transferia_spark.sources.jdbc import shard_by_pk_hash
-
-    qpk = [quote_ident("mysql", c) for c in pk_cols]
+    the server-side shard formula) of :class:`MySqlSelectSource`'s
+    shard plan."""
     return [
         select_sql(table, columns, pred)
-        for pred in shard_by_pk_hash(qpk, n_shards, dialect="mysql")
+        for pred in MySqlSelectSource._pk_hash_predicates(pk_cols, n_shards)
     ]
 
 
@@ -269,37 +268,11 @@ class SnapshotFence:
 
     # ------------------------------------------------------- internals
 
-    def _coordinator(self):
-        from transferia_spark.streaming.mysql_binlog import (
-            MySqlWireSession,
-            mysql_dial,
-        )
-
-        factory = self._dial or mysql_dial
-        parts = factory(
-            self.live["host"], int(self.live.get("port", 3306)),
-            timeout=float(self.live.get("timeout", 30.0)),
-        )
-        read, write, close = parts[0], parts[1], parts[2]
-        starttls = parts[4] if len(parts) > 4 else None
-        try:
-            sess = MySqlWireSession(read, write, starttls=starttls)
-            sess.connect(
-                user=self.live["user"],
-                password=self.live.get("password", ""),
-                database=self.live.get("database"),
-                ssl_mode=self.live.get("ssl_mode", "disable"),
-                sslrootcert=self.live.get("sslrootcert"),
-                server_hostname=self.live["host"],
-            )
-        except BaseException:
-            close()
-            raise
-        return sess, close
-
     def _run(self) -> None:
         import socket
         import time
+
+        from transferia_spark.streaming.mysql_binlog import open_session
 
         while not self._closed:
             # one round: collect n shard tasks, quiesce, release
@@ -362,7 +335,7 @@ class SnapshotFence:
                         continue
                     if sess is None:
                         # first reporter: quiesce BEFORE any view opens
-                        sess, close = self._coordinator()
+                        sess, close = open_session(self.live, self._dial)
                         sess.query_ok("FLUSH TABLES WITH READ LOCK")
                         deadline = time.time() + self.lock_timeout
                     old = socks.pop(shard, None)
@@ -458,94 +431,53 @@ def mysql_select_snapshot(
     table: str,
     schema,
     predicates: list[str] | None = None,
-    transport_factory: Callable[..., tuple] | None = None,
 ):
     """Distributed wire-direct snapshot: one SELECT result set per
-    shard, executed INSIDE the executors (``mapInPandas``, one task per
-    shard — each dials, authenticates, streams, closes). ``live`` is
-    the same host/port/user/password/database (+ ssl_mode ladder) dict
-    the ``live:`` binlog verbs take. Columns are always selected
+    shard, each in its own executor task. ``live`` is the same
+    host/port/user/password/database (+ ssl_mode ladder) dict the
+    ``live:`` binlog verbs take. Columns are always selected
     EXPLICITLY in schema order so the row layout matches the schema
     regardless of the table's column order."""
     cols = [f.name for f in schema.fields]
     preds = predicates if predicates else [None]
     stmts = [select_sql(table, cols, p) for p in preds]
     live_conf = dict(live)
-    schema_json = schema.json()
 
-    def run(frames):
-        from pyspark.sql import types as T
+    def read(out_schema, shard, sql):
+        from transferia_spark.streaming.mysql_binlog import open_session
 
-        from transferia_spark.streaming.mysql_binlog import (
-            MySqlWireSession,
-            mysql_dial,
-        )
-
-        out_schema = T.StructType.fromJson(
-            __import__("json").loads(schema_json)
-        )
-        factory = transport_factory or mysql_dial
-        for pdf in frames:
-            for shard, sql in zip(pdf["shard"], pdf["select_sql"]):
-                parts = factory(
-                    live_conf["host"],
-                    int(live_conf.get("port", 3306)),
-                    timeout=float(live_conf.get("timeout", 30.0)),
+        sess, close = open_session(live_conf)
+        try:
+            if live_conf.get("_fence_addr"):
+                # sharded consistent snapshot: the view opens under the
+                # driver fence's global read lock — ALL shards then
+                # share one instant, and the binlog position the fence
+                # captures is exact. _shard_base offsets this table's
+                # shard ids into the ACTIVATION-scoped fence's gang
+                # when one fence spans several tables.
+                fence_open_view(
+                    sess,
+                    live_conf["_fence_addr"],
+                    shard + int(live_conf.get("_shard_base", 0)),
+                    timeout=float(live_conf.get("lock_timeout", 30.0)) + 5.0,
                 )
-                read, write, close = parts[0], parts[1], parts[2]
-                starttls = parts[4] if len(parts) > 4 else None
-                try:
-                    sess = MySqlWireSession(read, write, starttls=starttls)
-                    sess.connect(
-                        user=live_conf["user"],
-                        password=live_conf.get("password", ""),
-                        database=live_conf.get("database"),
-                        ssl_mode=live_conf.get("ssl_mode", "disable"),
-                        sslrootcert=live_conf.get("sslrootcert"),
-                        server_hostname=live_conf["host"],
-                    )
-                    if live_conf.get("_fence_addr"):
-                        # sharded consistent snapshot: the view opens
-                        # under the driver fence's global read lock —
-                        # ALL shards then share one instant, and the
-                        # binlog position the fence captures is exact.
-                        # _shard_base offsets this table's shard ids
-                        # into the ACTIVATION-scoped fence's gang when
-                        # one fence spans several tables.
-                        fence_open_view(
-                            sess,
-                            live_conf["_fence_addr"],
-                            int(shard) + int(live_conf.get("_shard_base", 0)),
-                            timeout=float(
-                                live_conf.get("lock_timeout", 30.0)
-                            ) + 5.0,
-                        )
-                    elif live_conf.get("consistent"):
-                        # single-shard consistent read (REPEATABLE READ
-                        # + an immediate view — mysql/storage.go); one
-                        # connection = one instant by itself
-                        sess.query_ok(
-                            "SET SESSION TRANSACTION ISOLATION LEVEL "
-                            "REPEATABLE READ"
-                        )
-                        sess.query_ok(
-                            "START TRANSACTION WITH CONSISTENT SNAPSHOT"
-                        )
-                    _names, rows = sess.query_rows(sql)
-                    yield from rows_to_frames(rows, out_schema)
-                finally:
-                    close()
+            elif live_conf.get("consistent"):
+                # single-shard consistent read (REPEATABLE READ + an
+                # immediate view — mysql/storage.go); one connection =
+                # one instant by itself
+                sess.query_ok(
+                    "SET SESSION TRANSACTION ISOLATION LEVEL REPEATABLE READ"
+                )
+                sess.query_ok("START TRANSACTION WITH CONSISTENT SNAPSHOT")
+            _names, rows = sess.query_rows(sql)
+            yield from rows_to_frames(rows, out_schema)
+        finally:
+            close()
 
-    # explicit slice per shard: exact task-per-shard mapping (a hash
-    # repartition on the id would collide shards into one task)
-    rdd = spark.sparkContext.parallelize(
-        [(i, s) for i, s in enumerate(stmts)], max(1, len(stmts))
+    return scan_shards(
+        spark, list(enumerate(stmts)), "shard int, select_sql string",
+        read, schema,
     )
-    spec = spark.createDataFrame(rdd, "shard int, select_sql string")
-    return spec.mapInPandas(run, schema=schema)
-
-
-from transferia_spark.sources.base import Source, register_source  # noqa: E402
 
 
 def idle_task_slots(spark) -> int:
@@ -596,11 +528,11 @@ def wait_for_idle_slots(
 
 
 @register_source
-class MySqlSelectSource(Source):
+class MySqlSelectSource(WireSnapshotSource):
     """Registry face (``type: mysqlselect``) — the snapshot sibling of
     the ``mysqlwire`` live replication format, sharing its connection
-    dict. Per-table config mirrors ``pgcopy``: Spark DDL schema +
-    pk/n_shards.
+    dict; table config and shard plan as in
+    :class:`~transferia_spark.sources.base.WireSnapshotSource`.
 
     ``live.consistent: true``:
 
@@ -622,12 +554,11 @@ class MySqlSelectSource(Source):
     """
 
     TYPE = "mysqlselect"
+    DIALECT = "mysql"
 
     def __init__(self, live: dict, tables: dict[str, dict]):
-        self.live = dict(live)
-        self.tables = {k: dict(v) for k, v in tables.items()}
+        super().__init__(live, tables)
         self._start_position: dict | None = None
-        self._discovered: dict[str, dict] | None = None
         self._fences: list[SnapshotFence] = []
 
     @property
@@ -653,104 +584,26 @@ class MySqlSelectSource(Source):
             f.close()
         self._fences = []
 
-    def _dial_session(self):
-        from transferia_spark.streaming.mysql_binlog import (
-            MySqlWireSession,
-            mysql_dial,
+    def _open_session(self):
+        from transferia_spark.streaming.mysql_binlog import open_session
+
+        return open_session(self.live)
+
+    def _discover_tables(self, sess) -> dict[str, dict]:
+        from transferia_spark.sources.schema_discovery import (
+            discover_mysql_tables,
         )
 
-        read, write, close, _poll, starttls = mysql_dial(
-            self.live["host"], int(self.live.get("port", 3306)),
-            timeout=float(self.live.get("timeout", 30.0)),
-        )
-        try:
-            sess = MySqlWireSession(read, write, starttls=starttls)
-            sess.connect(
-                user=self.live["user"],
-                password=self.live.get("password", ""),
-                database=self.live.get("database"),
-                ssl_mode=self.live.get("ssl_mode", "disable"),
-                sslrootcert=self.live.get("sslrootcert"),
-                server_hostname=self.live["host"],
-            )
-        except BaseException:
-            close()
-            raise
-        return sess, close
-
-    def _discover(self) -> dict[str, dict]:
-        """Catalog discovery over one short-lived wire session (r8
-        verdict item 1 — ``mysql/schema.go`` LoadSchema parity):
-        transfer.yaml needs no hand-written DDL strings."""
-        if self._discovered is None:
-            from transferia_spark.sources.schema_discovery import (
-                discover_mysql_tables,
-            )
-
-            sess, close = self._dial_session()
-            try:
-                self._discovered = discover_mysql_tables(
-                    sess, self.live.get("database")
-                )
-            finally:
-                close()
-        return self._discovered
-
-    def _table_schema_pk(self, fqtn: str):
-        from pyspark.sql import types as T
-
-        cfg = self.tables[fqtn]
-        if cfg.get("schema"):
-            return (
-                T._parse_datatype_string(cfg["schema"]),
-                cfg.get("pk") or [],
-            )
-        disc = self._discover().get(fqtn)
-        if disc is None:
-            raise ValueError(
-                f"table {fqtn!r} has no schema: in transfer.yaml and "
-                "was not found in information_schema — check the name "
-                "and the connecting user's privileges"
-            )
-        return disc["schema"], (cfg.get("pk") or disc["pk"])
+        return discover_mysql_tables(sess, self.live.get("database"))
 
     def _ensure_position(self) -> None:
         if not self.live.get("consistent") or self.start_position is not None:
             return
-        sess, close = self._dial_session()
+        sess, close = self._open_session()
         try:
             self.start_position = snapshot_position(sess)
         finally:
             close()
-
-    def table_list(self, spark) -> list:
-        from transferia_spark.schema.colschema import TableID
-
-        if not self.tables:
-            # TableList parity: no tables configured = the whole
-            # database, discovered live (mysql/schema.go LoadSchema)
-            self.tables = {
-                fqtn: {} for fqtn in sorted(self._discover())
-            }
-        return [TableID.parse(t) for t in self.tables]
-
-    def _shard_plan(self, fqtn: str, where: str | None):
-        """(schema, predicates) for one table — the sharding recipe
-        shared by per-table and activation-scoped loads."""
-        cfg = self.tables[fqtn]
-        schema, pk = self._table_schema_pk(fqtn)
-        n = int(cfg.get("n_shards", 1))
-        if n > 1 and pk:
-            from transferia_spark.sinks.jdbc import quote_ident
-            from transferia_spark.sources.jdbc import shard_by_pk_hash
-
-            qpk = [quote_ident("mysql", c) for c in pk]
-            preds = shard_by_pk_hash(qpk, n, dialect="mysql")
-            if where:
-                preds = [f"({where}) AND ({p})" for p in preds]
-        else:
-            preds = [where] if where else None
-        return schema, preds
 
     def load_table(self, spark, table, where: str | None = None):
         schema, preds = self._shard_plan(table.fqtn(), where)

@@ -16,14 +16,13 @@ Split by the gated-provider pattern:
   ``COPY (SELECT …) TO STDOUT (FORMAT csv, NULL '\\N')`` statement per
   shard predicate (reusing ``sources/jdbc``'s shard formulas) —
   driver-scorable strings, no socket.
-- **Transport is executor-side**: :func:`pg_copy_snapshot` distributes
-  one shard per task with ``mapInPandas``; each task dials the server
-  itself (connection-per-shard — the reference's parallel snapshot
-  shape), drains its COPY stream and parses the CSV payload into Arrow
-  batches in bounded chunks. The driver never touches row data, so
-  adding executors adds COPY streams — the 100 TB path is N workers ×
-  one server backend each, exactly what the server-side formula
-  shards for.
+- **Transport is executor-side**: each shard task of
+  :func:`pg_copy_snapshot` drains its own COPY stream
+  (connection-per-shard — the reference's parallel snapshot shape) and
+  parses the CSV payload into Arrow batches in bounded chunks. The
+  driver never touches row data, so adding executors adds COPY
+  streams — the 100 TB path is N workers × one server backend each,
+  exactly what the server-side formula shards for.
 
 CSV over text format on purpose: PG's text format needs a bespoke
 backslash unescape (``\\t``/``\\n``/``\\\\`` …) that no vectorized
@@ -33,26 +32,23 @@ keeps NULL distinct from the empty string (CSV's classic ambiguity).
 
 from __future__ import annotations
 
+import contextlib
 import io
 import re
-from typing import Callable, Iterable, Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
+
+from transferia_spark.sources.base import (
+    WireSnapshotSource,
+    _quote_fqtn,
+    register_source,
+    scan_shards,
+)
 
 #: NULL marker in the shipped COPY statements — the two characters
 #: backslash-N, unquoted, so it can never collide with a quoted ""
 COPY_NULL = "\\N"
-
-
-def _quote_fqtn(dialect: str, table: str) -> str:
-    """Dialect-quote a dotted ``schema.table`` name — identifiers come
-    from config and must be quoted like the sinks quote theirs: a table
-    named ``user`` or a mixed-case column is legal SQL the reference
-    handles (``abstract/storage.go`` identifier parsing) and a raw
-    interpolation breaks (r8 verdict item 7)."""
-    from transferia_spark.sinks.jdbc import quote_ident
-
-    return ".".join(quote_ident(dialect, p) for p in table.split("."))
 
 
 def copy_out_sql(
@@ -84,17 +80,11 @@ def copy_shard_statements(
     n_shards: int,
     columns: list[str] | None = None,
 ) -> list[str]:
-    """One COPY statement per PK-hash shard (mutually exclusive,
-    jointly exhaustive — ``shard_by_pk_hash`` is the reference's
-    server-side formula, so rows shard without reading them first).
-    PK identifiers are quoted before entering the formula."""
-    from transferia_spark.sinks.jdbc import quote_ident
-    from transferia_spark.sources.jdbc import shard_by_pk_hash
-
-    qpk = [quote_ident("postgres", c) for c in pk_cols]
+    """One COPY statement per PK-hash shard of :class:`PgCopySource`'s
+    shard plan."""
     return [
         copy_out_sql(table, columns, pred)
-        for pred in shard_by_pk_hash(qpk, n_shards, dialect="postgres")
+        for pred in PgCopySource._pk_hash_predicates(pk_cols, n_shards)
     ]
 
 
@@ -283,33 +273,6 @@ def export_snapshot_with_position(session) -> tuple[str, str]:
     return export_snapshot(session), lsn
 
 
-def _coordinator_session(live: dict):
-    from transferia_spark.streaming.pg_replication import (
-        PgWireSession,
-        dial,
-    )
-
-    read, write, close, _poll = dial(
-        live["host"], int(live.get("port", 5432)),
-        timeout=float(live.get("timeout", 30.0)),
-        sslmode=live.get("sslmode", "disable"),
-        sslrootcert=live.get("sslrootcert"),
-    )
-    try:
-        sess = PgWireSession(read, write)
-        sess.connect(
-            user=live["user"], database=live["database"],
-            password=live.get("password", ""),
-        )
-    except BaseException:
-        close()
-        raise
-    return sess, close
-
-
-import contextlib  # noqa: E402
-
-
 @contextlib.contextmanager
 def exported_snapshot(live: dict):
     """Context manager: dial a coordinator connection, export a
@@ -321,7 +284,9 @@ def exported_snapshot(live: dict):
                                   snapshot_id=snap_id)
             df.write.parquet(out)   # materialize INSIDE the block
     """
-    sess, close = _coordinator_session(live)
+    from transferia_spark.streaming.pg_replication import open_session
+
+    sess, close = open_session(live)
     try:
         yield export_snapshot(sess)
     finally:
@@ -335,20 +300,13 @@ def pg_copy_snapshot(
     schema,
     predicates: list[str] | None = None,
     columns: list[str] | None = None,
-    transport_factory: Callable[..., tuple] | None = None,
     snapshot_id: str | None = None,
 ):
     """Distributed wire-direct snapshot: one COPY stream per shard
-    predicate, executed INSIDE the executors (``mapInPandas`` over a
-    one-row-per-shard spec frame, repartitioned so each task owns its
-    shard). ``live`` carries host/port/user/password/database and the
-    optional sslmode/sslrootcert ladder — the same dict the ``live:``
-    replication verbs take, because it IS the same session layer.
-
-    ``transport_factory`` is for in-process tests only (it must be
-    picklable to reach executors); the default is the module dial, and
-    the loopback e2e test exercises exactly that path against a
-    scripted server."""
+    predicate, each in its own executor task. ``live`` carries
+    host/port/user/password/database and the optional
+    sslmode/sslrootcert ladder — the same dict the ``live:``
+    replication verbs take, because it IS the same session layer."""
     if snapshot_id is not None and not re.fullmatch(
         r"[0-9A-Fa-f-]+", snapshot_id
     ):
@@ -358,81 +316,34 @@ def pg_copy_snapshot(
         raise ValueError(f"malformed snapshot id {snapshot_id!r}")
     stmts = snapshot_statements(table, schema, predicates, columns)
     live_conf = dict(live)
-    schema_json = schema.json()
 
-    def run(frames):
-        from pyspark.sql import types as T
+    def read(out_schema, sql):
+        from transferia_spark.streaming.pg_replication import open_session
 
-        from transferia_spark.streaming.pg_replication import (
-            PgWireSession,
-            dial,
-        )
-
-        out_schema = T.StructType.fromJson(
-            __import__("json").loads(schema_json)
-        )
-        factory = transport_factory or dial
-        for pdf in frames:
-            for sql in pdf["copy_sql"]:
-                read, write, close, _poll = factory(
-                    live_conf["host"],
-                    int(live_conf.get("port", 5432)),
-                    timeout=float(live_conf.get("timeout", 30.0)),
-                    sslmode=live_conf.get("sslmode", "disable"),
-                    sslrootcert=live_conf.get("sslrootcert"),
+        sess, close = open_session(live_conf)
+        try:
+            if snapshot_id:
+                # import the coordinator's exported snapshot: all
+                # shards observe ONE MVCC instant
+                sess.simple_query(
+                    "BEGIN ISOLATION LEVEL REPEATABLE READ READ ONLY"
                 )
-                try:
-                    sess = PgWireSession(read, write)
-                    sess.connect(
-                        user=live_conf["user"],
-                        database=live_conf["database"],
-                        password=live_conf.get("password", ""),
-                    )
-                    if snapshot_id:
-                        # import the coordinator's exported snapshot:
-                        # all shards observe ONE MVCC instant
-                        sess.simple_query(
-                            "BEGIN ISOLATION LEVEL REPEATABLE READ "
-                            "READ ONLY"
-                        )
-                        sess.simple_query(
-                            f"SET TRANSACTION SNAPSHOT '{snapshot_id}'"
-                        )
-                    yield from decode_copy_csv(sess.copy_out(sql), out_schema)
-                finally:
-                    close()
+                sess.simple_query(f"SET TRANSACTION SNAPSHOT '{snapshot_id}'")
+            yield from decode_copy_csv(sess.copy_out(sql), out_schema)
+        finally:
+            close()
 
-    # one element per RDD slice: a hash-repartition on the shard id
-    # maps n distinct ids into n partitions WITH collisions (two COPY
-    # streams serialized in one task while another sits empty); an
-    # explicit parallelize slice per shard makes task-per-shard exact
-    rdd = spark.sparkContext.parallelize(
-        [(i, s) for i, s in enumerate(stmts)], max(1, len(stmts))
+    return scan_shards(
+        spark, [(sql,) for sql in stmts], "copy_sql string", read, schema
     )
-    spec = spark.createDataFrame(rdd, "shard int, copy_sql string")
-    return spec.mapInPandas(run, schema=schema)
-
-
-from transferia_spark.sources.base import Source, register_source  # noqa: E402
 
 
 @register_source
-class PgCopySource(Source):
+class PgCopySource(WireSnapshotSource):
     """Registry face of the wire-direct snapshot (``type: pgcopy`` in
     transfer.yaml) — the snapshot sibling of the ``live:`` replication
-    verbs, sharing their connection dict. Per-table config carries the
-    Spark DDL schema (the wire has no JDBC metadata channel) and the
-    sharding rule::
-
-        src:
-          type: pgcopy
-          params:
-            live: {host: db, port: 5432, user: u, database: shop}
-            tables:
-              public.customer:
-                schema: "c_custkey long, c_name string"
-                pk: [c_custkey]
-                n_shards: 8
+    verbs, sharing their connection dict; table config and shard plan
+    as in :class:`~transferia_spark.sources.base.WireSnapshotSource`.
 
     ``live.consistent: true`` makes the source dial ONE coordinator
     connection on first use, capture the replication start position
@@ -445,59 +356,31 @@ class PgCopySource(Source):
     """
 
     TYPE = "pgcopy"
+    DIALECT = "postgres"
 
     def __init__(self, live: dict, tables: dict[str, dict]):
-        self.live = dict(live)
-        self.tables = {k: dict(v) for k, v in tables.items()}
+        super().__init__(live, tables)
         self._coord_close = None
         self._snapshot_id: str | None = None
         self.start_lsn: str | None = None
-        self._discovered: dict[str, dict] | None = None
 
-    def _discover(self) -> dict[str, dict]:
-        """Catalog discovery over one short-lived wire session (r8
-        verdict item 1: ``schema:`` in transfer.yaml becomes optional —
-        the reference never requires hand-written DDL,
-        ``postgres/schema.go``). Cached for the source's lifetime: the
-        activation schema is one instant by design."""
-        if self._discovered is None:
-            from transferia_spark.sources.schema_discovery import (
-                discover_pg_tables,
-            )
+    def _open_session(self):
+        from transferia_spark.streaming.pg_replication import open_session
 
-            sess, close = _coordinator_session(self.live)
-            try:
-                self._discovered = discover_pg_tables(sess)
-            finally:
-                close()
-        return self._discovered
+        return open_session(self.live)
 
-    def _table_schema_pk(self, fqtn: str):
-        """(StructType, pk columns) for one table: explicit YAML wins,
-        anything omitted is discovered from the source catalog."""
-        from pyspark.sql import types as T
+    def _discover_tables(self, sess) -> dict[str, dict]:
+        from transferia_spark.sources.schema_discovery import (
+            discover_pg_tables,
+        )
 
-        cfg = self.tables[fqtn]
-        if cfg.get("schema"):
-            return (
-                T._parse_datatype_string(cfg["schema"]),
-                cfg.get("pk") or [],
-            )
-        disc = self._discover().get(fqtn)
-        if disc is None:
-            raise ValueError(
-                f"table {fqtn!r} has no schema: in transfer.yaml and "
-                "was not found in the source catalog "
-                "(information_schema) — check the name and the "
-                "connecting role's privileges"
-            )
-        return disc["schema"], (cfg.get("pk") or disc["pk"])
+        return discover_pg_tables(sess)
 
     def _ensure_snapshot(self) -> str | None:
         if not self.live.get("consistent"):
             return None
         if self._snapshot_id is None:
-            sess, close = _coordinator_session(self.live)
+            sess, close = self._open_session()
             self._coord_close = close
             self._snapshot_id, self.start_lsn = (
                 export_snapshot_with_position(sess)
@@ -512,31 +395,8 @@ class PgCopySource(Source):
             self._coord_close = None
             self._snapshot_id = None
 
-    def table_list(self, spark) -> list:
-        from transferia_spark.schema.colschema import TableID
-
-        if not self.tables:
-            # TableList parity (abstract/storage.go:286): no tables
-            # configured = transfer the whole catalog, discovered live
-            self.tables = {
-                fqtn: {} for fqtn in sorted(self._discover())
-            }
-        return [TableID.parse(t) for t in self.tables]
-
     def load_table(self, spark, table, where: str | None = None):
-        cfg = self.tables[table.fqtn()]
-        schema, pk = self._table_schema_pk(table.fqtn())
-        n = int(cfg.get("n_shards", 1))
-        if n > 1 and pk:
-            from transferia_spark.sinks.jdbc import quote_ident
-            from transferia_spark.sources.jdbc import shard_by_pk_hash
-
-            qpk = [quote_ident("postgres", c) for c in pk]
-            preds = shard_by_pk_hash(qpk, n, dialect="postgres")
-            if where:
-                preds = [f"({where}) AND ({p})" for p in preds]
-        else:
-            preds = [where] if where else None
+        schema, preds = self._shard_plan(table.fqtn(), where)
         return pg_copy_snapshot(
             spark, self.live, table.fqtn(), schema, predicates=preds,
             snapshot_id=self._ensure_snapshot(),

@@ -19,8 +19,8 @@
 
 Spark-first: every planning step (type mapping, path resolution, shard
 units, copy/cleanup plans) is a pure function; the actual reads fan out
-one Spark task per key range via ``mapInPandas``, mirroring the Mongo
-storage's parallel-unit shape (sources/mongo.py). The ``ydb`` Python SDK
+one Spark task per key range via ``sources.base.scan_shards``, like
+the Mongo storage's parallel-unit shape (sources/mongo.py). The ``ydb`` Python SDK
 is not in this environment, so the transport is injectable and the
 default raises with a remedy — the plumbing (units, schema, batch
 iterator) is real and tested.
@@ -34,7 +34,7 @@ from collections.abc import Callable, Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from transferia_spark.schema.colschema import ColSchema, TableID, TableSchema
-from transferia_spark.sources.base import Source, register_source
+from transferia_spark.sources.base import Source, register_source, scan_shards
 
 # ``data-transfer``: the folder BeginSnapshot copies tables into for a
 # consistent sharded read (storage_sharded.go:16)
@@ -196,7 +196,7 @@ def _default_reader(*_args, **_kwargs):
 @register_source
 class YdbStorageSource(Source):
     """Sharded YDB snapshot read: key-range units fanned out one Spark
-    task per shard via ``mapInPandas`` (the Mongo-storage shape,
+    task per shard via ``scan_shards`` (the Mongo-storage shape,
     sources/mongo.py:69).
 
     ``reader(table_path, lo, hi, columns) -> Iterable[dict]`` is the
@@ -249,22 +249,17 @@ class YdbStorageSource(Source):
             [c for c in schema if c.name in set(wanted)]
         ).to_struct_type()
         reader = self.reader
-        # range-partition on the unit id: exactly one unit per Spark
-        # task (hash partitioning can collide two shards into one task
-        # and leave another idle when the unit count is small)
-        units_df = spark.createDataFrame(
-            [(i,) for i in range(len(units))], "unit int"
-        ).repartitionByRange(len(units), "unit")
 
-        def read_units(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                for unit in b["unit"]:
-                    lo, hi = units[int(unit)]
-                    rows = list(reader(table_path, lo, hi, wanted))
-                    if rows:
-                        yield pd.DataFrame(rows, columns=wanted)
+        def read_unit(_schema, unit: int) -> Iterator[pd.DataFrame]:
+            lo, hi = units[unit]
+            rows = list(reader(table_path, lo, hi, wanted))
+            if rows:
+                yield pd.DataFrame(rows, columns=wanted)
 
-        return units_df.mapInPandas(read_units, schema=struct)
+        return scan_shards(
+            spark, [(i,) for i in range(len(units))], "unit int",
+            read_unit, struct,
+        )
 
 
 __all__ = [

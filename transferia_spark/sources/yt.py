@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from transferia_spark.schema.colschema import TableID
 from transferia_spark.schema.typesystem import strictify, yt_to_spark
-from transferia_spark.sources.base import Source, register_source
+from transferia_spark.sources.base import Source, register_source, scan_shards
 
 
 def yt_schema_to_spark(yt_schema: list[dict]) -> T.StructType:
@@ -98,8 +98,6 @@ class YtStaticSource(Source):
         non-core type)."""
         import json as _json
 
-        from pyspark.sql import types as T2
-
         target = yt_schema_to_spark(spec["schema"])
         yt_types = {c["name"]: c["type"] for c in spec["schema"]}
         live = dict(spec["live"])
@@ -109,45 +107,34 @@ class YtStaticSource(Source):
         ranges = plan_read_ranges(
             row_count, int(spec.get("rows_per_task", 1_000_000))
         )
-        rdd = spark.sparkContext.parallelize(
-            [(s, e) for s, e in ranges], max(1, len(ranges))
-        )
-        spec_df = spark.createDataFrame(rdd, "start long, end long")
-        schema_json = target.json()
 
-        def read_ranges(frames):
+        def read_range(out_schema, start, end):
             import pandas as pd
 
-            out_schema = T2.StructType.fromJson(_json.loads(schema_json))
-            cli = YtHttpClient(**live)
-            for pdf in frames:
-                for s, e in zip(pdf["start"], pdf["end"]):
-                    body = cli.read_table_json(
-                        range_ypath(path, int(s), int(e))
-                    )
-                    rows = [
-                        _json.loads(ln)
-                        for ln in body.splitlines()
-                        if ln.strip()
-                    ]
-                    if rows:
-                        yield pd.DataFrame(
-                            {
-                                f.name: pd.Series(
-                                    [
-                                        yt_json_value(
-                                            yt_types.get(f.name, "any"),
-                                            r.get(f.name),
-                                        )
-                                        for r in rows
-                                    ],
-                                    dtype=object,
+            body = YtHttpClient(**live).read_table_json(
+                range_ypath(path, start, end)
+            )
+            rows = [_json.loads(ln) for ln in body.splitlines() if ln.strip()]
+            if rows:
+                yield pd.DataFrame(
+                    {
+                        f.name: pd.Series(
+                            [
+                                yt_json_value(
+                                    yt_types.get(f.name, "any"),
+                                    r.get(f.name),
                                 )
-                                for f in out_schema.fields
-                            }
+                                for r in rows
+                            ],
+                            dtype=object,
                         )
+                        for f in out_schema.fields
+                    }
+                )
 
-        df = spec_df.mapInPandas(read_ranges, target)
+        df = scan_shards(
+            spark, ranges, "start long, end long", read_range, target
+        )
         return df.filter(where) if where else df
 
 

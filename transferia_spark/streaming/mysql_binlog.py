@@ -1077,6 +1077,35 @@ def mysql_dial(host: str, port: int, timeout: float = 30.0):
     return read, write, close, poll, starttls
 
 
+def open_session(live: dict, dial=None):
+    """``live:`` config → ``(session, close)``: one authenticated
+    :class:`MySqlWireSession` (TLS ladder included) for snapshot
+    SELECTs and coordinator queries. ``dial`` defaults to
+    :func:`mysql_dial`, looked up per call so a patched module global
+    takes effect; injected fakes may return 3-, 4- or 5-tuples (the
+    fifth is ``starttls``). The transport is closed if the handshake
+    fails."""
+    parts = (dial or mysql_dial)(
+        live["host"], int(live.get("port", 3306)),
+        timeout=float(live.get("timeout", 30.0)),
+    )
+    read, write, close = parts[:3]
+    starttls = parts[4] if len(parts) > 4 else None
+    try:
+        sess = MySqlWireSession(read, write, starttls=starttls)
+        sess.connect(
+            user=live["user"], password=live.get("password", ""),
+            database=live.get("database"),
+            ssl_mode=live.get("ssl_mode", "disable"),
+            sslrootcert=live.get("sslrootcert"),
+            server_hostname=live["host"],
+        )
+    except BaseException:
+        close()
+        raise
+    return sess, close
+
+
 class MySqlWireSession:
     """Connection establishment + OK-commands + the binlog-dump switch
     over injectable ``read(n)``/``write(bytes)`` callables.

@@ -827,6 +827,29 @@ def _ssl_kwargs(live: dict) -> dict:
     return out
 
 
+def open_session(live: dict, dial=None):
+    """``live:`` config → ``(session, close)``: one authenticated
+    :class:`PgWireSession` for snapshot COPYs, coordinator queries and
+    control-plane DDL. ``dial`` defaults to the module's :func:`dial`,
+    looked up per call so a patched module global takes effect. The
+    transport is closed if the handshake fails."""
+    read, write, close, _poll = (dial or globals()["dial"])(
+        live["host"], int(live.get("port", 5432)),
+        timeout=float(live.get("timeout", 30.0)),
+        **_ssl_kwargs(live),
+    )
+    try:
+        sess = PgWireSession(read, write)
+        sess.connect(
+            user=live["user"], database=live.get("database", ""),
+            password=live.get("password", ""),
+        )
+    except BaseException:
+        close()
+        raise
+    return sess, close
+
+
 def live_drain_tcp(live: dict, out_dir: str) -> int:
     """``replication.source.live`` config → one bounded catch-up drain
     over a real TCP connection: one :meth:`LiveReplicationConnection.drain`,
