@@ -597,6 +597,96 @@ def test_bounded_catchup_offset_survives_reader_restart(spark, tmp_path):
     assert c2.latestOffset() == {"ts": 100, "order": 2}
 
 
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_FC_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _wal_events(lo: int, hi: int) -> list[dict]:
+    return [
+        {"action": "I", "lsn": n, "columns": [{"name": "id", "value": n}]}
+        for n in range(lo, hi + 1)
+    ]
+
+
+def _run_wal(spark, wdir, ckpt) -> list[int]:
+    from transferia_spark.streaming.wal_source import (
+        WalJsonDataSource,
+        wal_output_schema,
+    )
+
+    spark.dataSource.register(WalJsonDataSource)
+    got = []
+    _run(spark, "waljson", wal_output_schema("id long"), wdir, ckpt, got)
+    return sorted(r[0] for r in got)
+
+
+def test_checkpoint_logs_keep_checksums(spark, tmp_path):
+    """Checkpoint logs are written through the FileSystem-based
+    manager, and every offsets/ and commits/ entry still has its
+    .N.crc beside it."""
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}"), hconf
+        )
+    assert fm.getClass().getName() == _FS_CKPT_MANAGER
+
+    wdir, ckpt = str(tmp_path / "w"), str(tmp_path / "ck")
+    _emit(wdir, "000.jsonl", _wal_events(1, 3))
+    assert _run_wal(spark, wdir, ckpt) == [1, 2, 3]
+    _emit(wdir, "001.jsonl", _wal_events(4, 6))
+    assert _run_wal(spark, wdir, ckpt) == [4, 5, 6]
+    for log in ("offsets", "commits"):
+        names = set(os.listdir(os.path.join(ckpt, log)))
+        entries = sorted(n for n in names if n.isdigit())
+        assert entries == ["0", "1"], (log, names)
+        assert {f".{n}.crc" for n in entries} <= names, (log, names)
+
+
+def test_file_context_checkpoint_resumes_exactly(spark, tmp_path):
+    """A checkpoint written under the FileContext-based manager (the
+    Spark default) resumes under the FileSystem-based one with no
+    replayed and no skipped positions."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    wdir, ckpt = str(tmp_path / "w"), str(tmp_path / "ck")
+    _emit(wdir, "000.jsonl", _wal_events(1, 4))
+    spark.conf.set(key, _FC_CKPT_MANAGER)
+    try:
+        assert _run_wal(spark, wdir, ckpt) == [1, 2, 3, 4]
+    finally:
+        spark.conf.set(key, _FS_CKPT_MANAGER)
+    _emit(wdir, "001.jsonl", _wal_events(5, 9))
+    assert _run_wal(spark, wdir, ckpt) == [5, 6, 7, 8, 9]
+    _emit(wdir, "002.jsonl", _wal_events(10, 11))
+    assert _run_wal(spark, wdir, ckpt) == [10, 11]
+
+
+def test_corrupt_checkpoint_entry_fails_the_restart(spark, tmp_path):
+    """The .crc is still checked: one flipped byte in the last offsets
+    entry makes the restarted query fail with a checksum error."""
+    wdir, ckpt = str(tmp_path / "w"), str(tmp_path / "ck")
+    _emit(wdir, "000.jsonl", _wal_events(1, 3))
+    _run_wal(spark, wdir, ckpt)
+    _emit(wdir, "001.jsonl", _wal_events(4, 6))
+    _run_wal(spark, wdir, ckpt)
+    last = os.path.join(ckpt, "offsets", "1")
+    raw = bytearray(open(last, "rb").read())
+    i = raw.index(b"6")  # the end lsn: same length, other value
+    raw[i] = ord("7")
+    with open(last, "wb") as f:
+        f.write(raw)
+    _emit(wdir, "002.jsonl", _wal_events(7, 8))
+    with pytest.raises(Exception, match="(?i)checksum"):
+        _run_wal(spark, wdir, ckpt)
+
+
 def test_partitions_floor_offset_on_spark_start(spark, tmp_path):
     """Belt-and-braces for the same regression: even WITHOUT an ack
     file, partitions() floors _base at Spark's committed start offset,
@@ -1305,6 +1395,35 @@ def test_split_slices_pay_for_their_task():
             assert b.start_byte == b.lo * 10
         # each slice owns at least `floor` checkpoints
         assert all((s.hi - s.lo) // 10 >= floor for s in slices[:-1])
+
+
+def test_catchup_batch_plans_parallel_slices(spark, tmp_path):
+    """At the default slice floor a catch-up batch of 5000 waljson
+    events plans at least two decode slices that tile its range, while
+    a 1500-event batch stays one task. Planned through the reader, from
+    the seek index its planner records."""
+    from transferia_spark.streaming.wal_source import (
+        WalJsonStreamReader,
+        wal_output_schema,
+    )
+
+    wdir = str(tmp_path / "w")
+    _emit(wdir, "000.jsonl", _wal_events(1, 1500))
+    r = WalJsonStreamReader(wal_output_schema("id long"), {"path": wdir})
+    end = r.latestOffset()
+    assert end == {"lsn": 1500}
+    assert len(r.partitions(r.initialOffset(), end)) == 1
+    _emit(wdir, "001.jsonl", _wal_events(1501, 6500))
+    end2 = r.latestOffset()
+    assert end2 == {"lsn": 6500}
+    slices = r.partitions(end, end2)
+    assert len(slices) >= 2
+    assert all(p.path.endswith("001.jsonl") for p in slices)
+    assert slices[0].lo == 1500 and slices[-1].hi == 6500
+    for a, b in zip(slices, slices[1:]):
+        assert a.hi == b.lo
+    ids = [t[0] for p in slices for t in r._read_tuples(p)]
+    assert sorted(ids) == list(range(1501, 6501))
 
 
 def test_files_with_nothing_in_range_get_no_slice(spark, tmp_path):

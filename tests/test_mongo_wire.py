@@ -7,6 +7,7 @@ units draining through the wire transport on Spark executors."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import socket
 import struct
 import threading
@@ -199,18 +200,31 @@ class LoopbackMongod:
     listCollections, and the update/delete/drop WRITE commands the
     zero-dependency wire applier issues — modifier updates apply
     $set/$unset with dotted paths, replacements preserve _id, upserts
-    build the new document from the filter's equality fields)."""
+    build the new document from the filter's equality fields).
+
+    Change-stream replies carry ``postBatchResumeToken``: the batch's
+    last event token, or on an empty batch the newest event's token at
+    open time (``CS_ORIGIN`` before any event). By default a stream
+    opened without a token replays the scripted history from its start;
+    ``stream_starts_now=True`` starts it at "now", as mongod does."""
+
+    #: resume token of an empty change history
+    CS_ORIGIN = "00"
 
     def __init__(self, data: dict[str, list[dict]],
                  users: dict[str, str] | None = None,
                  scram_algo: str = "sha256",
                  changes: dict[str, list[dict]] | None = None,
                  tls: tuple[str, str] | None = None,
-                 hello_extra: dict | None = None):
+                 hello_extra: dict | None = None,
+                 stream_starts_now: bool = False):
         self.data = data  # "db.coll" -> docs
         self.users = users
         self.scram_algo = scram_algo
         self.changes = changes or {}  # "db.coll" -> change events
+        self.stream_starts_now = stream_starts_now
+        # change-stream cursor id -> postBatchResumeToken of an empty batch
+        self._cs_now: dict[int, str] = {}
         # replica-set role fields (setName/secondary/primary/hosts/
         # isWritablePrimary) for the seedlist-failover tests
         self.hello_extra = hello_extra or {}
@@ -351,8 +365,9 @@ class LoopbackMongod:
                 evs = list(
                     self.changes.get(f"{db}.{body['aggregate']}", [])
                 )
+                now = evs[-1]["_id"]["_data"] if evs else self.CS_ORIGIN
                 resume = pipeline[0]["$changeStream"].get("resumeAfter")
-                if resume:
+                if resume and resume["_data"] != self.CS_ORIGIN:
                     tok = resume["_data"]
                     idx = next(
                         (i for i, e in enumerate(evs)
@@ -366,10 +381,12 @@ class LoopbackMongod:
                             authed, scram,
                         )
                     evs = evs[idx + 1:]
+                elif not resume and self.stream_starts_now:
+                    evs = []
                 return self._cursor_reply(
                     db, body["aggregate"], evs,
                     body.get("cursor", {}).get("batchSize", 1000),
-                    authed, scram,
+                    authed, scram, change_stream_now=now,
                 )
             docs = list(self.data.get(f"{db}.{body['aggregate']}", []))
             for stage in pipeline:
@@ -439,11 +456,15 @@ class LoopbackMongod:
             else:
                 self._cursors.pop(cid, None)
                 nid = 0
-            return (
-                {"ok": 1.0, "cursor": {
-                    "id": nid, "ns": "x", "nextBatch": batch}},
-                authed, scram,
-            )
+            cursor = {"id": nid, "ns": "x", "nextBatch": batch}
+            now = self._cs_now.get(cid)
+            if now is not None:
+                cursor["postBatchResumeToken"] = (
+                    batch[-1]["_id"] if batch else {"_data": now}
+                )
+                if not nid:
+                    del self._cs_now[cid]
+            return ({"ok": 1.0, "cursor": cursor}, authed, scram)
         if "update" in body and isinstance(body.get("update"), str):
             self.write_cmds.append(body)
             key = f"{db}.{body['update']}"
@@ -532,18 +553,22 @@ class LoopbackMongod:
             authed, scram,
         )
 
-    def _cursor_reply(self, db, coll, docs, batch_size, authed, scram):
+    def _cursor_reply(self, db, coll, docs, batch_size, authed, scram,
+                      change_stream_now: str | None = None):
         first, rest = docs[:batch_size], docs[batch_size:]
         cid = 0
         if rest:
             self._next_cursor += 1
             cid = self._next_cursor
             self._cursors[cid] = rest
-        return (
-            {"ok": 1.0, "cursor": {
-                "id": cid, "ns": f"{db}.{coll}", "firstBatch": first}},
-            authed, scram,
-        )
+        cursor = {"id": cid, "ns": f"{db}.{coll}", "firstBatch": first}
+        if change_stream_now is not None:
+            cursor["postBatchResumeToken"] = (
+                first[-1]["_id"] if first else {"_data": change_stream_now}
+            )
+            if cid:
+                self._cs_now[cid] = change_stream_now
+        return ({"ok": 1.0, "cursor": cursor}, authed, scram)
 
 
 # ---------------------------------------------------------------- tests
@@ -700,6 +725,55 @@ def test_live_drain_change_stream_and_resume(tmp_path):
         assert len(files) == 2
         tok = _json.load(open(f"{out}/_resume.json"))["_data"]
         assert tok == evs[-1]["_id"]["_data"]
+    finally:
+        srv.close()
+
+
+def test_live_drain_empty_first_drain_pins_its_position(tmp_path):
+    """A stream opened without a token starts at "now": the snapshot
+    seed's first drain sees no event, yet must persist the server's
+    postBatchResumeToken — otherwise the second drain opens at a later
+    "now" and a change made in between is never delivered."""
+    import json as _json
+
+    from transferia_spark.streaming.mongo_wire import (
+        live_drain_change_stream,
+    )
+
+    evs = [_cs_event(1, "before-seed")]  # history the stream must skip
+    srv = LoopbackMongod(
+        {}, changes={"shop.customers": evs}, stream_starts_now=True,
+    )
+    out = str(tmp_path / "cs")
+    live = {
+        "host": "127.0.0.1", "port": srv.port,
+        "database": "shop", "collection": "customers",
+    }
+    try:
+        assert live_drain_change_stream(live, out) == 0
+        evs.append(_cs_event(2, "during-seed"))
+        assert live_drain_change_stream(live, out) == 1
+        [f] = [f for f in os.listdir(out) if f.endswith(".jsonl")]
+        [line] = open(f"{out}/{f}").read().splitlines()
+        assert _json.loads(line)["fullDocument"]["name"] == "during-seed"
+        tok = _json.load(open(f"{out}/_resume.json"))["_data"]
+        assert tok == evs[1]["_id"]["_data"]
+    finally:
+        srv.close()
+
+    # an empty history pins the origin token, and resuming from it
+    # delivers the first event
+    srv = LoopbackMongod(
+        {}, changes={"shop.customers": []}, stream_starts_now=True,
+    )
+    out = str(tmp_path / "cs-empty")
+    live["port"] = srv.port
+    try:
+        assert live_drain_change_stream(live, out) == 0
+        tok = _json.load(open(f"{out}/_resume.json"))["_data"]
+        assert tok == LoopbackMongod.CS_ORIGIN
+        srv.changes["shop.customers"].append(_cs_event(3, "first"))
+        assert live_drain_change_stream(live, out) == 1
     finally:
         srv.close()
 
@@ -1179,16 +1253,27 @@ class LoopbackDNS:
         self.truncate_udp = truncate_udp  # UDP answers only set TC
         self.drop_first = drop_first      # swallow the first datagram
         self._dropped = 0
-        self._sock = _socket.socket(_socket.AF_INET,
-                                    _socket.SOCK_DGRAM)
-        self._sock.bind(("127.0.0.1", 0))
-        self.port = self._sock.getsockname()[1]
         self._closed = False
         self._tcp = None
-        if truncate_udp:
-            # RFC 1035 §4.2.2 fallback transport on the same port
+        for _ in range(20):
+            self._sock = _socket.socket(_socket.AF_INET,
+                                        _socket.SOCK_DGRAM)
+            self._sock.bind(("127.0.0.1", 0))
+            self.port = self._sock.getsockname()[1]
+            if not truncate_udp:
+                break
+            # RFC 1035 §4.2.2 fallback transport on the same port; the
+            # free UDP port's TCP twin may be taken, so draw again
             self._tcp = _socket.socket()
-            self._tcp.bind(("127.0.0.1", self.port))
+            try:
+                self._tcp.bind(("127.0.0.1", self.port))
+                break
+            except OSError:
+                self._tcp.close()
+                self._sock.close()
+        else:
+            raise OSError("no port free for both UDP and TCP")
+        if truncate_udp:
             self._tcp.listen(4)
             threading.Thread(target=self._serve_tcp,
                              daemon=True).start()

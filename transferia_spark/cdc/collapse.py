@@ -65,9 +65,10 @@ def normalize_pk_changes(df: DataFrame, keys: list[str]) -> DataFrame:
     ordering via a sub-counter so it sorts after the delete — we encode
     this by doubling counters: delete=2n, insert=2n+1 (others 2n).
 
-    ONE pass over the batch: each row maps to an array of 1-2 row
-    structs, exploded. The previous 3-way union (stable ∪ deletes ∪
-    inserts) referenced the batch THREE times in the plan — on a
+    ONE pass over the batch and ONE projection: each row maps to an
+    array of 1-2 row structs, ``inline``d straight into columns. The
+    previous 3-way union (stable ∪ deletes ∪ inserts) referenced the
+    batch THREE times in the plan — on a
     Python-datasource-backed micro-batch each reference re-executes the
     whole source decode (profiled at 3× numInputRows per merge, r11
     fixed-cost hunt), and no cache can help inside one job because the
@@ -115,11 +116,11 @@ def normalize_pk_changes(df: DataFrame, keys: list[str]) -> DataFrame:
             F.array(stable_s)
         )
 
-    exploded = cached_exprs(
+    inlined = cached_exprs(
         ("pkchg", df.schema.json(), tuple(keys)),
-        lambda: F.explode(build()).alias("_r"),
+        lambda: F.inline(build()),
     )
-    return df.select(exploded).select("_r.*")
+    return df.select(inlined)
 
 
 def collapse(

@@ -56,10 +56,14 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "256m")
         # commit algorithm v2: task outputs rename straight into the
         # destination instead of through the job-level _temporary move —
-        # halves the per-commit rename fan-out. Correct for the
-        # engine's write pattern (every versioned write goes to a FRESH
-        # directory whose visibility is flipped by a manifest/pointer
-        # write, so a failed job's partial files are never referenced)
+        # halves the per-commit rename fan-out. Correct where a write
+        # goes to a FRESH directory whose visibility is flipped by a
+        # manifest/pointer write (BucketedParquetTable's versioned
+        # base and delta directories), so a failed job's partial files
+        # are never referenced. Known exception: FileSink's overwrite
+        # writes into its live target directory, so a failed job there
+        # leaves a partial target (the durable-publish work owns it,
+        # ROADMAP Direction E)
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             "2",
@@ -68,6 +72,25 @@ def get_spark(
         # ns timestamps — read as long, converted in load_tables
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "transferia_spark.worker_daemon")
+        # streaming checkpoint logs (offsets/, commits/) through
+        # FileSystem, not FileContext. Without the native Hadoop
+        # library the local filesystem shells out a `chmod` per file it
+        # creates and a `readlink` per path FileContext.rename
+        # resolves: 10 processes per log entry (2 chmod, 8 readlink)
+        # before, 2 chmod after; ~30 → ~8 ms per entry. The path still
+        # goes through the checksummed LocalFileSystem, so every entry
+        # keeps its .N.crc and a corrupt entry fails its read-back.
+        # Rename contract: both managers write a temp file, check that
+        # the batch file does not exist and rename. On file: that is a
+        # check-then-rename(2) under either manager (FileContext's
+        # local rename checks first too); on HDFS FileContext renames
+        # with Rename.NONE and FileSystem.rename refuses an existing
+        # destination, both atomically at the NameNode
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     conf = dict(extra_conf or {})
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(

@@ -675,17 +675,22 @@ class MongoWireClient:
         batch_size: int = 1000,
         max_time_ms: int | None = None,
         stop_on_empty_batch: bool = False,
+        on_batch=None,
     ):
         """Yield documents from a command's cursor, following getMore —
         each batch is O(batch_size) client memory, never O(result).
         The cursor id travels as an explicit BSON int64 (servers
         reject int32 there even when the value fits — code-review
         r11). ``stop_on_empty_batch`` is the tailable-cursor caught-up
-        signal change-stream drains stop on."""
+        signal change-stream drains stop on. ``on_batch(cursor)`` sees
+        each reply's cursor document once its documents were yielded
+        (change-stream drains read ``postBatchResumeToken`` there)."""
         cur = first_doc["cursor"]
         batch = cur["firstBatch"]
         cid = cur["id"]
         yield from batch
+        if on_batch is not None:
+            on_batch(cur)
         while cid and (batch or not stop_on_empty_batch):
             body: dict = {
                 "getMore": Int64(cid),
@@ -698,6 +703,8 @@ class MongoWireClient:
             batch = cur["nextBatch"]
             cid = cur["id"]
             yield from batch
+            if on_batch is not None:
+                on_batch(cur)
 
     def find(
         self,
@@ -1269,10 +1276,15 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
     pulls until the server returns an empty batch (caught up), appends
     events verbatim (resume token `_id` included — the reader derives
     its (clusterTime, order) offsets from it) as one durably published
-    ``live_<n>.jsonl`` file, and only then persists the last token in
+    ``live_<n>.jsonl`` file, and only then persists the position in
     ``out_dir/_resume.json`` so the next drain asks the server for
     only-new events; replayed events are idempotent anyway (the
-    reader's offsets filter at-or-below positions).
+    reader's offsets filter at-or-below positions). The position is
+    the last reply's ``postBatchResumeToken`` when the server sends
+    one, else the last event's token: a stream opened without a token
+    starts at "now", so an empty first drain (the snapshot seed's)
+    must still pin where it stood, or the changes made before the
+    second drain are never asked for.
     """
     db, coll = live["database"], live["collection"]
     os.makedirs(out_dir, exist_ok=True)
@@ -1306,11 +1318,19 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
         })
         seq = next_file_no(out_dir, "live_")
         last_token = token
+        post_batch: list = []
+
+        def note_post_batch(cur):
+            t = (cur.get("postBatchResumeToken") or {}).get("_data")
+            if t:
+                post_batch.append(t)
+
         with event_file(out_dir, f"live_{seq:06d}.jsonl") as out:
             for ev in client.drain_cursor(
                 db, coll, doc, bs,
                 max_time_ms=int(live.get("max_await_ms", 200)),
                 stop_on_empty_batch=True,
+                on_batch=note_post_batch,
             ):
                 ev = bson_to_jsonable(ev)
                 # the resume token doubles as the event position; a
@@ -1324,7 +1344,9 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
                 out.write(json.dumps(ev) + "\n")
                 last_token = data
                 n += 1
-        if n:
+        if post_batch:
+            last_token = post_batch[-1]
+        if last_token and last_token != token:
             write_state(
                 out_dir, "_resume.json", json.dumps({"_data": last_token})
             )

@@ -480,10 +480,9 @@ class OffsetScanCache:
 #: the batch start without growing the planner's memory
 SEEK_CHECKPOINT_EVERY = 512
 
-#: fewest seek checkpoints (~8k events) per decode slice — see
-#: attach_split_slices for the per-task cost this floor rests on (the
-#: floor predates worker_daemon, which cut that cost by ~160-190 ms)
-SLICE_MIN_CHECKPOINTS = 16
+#: fewest seek checkpoints (~1.5k events) per decode slice — see
+#: attach_split_slices for the cost model this floor rests on
+SLICE_MIN_CHECKPOINTS = 3
 
 
 def positions_with_seek_index(
@@ -568,15 +567,31 @@ def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
     files split; unordered ones fall back to the single whole-range
     slice.
 
-    A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (~8k events).
-    A one-partition Python RDD job costs ~95-130 ms (median of 20,
-    ``local[3]``, 4-vCPU host) under ``session.get_spark``'s
-    ``worker_daemon``. It cost ~250-300 ms before, when every task
-    re-read the zip directories of ``pyspark.zip`` and the spark-core
-    jar. ``read()`` decodes ~30k events/s per core (20-85 ms per
-    1.5k-5k-event slice), so a slice of fewer than ~3k events costs
-    more than its task saves. The floor was set at the old task cost
-    and stays until a measured change moves it."""
+    A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (f = 3,
+    ~1.5k events). Cost model, measured on the micro-batch job itself
+    (``waljson`` → ``BucketedParquetTable.append_delta``, ``local[3]``,
+    4-vCPU host, medians of ``addBatch`` over 25-60 batches):
+
+    - one extra task costs c ≈ 14 ms (a batch of 1 → 3 files of 20
+      events: 189 → 214, 183 → 210 and 214 → 245 ms in three runs);
+    - one task decodes, sorts and writes r ≈ 28k events/s (35 µs per
+      event: 300 → 5000-event batches, 198 → 359 ms);
+    - a slice past the free cores waits for a second wave: 4 slices
+      cost 75-100 ms more than 3.
+
+    Splitting N events into k slices instead of k-1 saves
+    N/(r·k·(k-1)) and costs c: the k-th slice pays when every slice
+    holds ≥ (k-1)·c·r ≈ (k-1)·400 events and k is within the cores.
+    The rule emits k = (checkpoints+1) // f slices, so each holds
+    ~f·512 events; f = 2 already pays for k ≤ 3 (slices of ≥ 800
+    events). The rule cannot see the core count, though, and f also
+    sets the batch at which a slice past 3 cores appears: 3.5k events
+    at f = 2, 5.6k at f = 3. Model times (c, r and waves above) at
+    f = 2 / f = 3: 1.5k events 41 / 54 ms, 3k 64 / 68, 4k 113 / 76,
+    5k 127 / 88. f = 3 gives up ≤ 21 ms below 3k events to save
+    30-40 ms on 3.5k-5.6k-event catch-up batches, and matches direct
+    runs: a 5000-event batch took 369 ms as 1 task, 274 ms as 3,
+    376 ms as 4. A 1.5k-event batch stays one task."""
     _evict_seek_index(seek_index, files)
     out = []
     for f in files:
