@@ -678,8 +678,9 @@ def test_corrupt_checkpoint_entry_fails_the_restart(spark, tmp_path):
     _run_wal(spark, wdir, ckpt)
     last = os.path.join(ckpt, "offsets", "1")
     raw = bytearray(open(last, "rb").read())
-    i = raw.index(b"6")  # the end lsn: same length, other value
-    raw[i] = ord("7")
+    start = raw.rindex(b"\n") + 1  # last line: the source's end offset
+    assert json.loads(raw[start:]) == {"lsn": 6}
+    raw[raw.index(b"6", start)] = ord("7")  # same length, other lsn
     with open(last, "wb") as f:
         f.write(raw)
     _emit(wdir, "002.jsonl", _wal_events(7, 8))
@@ -1397,33 +1398,41 @@ def test_split_slices_pay_for_their_task():
         assert all((s.hi - s.lo) // 10 >= floor for s in slices[:-1])
 
 
-def test_catchup_batch_plans_parallel_slices(spark, tmp_path):
-    """At the default slice floor a catch-up batch of 5000 waljson
-    events plans at least two decode slices that tile its range, while
-    a 1500-event batch stays one task. Planned through the reader, from
-    the seek index its planner records."""
+def test_catchup_batch_plans_parallel_slices(spark, tmp_path, monkeypatch):
+    """At the default slice floor a 1000-event waljson batch stays one
+    task, a 1500-event batch plans two decode slices and a 7000-event
+    catch-up batch one per core of the session, each tiling its range.
+    Planned through the reader, from the seek index its planner
+    records. get_spark() exports its core count to the Python workers
+    the planner runs in."""
     from transferia_spark.streaming.wal_source import (
         WalJsonStreamReader,
         wal_output_schema,
     )
 
+    sc = spark.sparkContext
+    assert sc.environment["SPARK_GRAFT_CPUS"] == str(sc.defaultParallelism)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     wdir = str(tmp_path / "w")
-    _emit(wdir, "000.jsonl", _wal_events(1, 1500))
     r = WalJsonStreamReader(wal_output_schema("id long"), {"path": wdir})
-    end = r.latestOffset()
-    assert end == {"lsn": 1500}
-    assert len(r.partitions(r.initialOffset(), end)) == 1
-    _emit(wdir, "001.jsonl", _wal_events(1501, 6500))
-    end2 = r.latestOffset()
-    assert end2 == {"lsn": 6500}
-    slices = r.partitions(end, end2)
-    assert len(slices) >= 2
-    assert all(p.path.endswith("001.jsonl") for p in slices)
-    assert slices[0].lo == 1500 and slices[-1].hi == 6500
-    for a, b in zip(slices, slices[1:]):
-        assert a.hi == b.lo
-    ids = [t[0] for p in slices for t in r._read_tuples(p)]
-    assert sorted(ids) == list(range(1501, 6501))
+    lo = r.initialOffset()
+    for name, first, last, want in (
+        ("000.jsonl", 1, 1000, 1),
+        ("001.jsonl", 1001, 2500, 2),
+        ("002.jsonl", 2501, 9500, 3),
+    ):
+        _emit(wdir, name, _wal_events(first, last))
+        hi = r.latestOffset()
+        assert hi == {"lsn": last}
+        slices = r.partitions(lo, hi)
+        assert len(slices) == want, name
+        assert all(p.path.endswith(name) for p in slices)
+        assert slices[0].lo == first - 1 and slices[-1].hi == last
+        for a, b in zip(slices, slices[1:]):
+            assert a.hi == b.lo
+        ids = [t[0] for p in slices for t in r._read_tuples(p)]
+        assert sorted(ids) == list(range(first, last + 1))
+        lo = hi
 
 
 def test_files_with_nothing_in_range_get_no_slice(spark, tmp_path):

@@ -206,7 +206,15 @@ class LoopbackMongod:
     last event token, or on an empty batch the newest event's token at
     open time (``CS_ORIGIN`` before any event). By default a stream
     opened without a token replays the scripted history from its start;
-    ``stream_starts_now=True`` starts it at "now", as mongod does."""
+    ``stream_starts_now=True`` starts it at "now", as mongod does.
+
+    ``cluster_now`` stands for writes to OTHER collections: an empty
+    batch's token is at least it, as mongod's high-water mark keeps
+    moving on a busy replica set while the watched collection is quiet.
+    ``oplog_start`` is the oldest token still in the oplog: resuming
+    after an older one fails with ChangeStreamHistoryLost (code 286).
+    A resume token may be any position up to the newest one, not only
+    an event of the watched collection."""
 
     #: resume token of an empty change history
     CS_ORIGIN = "00"
@@ -223,6 +231,8 @@ class LoopbackMongod:
         self.scram_algo = scram_algo
         self.changes = changes or {}  # "db.coll" -> change events
         self.stream_starts_now = stream_starts_now
+        self.cluster_now: str | None = None
+        self.oplog_start: str | None = None
         # change-stream cursor id -> postBatchResumeToken of an empty batch
         self._cs_now: dict[int, str] = {}
         # replica-set role fields (setName/secondary/primary/hosts/
@@ -365,22 +375,28 @@ class LoopbackMongod:
                 evs = list(
                     self.changes.get(f"{db}.{body['aggregate']}", [])
                 )
-                now = evs[-1]["_id"]["_data"] if evs else self.CS_ORIGIN
+                now = max(
+                    evs[-1]["_id"]["_data"] if evs else self.CS_ORIGIN,
+                    self.cluster_now or self.CS_ORIGIN,
+                )
                 resume = pipeline[0]["$changeStream"].get("resumeAfter")
                 if resume and resume["_data"] != self.CS_ORIGIN:
                     tok = resume["_data"]
-                    idx = next(
-                        (i for i, e in enumerate(evs)
-                         if e["_id"]["_data"] == tok),
-                        None,
-                    )
-                    if idx is None:
+                    if self.oplog_start and tok < self.oplog_start:
+                        return (
+                            {"ok": 0.0, "code": 286,
+                             "codeName": "ChangeStreamHistoryLost",
+                             "errmsg": "resume point fell off the oplog"},
+                            authed, scram,
+                        )
+                    if tok > now:
                         return (
                             {"ok": 0.0, "code": 286,
                              "errmsg": "resume token not found"},
                             authed, scram,
                         )
-                    evs = evs[idx + 1:]
+                    # tokens are fixed-width hex of (clusterTime, order)
+                    evs = [e for e in evs if e["_id"]["_data"] > tok]
                 elif not resume and self.stream_starts_now:
                     evs = []
                 return self._cursor_reply(
@@ -736,6 +752,7 @@ def test_live_drain_empty_first_drain_pins_its_position(tmp_path):
     "now" and a change made in between is never delivered."""
     import json as _json
 
+    from transferia_spark.streaming.cdc_sources import format_resume_token
     from transferia_spark.streaming.mongo_wire import (
         live_drain_change_stream,
     )
@@ -774,6 +791,36 @@ def test_live_drain_empty_first_drain_pins_its_position(tmp_path):
         assert tok == LoopbackMongod.CS_ORIGIN
         srv.changes["shop.customers"].append(_cs_event(3, "first"))
         assert live_drain_change_stream(live, out) == 1
+    finally:
+        srv.close()
+
+    # a quiet collection on a busy replica set: once events were
+    # published, an empty drain still moves the saved position to the
+    # high-water mark, and the next drain resumes there — not at the
+    # newest file's last event, which falls off the oplog
+    first = _cs_event(4, "published")
+    srv = LoopbackMongod({}, changes={"shop.customers": [first]})
+    out = str(tmp_path / "cs-quiet")
+    live["port"] = srv.port
+    try:
+        assert live_drain_change_stream(live, out) == 1
+        srv.cluster_now = format_resume_token(1_700_000_100, 1)
+        assert live_drain_change_stream(live, out) == 0
+        quiet = _json.load(open(f"{out}/_resume.json"))
+        assert quiet == {
+            "_data": srv.cluster_now, "after": first["_id"]["_data"],
+        }
+        srv.oplog_start = srv.cluster_now  # the published event rolled off
+        srv.changes["shop.customers"].append(_cs_event(200, "after-quiet"))
+        assert live_drain_change_stream(live, out) == 1
+        # a crash between publish and persist leaves the older state
+        # file: the published file's tail wins, nothing is fetched twice
+        with open(f"{out}/_resume.json", "w") as fh:
+            _json.dump(quiet, fh)
+        assert live_drain_change_stream(live, out) == 0
+        assert _json.load(open(f"{out}/_resume.json"))["_data"] == (
+            srv.changes["shop.customers"][-1]["_id"]["_data"]
+        )
     finally:
         srv.close()
 

@@ -96,6 +96,12 @@ def get_spark(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )
+    # every Python worker of this session sees its local[n], the
+    # streaming sources' planners included (they run with no
+    # SparkContext; wal_source sizes its decode slices by it). The JVM
+    # environment would do only for the first session of a process: a
+    # restarted session reuses the JVM and its first value
+    conf["spark.executorEnv.SPARK_GRAFT_CPUS"] = str(cpus)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

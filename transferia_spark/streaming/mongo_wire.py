@@ -1279,30 +1279,41 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
     ``live_<n>.jsonl`` file, and only then persists the position in
     ``out_dir/_resume.json`` so the next drain asks the server for
     only-new events; replayed events are idempotent anyway (the
-    reader's offsets filter at-or-below positions). The position is
-    the last reply's ``postBatchResumeToken`` when the server sends
-    one, else the last event's token: a stream opened without a token
-    starts at "now", so an empty first drain (the snapshot seed's)
-    must still pin where it stood, or the changes made before the
-    second drain are never asked for.
+    reader's offsets filter at-or-below positions). The position
+    (``_data``) is the last reply's ``postBatchResumeToken`` when the
+    server sends one, else the last event's token: a stream opened
+    without a token starts at "now", so an empty first drain (the
+    snapshot seed's) must still pin where it stood, or the changes
+    made before the second drain are never asked for; and on a quiet
+    collection of a busy replica set the high-water mark keeps moving
+    while no event arrives, so the resume point stays inside the
+    oplog window. Beside it ``after`` records the last published
+    event's token, which tells a crash between publish and persist
+    apart from a quiet drain (see the dedupe below).
     """
     db, coll = live["database"], live["collection"]
     os.makedirs(out_dir, exist_ok=True)
     token = live.get("start_after")
+    after = saved = None
     if token is None:
         try:
-            token = json.loads(read_state(out_dir, "_resume.json"))["_data"]
+            saved = json.loads(read_state(out_dir, "_resume.json"))
+            token, after = saved["_data"], saved.get("after")
         except (TypeError, ValueError, KeyError):
             token = None
-        # crash-window dedupe (advisor r12): the newest PUBLISHED file's
-        # last resume token supersedes the persisted one — events
-        # publish before the token persists, so after a crash between
-        # the two the file is the further-along position
+        # crash-window dedupe: events publish before the token
+        # persists, so when the newest PUBLISHED file's last token is
+        # not the one the state file says was published last, a crash
+        # fell between the two and the file is the further-along
+        # position. When it matches, the saved high-water mark (at or
+        # past that event) stands
         tail = last_published_event(out_dir, "live_")
         try:
-            token = tail["_id"]["_data"] or token
+            data = tail["_id"]["_data"]
         except (KeyError, TypeError):
-            pass  # no file or an unreadable tail: the persisted token
+            data = None  # no file or an unreadable tail
+        if data and data != after:
+            token = after = data
 
     cs: dict = {"fullDocument": "updateLookup"}
     if token:
@@ -1317,7 +1328,7 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
             "cursor": {"batchSize": bs},
         })
         seq = next_file_no(out_dir, "live_")
-        last_token = token
+        last_token, last_event = token, after
         post_batch: list = []
 
         def note_post_batch(cur):
@@ -1342,14 +1353,13 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
                         f"token: {ev.get('operationType')}"
                     )
                 out.write(json.dumps(ev) + "\n")
-                last_token = data
+                last_token = last_event = data
                 n += 1
         if post_batch:
             last_token = post_batch[-1]
-        if last_token and last_token != token:
-            write_state(
-                out_dir, "_resume.json", json.dumps({"_data": last_token})
-            )
+        state = {"_data": last_token, "after": last_event}
+        if last_token and state != saved:
+            write_state(out_dir, "_resume.json", json.dumps(state))
         return n
     finally:
         client.close()
@@ -1689,7 +1699,7 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
             start = (int(doc["t"]), int(doc["i"]))
         except (TypeError, ValueError, KeyError):
             start = (0, 0)
-        # crash-window dedupe (advisor r12): events publish before the
+        # crash-window dedupe: events publish before the token
         # resume position persists, so a crash between the two would
         # re-emit the newest file's events on the next drain. The
         # newest PUBLISHED file's last event position therefore

@@ -480,9 +480,9 @@ class OffsetScanCache:
 #: the batch start without growing the planner's memory
 SEEK_CHECKPOINT_EVERY = 512
 
-#: fewest seek checkpoints (~1.5k events) per decode slice — see
+#: fewest seek checkpoints (~1k events) per decode slice — see
 #: attach_split_slices for the cost model this floor rests on
-SLICE_MIN_CHECKPOINTS = 3
+SLICE_MIN_CHECKPOINTS = 2
 
 
 def positions_with_seek_index(
@@ -567,31 +567,33 @@ def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
     files split; unordered ones fall back to the single whole-range
     slice.
 
-    A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (f = 3,
-    ~1.5k events). Cost model, measured on the micro-batch job itself
-    (``waljson`` → ``BucketedParquetTable.append_delta``, ``local[3]``,
-    4-vCPU host, medians of ``addBatch`` over 25-60 batches):
+    A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (f = 2,
+    ~1k events), and a batch plans at most ``max_splits`` slices (the
+    reader's ``decode_splits``: the session's cores unless set). Cost
+    model, measured on the micro-batch job itself (``waljson`` →
+    ``BucketedParquetTable.append_delta``, ``local[3]``, 4-vCPU host,
+    medians of ``addBatch`` over 25-60 batches):
 
     - one extra task costs c ≈ 14 ms (a batch of 1 → 3 files of 20
       events: 189 → 214, 183 → 210 and 214 → 245 ms in three runs);
     - one task decodes, sorts and writes r ≈ 28k events/s (35 µs per
       event: 300 → 5000-event batches, 198 → 359 ms);
     - a slice past the free cores waits for a second wave: 4 slices
-      cost 75-100 ms more than 3.
+      cost 75-100 ms more than 3 — hence the cap at the cores.
 
     Splitting N events into k slices instead of k-1 saves
     N/(r·k·(k-1)) and costs c: the k-th slice pays when every slice
-    holds ≥ (k-1)·c·r ≈ (k-1)·400 events and k is within the cores.
-    The rule emits k = (checkpoints+1) // f slices, so each holds
-    ~f·512 events; f = 2 already pays for k ≤ 3 (slices of ≥ 800
-    events). The rule cannot see the core count, though, and f also
-    sets the batch at which a slice past 3 cores appears: 3.5k events
-    at f = 2, 5.6k at f = 3. Model times (c, r and waves above) at
-    f = 2 / f = 3: 1.5k events 41 / 54 ms, 3k 64 / 68, 4k 113 / 76,
-    5k 127 / 88. f = 3 gives up ≤ 21 ms below 3k events to save
-    30-40 ms on 3.5k-5.6k-event catch-up batches, and matches direct
-    runs: a 5000-event batch took 369 ms as 1 task, 274 ms as 3,
-    376 ms as 4. A 1.5k-event batch stays one task."""
+    holds ≥ (k-1)·c·r ≈ (k-1)·400 events. The rule emits
+    k = (checkpoints+1) // f slices of ~f·512 events each. f = 1
+    (512-event slices) pays only up to k = 2; f = 2 (~1k) pays up to
+    k = 3, so f = 2 is the smallest floor at which every slice pays
+    while the cap holds k ≤ 3. Model times on 3 cores, one task /
+    f = 2: 1.5k events 54 / 41 ms, 3k 107 / 64, 5k 179 / 88 (up to ~1k
+    events stays one task). Direct runs agree: a 1.5k-event batch took
+    261 ms as 1 task, 227 as 2; a 5000-event batch 369 ms as 1, 274 as
+    3, 376 as 4. On more cores f = 2 falls short for k ≥ 4: a 4th
+    slice of 1k events saves ~12 ms for its 14, an 8th ~5 ms (c was
+    measured on 3 cores only)."""
     _evict_seek_index(seek_index, files)
     out = []
     for f in files:
@@ -606,16 +608,16 @@ def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
                 c for c in ckpts[max(i, 0):bisect.bisect_right(keys, hi)]
                 if lo < c[0] < hi
             ]
-            n_slices = min(
-                max_splits, (len(inner) + 1) // SLICE_MIN_CHECKPOINTS
-            )
+            spans = len(inner) + 1
+            n_slices = min(max_splits, spans // SLICE_MIN_CHECKPOINTS)
             if n_slices > 1:
-                # exactly ≤ max_splits slices: n_slices-1 boundaries
-                # (the naive stride over-emitted up to ~40% more
-                # tasks than the option promised, code-review r11
-                # pass 2)
-                step = max(1, -(-(len(inner) + 1) // n_slices))
-                bounds = inner[step - 1::step][: n_slices - 1]
+                # n_slices slices (never more than max_splits) of ≥
+                # SLICE_MIN_CHECKPOINTS spans each: boundary j ends
+                # span j·spans // n_slices
+                bounds = [
+                    inner[j * spans // n_slices - 1]
+                    for j in range(1, n_slices)
+                ]
                 cur_lo, cur_sb = lo, sb
                 for bp, bbyte in bounds:
                     if bp == cur_lo:
@@ -710,8 +712,15 @@ class RecordedCdcStreamReader(DataSourceStreamReader):
         self.max_events = int(mx) if mx is not None else None
         # within-file parallel decode (attach_split_slices): a planned
         # range splits into up to this many executor tasks at seek-
-        # checkpoint boundaries; 1 = one task per file
-        self.decode_splits = max(1, int(options.get("decode_splits", 8)))
+        # checkpoint boundaries; 1 = one task per file. Unset, it is the
+        # session's cores, at most 8: a slice past them waits for a
+        # second wave. The planner runs in a Python worker with no
+        # SparkContext; get_spark() exports its local[n] to every worker
+        # as SPARK_GRAFT_CPUS
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or 8)
+        self.decode_splits = max(
+            1, int(options.get("decode_splits", min(8, cores)))
+        )
         # _base floors latestOffset() so bounded catch-up never plans an
         # end below an already-planned one. In-memory alone it is LOST
         # on a query restart — a fresh reader would re-base on start_pos
