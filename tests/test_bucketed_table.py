@@ -1573,3 +1573,199 @@ def test_drift_widened_columns_survive_delta_fold_and_read(spark, tmp_path):
     assert t._manifest_doc()["deltas"] == []
     got = {(r.k, r.v, r.note) for r in t.read().collect()}
     assert got == {(1, "a", None), (2, "b2", "note2"), (3, "c", "note3")}
+
+
+# -- commit points: every publish goes through transferia_spark.durable
+
+
+class _InjectedCrash(Exception):
+    pass
+
+
+def _crash_at_publish(monkeypatch, at: int) -> list[int]:
+    """Make the ``at``-th ``durable.publish`` call raise before it
+    touches the disk; returns the call counter."""
+    from transferia_spark import durable
+
+    real, calls = durable.publish, [0]
+
+    def publish(path, text):
+        calls[0] += 1
+        if calls[0] == at:
+            raise _InjectedCrash(f"publish #{at}: {os.path.basename(path)}")
+        real(path, text)
+
+    monkeypatch.setattr(durable, "publish", publish)
+    return calls
+
+
+def _expire_claims(t) -> None:
+    """Backdate every ``_ALLOC`` claim past CLAIM_TTL, as a crash plus
+    time would."""
+    alloc = t._read_alloc()
+    for k in alloc["inflight"]:
+        alloc["inflight"][k] -= BucketedParquetTable.CLAIM_TTL + 60
+    t._write_alloc(alloc)
+
+
+def _assert_no_orphans(t) -> None:
+    """Every ``_v``/``_d`` directory is referenced by a retained
+    manifest, and no condemned ``_trash`` directory is left."""
+    cur = t.version()
+    bases, deltas = set(), set()
+    for v in range(max(0, cur - t.retention + 1), cur + 1):
+        doc = t._manifest_doc(v)
+        bases.update(doc["buckets"].values())
+        deltas.update(doc["deltas"])
+    for name in os.listdir(t.root):
+        assert not name.startswith("_trash"), name
+        if name.startswith("_v") and name[2:].isdigit():
+            assert int(name[2:]) in bases, f"orphan {name}"
+        if name.startswith("_d") and name[2:].isdigit():
+            assert int(name[2:]) in deltas, f"orphan {name}"
+
+
+@pytest.mark.parametrize("op", ["append_delta", "compact_buckets", "rebucket"])
+def test_crash_at_every_publish_leaves_pre_or_post_state(
+    spark, tmp_path, monkeypatch, op
+):
+    """Crash-point sweep over every commit point of a write: the N-th
+    ``durable.publish`` of the operation raises, for N = 1 up to one
+    past the operation's publish count (the last round crashes
+    nowhere). After each crash a fresh instance reads exactly the
+    pre-state or the post-state; replaying the batch id, or re-running
+    the fold, converges to the post-state; and once the crashed claim
+    has expired one more commit's GC leaves no directory that no
+    retained manifest references.
+
+    An in-process exception still runs ``finally`` blocks and leaves
+    the page cache intact, so this covers crash-and-restart, not power
+    loss (the fsync-order test below covers what reaches the disk)."""
+    root = str(tmp_path / "bt")
+
+    def fresh():
+        return BucketedParquetTable(
+            spark, root, keys=["id"], n_buckets=4, compact_policy="off"
+        )
+
+    def rows(t):
+        return {(r.id, r.v) for r in t.read().collect()}
+
+    fresh().merge(
+        _batch(spark, [(i, f"a{i}", "i", 1, i) for i in range(6)]),
+        batch_id=1,
+    )
+    state = {(i, f"a{i}") for i in range(6)}
+    at, batch_id = 0, 1
+    while True:
+        at += 1
+        batch_id += 1
+        keys = (at % 6, 6 + at)
+        batch = _batch(spark, [
+            (keys[0], f"r{at}", "u", batch_id, 0),
+            (keys[1], f"r{at}", "i", batch_id, 1),
+        ])
+        post = {(i, v) for i, v in state if i not in keys} | {
+            (k, f"r{at}") for k in keys
+        }
+        if op == "append_delta":
+            pre = state
+
+            def run(t, batch=batch, batch_id=batch_id):
+                t.merge(batch, batch_id=batch_id, fold=False)
+        else:
+            # the delta a fold or rebucket folds is committed unarmed
+            fresh().merge(batch, batch_id=batch_id, fold=False)
+            pre = post
+            if op == "compact_buckets":
+
+                def run(t):
+                    t.compact_buckets(list(range(t.n_buckets)))
+            else:
+                target = 6 if fresh().n_buckets == 4 else 4
+
+                def run(t, target=target):
+                    t.rebucket(target)
+        with monkeypatch.context() as m:
+            calls = _crash_at_publish(m, at)
+            crashed = False
+            try:
+                run(fresh())
+            except _InjectedCrash:
+                crashed = True
+        assert crashed == (calls[0] >= at)
+        assert rows(fresh()) in (pre, post), f"crash at publish #{at}"
+        t = fresh()
+        run(t)  # replay the batch id / re-run the fold
+        assert rows(t) == post, f"crash at publish #{at}"
+        if op == "rebucket":
+            assert t.n_buckets == target == fresh().n_buckets
+        _expire_claims(t)
+        batch_id += 1
+        t.merge(
+            _batch(spark, [(100, f"x{at}", "u", batch_id, 0)]),
+            batch_id=batch_id, fold=False,
+        )
+        _assert_no_orphans(t)
+        state = {(i, v) for i, v in post if i != 100} | {(100, f"x{at}")}
+        if not crashed:
+            break
+    assert at > 3  # the sweep reached every publish of the operation
+
+
+def test_delta_data_synced_before_manifest_before_pointer(
+    spark, tmp_path, monkeypatch
+):
+    """The manifest must not be durable before its data, nor the
+    pointer before its manifest: in one delta append every file under
+    the new ``_d{n}`` and the directory itself are fsync'd before the
+    manifest is renamed in; each published file is fsync'd before its
+    rename and the table root after it; the manifest publishes before
+    ``_CURRENT``. Inodes identify what was synced (a rename keeps
+    them)."""
+    root = str(tmp_path / "bt")
+    t = BucketedParquetTable(
+        spark, root, keys=["id"], n_buckets=4, compact_policy="off"
+    )
+    t.merge(_batch(spark, [(1, "a", "i", 1, 0)]), batch_id=1)
+    events: list[tuple] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def spy_fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
+
+    def spy_replace(src, dst):
+        events.append(("replace", os.path.basename(dst)))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "replace", spy_replace)
+    t.merge(
+        _batch(spark, [(1, "b", "u", 2, 0), (2, "c", "i", 2, 1)]),
+        batch_id=2, fold=False,
+    )
+    monkeypatch.undo()
+
+    def ino(*parts):
+        return os.stat(os.path.join(root, *parts)).st_ino
+
+    ddir = t._delta_dir(t._manifest_doc()["deltas"][-1])
+    tree = {os.stat(ddir).st_ino} | {
+        os.stat(os.path.join(d, f)).st_ino
+        for d, _, fs in os.walk(ddir) for f in fs
+    }
+    assert len(tree) > 1  # the directory and at least one data file
+    manifest = f"_manifest_v{t.version()}.json"
+    i_man = events.index(("replace", manifest))
+    i_cur = events.index(("replace", "_CURRENT"))
+    assert tree <= {e[1] for e in events[:i_man] if e[0] == "fsync"}
+    assert i_man < i_cur
+    assert events[i_man - 1 : i_man + 2] == [
+        ("fsync", ino(manifest)), ("replace", manifest), ("fsync", ino()),
+    ]
+    assert events[i_cur - 1 : i_cur + 2] == [
+        ("fsync", ino("_CURRENT")), ("replace", "_CURRENT"),
+        ("fsync", ino()),
+    ]
+    assert {(r.id, r.v) for r in t.read().collect()} == {(1, "b"), (2, "c")}

@@ -423,7 +423,7 @@ def test_change_stream_replication_pipeline_end_to_end(spark, tmp_path):
     assert got == {2: ("b", None)}  # w genuinely NULLed, v untouched
 
 
-def test_binlog_bounded_catchup_batches(tmp_path):
+def test_binlog_bounded_catchup_batches(spark, tmp_path):
     """max_events_per_batch (≈ the reference's bufferer caps): a backlog
     of 7 events drains in ceil(7/3) planned batches — each latestOffset
     advances at most 3 positions past the last planned batch — and every
@@ -463,7 +463,7 @@ def test_binlog_bounded_catchup_batches(tmp_path):
     assert reader2.latestOffset()["lsn"] == 10**12 + 70
 
 
-def test_waljson_bounded_catchup_batches(tmp_path):
+def test_waljson_bounded_catchup_batches(spark, tmp_path):
     from transferia_spark.streaming.wal_source import (
         WalJsonStreamReader,
         wal_output_schema,
@@ -490,7 +490,7 @@ def test_waljson_bounded_catchup_batches(tmp_path):
     assert seen == [1, 2, 3, 4, 5]
 
 
-def test_change_stream_bounded_catchup_batches(tmp_path):
+def test_change_stream_bounded_catchup_batches(spark, tmp_path):
     from transferia_spark.streaming.cdc_sources import (
         ChangeStreamJsonStreamReader,
         change_stream_output_schema,
@@ -911,6 +911,57 @@ def test_prune_committed_trims_fully_acked_files(spark, tmp_path):
         for r in reader._read_tuples(p)
     ]
     assert [r[0] for r in rows] == [5, 6]
+
+
+def test_commit_syncs_ack_before_pruning(spark, tmp_path, monkeypatch):
+    """The ack lets prune_committed delete the covered input files, so
+    it must be durable first: commit() fsyncs the ack file, renames it
+    in and fsyncs its directory, and only then prunes. Inodes identify
+    what was synced (a rename keeps them)."""
+    from transferia_spark.streaming import wal_source
+
+    wdir, ack = str(tmp_path / "w"), str(tmp_path / "ack.json")
+    for i, lsns in enumerate([(1, 2), (3, 4)]):
+        _emit(wdir, f"{i:03d}.jsonl", [
+            {"action": "I", "lsn": n, "columns": [{"name": "id", "value": n}]}
+            for n in lsns
+        ])
+    reader = wal_source.WalJsonStreamReader(
+        wal_source.wal_output_schema("id long"),
+        {"path": wdir, "prune_committed": "true", "ack_file": ack,
+         "max_events_per_batch": "2"},
+    )
+    end = reader.latestOffset()
+    reader.partitions(reader.initialOffset(), end)
+    events: list[tuple] = []
+    real_fsync, real_replace = os.fsync, os.replace
+    real_prune = wal_source.prune_committed_files
+
+    def spy_fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
+
+    def spy_replace(src, dst):
+        events.append(("replace", dst))
+        return real_replace(src, dst)
+
+    def spy_prune(*args):
+        events.append(("prune",))
+        return real_prune(*args)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "replace", spy_replace)
+    monkeypatch.setattr(wal_source, "prune_committed_files", spy_prune)
+    reader.commit(end)
+    monkeypatch.undo()
+    assert events == [
+        ("fsync", os.stat(ack).st_ino),
+        ("replace", ack),
+        ("fsync", os.stat(tmp_path).st_ino),
+        ("prune",),
+    ]
+    assert json.load(open(ack)) == end
+    assert sorted(os.listdir(wdir)) == ["001.jsonl"]  # 000 was pruned
 
 
 def test_wal_and_mongo_readers_dead_letter_poison_lines(spark, tmp_path):

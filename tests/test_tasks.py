@@ -170,9 +170,11 @@ def test_compact_partitioned_writes_hive_layout(spark, tmp_path):
 
 
 def test_parquet_table_single_writer_enforced(spark, tmp_path):
-    """ADVICE r3: overwrite takes an O_EXCL lock and CAS-checks
+    """ADVICE r3: overwrite holds a flock on _LOCK and CAS-checks
     _CURRENT — a compaction racing a streaming sink fails loudly
-    instead of silently losing a commit."""
+    instead of silently losing a commit. The lock is a flock, not a
+    marker file: a _LOCK file left by a killed writer blocks no one."""
+    import fcntl
     import os
 
     import pytest
@@ -186,17 +188,24 @@ def test_parquet_table_single_writer_enforced(spark, tmp_path):
     df = spark.range(5).selectExpr("id", "id * 2 AS v")
     v1 = t.overwrite(df)
 
-    # a held lock (another writer mid-commit) rejects the overwrite
+    # a held lock (another writer mid-commit, here a second open file
+    # description) rejects the overwrite
     lock = os.path.join(t.root, "_LOCK")
-    with open(lock, "w") as f:
-        f.write("999")
-    with pytest.raises(ConcurrentWriteError, match="single-writer"):
-        t.overwrite(df)
-    os.remove(lock)
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        with pytest.raises(ConcurrentWriteError, match="single-writer"):
+            t.overwrite(df)
+        assert t.version() == v1
+    finally:
+        os.close(fd)  # the holder dies: its flock goes with it
 
-    # lock released on both success and failure → next commit works
+    # a leftover _LOCK file with no holder (a killed writer's) does not
+    # block, and the lock is released on success → commits keep working
+    assert os.path.exists(lock)
     v2 = t.overwrite(df)
-    assert v2 == v1 + 1 and not os.path.exists(lock)
+    v3 = t.overwrite(df)
+    assert (v2, v3) == (v1 + 1, v1 + 2)
     assert t.read().count() == 5
 
 

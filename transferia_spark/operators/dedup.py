@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transferia_spark import durable
 from transferia_spark.functions.portable import (
     band_keys,
     block_hashes,
@@ -647,10 +648,9 @@ class BandIndexStore:
         meta: dict = {"n_shards": self.n_shards}
         if data_schema is not None:
             meta["schema"] = json.loads(data_schema.json())
-        tmp = os.path.join(self.root, "_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(self.root, "_meta.json"))
+        durable.publish(
+            os.path.join(self.root, "_meta.json"), json.dumps(meta)
+        )
 
     def _ensure_shards(self, band_rows: DataFrame) -> None:
         if self.n_shards is None:
@@ -707,10 +707,7 @@ class BandIndexStore:
 
     def _set_version(self, v: int) -> None:
         os.makedirs(self.root, exist_ok=True)
-        tmp = os.path.join(self.root, "_VERSION.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, os.path.join(self.root, "_VERSION"))
+        durable.publish(os.path.join(self.root, "_VERSION"), str(v))
 
     def exists(self) -> bool:
         return os.path.isdir(self._vdir())
@@ -896,10 +893,7 @@ class BandIndexIngestSink:
             return None
 
     def _advance_watermark(self, batch_id: int) -> None:
-        tmp = self._watermark_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, self._watermark_path)
+        durable.publish(self._watermark_path, str(batch_id))
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         out = os.path.join(self.pairs_dir, f"batch={batch_id}")

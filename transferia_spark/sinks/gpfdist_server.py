@@ -41,6 +41,8 @@ import os
 import struct
 import threading
 
+from transferia_spark import durable
+
 
 def encode_gpfdist_blocks(
     filename: str, data: bytes, offset: int = 0, final: bool = False
@@ -312,10 +314,7 @@ class GpfdistServer:
                     # first post-upgrade chunk recompute pre_len AFTER
                     # the append and duplicate it (code-review r10
                     # pass 2, reproduced live)
-                    tmp = seq_file + ".tmp"
-                    with open(tmp, "w") as fh:
-                        fh.write(f"{cur} {pre_len}")
-                    os.replace(tmp, seq_file)
+                    durable.publish(seq_file, f"{cur} {pre_len}")
                 # per-segment file; chunks of one segment's stream
                 # arrive in order on its connection — journal then append
                 with open(data_file, "ab") as fh:

@@ -19,6 +19,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transferia_spark import durable
+
 
 @dataclass
 class IncrementalState:
@@ -46,10 +48,7 @@ class IncrementalState:
         # in the column's own type instead of via implicit string casts
         # (ADVICE r1: numeric/timestamp cursors vs a string literal)
         data[table] = {"value": cursor, "type": cursor_type}
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(data, f)
-        os.replace(tmp, self.path)
+        durable.publish(self.path, json.dumps(data))
 
 
 def incremental_read(

@@ -11,8 +11,10 @@ Delta/Iceberg/Hudi do, with a manifest instead of a log:
   reference uses for parallel snapshots (``sharding_storage.go:195``)
 - ``_manifest_v{n}.json`` maps every bucket to the version directory
   that last rewrote it; ``_CURRENT`` names the live manifest and flips
-  atomically (``os.replace``), so readers always see a consistent
-  bucket set and a crashed writer leaves the table untouched
+  atomically and durably (``durable.publish``) once the manifest and
+  the data directories it references are synced, so readers always
+  see a consistent bucket set, a crashed writer leaves the table
+  untouched, and a flip that survives a power loss finds its data
 
 There is one write path, the way ClickHouse's ReplacingMergeTree
 absorbs the reference's CDC batches (cheap append now, collapse later
@@ -72,6 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from transferia_spark import durable
 from transferia_spark.cdc.merge import merge_batch
 
 BUCKET_COL = "bkt"  # no leading underscore: `_…=3` dirs are invisible
@@ -331,10 +334,7 @@ class BucketedParquetTable:
             return {"last": -1, "inflight": {}}
 
     def _write_alloc(self, doc: dict) -> None:
-        tmp = self._alloc_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._alloc_path)
+        durable.publish(self._alloc_path, json.dumps(doc))
 
     def _alloc_version(self) -> int:
         """Reserve the next data-directory version — unique across
@@ -378,17 +378,16 @@ class BucketedParquetTable:
 
     def _save_meta(self, schema) -> None:
         self._schema_json = json.loads(schema.json())
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
+        durable.publish(
+            self._meta_path,
+            json.dumps(
                 {
                     "keys": list(self.keys),
                     "n_buckets": self.n_buckets,
                     "schema": self._schema_json,
-                },
-                f,
-            )
-        os.replace(tmp, self._meta_path)
+                }
+            ),
+        )
 
     def _stored_schema(self):
         from pyspark.sql import types as T
@@ -874,6 +873,8 @@ class BucketedParquetTable:
                 **_DELTA_WRITE_OPTIONS,
             )
             touched = self._scan_delta_buckets(self._delta_dir(new_v))
+            if touched:  # data durable before its manifest
+                durable.sync_tree(self._delta_dir(new_v))
         except BaseException:
             # release the reserved version; a partial dir is never
             # referenced and the next GC (post-release) sweeps it
@@ -1224,45 +1225,25 @@ class BucketedParquetTable:
             # and re-shuffling here would add the exchange that plan
             # exists to avoid. _save_meta must not record the bucket
             # column as data.
-            self._save_meta(
-                T.StructType(
-                    [f for f in df.schema.fields if f.name != BUCKET_COL]
-                )
-            )
-            new_v = self._alloc_version()
-            path = os.path.join(self.root, f"_v{new_v}")
             from transferia_spark.cdc.exprcache import (
                 cached_exprs,
                 fast_sort_within,
             )
 
+            schema = T.StructType(
+                [f for f in df.schema.fields if f.name != BUCKET_COL]
+            )
             sort_cols = cached_exprs(
                 ("bktsort", tuple(self.keys)),
                 lambda: [F.col(BUCKET_COL)]
                 + [F.col(k) for k in self.keys],
             )
-            try:
-                (
-                    fast_sort_within(
-                        df, sort_cols, ("bktsort", tuple(self.keys))
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy(BUCKET_COL)
-                    .parquet(path)
-                )
-            except BaseException:
-                shutil.rmtree(path, ignore_errors=True)
-                self._release_claim(new_v)
-                raise
-            return self._commit_manifest(
-                path, new_v, touched, clear_deltas, reset_batch_id,
-                folded_update, replace_buckets, expected_base,
+            out = fast_sort_within(
+                df, sort_cols, ("bktsort", tuple(self.keys))
             )
-        self._save_meta(df.schema)
-        new_v = self._alloc_version()
-        path = os.path.join(self.root, f"_v{new_v}")
-        try:
-            (
+        else:
+            schema = df.schema
+            out = (
                 df.withColumn(BUCKET_COL, self._bucket_of())
                 # align writers with buckets: a dynamic partitionBy
                 # write from S shuffle partitions emits up to
@@ -1289,10 +1270,13 @@ class BucketedParquetTable:
                 .sortWithinPartitions(
                     F.col(BUCKET_COL), *[F.col(k) for k in self.keys]
                 )
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(path)
             )
+        self._save_meta(schema)
+        new_v = self._alloc_version()
+        path = os.path.join(self.root, f"_v{new_v}")
+        try:
+            out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+            durable.sync_tree(path)  # data durable before its manifest
         except BaseException:
             shutil.rmtree(path, ignore_errors=True)
             self._release_claim(new_v)
@@ -1411,9 +1395,9 @@ class BucketedParquetTable:
         delta_buckets: dict[int, list[int]] | None = None,
     ) -> None:
         live = set(deltas)
-        tmp = self._manifest_path(new_v) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
+        durable.publish(
+            self._manifest_path(new_v),
+            json.dumps(
                 {
                     "buckets": {str(b): v for b, v in buckets.items()},
                     "deltas": deltas,
@@ -1432,14 +1416,10 @@ class BucketedParquetTable:
                         if d in live
                     },
                     "n_buckets": self.n_buckets,
-                },
-                f,
-            )
-        os.replace(tmp, self._manifest_path(new_v))
-        ptmp = self._pointer + ".tmp"
-        with open(ptmp, "w") as f:
-            f.write(str(new_v))
-        os.replace(ptmp, self._pointer)  # atomic flip
+                }
+            ),
+        )
+        durable.publish(self._pointer, str(new_v))  # the atomic flip
 
     def _gc(self, keep: int) -> list[str]:
         """Drop version/delta dirs no manifest in the retention window
@@ -1464,7 +1444,6 @@ class BucketedParquetTable:
             except FileNotFoundError:
                 continue
             live.update(doc["buckets"].values())
-            live.add(v)
             live_deltas.update(doc["deltas"])
         # an allocated-but-uncommitted version (a background fold's
         # parquet write in flight) is referenced by no manifest yet —

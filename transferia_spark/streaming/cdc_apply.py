@@ -3,7 +3,7 @@
 ``ParquetTable`` is the whole-table write target of ``tasks/compact.py``
 and ``trcli compact --dst``: every ``overwrite`` writes a fresh
 ``_v{n}`` directory and then atomically repoints ``_CURRENT`` (the poor
-man's Delta commit; swap-level atomicity is filesystem rename). CDC
+man's Delta commit; the swap is a ``durable.publish``). CDC
 micro-batches are applied by ``BucketedCdcApplySink`` into a
 ``BucketedParquetTable`` (``streaming/bucketed_table.py``), which
 appends each batch as a delta and later folds it into only the buckets
@@ -12,10 +12,13 @@ it touches.
 
 from __future__ import annotations
 
+import fcntl
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from transferia_spark import durable
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -71,47 +74,41 @@ class ParquetTable:
 
         Single-writer is ENFORCED, not just documented (ADVICE r3: a
         compaction racing a streaming sink had both compute version()+1
-        and one commit silently won, losing a batch): an O_EXCL
-        advisory lock file brackets the write+flip, and a
+        and one commit silently won, losing a batch): a non-blocking
+        ``flock`` on ``_LOCK`` brackets the write+flip, and a
         compare-and-swap check rejects the flip if ``_CURRENT`` moved
         under us — concurrent writers fail loudly with
-        ``ConcurrentWriteError``."""
+        ``ConcurrentWriteError``. A killed writer's flock dies with it.
+        The new version is synced before the pointer publishes."""
         base = self.version()
         lock = os.path.join(self.root, "_LOCK")
+        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
         try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"another writer holds {lock}; ParquetTable is "
-                "single-writer — serialize its writers (remove the "
-                "stale lock only after a crashed writer)"
-            ) from None
-        try:
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                raise ConcurrentWriteError(
+                    f"another writer holds {lock}; ParquetTable is "
+                    "single-writer — serialize its writers"
+                ) from None
             new_v = base + 1
             path = os.path.join(self.root, f"_v{new_v}")
             w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
+            durable.sync_tree(path)
             if self.version() != base:  # CAS: pointer moved under us
                 raise ConcurrentWriteError(
                     f"_CURRENT advanced past v{base} during overwrite of "
                     f"{self.root}; dropping v{new_v} instead of losing "
                     "the concurrent commit"
                 )
-            tmp = self._pointer + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(new_v))
-            os.replace(tmp, self._pointer)  # atomic pointer swap
+            durable.publish(self._pointer, str(new_v))
             self._gc(keep=2)
             return new_v
         finally:
-            try:
-                os.remove(lock)
-            except FileNotFoundError:
-                pass
+            os.close(fd)
 
     def _gc(self, keep: int) -> None:
         v = self.version()

@@ -37,6 +37,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from transferia_spark import durable
 from transferia_spark.cdc.changeitem import (
     LSN_COL,
     OP_COL,
@@ -97,10 +98,7 @@ class ControlRouter:
     def _record_ddl(self, lsn: int) -> None:
         if not self.state_file:
             return
-        tmp = self.state_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"ddl_lsn": lsn}, f)
-        os.replace(tmp, self.state_file)
+        durable.publish(self.state_file, json.dumps({"ddl_lsn": lsn}))
 
     def _fire_truncate(self, table: str | None) -> None:
         # zero-arg callbacks (single-table pipelines) stay supported;

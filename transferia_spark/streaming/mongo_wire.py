@@ -36,12 +36,12 @@ import os
 import struct
 import threading as _threading
 
+from transferia_spark import durable
 from transferia_spark.streaming.wal_source import (
     event_file,
     last_published_event,
     next_file_no,
     read_state,
-    write_state,
 )
 
 # ----------------------------------------------------------------- BSON
@@ -1359,7 +1359,9 @@ def live_drain_change_stream(live: dict, out_dir: str) -> int:
             last_token = post_batch[-1]
         state = {"_data": last_token, "after": last_event}
         if last_token and state != saved:
-            write_state(out_dir, "_resume.json", json.dumps(state))
+            durable.publish(
+                os.path.join(out_dir, "_resume.json"), json.dumps(state)
+            )
         return n
     finally:
         client.close()
@@ -1730,6 +1732,7 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
     # 2. Re-reading buffered entries is idempotent (each pending txn
     # records the oplog positions it absorbed).
     max_txn_ops = int(live.get("max_txn_buffer_ops", 100_000))
+    txn_file = os.path.join(out_dir, "_txn_pending.json")
     try:
         txn_state = json.loads(read_state(out_dir, "_txn_pending.json"))
     except (TypeError, ValueError):
@@ -1791,7 +1794,7 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
             # sidecar would strand them as pending across a later crash
             # window
             if txn.pending or txn.flushed or txn.aborted:
-                write_state(out_dir, "_txn_pending.json", json.dumps({
+                durable.publish(txn_file, json.dumps({
                     "pending": {**txn.flushed, **txn.pending},
                     "flushed": sorted(txn.flushed),
                     "seq": seq,
@@ -1800,14 +1803,14 @@ def live_drain_oplog(live: dict, out_dir: str) -> int:
         # entirely filtered to other collections); only true pending
         # remain in the sidecar
         if txn.pending:
-            write_state(out_dir, "_txn_pending.json", json.dumps(
+            durable.publish(txn_file, json.dumps(
                 {**txn.to_state(), "flushed": [], "seq": seq}
             ))
-        elif os.path.exists(os.path.join(out_dir, "_txn_pending.json")):
-            os.remove(os.path.join(out_dir, "_txn_pending.json"))
+        elif os.path.exists(txn_file):
+            os.remove(txn_file)
         if last != start:
-            write_state(out_dir, "_resume_oplog.json",
-                        json.dumps({"t": last[0], "i": last[1]}))
+            durable.publish(os.path.join(out_dir, "_resume_oplog.json"),
+                            json.dumps({"t": last[0], "i": last[1]}))
         return n
     finally:
         client.close()

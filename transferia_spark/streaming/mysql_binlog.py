@@ -40,12 +40,12 @@ import zlib
 from dataclasses import dataclass, field
 from typing import Callable
 
+from transferia_spark import durable
 from transferia_spark.streaming.wal_source import (
     drain_new_captures,
     event_file,
     next_file_no,
     read_state,
-    write_state,
 )
 
 # -- event type codes (public binlog_event.h values) --------------------
@@ -823,8 +823,9 @@ class BinlogTailer:
         set — lines before state, so a crash in between replays a
         transaction rather than skipping it."""
         self._flush()
-        write_state(
-            self.out_dir, "_gtid.state", format_gtid_set(self.gtid_executed)
+        durable.publish(
+            os.path.join(self.out_dir, "_gtid.state"),
+            format_gtid_set(self.gtid_executed),
         )
 
 

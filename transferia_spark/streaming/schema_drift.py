@@ -27,6 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from transferia_spark import durable
 
 class SchemaRegistry:
     """Versioned table→schema store (file-backed, one JSON per table).
@@ -54,10 +55,10 @@ class SchemaRegistry:
     def put(self, table: str, schema: T.StructType) -> int:
         cur = self.get(table)
         version = (cur[0] + 1) if cur else 1
-        tmp = self._file(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "schema": schema.jsonValue()}, f)
-        os.replace(tmp, self._file(table))
+        durable.publish(
+            self._file(table),
+            json.dumps({"version": version, "schema": schema.jsonValue()}),
+        )
         return version
 
 
@@ -137,8 +138,8 @@ def json_kind_compatible(declared: T.DataType, v) -> bool:
 class ProbeScanCache:
     """Incremental probe-scan state for one capture directory: the set
     of (file, size) already scanned and the LATEST non-null sample per
-    column. Capture files are immutable once visible (the tailers write
-    whole files atomically via os.replace), so a drift restart only
+    column. Capture files are immutable once visible (the tailers publish
+    whole files through ``durable.publishing``), so a drift restart only
     scans NEW files instead of the whole history (r6 item 5 / r7
     verdict item 8); a same-name file whose size changed is rescanned.
     """

@@ -53,6 +53,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from transferia_spark import durable
+
 _ACTIONS = {"I": "i", "U": "u", "D": "d"}
 
 # payload types pa.array converts from plain JSON-decoded values with
@@ -210,8 +212,8 @@ class _FileSlice(InputPartition):
 # tail ({n:09d}.jsonl from the pg and mysql tailers, live_/oplog_
 # {n:06d}.jsonl from the mongo drains) beside the writers' own state.
 # A name starting with "_" or "." is never an event file (the Hadoop
-# hidden-file rule): writers keep positions in "_" state files and
-# stage each event file as a hidden ".<name>.tmp" until it publishes.
+# hidden-file rule): writers keep positions in "_" state files, and
+# every file publishes through a hidden temp (``durable.publishing``).
 
 
 def _scan_files(path: str) -> list[str]:
@@ -260,39 +262,23 @@ def last_published_event(out_dir: str, prefix: str) -> dict | None:
         return None
 
 
-def _durable_replace(tmp: str, path: str) -> None:
-    """Rename a fsync'd temp file into place, then fsync the directory:
-    the rename itself is not durable until the directory entry is."""
-    os.replace(tmp, path)
-    dfd = os.open(os.path.dirname(path), os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
+class _NoEvents(Exception):
+    """Discards an event file that got no events (see event_file)."""
 
 
 @contextlib.contextmanager
 def event_file(out_dir: str, name: str):
-    """Write one event file of a recorded directory: yields a text
-    handle on the hidden ``.<name>.tmp``; on a clean exit a non-empty
-    file publishes durably (fsync the data, rename, fsync the
-    directory) and an empty one is removed. Writers persist a position
-    (slot ack, GTID set, resume token) only after this returns, so the
-    position can never be durable before the events it covers."""
-    tmp = os.path.join(out_dir, "." + name + ".tmp")
-    try:
-        with open(tmp, "w") as out:
+    """Write one event file of a recorded directory: yields a handle
+    on a hidden temp file (``durable.publishing``); on a clean exit a
+    non-empty file publishes durably and an empty one is removed.
+    Writers persist a position (slot ack, GTID set, resume token) only
+    after this returns, so the position can never be durable before
+    the events it covers."""
+    with contextlib.suppress(_NoEvents):
+        with durable.publishing(os.path.join(out_dir, name)) as out:
             yield out
-            out.flush()
-            os.fsync(out.fileno())
-            empty = out.tell() == 0
-    except BaseException:
-        os.remove(tmp)
-        raise
-    if empty:
-        os.remove(tmp)
-    else:
-        _durable_replace(tmp, os.path.join(out_dir, name))
+            if out.tell() == 0:
+                raise _NoEvents
 
 
 def read_state(out_dir: str, name: str) -> str | None:
@@ -302,16 +288,6 @@ def read_state(out_dir: str, name: str) -> str | None:
             return f.read()
     except FileNotFoundError:
         return None
-
-
-def write_state(out_dir: str, name: str, text: str) -> None:
-    """Durably replace a writer's ``_``-prefixed state file."""
-    path = os.path.join(out_dir, name)
-    with open(path + ".tmp", "w") as f:
-        f.write(text)
-        f.flush()
-        os.fsync(f.fileno())
-    _durable_replace(path + ".tmp", path)
 
 
 def drain_new_captures(
@@ -344,8 +320,9 @@ def drain_new_captures(
                         yield bytes.fromhex(json.loads(line)["frame"])
 
     n = drain(frames())
-    write_state(
-        out_dir, "_drained.state", json.dumps(sorted(done | set(fresh)))
+    durable.publish(
+        os.path.join(out_dir, "_drained.state"),
+        json.dumps(sorted(done | set(fresh))),
     )
     return n
 
@@ -366,8 +343,7 @@ def dead_letter_record(
     os.makedirs(dl_dir, exist_ok=True)
     base = os.path.basename(src_file)
     final = os.path.join(dl_dir, f"{base}.{byte_pos}.json")
-    tmp = final + ".tmp"
-    with open(tmp, "w") as fh:
+    with durable.publishing(final) as fh:
         json.dump(
             {
                 "table": table,
@@ -381,7 +357,6 @@ def dead_letter_record(
             },
             fh,
         )
-    os.replace(tmp, final)
 
 
 class OffsetScanCache:
@@ -885,10 +860,7 @@ class RecordedCdcStreamReader(DataSourceStreamReader):
         # position / per-collection resume token: persist the confirmed
         # offset so the tailer can trim the log
         if self.ack_file:
-            tmp = self.ack_file + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(end, fh)
-            os.replace(tmp, self.ack_file)
+            durable.publish(self.ack_file, json.dumps(end))
         if self.prune_committed:
             prune_committed_files(
                 self._scan_cache, _scan_files(self.path), self._to_pos(end)

@@ -17,12 +17,12 @@ Scale notes:
   the output is a real Hive-style ``partitionBy`` layout, and rows are
   spread over (partition value, spread-bucket) so each directory gets
   ~target-sized files instead of one giant file per value.
-- The rewrite lands in a fresh versioned directory with an atomic
+- The rewrite lands in a fresh versioned directory with a durable
   pointer swap (``ParquetTable``) — readers never see a half-written
-  table. ParquetTable is SINGLE-WRITER: pause the streaming sink (or
+  table. ParquetTable is SINGLE-WRITER: a concurrent ``overwrite``
+  fails with ``ConcurrentWriteError``, so pause the streaming sink (or
   schedule compaction between micro-batches via foreachBatch) before
-  compacting in place — two concurrent ``overwrite`` calls race on the
-  same version directory and one batch silently loses.
+  compacting in place.
 """
 
 from __future__ import annotations
@@ -104,7 +104,7 @@ def compact_table(
     partition_cols: list[str] | None = None,
 ) -> int:
     """In-place compaction of a ParquetTable: read the live version,
-    rewrite dense, atomic-swap the pointer."""
+    rewrite dense, durably swap the pointer."""
     v = table.version()
     src = os.path.join(table.root, f"_v{v}")
     n_files = max(1, round(dir_bytes(src) / target_file_bytes))

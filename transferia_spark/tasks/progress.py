@@ -27,6 +27,8 @@ import json
 import os
 from dataclasses import dataclass
 
+from transferia_spark import durable
+
 
 @dataclass
 class SnapshotProgress:
@@ -40,10 +42,8 @@ class SnapshotProgress:
             return json.load(f)
 
     def _save(self, data: dict) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(data, f)
-        os.replace(tmp, self.path)  # atomic, like the tracker's single flush
+        # one publish per save, like the tracker's single flush
+        durable.publish(self.path, json.dumps(data))
 
     def _op(self, data: dict) -> dict:
         return data.setdefault(self.operation_id, {})

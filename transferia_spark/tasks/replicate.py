@@ -36,6 +36,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from transferia_spark import durable
 from transferia_spark.plans.transfer import TransferSpec, TransferType, _selected
 
 
@@ -126,10 +127,8 @@ def evolve_schema_file_from_registry(source: dict, schema_id: int,
     """The supervisor half of registry-driven drift: fetch the writer
     schema that raised RegistrySchemaDrift, append its NEW columns to
     the declared schema as nullable (widening-only -- schema_drift.py's
-    evolve contract), and atomically rewrite ``schema_file`` so the
+    evolve contract), and durably publish ``schema_file`` so the
     restarted stream reads them. Returns the added column names."""
-    import os as _os
-
     from pyspark.sql import types as T
 
     from transferia_spark.parsers.schema_registry import (
@@ -164,11 +163,7 @@ def evolve_schema_file_from_registry(source: dict, schema_id: int,
             for n, t in added
         ]
     )
-    sf = source["schema_file"]
-    tmp = sf + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(schema_to_ddl(evolved))
-    _os.replace(tmp, sf)
+    durable.publish(source["schema_file"], schema_to_ddl(evolved))
     return [n for n, _t in added]
 
 
@@ -223,35 +218,28 @@ class TransferStateStore:
     def set(self, transfer_id: str, **kv) -> None:
         doc = self.get(transfer_id)
         doc.update(kv)
-        tmp = self._file(transfer_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._file(transfer_id))
+        durable.publish(self._file(transfer_id), json.dumps(doc))
 
     def remove(self, transfer_id: str, keys: list[str]) -> None:
         doc = self.get(transfer_id)
         for k in keys:
             doc.pop(k, None)
-        tmp = self._file(transfer_id) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._file(transfer_id))
+        durable.publish(self._file(transfer_id), json.dumps(doc))
 
     # -- health heartbeat (≈ coordinator.TransferHealth) ---------------
     def report_health(
         self, transfer_id: str, retry_count: int, last_error: str | None
     ) -> None:
-        tmp = os.path.join(self.path, f"health_{transfer_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(
+        durable.publish(
+            os.path.join(self.path, f"health_{transfer_id}.json"),
+            json.dumps(
                 {
                     "retry_count": retry_count,
                     "last_error": last_error or "",
                     "ts": time.time(),
-                },
-                f,
-            )
-        os.replace(tmp, tmp[: -len(".tmp")])
+                }
+            ),
+        )
 
     def health(self, transfer_id: str) -> dict | None:
         try:
@@ -1046,10 +1034,7 @@ def run_replication(
                     wires[fmt].recorded if fmt in wires else fmt,
                     src["path"], ddl,
                 )
-                tmp = src["schema_file"] + ".tmp"
-                with open(tmp, "w") as f:
-                    f.write(schema_to_ddl(evolved))
-                os.replace(tmp, src["schema_file"])
+                durable.publish(src["schema_file"], schema_to_ddl(evolved))
 
         return ControlRouter(
             base_sink,
