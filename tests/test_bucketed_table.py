@@ -1713,6 +1713,55 @@ def test_crash_at_every_publish_leaves_pre_or_post_state(
     assert at > 3  # the sweep reached every publish of the operation
 
 
+@pytest.mark.parametrize("publish", ["_manifest_v", "_CURRENT"])
+@pytest.mark.parametrize("op", ["append_delta", "compact_buckets"])
+def test_failed_commit_section_releases_its_claim(
+    spark, tmp_path, monkeypatch, op, publish
+):
+    """A locked commit section that raises at its manifest or
+    ``_CURRENT`` publish (ENOSPC, say) releases its version claim, in
+    ``_ALLOC`` and in the instance: the SAME instance's next commit
+    leaves no claim and no orphan directory, with no claim expiry."""
+    from transferia_spark import durable
+
+    t = BucketedParquetTable(
+        spark, str(tmp_path / "bt"), keys=["id"], n_buckets=4,
+        compact_policy="off",
+    )
+    t.merge(
+        _batch(spark, [(i, f"a{i}", "i", 1, i) for i in range(6)]),
+        batch_id=1,
+    )
+    update = _batch(spark, [(1, "b", "u", 2, 0)])
+    if op == "append_delta":
+        def run():
+            t.merge(update, batch_id=2, fold=False)
+    else:
+        t.merge(update, batch_id=2, fold=False)
+
+        def run():
+            t.compact_buckets(list(range(t.n_buckets)))
+    real = durable.publish
+
+    def failing(path, text):
+        if os.path.basename(path).startswith(publish):
+            raise _InjectedCrash(os.path.basename(path))
+        real(path, text)
+
+    with monkeypatch.context() as m:
+        m.setattr(durable, "publish", failing)
+        with pytest.raises(_InjectedCrash):
+            run()
+    assert t._inflight == set()
+    assert t._read_alloc()["inflight"] == {}
+    t.merge(_batch(spark, [(100, "x", "i", 3, 0)]), batch_id=3, fold=False)
+    assert t._inflight == set()
+    assert t._read_alloc()["inflight"] == {}
+    _assert_no_orphans(t)
+    got = {(r.id, r.v) for r in t.read().collect()}
+    assert (100, "x") in got and (1, "a1" if op == "append_delta" else "b") in got
+
+
 def test_delta_data_synced_before_manifest_before_pointer(
     spark, tmp_path, monkeypatch
 ):

@@ -9,13 +9,46 @@ oracles (DuckDB timestamps are UTC-naive).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import threading
 
 from pyspark.sql import SparkSession
 
 #: the directory holding the ``transferia_spark`` package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: pid → this process's private Unix-socket directory (see _socket_dir)
+_SOCKET_DIRS: dict[int, str] = {}
+_SOCKET_DIRS_LOCK = threading.Lock()
+
+
+def _remove_socket_dir(pid: int, path: str) -> None:
+    if os.getpid() == pid:  # never a forked child's copy of the hook
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _socket_dir() -> str:
+    """This process's Unix-socket directory: ``mkdtemp`` under ``/tmp``
+    (mode 0700), removed at interpreter exit.
+
+    In Unix-socket mode PySpark drops its per-connection auth secret, so
+    the directory's mode is the channel's only access control. Under
+    ``/tmp`` rather than ``java.io.tmpdir`` or ``$TMPDIR``: Spark appends
+    ``/.<uuid4>.sock`` (43 bytes), and a deep temp directory would pass
+    the 107-byte ``sun_path`` limit and fail the session's start.
+    """
+    pid = os.getpid()
+    with _SOCKET_DIRS_LOCK:
+        path = _SOCKET_DIRS.get(pid)
+        if path is None:
+            path = _SOCKET_DIRS[pid] = tempfile.mkdtemp(prefix="tfs-", dir="/tmp")
+            # registered before the session starts, so it runs after
+            # py4j's own exit hook has stopped the JVM
+            atexit.register(_remove_socket_dir, pid, path)
+        return path
 
 
 def get_spark(
@@ -37,6 +70,17 @@ def get_spark(
     ``spark.executorEnv.PYTHONPATH``, ahead of any value in
     ``extra_conf``; without it no Python task could start when the
     driver's cwd is outside the repository.
+
+    Every Python<->JVM channel of the session (the daemon-forked
+    workers, the streaming sources' planner worker, the accumulator
+    server) runs over a Unix domain socket
+    (``spark.python.unix.domain.socket.enabled``). Over loopback TCP
+    each Python task stalled ~40 ms before its first row: the JVM's
+    small writes met the worker's delayed ACK (Nagle's algorithm). A
+    one-task RDD ``map`` over 1000 rows went 57 -> 17 ms (4-vCPU host,
+    ``local[3]``). The sockets live in a private 0700 directory
+    (``_socket_dir``), one per process, removed at exit. A value in
+    ``extra_conf`` still overrides either setting.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -92,7 +136,11 @@ def get_spark(
             "FileSystemBasedCheckpointFileManager",
         )
     )
-    conf = dict(extra_conf or {})
+    conf = {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": _socket_dir(),
+        **(extra_conf or {}),
+    }
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )

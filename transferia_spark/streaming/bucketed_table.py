@@ -347,10 +347,10 @@ class BucketedParquetTable:
             alloc = self._read_alloc()
             n = max(self.version(), self._last_alloc, alloc["last"]) + 1
             self._last_alloc = n
-            self._inflight.add(n)
             alloc["last"] = n
             alloc["inflight"][str(n)] = time.time()
             self._write_alloc(alloc)
+            self._inflight.add(n)  # only a published claim
             return n
 
     def _release_claim(self, n: int) -> None:
@@ -362,6 +362,22 @@ class BucketedParquetTable:
             alloc = self._read_alloc()
             if alloc["inflight"].pop(str(n), None) is not None:
                 self._write_alloc(alloc)
+
+    @contextlib.contextmanager
+    def _commit_section(self, claim: int):
+        """The locked commit section (mutex + flock) of a write holding
+        version claim ``claim``. If the section raises (a failed
+        manifest, ``_CURRENT`` or ``_ALLOC`` publish, a failed GC), the
+        claim is released, so neither this process's GC nor another's
+        keeps the directory alive for good. The directory itself is left
+        to ``_gc``: once ``_CURRENT`` flipped it is live, and GC decides
+        by manifest references."""
+        with self._commit_mutex, self._fs_lock():
+            try:
+                yield
+            except BaseException:
+                self._release_claim(claim)
+                raise
 
     # ---------------------------------------------------------- layout
 
@@ -620,23 +636,6 @@ class BucketedParquetTable:
             for b in wanted
             if b in m and os.path.isdir(self._bucket_dir(m[b], b))
         ]
-        # steady full-churn reads (every bucket at ONE version, the
-        # version dir holding exactly those buckets) collapse to the
-        # parent dir: one path instead of n_buckets paths (py4j
-        # converts each path per read — profiled r12), with the
-        # discovered partition column dropped. Stale sibling bucket
-        # dirs from a superseded commit disqualify the shortcut.
-        if len(paths) > 4 and len({m[b] for b in wanted if b in m}) == 1:
-            v0 = m[next(b for b in wanted if b in m)]
-            parent = os.path.join(self.root, f"_v{v0}")
-            try:
-                entries = set(os.listdir(parent))
-            except OSError:
-                entries = set()
-            if {os.path.basename(p) for p in paths} == {
-                e for e in entries if e.startswith(f"{BUCKET_COL}=")
-            }:
-                paths = [parent]
         schema = self._stored_schema()
         if not paths:
             # table exists but the wanted buckets hold no BASE rows
@@ -659,14 +658,8 @@ class BucketedParquetTable:
             # Spark job on EVERY micro-batch merge (profiled r11); the
             # stored schema is authoritative — commits _save_meta it
             base = self.spark.read.schema(schema).parquet(*paths)
-            if BUCKET_COL in base.columns:
-                # parent-dir shortcut: partition discovery appended
-                # the bucket dir column — data columns only here
-                base = base.drop(BUCKET_COL)
         else:
             base = self.spark.read.parquet(*paths)
-            if BUCKET_COL in base.columns:
-                base = base.drop(BUCKET_COL)
         ddf = self._read_deltas(pairs, doc)
         if ddf is None:
             return base
@@ -715,8 +708,21 @@ class BucketedParquetTable:
                 + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
             )
             full = {b for d in members for b in doc["delta_buckets"][d]}
+            # the first delta is named by its files, the rest by their
+            # dirs: Spark logs "All paths were ignored" when every root's
+            # name starts with `_`, and a lone glob root
+            # (`_d{n}/*.parquet`) logs a FileStreamSink stack trace.
+            # Files for every delta would cost more: past 32 roots Spark
+            # lists them in a job of one task per root (a 48-delta tail
+            # of 3-file deltas read in 434 ms instead of 212)
+            first = self._delta_dir(members[0])
             f = self.spark.read.schema(schema).parquet(
-                *[self._delta_dir(d) for d in members]
+                *[
+                    os.path.join(first, n)
+                    for n in sorted(os.listdir(first))
+                    if n.endswith(".parquet")
+                ],
+                *[self._delta_dir(d) for d in members[1:]],
             )
             if set(bs) != full:
                 # prune to still-pending buckets (sorted files →
@@ -906,7 +912,7 @@ class BucketedParquetTable:
                     ]
                 )
             )
-        with self._commit_mutex, self._fs_lock():
+        with self._commit_section(new_v):
             # re-read under the mutex: a background fold may have
             # committed while the parquet write ran — its folded
             # watermarks and pruned delta list must carry into this
@@ -1299,7 +1305,7 @@ class BucketedParquetTable:
     ) -> int:
         # a bucket whose rows were all deleted writes no dir; it still
         # moves to new_v in the manifest (read() tolerates the absence)
-        with self._commit_mutex, self._fs_lock():
+        with self._commit_section(new_v):
             # re-read under the mutex: deltas appended by the streaming
             # thread while this (possibly background) fold wrote its
             # parquet must survive into the new manifest — they were
