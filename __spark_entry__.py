@@ -603,7 +603,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same code path a watermarked stream-stream join runs): error
     events matched to the same user's purchases in the preceding
     30 minutes."""
-    from transferia_spark.streaming import interval_join
+    from transferia_spark.streaming.joins import interval_join
 
     ev = _t(spark, sf_dir, "events")
     errors = ev.filter(F.col("event_type") == "error").select(

@@ -49,7 +49,10 @@ def main() -> int:
         help="rebucket: explicit new bucket count (default: size-derived, "
              "growth only)",
     )
-    ap.add_argument("--dst", help="compact: ParquetTable root to write")
+    ap.add_argument(
+        "--dst",
+        help="compact: parquet directory to replace (may equal --src)",
+    )
     ap.add_argument("--target-mb", type=int, default=256,
                     help="compact: target output file size")
     ap.add_argument("--partition-by", default="",
@@ -119,15 +122,13 @@ def main() -> int:
             ap.error("compact needs --src and --dst")
         spark = get_spark()
         before = data_file_count(args.src)
-        v = compact_dir(
+        compact_dir(
             spark, args.src, args.dst,
             target_file_bytes=args.target_mb * 1024 * 1024,
             partition_cols=[c for c in args.partition_by.split(",") if c] or None,
         )
-        import os as _os
-
-        after = data_file_count(_os.path.join(args.dst, f"_v{v}"))
-        print(f"compacted: {before} -> {after} files (version {v})")
+        after = data_file_count(args.dst)
+        print(f"compacted: {before} -> {after} files in {args.dst}")
         return 0
 
     if args.verb == "rebucket":

@@ -92,7 +92,7 @@ def test_delete_can_empty_a_bucket(spark, table):
     table.merge(_batch(spark, [(1, "x", "i", 1, 0)]))
     table.merge(_batch(spark, [(1, None, "d", 2, 0)]))
     # existing-but-empty table reads as an empty frame with the stored
-    # schema (ParquetTable's empty-after-delete behavior)
+    # schema
     out = table.read()
     assert out.count() == 0
     assert out.columns == ["id", "v"]

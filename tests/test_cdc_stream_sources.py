@@ -296,7 +296,7 @@ def test_binlog_replication_pipeline_end_to_end(spark, tmp_path):
     → ReplicationPipeline → bucket-scoped CDC sink, with a checkpoint
     restart applying only new binlog events — the MySQL analog of the
     transfer's replicate mode."""
-    from transferia_spark.streaming import ReplicationPipeline
+    from transferia_spark.streaming.pipeline import ReplicationPipeline
     from transferia_spark.streaming.bucketed_table import (
         BucketedCdcApplySink,
         BucketedParquetTable,
@@ -362,7 +362,7 @@ def test_change_stream_replication_pipeline_end_to_end(spark, tmp_path):
     → ReplicationPipeline → bucket-scoped sink, with partial updates
     exercising the _present contract through streaming + checkpoint
     restart ($unset NULLs, untouched columns survive)."""
-    from transferia_spark.streaming import ReplicationPipeline
+    from transferia_spark.streaming.pipeline import ReplicationPipeline
     from transferia_spark.streaming.bucketed_table import (
         BucketedCdcApplySink,
         BucketedParquetTable,

@@ -228,7 +228,7 @@ def test_binlog_controls_pipeline_end_to_end(spark, tmp_path):
     the DDL and aborts for a schema restart → the supervisor evolves the
     schema and reruns from the checkpoint → final state is the
     post-truncate rows under the evolved schema."""
-    from transferia_spark.streaming import ReplicationPipeline
+    from transferia_spark.streaming.pipeline import ReplicationPipeline
     from transferia_spark.streaming.bucketed_table import (
         BucketedCdcApplySink,
         BucketedParquetTable,

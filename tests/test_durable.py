@@ -3,8 +3,13 @@
 from __future__ import annotations
 
 import ast
+import errno
 import json
 import os
+import shutil
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pytest
@@ -16,20 +21,25 @@ from transferia_spark import durable
 #: doomed directory out of sight and publishes nothing
 _RENAME_ALLOWED = {("streaming/bucketed_table.py", "_condemn")}
 
+#: the calls that move a directory entry, by the module they come from
+_MOVES = {"os": {"replace", "rename", "renames"}, "shutil": {"move"}}
+
 
 def _renames(tree: ast.AST) -> list[str]:
-    """Enclosing function of every ``os.replace``/``os.rename`` call,
-    under any name ``os`` is imported as (``from os import`` of either
-    counts as a call at module level)."""
-    os_names = {"os"}
+    """Enclosing function of every rename: an ``os.replace``,
+    ``os.rename``, ``os.renames`` or ``shutil.move`` call under any
+    name its module is imported as (a ``from`` import of one counts at
+    module level), and any mention of ``renameat2``."""
+    aliases = {m: {m} for m in _MOVES}
     hits: list[str] = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
-            os_names |= {a.asname or a.name for a in node.names
-                         if a.name == "os"}
-        elif isinstance(node, ast.ImportFrom) and node.module == "os":
+            for a in node.names:
+                if a.name in _MOVES:
+                    aliases[a.name].add(a.asname or a.name)
+        elif isinstance(node, ast.ImportFrom) and node.module in _MOVES:
             hits += ["<module>" for a in node.names
-                     if a.name in ("replace", "rename")]
+                     if a.name in _MOVES[node.module]]
 
     def visit(node: ast.AST, func: str) -> None:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -38,9 +48,13 @@ def _renames(tree: ast.AST) -> list[str]:
         if (
             isinstance(node, ast.Call)
             and isinstance(f, ast.Attribute)
-            and f.attr in ("replace", "rename")
             and isinstance(f.value, ast.Name)
-            and f.value.id in os_names
+            and any(f.value.id in aliases[m] and f.attr in calls
+                    for m, calls in _MOVES.items())
+        ) or "renameat2" in (
+            getattr(node, "id", None),
+            getattr(node, "attr", None),
+            node.value if isinstance(node, ast.Constant) else None,
         ):
             hits.append(func)
         for child in ast.iter_child_nodes(node):
@@ -67,10 +81,18 @@ def test_every_publish_goes_through_durable():
 def test_guard_sees_aliases():
     src = (
         "import os as _os\n"
+        "import shutil as sh\n"
         "from os import rename\n"
+        "from shutil import move\n"
         "def f():\n    _os.replace('a', 'b')\n"
+        "def g():\n    sh.move('a', 'b')\n"
+        "def h():\n    _os.renames('a', 'b')\n"
+        "def i(libc):\n    libc.renameat2(-100, b'a', -100, b'b', 2)\n"
+        "def j(libc):\n    return getattr(libc, 'renameat2')\n"
     )
-    assert sorted(_renames(ast.parse(src))) == ["<module>", "f"]
+    assert sorted(_renames(ast.parse(src))) == [
+        "<module>", "<module>", "f", "g", "h", "i", "j",
+    ]
 
 
 def test_publish_replaces_whole_or_not_at_all(tmp_path):
@@ -111,7 +133,8 @@ def _leave_crash_temp(monkeypatch, path: str, text: str) -> str:
 def test_crash_temp_is_never_read_as_data(spark, tmp_path, monkeypatch):
     """A temp file a crash left behind is skipped by every scanner of
     the directories publishes land in: the recorded-directory readers,
-    the bucketed table's GC and Spark's parquet listing."""
+    the bucketed table's GC and Spark's parquet listing. The table's GC
+    removes one from its root once it is older than a claim TTL."""
     from transferia_spark.streaming.bucketed_table import BucketedParquetTable
     from transferia_spark.streaming.wal_source import (
         _scan_files,
@@ -144,7 +167,142 @@ def test_crash_temp_is_never_read_as_data(spark, tmp_path, monkeypatch):
     _leave_crash_temp(monkeypatch, os.path.join(base, "part-x.parquet"),
                       "not parquet")
     assert t.version() == v
+    stale = time.time() - t.CLAIM_TTL - 60
+    os.utime(os.path.join(t.root, left[0]), (stale, stale))
     t.overwrite(spark.createDataFrame([(2, "b")], "id long, v string"))
-    assert all(os.path.exists(os.path.join(t.root, n)) for n in left)
+    assert [os.path.exists(os.path.join(t.root, n)) for n in left] == [
+        False, True,
+    ]
     assert {(r.id, r.v) for r in t.read().collect()} == {(2, "b")}
     assert spark.read.parquet(base).count() == 1
+
+
+# ------------------------------------------------------ directory replace
+
+
+def _kill(*args, **kwargs):
+    raise _Killed
+
+
+def _replace_rows(spark, target: str, n: int, fail_at: int | None = None):
+    """Replace ``target`` with ids 0..n-1 in 4 partitions; with
+    ``fail_at``, the task holding that id raises after the other tasks
+    have committed their files."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, n, 1, 4)
+    if fail_at is not None:
+        def check(i):
+            if i == fail_at:
+                time.sleep(2)
+                raise RuntimeError("task failed mid-job")
+            return i
+
+        df = df.select(F.udf(check, "long")("id").alias("id"))
+    with durable.replacing(target) as stage:
+        df.write.parquet(stage)
+
+
+@pytest.mark.parametrize("step", ["write", "sync_tree", "exchange", "remove_old"])
+def test_replace_leaves_pre_or_post_state_at_each_step(
+    spark, tmp_path, monkeypatch, step
+):
+    """Fail each step of a directory replace in turn: a fresh read sees
+    the old table or the new one, never an empty or partial one, and
+    the next replace succeeds and leaves no staging or old copy."""
+    target = str(tmp_path / "t")
+    _replace_rows(spark, target, 10)
+    rmtree = shutil.rmtree
+
+    def killed_removing(p, **kw):  # no leftover exists before the swap
+        if os.path.exists(p):
+            raise _Killed
+        rmtree(p, **kw)
+
+    with monkeypatch.context() as m:
+        if step == "sync_tree":
+            m.setattr(durable, "sync_tree", _kill)
+        elif step == "exchange":
+            m.setattr(durable, "_exchange", _kill)
+        elif step == "remove_old":
+            m.setattr(shutil, "rmtree", killed_removing)
+        with pytest.raises(Exception if step == "write" else _Killed):
+            _replace_rows(spark, target, 20,
+                          fail_at=15 if step == "write" else None)
+    assert spark.read.parquet(target).count() == (
+        20 if step == "remove_old" else 10)
+    _replace_rows(spark, target, 30)
+    assert spark.read.parquet(target).count() == 30
+    assert sorted(os.listdir(tmp_path)) == [".t.lock", "t"]
+
+
+def _replace_text(target: str, text: str) -> None:
+    with durable.replacing(target) as stage:
+        os.makedirs(stage)
+        with open(os.path.join(stage, "data"), "w") as f:
+            f.write(text)
+
+
+def _read_text(target: str) -> str:
+    with open(os.path.join(target, "data")) as f:
+        return f.read()
+
+
+def test_replace_falls_back_to_two_renames(tmp_path, monkeypatch):
+    """Where the filesystem refuses the exchange (EINVAL), the swap is
+    two renames; a kill between them leaves only the old copy, which
+    the next replace of the target restores before it stages."""
+    def refused(a, b):
+        raise OSError(errno.EINVAL, "no exchange on this filesystem", a)
+
+    monkeypatch.setattr(durable, "_exchange", refused)
+    target = str(tmp_path / "t")
+    _replace_text(target, "v1")
+    _replace_text(target, "v2")
+    assert _read_text(target) == "v2"
+    assert sorted(os.listdir(tmp_path)) == [".t.lock", "t"]
+
+    rename = os.rename
+
+    def killed_before_second(src, dst):
+        if src.endswith(".staging"):
+            raise _Killed
+        rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", killed_before_second)
+        m.setattr(shutil, "rmtree", lambda p, **kw: None)  # no cleanup
+        with pytest.raises(_Killed):
+            _replace_text(target, "v3")
+    assert not os.path.exists(target)
+
+    with durable.replacing(target) as stage:
+        assert _read_text(target) == "v2"
+        assert not os.path.exists(stage)
+        os.makedirs(stage)
+    assert os.listdir(target) == []
+    assert sorted(os.listdir(tmp_path)) == [".t.lock", "t"]
+
+
+def test_replace_is_per_target(tmp_path):
+    """Tables of one parent replace concurrently (activate() writes
+    them from a pool); a second replace of the same target while one
+    is in flight fails loudly."""
+    barrier = threading.Barrier(2, timeout=30)
+
+    def replace(name: str) -> None:
+        target = str(tmp_path / name)
+        with durable.replacing(target) as stage:
+            barrier.wait()  # both replaces are in flight at once
+            with pytest.raises(durable.ConcurrentReplaceError,
+                               match="single-writer"):
+                with durable.replacing(target):
+                    pass
+            os.makedirs(stage)
+            with open(os.path.join(stage, "data"), "w") as f:
+                f.write(name)
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for fut in [pool.submit(replace, n) for n in ("a", "b")]:
+            fut.result(timeout=60)
+    assert [_read_text(str(tmp_path / n)) for n in ("a", "b")] == ["a", "b"]

@@ -5,6 +5,7 @@ not restart from zero)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -176,3 +177,57 @@ def test_progress_commits_once_after_all_outputs_under_contention(spark):
     assert not t.is_alive() and errors == []
     assert len(written) == 2 * len(sources)
     assert sorted(marks) == sorted((s, True) for s in sources)
+
+
+class _Ids(Source):
+    """One table ``t`` of ids 0..n-1 in 4 partitions; with ``fail_at``
+    the task holding that id raises after the others committed."""
+
+    TYPE = "_ids"
+
+    def __init__(self, n, fail_at=None):
+        self.n, self.fail_at = n, fail_at
+
+    def table_list(self, spark):
+        return [TableID("", "t")]
+
+    def load_table(self, spark, table, where=None):
+        from pyspark.sql import functions as F
+
+        df = spark.range(0, self.n, 1, 4)
+        if self.fail_at is None:
+            return df
+        fail_at = self.fail_at
+
+        def check(i):
+            if i == fail_at:
+                time.sleep(2)
+                raise RuntimeError("task failed mid-job")
+            return i
+
+        return df.select(F.udf(check, "long")("id").alias("id"))
+
+
+def test_failed_drop_activation_keeps_previous_table(spark, tmp_path):
+    """A DROP activation whose write dies mid-job leaves the previous
+    activation's table readable and whole: the new copy was only
+    staged, and the old one goes only once a new one is in."""
+    from pyspark.sql import functions as F
+
+    sink = FileSink(path=str(tmp_path / "out"), format="parquet")
+
+    def run(src):
+        activate(spark, TransferSpec(src=src, dst=sink,
+                                     cleanup=CleanupPolicy.DROP))
+
+    def state():
+        df = sink.read_back(spark, TableID("", "t"))
+        return tuple(df.agg(F.count(F.lit(1)), F.sum("id")).collect()[0])
+
+    run(_Ids(100))
+    with pytest.raises(Exception, match="task failed mid-job"):
+        run(_Ids(200, fail_at=150))
+    assert state() == (100, sum(range(100)))
+    run(_Ids(200))
+    assert state() == (200, sum(range(200)))
+    assert sorted(os.listdir(tmp_path / "out")) == [".t.lock", "t"]

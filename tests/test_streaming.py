@@ -10,14 +10,13 @@ from pyspark.sql import types as T
 
 from transferia_spark.cdc.changeitem import COUNTER_COL, LSN_COL, OP_COL
 from transferia_spark.operators import Transformation, build
-from transferia_spark.streaming import (
+from transferia_spark.streaming.bucketed_table import (
     BucketedCdcApplySink,
     BucketedParquetTable,
-    ParquetTable,
-    ReplicationPipeline,
-    file_stream,
-    windowed_rollup,
 )
+from transferia_spark.streaming.pipeline import ReplicationPipeline
+from transferia_spark.streaming.readers import file_stream
+from transferia_spark.streaming.rollup import windowed_rollup
 
 CDC_SCHEMA = T.StructType(
     [
@@ -39,6 +38,27 @@ def _write_batch(dirpath: str, name: str, rows: list[dict]) -> None:
             f.write(json.dumps(r) + "\n")
     os.rename(tmp, os.path.join(dirpath, f"{name}.json"))
 
+
+
+def test_wal_source_import_stays_light():
+    """Every Python worker that unpickles a recorded-CDC reader imports
+    ``wal_source``: the streaming package re-exports nothing, so that
+    import loads neither pandas nor the operator family."""
+    import subprocess
+    import sys
+
+    import transferia_spark
+
+    code = (
+        "import sys, transferia_spark.streaming.wal_source\n"
+        "print(sorted(m for m in ('pandas', 'transferia_spark.operators')"
+        " if m in sys.modules))"
+    )
+    root = os.path.dirname(os.path.dirname(transferia_spark.__file__))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True, check=True,
+                         timeout=120)
+    assert out.stdout.strip() == "[]"
 
 def _run_pipeline(spark, src, table_root, ckpt, transformation=None):
     table = BucketedParquetTable(spark, table_root, keys=["id"], n_buckets=4)
@@ -185,18 +205,6 @@ def test_windowed_rollup_streaming_with_watermark(spark, tmp_path):
     by_window = {(r.window_start.hour, r.k): (r.n, r.s) for r in got}
     assert by_window[(0, "a")] == (2, 3)
     assert by_window[(1, "a")] == (1, 4)
-
-
-def test_parquet_table_gc_keeps_recent_versions(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "t"))
-    df = spark.range(3)
-    for _ in range(4):
-        t.overwrite(spark.range(3))
-    assert t.version() == 3
-    dirs = sorted(d for d in os.listdir(str(tmp_path / "t")) if d.startswith("_v"))
-    assert dirs == ["_v2", "_v3"]  # older versions collected
-    assert t.read().count() == 3
-    _ = df
 
 
 def test_waljson_slot_direct_source(spark, tmp_path):
@@ -391,7 +399,7 @@ def test_schema_drift_restart(spark, tmp_path):
 def test_interval_join_stream_stream(spark, tmp_path):
     """Click→purchase attribution: purchases join clicks of the same
     user within the preceding hour; both sides file streams."""
-    from transferia_spark.streaming import interval_join
+    from transferia_spark.streaming.joins import interval_join
 
     clicks_dir = str(tmp_path / "clicks")
     buys_dir = str(tmp_path / "buys")
@@ -436,7 +444,7 @@ def test_interval_join_stream_stream(spark, tmp_path):
 
 def test_interval_join_batch_parity(spark, tmp_path):
     """Same helper on batch frames == plain theta join (oracle path)."""
-    from transferia_spark.streaming import interval_join
+    from transferia_spark.streaming.joins import interval_join
 
     left = spark.createDataFrame(
         [(1, "2026-01-01 01:00:00", 200)], "user long, ts string, buy_id long"
@@ -452,7 +460,7 @@ def test_interval_join_batch_parity(spark, tmp_path):
 
 
 def test_enrich_static_broadcasts_dim(spark, tmp_path):
-    from transferia_spark.streaming import enrich_static
+    from transferia_spark.streaming.joins import enrich_static
 
     src = str(tmp_path / "s")
     schema = T.StructType(
@@ -472,18 +480,6 @@ def test_enrich_static_broadcasts_dim(spark, tmp_path):
     q.awaitTermination()
     by_k = {r.k: r.name for r in got}
     assert by_k == {1: "one", 2: "two", 9: None}
-
-
-def test_parquet_table_time_travel(spark, tmp_path):
-    t = ParquetTable(spark, str(tmp_path / "tt"))
-    t.overwrite(spark.range(0, 10))
-    t.overwrite(spark.range(0, 20))
-    v = t.version()
-    assert t.read().count() == 20
-    assert t.read(version=v - 1).count() == 10  # retained (keep=2)
-    t.overwrite(spark.range(0, 30))
-    with pytest.raises(FileNotFoundError):
-        t.read(version=v - 1)  # gc'd now
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):

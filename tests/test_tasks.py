@@ -130,25 +130,27 @@ def test_compact_dir_reduces_file_count(spark, tmp_path):
     spark.range(0, 10000).repartition(64).write.parquet(src)
     assert data_file_count(src) == 64
     dst = str(tmp_path / "table")
-    v = compact_dir(spark, src, dst, target_file_bytes=dir_bytes(src) // 2)
-    live = str(tmp_path / "table" / f"_v{v}")
-    assert data_file_count(live) <= 3
-    got = spark.read.parquet(live)
+    compact_dir(spark, src, dst, target_file_bytes=dir_bytes(src) // 2)
+    assert data_file_count(dst) <= 3
+    got = spark.read.parquet(dst)
     assert got.count() == 10000
     assert got.agg({"id": "sum"}).collect()[0][0] == sum(range(10000))
 
 
 def test_compact_table_in_place_atomic_swap(spark, tmp_path):
-    from transferia_spark.streaming.cdc_apply import ParquetTable
-    from transferia_spark.tasks.compact import compact_table, data_file_count
+    """``dst == src``: the read finishes inside the write job, before
+    the staged copy is swapped in; the target is a plain parquet
+    directory with no hidden sibling but the lock left beside it."""
+    import os
 
-    t = ParquetTable(spark, str(tmp_path / "t"))
-    t.overwrite(spark.range(0, 5000).repartition(32))
-    v0 = t.version()
-    v1 = compact_table(t, target_file_bytes=10**12)  # everything → 1 file
-    assert v1 == v0 + 1
-    assert data_file_count(str(tmp_path / "t" / f"_v{v1}")) == 1
-    assert t.read().count() == 5000
+    from transferia_spark.tasks.compact import compact_dir, data_file_count
+
+    t = str(tmp_path / "t")
+    spark.range(0, 5000).repartition(32).write.parquet(t)
+    compact_dir(spark, t, t, target_file_bytes=10**12)  # everything → 1 file
+    assert data_file_count(t) == 1
+    assert spark.read.parquet(t).count() == 5000
+    assert sorted(os.listdir(tmp_path)) == [".t.lock", "t"]
 
 
 def test_compact_partitioned_writes_hive_layout(spark, tmp_path):
@@ -157,8 +159,8 @@ def test_compact_partitioned_writes_hive_layout(spark, tmp_path):
     from transferia_spark.tasks.compact import compact_df
 
     df = spark.range(0, 1000).selectExpr("id", "id % 4 AS part")
-    v = compact_df(df, str(tmp_path / "p"), n_files=8, partition_cols=["part"])
-    live = str(tmp_path / "p" / f"_v{v}")
+    live = str(tmp_path / "p")
+    compact_df(df, live, n_files=8, partition_cols=["part"])
     # real partitionBy directories, prunable by the scanner
     assert sorted(
         d for d in os.listdir(live) if d.startswith("part=")
@@ -169,44 +171,41 @@ def test_compact_partitioned_writes_hive_layout(spark, tmp_path):
     assert pruned.count() == 250
 
 
-def test_parquet_table_single_writer_enforced(spark, tmp_path):
-    """ADVICE r3: overwrite holds a flock on _LOCK and CAS-checks
-    _CURRENT — a compaction racing a streaming sink fails loudly
-    instead of silently losing a commit. The lock is a flock, not a
-    marker file: a _LOCK file left by a killed writer blocks no one."""
+def test_compact_single_writer_enforced(spark, tmp_path):
+    """A compaction racing another writer of the same table fails
+    loudly instead of silently losing a commit. The lock is a
+    flock, not a marker file: a lock file left by a killed writer
+    blocks no one."""
     import fcntl
     import os
 
     import pytest
 
-    from transferia_spark.streaming.cdc_apply import (
-        ConcurrentWriteError,
-        ParquetTable,
-    )
+    from transferia_spark.durable import ConcurrentReplaceError
+    from transferia_spark.tasks.compact import compact_df
 
-    t = ParquetTable(spark, str(tmp_path / "t"))
+    dst = str(tmp_path / "t")
     df = spark.range(5).selectExpr("id", "id * 2 AS v")
-    v1 = t.overwrite(df)
+    compact_df(df, dst, n_files=1)
 
-    # a held lock (another writer mid-commit, here a second open file
-    # description) rejects the overwrite
-    lock = os.path.join(t.root, "_LOCK")
+    # a held lock (another writer mid-replace, here a second open file
+    # description) rejects the replace and leaves the table as it was
+    lock = str(tmp_path / ".t.lock")
     fd = os.open(lock, os.O_CREAT | os.O_RDWR)
     try:
         fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        with pytest.raises(ConcurrentWriteError, match="single-writer"):
-            t.overwrite(df)
-        assert t.version() == v1
+        with pytest.raises(ConcurrentReplaceError, match="single-writer"):
+            compact_df(df.union(df), dst, n_files=1)
+        assert spark.read.parquet(dst).count() == 5
     finally:
         os.close(fd)  # the holder dies: its flock goes with it
 
-    # a leftover _LOCK file with no holder (a killed writer's) does not
-    # block, and the lock is released on success → commits keep working
+    # a leftover lock file with no holder (a killed writer's) does not
+    # block, and the lock is released on success → replaces keep working
     assert os.path.exists(lock)
-    v2 = t.overwrite(df)
-    v3 = t.overwrite(df)
-    assert (v2, v3) == (v1 + 1, v1 + 2)
-    assert t.read().count() == 5
+    compact_df(df.union(df), dst, n_files=1)
+    compact_df(df.union(df).union(df), dst, n_files=1)
+    assert spark.read.parquet(dst).count() == 15
 
 
 def test_interval_join_rejects_column_collision(spark):

@@ -100,14 +100,14 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "256m")
         # commit algorithm v2: task outputs rename straight into the
         # destination instead of through the job-level _temporary move —
-        # halves the per-commit rename fan-out. Correct where a write
-        # goes to a FRESH directory whose visibility is flipped by a
-        # manifest/pointer write (BucketedParquetTable's versioned
-        # base and delta directories), so a failed job's partial files
-        # are never referenced. Known exception: FileSink's overwrite
-        # writes into its live target directory, so a failed job there
-        # leaves a partial target (the durable-publish work owns it,
-        # ROADMAP Direction E)
+        # halves the per-commit rename fan-out. Correct because every
+        # whole-table write goes to a FRESH directory whose visibility
+        # is flipped afterwards: a manifest/pointer publish
+        # (BucketedParquetTable's versioned base and delta directories)
+        # or a staged-directory swap (durable.replacing, for FileSink
+        # and compaction), so a failed job's partial files are never
+        # read. An append to a live directory (FileSink's change log)
+        # is at-least-once either way: a retried batch appends again
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             "2",

@@ -9,15 +9,20 @@ Spark-native: ``df.write.parquet/json/csv`` does parallel multipart
 uploads per partition; ``partitionBy`` gives the partitioned layout;
 for CDC streams the same sink appends the change log (the reference's
 replication sink is append-only too).
+
+A write that replaces a table (mode ``overwrite``, or any write after a
+``DROP``/``TRUNCATE`` cleanup) goes through ``durable.replacing``: a
+failed or killed activation leaves the previous table whole.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame
 
+from transferia_spark import durable
 from transferia_spark.schema.colschema import TableID
 from transferia_spark.sinks.base import CleanupPolicy, Sink, register_sink
 
@@ -42,13 +47,16 @@ class FileSink(Sink):
         self.compression = compression
         self.mode = mode
         self.options = options or {}
+        #: targets a DROP/TRUNCATE cleanup was asked for: their writes
+        #: replace them, so the old copy goes only once a new one is in
+        self._replace: set[str] = set()
 
     def _target(self, table: TableID) -> str:
         return os.path.join(self.path, table.fqtn())
 
     def cleanup(self, table: TableID, policy: CleanupPolicy) -> None:
         if policy in (CleanupPolicy.DROP, CleanupPolicy.TRUNCATE):
-            shutil.rmtree(self._target(table), ignore_errors=True)
+            self._replace.add(self._target(table))
 
     def write(self, df: DataFrame, table: TableID) -> None:
         # Write parallelism deliberately follows the scan/transform plan
@@ -58,14 +66,22 @@ class FileSink(Sink):
         # scan already exceeds core count so a fan-out is a no-op. The
         # reference's part-count formula (sharding_storage.go:234-245)
         # governs the SOURCE split instead — see sources/jdbc.py.
-        writer = df.write.mode(self.mode).format(self.format)
+        target = self._target(table)
+        replace = self.mode == "overwrite" or target in self._replace
+        writer = df.write.format(self.format)
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         if self.compression:
             writer = writer.option("compression", self.compression)
         for k, v in self.options.items():
             writer = writer.option(k, v)
-        writer.save(self._target(table))
+        url = urlsplit(target)
+        if replace and url.scheme in ("", "file"):
+            with durable.replacing(url.path if url.scheme else target) as stage:
+                writer.mode("overwrite").save(stage)
+        else:
+            # a remote store (s3a://, hdfs://) keeps Spark's overwrite
+            writer.mode("overwrite" if replace else self.mode).save(target)
 
     def write_cdc(self, batch: DataFrame, table: TableID, keys: list[str]) -> None:
         # append-only change log, like the reference's replication sink

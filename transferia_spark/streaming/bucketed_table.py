@@ -640,8 +640,7 @@ class BucketedParquetTable:
         if not paths:
             # table exists but the wanted buckets hold no BASE rows
             # (fully deleted, or delta-only so far) — an empty frame
-            # with the table schema, matching ParquetTable's
-            # empty-after-delete behavior
+            # with the table schema
             if schema is not None:
                 base = self.spark.createDataFrame([], schema)
             elif pairs:
@@ -1504,6 +1503,13 @@ class BucketedParquetTable:
                 mv = int(name[len("_manifest_v"):].split(".")[0])
                 if mv not in kept_manifests:
                     os.remove(os.path.join(self.root, name))
+            elif name.startswith(".") and name.endswith(".tmp"):
+                # a publish killed before its rename; no publish is in
+                # flight for a claim TTL
+                path = os.path.join(self.root, name)
+                with contextlib.suppress(FileNotFoundError):
+                    if now - os.path.getmtime(path) > self.CLAIM_TTL:
+                        os.remove(path)
         return trash
 
     @staticmethod

@@ -6,7 +6,8 @@ bufferer cadence, ``sink_factory.go:215-224``) produces ~260k files/day
 per table; parquet scan planning, footer reads, and NameNode/S3 LIST
 costs then dominate reads. The fix is periodic rewrite into
 target-sized files — what Delta's OPTIMIZE / Iceberg's rewrite_data_files
-do; here it is a plain task over a directory or a ``ParquetTable``.
+do; here it is a plain task from one parquet directory to another, or
+to the same one (compaction in place).
 
 Scale notes:
 - File count is computed from the actual on-disk byte size divided by
@@ -17,12 +18,12 @@ Scale notes:
   the output is a real Hive-style ``partitionBy`` layout, and rows are
   spread over (partition value, spread-bucket) so each directory gets
   ~target-sized files instead of one giant file per value.
-- The rewrite lands in a fresh versioned directory with a durable
-  pointer swap (``ParquetTable``) — readers never see a half-written
-  table. ParquetTable is SINGLE-WRITER: a concurrent ``overwrite``
-  fails with ``ConcurrentWriteError``, so pause the streaming sink (or
-  schedule compaction between micro-batches via foreachBatch) before
-  compacting in place.
+- The rewrite replaces ``dst`` whole through ``durable.replacing``:
+  it is staged in a hidden sibling and swapped in, so readers never
+  see a half-written table, and in place the read of ``src`` finishes
+  inside the write job, before the swap. A replace is SINGLE-WRITER:
+  a concurrent one fails with ``ConcurrentReplaceError``, so pause the
+  writer of a table before compacting it in place.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from transferia_spark.streaming.cdc_apply import ParquetTable
+from transferia_spark import durable
 
 
 def dir_bytes(path: str) -> int:
@@ -54,31 +55,28 @@ def data_file_count(path: str) -> int:
 def compact_dir(
     spark: SparkSession,
     src: str,
-    dst_root: str,
+    dst: str,
     target_file_bytes: int = 256 * 1024 * 1024,
     partition_cols: list[str] | None = None,
     compression_ratio: float = 1.0,
-) -> int:
-    """Rewrite the parquet data under ``src`` into ``dst_root`` (a
-    ``ParquetTable`` root) as ~``target_file_bytes`` files; returns the
-    new version number.
+) -> None:
+    """Rewrite the parquet data under ``src`` into the directory ``dst``
+    as ~``target_file_bytes`` files; ``dst == src`` compacts in place.
 
     ``compression_ratio`` corrects for recompression (output bytes ≈
     input bytes × ratio); 1.0 is right when src is already parquet
     with the same codec.
     """
     n_files = max(1, round(dir_bytes(src) * compression_ratio / target_file_bytes))
-    df = spark.read.parquet(src)
-    return compact_df(df, dst_root, n_files, partition_cols)
+    compact_df(spark.read.parquet(src), dst, n_files, partition_cols)
 
 
 def compact_df(
     df: DataFrame,
-    dst_root: str,
+    dst: str,
     n_files: int,
     partition_cols: list[str] | None = None,
-) -> int:
-    table = ParquetTable(df.sparkSession, dst_root)
+) -> None:
     if partition_cols:
         from pyspark.sql import functions as F
 
@@ -91,24 +89,13 @@ def compact_df(
         spread = F.pmod(
             F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(per_part)
         )
-        out = df.repartition(
+        writer = df.repartition(
             max(n_files, n_vals), *partition_cols, spread
-        )
-        return table.overwrite(out, partition_by=partition_cols)
-    return table.overwrite(df.coalesce(n_files))
-
-
-def compact_table(
-    table: ParquetTable,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """In-place compaction of a ParquetTable: read the live version,
-    rewrite dense, durably swap the pointer."""
-    v = table.version()
-    src = os.path.join(table.root, f"_v{v}")
-    n_files = max(1, round(dir_bytes(src) / target_file_bytes))
-    return compact_df(table.read(), table.root, n_files, partition_cols)
+        ).write.partitionBy(*partition_cols)
+    else:
+        writer = df.coalesce(n_files).write
+    with durable.replacing(dst) as stage:
+        writer.parquet(stage)
 
 
 def is_bucketed_table_root(path: str) -> bool:
