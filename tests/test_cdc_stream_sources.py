@@ -1449,6 +1449,44 @@ def test_split_slices_pay_for_their_task():
         assert all((s.hi - s.lo) // 10 >= floor for s in slices[:-1])
 
 
+def test_split_slices_cap_the_whole_batch():
+    """A batch of several ordered files plans at most max(len(files),
+    max_splits) slices in all, not max_splits per file: every file
+    keeps one slice, the rest go to the files with the most
+    checkpoints, each slice spans at least SLICE_MIN_CHECKPOINTS
+    checkpoints, and each file's slices tile (lo, hi] exactly."""
+    from collections import Counter
+
+    from transferia_spark.streaming.wal_source import (
+        SLICE_MIN_CHECKPOINTS as floor,
+        attach_split_slices,
+    )
+
+    def plan(n_cks, max_splits):
+        # file k: a checkpoint every 256 positions, byte = 10 x position
+        idx, hi = {}, 0
+        for k, n_ck in enumerate(n_cks):
+            idx[f"f{k}"] = ([(p, p * 10) for p in range(256, 256 * (n_ck + 1), 256)], True)
+            hi = max(hi, 256 * n_ck + 5)
+        slices = attach_split_slices(list(idx), 0, hi, idx, max_splits)
+        for f in idx:
+            own = [s for s in slices if s.path == f]
+            assert own[0].lo == 0 and own[-1].hi == hi
+            for a, b in zip(own, own[1:]):
+                assert a.hi == b.lo and b.start_byte == b.lo * 10
+            assert all((s.hi - s.lo) // 256 >= floor for s in own[:-1])
+        return Counter(s.path for s in slices)
+
+    # three equal files: one slice each at 3, not 3 each
+    assert plan([12, 12, 12], 3) == {"f0": 1, "f1": 1, "f2": 1}
+    assert plan([12, 12, 12], 2) == {"f0": 1, "f1": 1, "f2": 1}
+    assert sum(plan([12, 12, 12], 8).values()) == 8
+    # the extra slices go to the big file; a small one stays whole
+    assert plan([40, 2, 2], 6) == {"f0": 4, "f1": 1, "f2": 1}
+    # no file splits below the floor, even with slices to spare
+    assert plan([2 * floor - 2, 2 * floor - 2], 8) == {"f0": 1, "f1": 1}
+
+
 def test_catchup_batch_plans_parallel_slices(spark, tmp_path, monkeypatch):
     """At the default slice floor a 1000-event waljson batch stays one
     task, a 1500-event batch plans two decode slices and a 7000-event

@@ -518,6 +518,20 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     assert stream_dedup(batch, ["id"]).count() == 2
 
 
+def test_arrow_read_plan_falls_back_on_an_unmapped_type():
+    """A non-payload field Arrow cannot map (``to_arrow_schema`` raises
+    a ``TypeError``) sends the reader down the row-tuple path."""
+    from pyspark.sql import types as T
+
+    from transferia_spark.streaming.wal_source import _arrow_read_plan
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("every", T.CalendarIntervalType()),
+    ])
+    assert _arrow_read_plan(schema, ["id"]) is None
+
+
 def test_waljson_arrow_fast_path_equivalence(spark, tmp_path):
     """r13: executor tasks yield pyarrow RecordBatches when the payload
     types are arrow-safe (skips the worker's per-cell converters,

@@ -88,7 +88,7 @@ def _arrow_read_plan(schema: T.StructType, payload_names):
             if isinstance(f.dataType, T.StructType)
         ]
         return to_arrow_schema(schema), struct_cols
-    except Exception:  # pragma: no cover — exotic/unmapped type
+    except (ImportError, TypeError):  # no pandas/arrow; unmapped type
         return None
 
 
@@ -543,8 +543,11 @@ def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
     slice.
 
     A slice spans ≥ ``SLICE_MIN_CHECKPOINTS`` checkpoints (f = 2,
-    ~1k events), and a batch plans at most ``max_splits`` slices (the
-    reader's ``decode_splits``: the session's cores unless set). Cost
+    ~1k events), and a batch plans at most ``max(len(files),
+    max_splits)`` slices (``max_splits`` is the reader's
+    ``decode_splits``: the session's cores unless set). Each file keeps
+    at least one slice; the rest go to the files whose slices are
+    largest. Cost
     model, measured on the micro-batch job itself (``waljson`` →
     ``BucketedParquetTable.append_delta``, ``local[3]``, 4-vCPU host,
     medians of ``addBatch`` over 25-60 batches):
@@ -570,10 +573,11 @@ def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
     slice of 1k events saves ~12 ms for its 14, an 8th ~5 ms (c was
     measured on 3 cores only)."""
     _evict_seek_index(seek_index, files)
-    out = []
+    # per file: (seek byte of lo, inner checkpoints, spans, most slices)
+    plans = []
     for f in files:
         ckpts, ordered = seek_index.get(f, ([], False))
-        sb = 0
+        sb, inner, spans, most = 0, [], 1, 1
         if ordered and ckpts:
             keys = [c[0] for c in ckpts]
             i = bisect.bisect_right(keys, lo) - 1
@@ -584,24 +588,32 @@ def attach_split_slices(files, lo, hi, seek_index, max_splits: int):
                 if lo < c[0] < hi
             ]
             spans = len(inner) + 1
-            n_slices = min(max_splits, spans // SLICE_MIN_CHECKPOINTS)
-            if n_slices > 1:
-                # n_slices slices (never more than max_splits) of ≥
-                # SLICE_MIN_CHECKPOINTS spans each: boundary j ends
-                # span j·spans // n_slices
-                bounds = [
-                    inner[j * spans // n_slices - 1]
-                    for j in range(1, n_slices)
-                ]
-                cur_lo, cur_sb = lo, sb
-                for bp, bbyte in bounds:
-                    if bp == cur_lo:
-                        continue  # >512-line tx: duplicate boundary
-                    out.append(_FileSlice(f, cur_lo, bp, cur_sb, True))
-                    cur_lo, cur_sb = bp, bbyte
-                out.append(_FileSlice(f, cur_lo, hi, cur_sb, True))
-                continue
-        out.append(_FileSlice(f, lo, hi, sb, ordered))
+            most = max(1, spans // SLICE_MIN_CHECKPOINTS)
+        plans.append((f, ordered, sb, inner, spans, most))
+    # every file gets one slice; the batch's further slices (up to
+    # max_splits in all) go one at a time to the file whose slices are
+    # the largest, until no file can take another
+    counts = [1] * len(plans)
+    for _ in range(max_splits - len(plans)):
+        room = [k for k, p in enumerate(plans) if counts[k] < p[5]]
+        if not room:
+            break
+        counts[max(room, key=lambda k: plans[k][4] / counts[k])] += 1
+    out = []
+    for (f, ordered, sb, inner, spans, _), n_slices in zip(plans, counts):
+        if n_slices == 1:
+            out.append(_FileSlice(f, lo, hi, sb, ordered))
+            continue
+        # n_slices slices of ≥ SLICE_MIN_CHECKPOINTS spans each:
+        # boundary j ends span j·spans // n_slices
+        bounds = [inner[j * spans // n_slices - 1] for j in range(1, n_slices)]
+        cur_lo, cur_sb = lo, sb
+        for bp, bbyte in bounds:
+            if bp == cur_lo:
+                continue  # >512-line tx: duplicate boundary
+            out.append(_FileSlice(f, cur_lo, bp, cur_sb, True))
+            cur_lo, cur_sb = bp, bbyte
+        out.append(_FileSlice(f, cur_lo, hi, cur_sb, True))
     return out
 
 

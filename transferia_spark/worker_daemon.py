@@ -18,6 +18,12 @@ cache entry is no longer the directory that read produced. A rewritten
 archive (an ``addPyFile`` zip replaced under the same name) is still
 re-read and its new members import. The daemon installs the guard
 before it forks, so every worker inherits it.
+
+The guard serves the fallback path of ``session.get_spark``, where the
+workers keep Spark's zips on their path. Under the interpreter
+launcher ``get_spark`` sets when the driver's installed pyspark matches
+the zips, neither zip nor the jar is on a worker's ``sys.path``, and
+the refresh has only ``addPyFile`` archives left to guard.
 """
 
 from __future__ import annotations
